@@ -25,6 +25,7 @@ Determinism notes (how these queries hash-match the oracle):
 from __future__ import annotations
 
 import os
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -69,7 +70,9 @@ DEC = "decimal(18,6)"
 # sharing one stage dir would read each other's half-written staged
 # tables. The pid suffix keeps each process's query/oracle pair
 # consistent; stale dirs from finished runs are swept opportunistically.
-_SIG_ROOT = os.environ.get("SPARK_GRAFT_SIG_STAGE_ROOT", "/root/repo/.sig_stage")
+_SIG_ROOT = os.environ.get(
+    "SPARK_GRAFT_SIG_STAGE_ROOT", os.path.join(tempfile.gettempdir(), "spark_graft_sig_stage")
+)
 _SIG_STAGE = f"{_SIG_ROOT}/p{os.getpid()}"
 
 
@@ -101,16 +104,15 @@ def _t(spark: SparkSession, sf_dir: str, name: str, heavy: bool = False) -> Data
     # default; read nanos as long (queries derive what they need).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if heavy or _SCAN_PAR_MODE == "all":
+    if heavy:
         df = _parallelize_scan(spark, df)
     return df
 
 
-_SCAN_PAR_MODE = os.environ.get("SPARK_GRAFT_SCAN_PARALLELIZE", "auto").strip().lower()
 # Tables below this input size are dimension-sized (region/nation/
 # supplier): they only ever broadcast, and an extra exchange on them
 # is pure stage overhead.
-_SCAN_PAR_MIN_BYTES = int(os.environ.get("SPARK_GRAFT_SCAN_PAR_MIN_BYTES", "131072"))
+_SCAN_PAR_MIN_BYTES = 128 * 1024
 
 
 def _parallelize_scan(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -146,12 +148,7 @@ def _parallelize_scan(spark: SparkSession, df: DataFrame) -> DataFrame:
     ~274 s. The hint is a property of the operator (per-row CPU
     weight), not of the scale — at production layouts the repartition
     still self-disables via the split-count check below.
-    SPARK_GRAFT_SCAN_PARALLELIZE: ``auto`` honors hints (default),
-    ``all`` forces every non-dimension scan (the A/B's blanket mode),
-    ``off`` disables even hinted repairs.
     """
-    if _SCAN_PAR_MODE in {"0", "off", "false", "no"}:
-        return df
     p = spark.sparkContext.defaultParallelism
     if p <= 1:
         return df

@@ -61,7 +61,6 @@ def _proc_tree_cpu(root_pid: int) -> float:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = None
     tail = os.path.basename(sf_dir.rstrip("/"))
     if tail.startswith("sf"):
@@ -70,21 +69,10 @@ def main() -> None:
         except ValueError:
             sf = None
 
-    from pyspark.sql import SparkSession
+    from strategicai_visibility_loop_etl_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("strategicai-visibility-loop-etl-spark-bench")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("strategicai-visibility-loop-etl-spark-bench")
+    cpus = spark.sparkContext.defaultParallelism
 
     import __spark_entry__ as entrymod
 
@@ -101,7 +89,7 @@ def main() -> None:
     def _warm(x):
         return x.astype("float64")
 
-    spark.range(0, 32_000, 1, int(cpus)).select(_warm(col("id"))).write.format(
+    spark.range(0, 32_000, 1, cpus).select(_warm(col("id"))).write.format(
         "noop"
     ).mode("overwrite").save()
 

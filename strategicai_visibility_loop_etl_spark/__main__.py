@@ -23,29 +23,13 @@ import argparse
 import os
 import sys
 
-from .plans.pipeline import load_config, run_visibility_pipeline
+from .plans.pipeline import _resolve_input, load_config, run_visibility_pipeline
 
-_DEMO_DEFAULTS = {
-    "screaming_frog": "data_demo/screaming_frog_export.csv",
-    "gsc": "data_demo/gsc_export.csv",
-    "ga4": "data_demo/ga4_export.csv",
-}
-
-_ENV_NAMES = {
-    "screaming_frog": "FROG_CSV_PATH",
-    "gsc": "GSC_CSV_PATH",
-    "ga4": "GA4_CSV_PATH",
-}
+_DEMO_DIR = "data_demo"
 
 
-def _resolve(tag: str, cli_value: str | None, cfg: dict) -> str:
-    if cli_value:
-        return os.path.expanduser(os.path.expandvars(cli_value))
-    env_val = os.getenv(_ENV_NAMES[tag], "").strip()
-    if env_val:
-        return os.path.expanduser(os.path.expandvars(env_val))
-    inputs = cfg.get("inputs", {}) or {}
-    return inputs.get(tag) or inputs.get(f"{tag}_csv") or _DEMO_DEFAULTS[tag]
+def _flag(value: str | None) -> str | None:
+    return os.path.expanduser(os.path.expandvars(value)) if value else None
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -65,7 +49,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--write-slices", action="store_true",
                    help="also write the ctr_debug candidate slice")
     p.add_argument("--cpus", type=int, default=None,
-                   help="local[N] parallelism (default: SPARK_GRAFT_CPUS or all cores)")
+                   help="local[N] parallelism (default: SPARK_GRAFT_CPUS or nproc)")
     return p
 
 
@@ -220,9 +204,10 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     if args.write_slices:
         cfg.setdefault("output", {})["write_slices"] = True
 
-    frog = _resolve("screaming_frog", args.frog, cfg)
-    gsc = _resolve("gsc", args.gsc, cfg)
-    ga4 = _resolve("ga4", args.ga4, cfg)
+    frog = _flag(args.frog) or _resolve_input(
+        "FROG_CSV_PATH", cfg, "screaming_frog", f"{_DEMO_DIR}/screaming_frog_export.csv")
+    gsc = _flag(args.gsc) or _resolve_input("GSC_CSV_PATH", cfg, "gsc", f"{_DEMO_DIR}/gsc_export.csv")
+    ga4 = _flag(args.ga4) or _resolve_input("GA4_CSV_PATH", cfg, "ga4", f"{_DEMO_DIR}/ga4_export.csv")
     print(f"Resolved inputs -> Frog: {frog} | GSC: {gsc} | GA4: {ga4}")
 
     missing = [(tag, p) for tag, p in

@@ -1140,101 +1140,100 @@ def ivfpq_topk(
     # the doubles exactly), so the centroid write overlaps PQ training
     # and the codebook write overlaps encoding. All futures are joined
     # before the staged code table is read back.
-    stage_pool = ThreadPoolExecutor(max_workers=2) if stage_path is not None else None
-    stage_writes = []
-    if stage_path is not None:
-        stage_writes.append(
-            stage_pool.submit(
-                cent_df.write.mode("overwrite").parquet,
-                f"{stage_path}/centroids",
+    with ThreadPoolExecutor(max_workers=2) as stage_pool:
+        stage_writes = []
+        if stage_path is not None:
+            stage_writes.append(
+                stage_pool.submit(
+                    cent_df.write.mode("overwrite").parquet,
+                    f"{stage_path}/centroids",
+                )
             )
-        )
 
-    assigned = ivf_assign(corpus, cent_df, corpus_id, corpus_vec)
-    # Materialization barrier: resid feeds the codebook-init collect,
-    # every Lloyd training pass AND the encode — without the cut, the
-    # corpus×centroids assignment subtree re-executes per consumer.
-    resid = assigned.join(F.broadcast(cent_df), "cluster").select(
-        F.col(corpus_id),
-        F.col("cluster"),
-        F.zip_with(F.col(corpus_vec), F.col("centroid"), lambda a, b: a - b).alias(
-            "rvec"
-        ),
-    ).localCheckpoint(eager=False)
+        assigned = ivf_assign(corpus, cent_df, corpus_id, corpus_vec)
+        # Materialization barrier: resid feeds the codebook-init collect,
+        # every Lloyd training pass AND the encode — without the cut, the
+        # corpus×centroids assignment subtree re-executes per consumer.
+        resid = assigned.join(F.broadcast(cent_df), "cluster").select(
+            F.col(corpus_id),
+            F.col("cluster"),
+            F.zip_with(F.col(corpus_vec), F.col("centroid"), lambda a, b: a - b).alias(
+                "rvec"
+            ),
+        ).localCheckpoint(eager=False)
 
-    books = _train_pq_codebooks(resid, m, ksub, iters, corpus_id, "rvec", dim)
-    book_df = _codebook_df(spark, books, "code")
-    if stage_path is not None:
-        stage_writes.append(
-            stage_pool.submit(
-                book_df.write.mode("overwrite").parquet,
-                f"{stage_path}/books",
+        books = _train_pq_codebooks(resid, m, ksub, iters, corpus_id, "rvec", dim)
+        book_df = _codebook_df(spark, books, "code")
+        if stage_path is not None:
+            stage_writes.append(
+                stage_pool.submit(
+                    book_df.write.mode("overwrite").parquet,
+                    f"{stage_path}/books",
+                )
             )
-        )
 
-    r_slices = _subspace_slices(F.col("rvec"), m, dsub)
-    enc_score = (F.lit(-2) * dot_arrow(F.col("subvec"), F.col("centroid"))) + dot_arrow(
-        F.col("centroid"), F.col("centroid")
-    )
-    codes = (
-        resid.select(
-            F.col(corpus_id), F.col("cluster"),
-            F.posexplode(r_slices).alias("sub", "subvec"),
+        r_slices = _subspace_slices(F.col("rvec"), m, dsub)
+        enc_score = (F.lit(-2) * dot_arrow(F.col("subvec"), F.col("centroid"))) + dot_arrow(
+            F.col("centroid"), F.col("centroid")
         )
-        .join(F.broadcast(book_df), "sub")
-        .select(
-            F.col(corpus_id), F.col("cluster"), F.col("sub"),
-            F.col("code"), enc_score.alias("__s"),
-        )
-        .groupBy(corpus_id, "cluster", "sub")
-        .agg(F.min_by("code", F.struct("__s", "code")).alias("code"))
-    )
-
-    # Query side: probe n_probe lists (the shared _probe_lists argmin
-    # form), then the per-(query, probed-cluster) residual LUT.
-    probes = _probe_lists(queries, cent_df, n_probe, query_id, query_vec)
-    if stage_path is not None:
-        # Cluster-partitioned code-table layout (the row-141 sink
-        # applied to this row): codes stage Hive-partitioned by
-        # cluster, and the query reads back only the PROBED lists —
-        # the probe set is at most n_centroids distinct ints
-        # (model-sized collect, same class as the codebook collects),
-        # so the IN-filter lands in PartitionFilters and unprobed
-        # clusters never reach the file listing. Without this the ADC
-        # join is still CORRECT (the LUT join drops unprobed rows)
-        # but scans every code row; at 100 TB the probed fraction is
-        # n_probe/n_centroids of the bytes.
-        from ..sources.sinks import write_partitioned  # noqa: PLC0415
-
-        # STATIC overwrite (full truncate), as with the IVF lists: a
-        # reused stage_path with a re-trained codebook/corpus must not
-        # keep stale partitions for now-empty clusters. The code-table
-        # write (corpus side) and the probe build (query side) are
-        # independent legs — run them as concurrent jobs (guide §2.6).
-        stage_writes.append(
-            stage_pool.submit(
-                write_partitioned,
-                codes, f"{stage_path}/codes", ["cluster"],
-                dynamic_overwrite=False, distribute=True,
-            )
-        )
-        # lineage cut so the pruning collect and the downstream LUT
-        # build share one probe computation
-        probes = probes.localCheckpoint(eager=False)
-        probed = sorted(
-            r["cluster"]
-            for r in probes.select("cluster").distinct().collect()
-        )
-        # surface write errors before the pruned read-back
-        for fut in stage_writes:
-            fut.result()
-        stage_pool.shutdown()
-        keep = F.col("cluster").isin(probed) if probed else F.lit(False)
         codes = (
-            spark.read.parquet(f"{stage_path}/codes")
-            .filter(keep)
-            .select(corpus_id, "cluster", "sub", "code")
+            resid.select(
+                F.col(corpus_id), F.col("cluster"),
+                F.posexplode(r_slices).alias("sub", "subvec"),
+            )
+            .join(F.broadcast(book_df), "sub")
+            .select(
+                F.col(corpus_id), F.col("cluster"), F.col("sub"),
+                F.col("code"), enc_score.alias("__s"),
+            )
+            .groupBy(corpus_id, "cluster", "sub")
+            .agg(F.min_by("code", F.struct("__s", "code")).alias("code"))
         )
+
+        # Query side: probe n_probe lists (the shared _probe_lists argmin
+        # form), then the per-(query, probed-cluster) residual LUT.
+        probes = _probe_lists(queries, cent_df, n_probe, query_id, query_vec)
+        if stage_path is not None:
+            # Cluster-partitioned code-table layout (the row-141 sink
+            # applied to this row): codes stage Hive-partitioned by
+            # cluster, and the query reads back only the PROBED lists —
+            # the probe set is at most n_centroids distinct ints
+            # (model-sized collect, same class as the codebook collects),
+            # so the IN-filter lands in PartitionFilters and unprobed
+            # clusters never reach the file listing. Without this the ADC
+            # join is still CORRECT (the LUT join drops unprobed rows)
+            # but scans every code row; at 100 TB the probed fraction is
+            # n_probe/n_centroids of the bytes.
+            from ..sources.sinks import write_partitioned  # noqa: PLC0415
+
+            # STATIC overwrite (full truncate), as with the IVF lists: a
+            # reused stage_path with a re-trained codebook/corpus must not
+            # keep stale partitions for now-empty clusters. The code-table
+            # write (corpus side) and the probe build (query side) are
+            # independent legs — run them as concurrent jobs (guide §2.6).
+            stage_writes.append(
+                stage_pool.submit(
+                    write_partitioned,
+                    codes, f"{stage_path}/codes", ["cluster"],
+                    dynamic_overwrite=False, distribute=True,
+                )
+            )
+            # lineage cut so the pruning collect and the downstream LUT
+            # build share one probe computation
+            probes = probes.localCheckpoint(eager=False)
+            probed = sorted(
+                r["cluster"]
+                for r in probes.select("cluster").distinct().collect()
+            )
+            # surface write errors before the pruned read-back
+            for fut in stage_writes:
+                fut.result()
+            keep = F.col("cluster").isin(probed) if probed else F.lit(False)
+            codes = (
+                spark.read.parquet(f"{stage_path}/codes")
+                .filter(keep)
+                .select(corpus_id, "cluster", "sub", "code")
+            )
     qres = probes.join(F.broadcast(cent_df), "cluster").select(
         F.col(query_id),
         F.col("cluster"),

@@ -192,22 +192,11 @@ def run_all(spark, sf_dir: str, only: list[str] | None = None, on_result=None,
 
 
 if __name__ == "__main__":
-    import os
-
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = sys.argv[2:] or None
-    from pyspark.sql import SparkSession
+    from strategicai_visibility_loop_etl_spark.session import get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("oracle-harness")
     # Stream each result as it lands so a long run killed mid-way
     # still leaves the completed comparisons on stdout.
     run_all(spark, sf_dir, only, on_result=lambda rep: print(rep, flush=True))

@@ -214,7 +214,7 @@ def test_winnowing_profile_is_shuffle_free(spark, sf_dir):
     assert "lang" not in read and "source" not in read, read
 
 
-def test_scan_parallelize_is_adaptive(spark, sf_dir, monkeypatch):
+def test_scan_parallelize_is_adaptive(spark, sf_dir):
     """Optimization r14: `_t(..., heavy=True)` repairs degenerate scan
     parallelism (the driver testdata is ONE file / ONE row group per
     table, so every pre-shuffle stage otherwise runs in a single task)
@@ -245,10 +245,6 @@ def test_scan_parallelize_is_adaptive(spark, sf_dir, monkeypatch):
     # Naturally-parallel input (>= cores partitions) → untouched.
     par = spark.read.parquet(big).repartition(p)
     assert em._parallelize_scan(spark, par) is par
-    # Kill switch beats the hint.
-    monkeypatch.setattr(em, "_SCAN_PAR_MODE", "off")
-    off = em._t(spark, sf_dir, "embeddings", heavy=True)
-    assert "RoundRobin" not in off._jdf.queryExecution().executedPlan().toString()
 
 
 def test_anomaly_rank_window_has_explicit_partition(spark):

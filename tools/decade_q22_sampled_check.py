@@ -38,25 +38,13 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/decade_sf1"
 
     import duckdb
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     import __spark_entry__ as entrymod
+    from strategicai_visibility_loop_etl_spark.session import get_spark
     from tests.oracle_harness import compare, spark_result
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("decade-q22-sampled-check")
 
     from strategicai_visibility_loop_etl_spark.operators.dedup import (
         ngram_jaccard_pairs,

@@ -62,19 +62,10 @@ def main() -> None:
     import pyarrow.parquet as pq
 
     import __spark_entry__ as entrymod
-    from pyspark.sql import SparkSession
+    from strategicai_visibility_loop_etl_spark.session import get_spark
     from tests.oracle_harness import compare, duckdb_result, spark_result
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("decade-reps-split-check")
 
     # Stage the exact component fixed point once, shared by both.
     t0 = time.monotonic()

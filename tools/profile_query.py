@@ -39,9 +39,12 @@ def main() -> None:
     ns = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     from pyspark.sql import SparkSession
 
+    from strategicai_visibility_loop_etl_spark.session import default_cpus, default_driver_mem
+
+    cpus = default_cpus()
+    # Own builder: the stage metrics come from the live UI REST API, which get_spark turns off.
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("profile-query")
@@ -49,7 +52,7 @@ def main() -> None:
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "true")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_mem())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .getOrCreate()
@@ -69,7 +72,7 @@ def main() -> None:
     def _warm(x):
         return x.astype("float64")
 
-    spark.range(0, 32_000, 1, int(cpus)).select(_warm(col("id"))).write.format(
+    spark.range(0, 32_000, 1, cpus).select(_warm(col("id"))).write.format(
         "noop"
     ).mode("overwrite").save()
 

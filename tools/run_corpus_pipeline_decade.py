@@ -40,23 +40,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/decade_sf1"
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
     from pyspark.storagelevel import StorageLevel
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    from strategicai_visibility_loop_etl_spark.session import get_spark
+
+    spark = get_spark("corpus-pipeline-decade")
 
     from strategicai_visibility_loop_etl_spark.operators.c4 import synth_pages
     from strategicai_visibility_loop_etl_spark.plans.corpus import (

@@ -51,22 +51,10 @@ def main() -> None:
     only = ns.only.split(",") if ns.only else None
 
     import __spark_entry__ as entrymod
-    from pyspark.sql import SparkSession
+    from strategicai_visibility_loop_etl_spark.session import get_spark
     from tests.oracle_harness import run_all
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("decade-sweep")
 
     qs = dict(entrymod.queries())
     qs.update(entrymod.extra_queries())

@@ -13,7 +13,7 @@ skew block alone would contribute ~N^2/2 pairs if any hot-bucket guard
 failed.
 
 Usage:
-    python tools/scale_smoke.py [--mult 10] [--skew 20000] [--cpus 16]
+    python tools/scale_smoke.py [--mult 10] [--skew 20000] [--cpus N]
 
 Results are printed as one JSON line; paste the numbers into
 BASELINE.md's scale-smoke section.
@@ -64,25 +64,16 @@ def main() -> None:
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--mult", type=int, default=10)
     ap.add_argument("--skew", type=int, default=20_000)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "16")))
+    ap.add_argument("--cpus", type=int, default=None,
+                    help="local[N] parallelism (default: SPARK_GRAFT_CPUS or nproc)")
     ap.add_argument("--stage", default="/tmp/scale_smoke_stage")
     ap.add_argument("--emb-mult", type=int, default=50,
                     help="embedding replication factor for the ANN smoke (0 skips)")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from strategicai_visibility_loop_etl_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("scale-smoke")
-        .config("spark.sql.shuffle.partitions", str(args.cpus * 2))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("scale-smoke", cpus=args.cpus)
 
     report: dict = {"mult": args.mult, "skew_block": args.skew}
 
