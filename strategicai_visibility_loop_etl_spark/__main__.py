@@ -12,6 +12,9 @@ Input resolution precedence, same as the reference's
     3. config ``inputs:`` section (short or ``*_csv`` key names)
     4. demo defaults under ``data_demo/``
 
+then, like the reference, a missing ``.csv``/``.xlsx`` input falls back
+to its sibling with the paired extension before the existence check.
+
 Outputs land as parquet directories under ``--out`` (splittable,
 column-pruned — the at-scale sink); pass ``--csv-mirror`` for the
 reference's CSV rendering alongside.
@@ -24,6 +27,7 @@ import os
 import sys
 
 from .plans.pipeline import _resolve_input, load_config, run_visibility_pipeline
+from .sources.readers import resolve_sibling_extension
 
 _DEMO_DIR = "data_demo"
 
@@ -208,15 +212,6 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         "FROG_CSV_PATH", cfg, "screaming_frog", f"{_DEMO_DIR}/screaming_frog_export.csv")
     gsc = _flag(args.gsc) or _resolve_input("GSC_CSV_PATH", cfg, "gsc", f"{_DEMO_DIR}/gsc_export.csv")
     ga4 = _flag(args.ga4) or _resolve_input("GA4_CSV_PATH", cfg, "ga4", f"{_DEMO_DIR}/ga4_export.csv")
-    print(f"Resolved inputs -> Frog: {frog} | GSC: {gsc} | GA4: {ga4}")
-
-    missing = [(tag, p) for tag, p in
-               (("Screaming Frog", frog), ("GSC", gsc), ("GA4", ga4))
-               if not os.path.exists(p)]
-    if missing:
-        for tag, p in missing:
-            print(f"[ERROR] File not found for {tag}: {p}", file=sys.stderr)
-        return 1
 
     owns_spark = spark is None
     if owns_spark:
@@ -224,6 +219,19 @@ def main(argv: list[str] | None = None, spark=None) -> int:
 
         spark = get_spark(cpus=args.cpus)
     try:
+        # The loaders apply the same fallback, so this check agrees
+        # with what the pipeline reads.
+        frog, gsc, ga4 = (resolve_sibling_extension(p, spark) for p in (frog, gsc, ga4))
+        print(f"Resolved inputs -> Frog: {frog} | GSC: {gsc} | GA4: {ga4}")
+
+        missing = [(tag, p) for tag, p in
+                   (("Screaming Frog", frog), ("GSC", gsc), ("GA4", ga4))
+                   if not os.path.exists(p)]
+        if missing:
+            for tag, p in missing:
+                print(f"[ERROR] File not found for {tag}: {p}", file=sys.stderr)
+            return 1
+
         outputs = run_visibility_pipeline(
             spark, cfg, frog_path=frog, gsc_path=gsc, ga4_path=ga4,
             out_dir=args.out,

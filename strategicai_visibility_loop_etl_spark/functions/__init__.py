@@ -1,4 +1,4 @@
-from .urls import url_normalize, url_normalize_df, looks_url_like
+from .urls import url_normalize_df, looks_url_like
 from .numeric import to_double_nocomma, to_long, normalize_ctr
 from .text import (
     normalized_text,
@@ -13,7 +13,6 @@ from .text import (
 from .vectors import cosine_similarity, dot, l2_norm
 
 __all__ = [
-    "url_normalize",
     "url_normalize_df",
     "looks_url_like",
     "to_double_nocomma",

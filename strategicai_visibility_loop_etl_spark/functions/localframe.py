@@ -3,14 +3,15 @@
 ``spark.createDataFrame(local_rows)`` routes through a Python RDD:
 ``defaultParallelism`` partitions, one Python-worker round trip per
 partition per CONSUMER — an un-cached plan re-executes the parallelize
-everywhere the frame is referenced. Profiled at sf0.1/local[32] this
-shows up as 32-task, zero-CPU, zero-I/O stages (~0.2 s of per-task
-worker latency each) in every IVF/PQ query (the centroid/codebook
-tables feed assignment, probing, staging AND search) and in every
-query joining a config dim built from a Python list.
+everywhere the frame is referenced. It shows up as zero-CPU, zero-I/O
+stages in every IVF/PQ query (the centroid/codebook tables feed
+assignment, probing, staging AND search) and in every query joining a
+config dim built from a Python list.
 
 A literal explode is pure JVM, ONE task, costs nothing to re-execute,
-and constant-folds into consumers. Use it for model tables — trained
+and constant-folds into consumers. Measured on 4 cores (sf0.1,
+local[4], median of interleaved pairs), literal vs the one-slice
+``createDataFrame``: qx14 0.58 vs 0.73 s, qx59 0.55 vs 0.79 s. Use it for model tables — trained
 centroids/codebooks, bucket configs, rate tables; real corpus data
 keeps real sources. Guarded by ``max_literal_rows``: a huge literal
 array would instead bloat analysis/codegen (every row is an
@@ -32,10 +33,9 @@ def one_partition_frame(
     a ONE-slice Python RDD (optimization r15). The classic local path
     parallelizes at ``defaultParallelism``, so every materialization of
     the frame — a staging write, every broadcast build — pays one
-    zero-CPU Python-worker round trip PER SLICE (profiled at local[32]:
-    32 × ~0.18 s tasks under each IVF/PQ centroid/codebook write).
-    One slice = one round trip; rows and schema are identical to the
-    local-list form (pinned in tests). Use this, not
+    zero-CPU Python-worker round trip PER SLICE. One slice = one round
+    trip; rows and schema are identical to the local-list form (pinned
+    in tests). Use this, not
     :func:`literal_frame`, for rows carrying wide arrays: array
     literals bloat analysis/codegen per plan copy (measured r14)."""
     return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)

@@ -3,9 +3,8 @@
 The CTR-underperformance slice filters to scored candidates, keeps
 positive missed_clicks, and ranks by opportunity. Ranking uses a
 global row_number — on a slice that is by construction a small
-fraction of rows; at 100 TB, if the slice itself were huge you'd cap
-it (`orderBy(...).limit(N)` → TakeOrdered, no full sort) before
-ranking, which `top_n` below provides.
+fraction of rows, and ``anomaly_ctr_underperf`` caps it
+(`orderBy(...).limit(N)` → TakeOrdered, no full sort) before ranking.
 """
 
 from __future__ import annotations
@@ -80,7 +79,3 @@ def schema_gaps(merged: DataFrame, col: str = "schema_types") -> DataFrame:
     c = F.col(col)
     return merged.filter(c.isNull() | (F.trim(c.cast("string")) == ""))
 
-
-def top_n(df: DataFrame, order_col: str, n: int, ascending: bool = False) -> DataFrame:
-    ordered = F.col(order_col).asc() if ascending else F.col(order_col).desc()
-    return df.orderBy(ordered).limit(n)

@@ -277,12 +277,6 @@ def duplicate_span_fraction(
     )
 
 
-def _minhash_cols(num_hashes: int) -> list[Column]:
-    return [
-        F.min(F.xxhash64(F.col("g"), F.lit(i))).alias(f"__h{i}") for i in range(num_hashes)
-    ]
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -460,37 +454,6 @@ def dedup_minhash_lsh(
     sig = minhash_signatures(df, text_col, id_col, k, num_hashes)
     sig = _stage_roundtrip(sig, stage_path)
     return minhash_lsh_pairs(sig, num_hashes, bands, threshold, max_bucket)
-
-
-def simhash64(text: Column) -> Column:
-    """64-bit SimHash of whitespace tokens, as one per-row expression.
-
-    NOTE: this is the *expression* form (usable anywhere a Column is) —
-    it pays the interpreted higher-order-function tax. The distributed
-    dedup path (``dedup_simhash``) uses the explode + 64-SUM-aggregate
-    shape instead, which stays in codegen.
-    """
-    toks = tokens(text)
-    counts = F.aggregate(
-        toks,
-        F.array_repeat(F.lit(0).cast("long"), _NUM_BITS),
-        lambda acc, t: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    (F.shiftright(F.xxhash64(t), i).bitwiseAND(F.lit(1)) * 2 - 1).cast("long")
-                    for i in range(_NUM_BITS)
-                ]
-            ),
-            lambda a, d: a + d,
-        ),
-    )
-    bit_vals = F.zip_with(
-        counts,
-        F.array(*[F.shiftleft(F.lit(1).cast("long"), i) for i in range(_NUM_BITS)]),
-        lambda c, bit: F.when(c > 0, bit).otherwise(F.lit(0).cast("long")),
-    )
-    return F.aggregate(bit_vals, F.lit(0).cast("long"), lambda acc, v: acc + v)
 
 
 def simhash_table(

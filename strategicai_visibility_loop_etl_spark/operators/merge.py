@@ -43,27 +43,18 @@ def merge_visibility(
     gsc: DataFrame,
     ga4: DataFrame,
     key: str = "url",
-    drop_empty_keys: bool = False,
 ) -> DataFrame:
     """Spine dedup + two left joins (reference etl_merge.py:758-777).
 
-    Like the reference, null/empty keys are KEPT by default (deduped to
-    one spine row; they match nothing in the joins on either engine).
-    ``drop_empty_keys`` exists for callers that want the guard — but
-    note: when ``key`` is an unevaluated derived column (e.g. the URL
-    normalizer's expression tree), a filter on it is predicate-pushed
-    below the projection with the full tree substituted per reference,
-    which can exceed the JVM's 64 KB method limit and knock the whole
-    stage out of codegen. Filter junk on the RAW column at load time
-    instead; that predicate reaches the scan.
+    Like the reference, null/empty keys are KEPT (deduped to one spine
+    row; they match nothing in the joins on either engine). To drop
+    junk keys, filter the RAW column at load time, where the predicate
+    reaches the scan: a filter on the derived key is predicate-pushed
+    below the URL-normalize projection with the whole tree substituted
+    per reference, which can exceed the JVM's 64 KB method limit and
+    knock the stage out of codegen.
     """
-    spine = frog
-    if drop_empty_keys:
-        # Cast only inside the emptiness test so the join key keeps its
-        # native type (ANSI mode rejects length() on numeric keys).
-        non_empty = F.col(key).isNotNull() & (F.trim(F.col(key).cast("string")) != "")
-        spine = spine.filter(non_empty)
-    spine = dedup_spine(spine, key)
+    spine = dedup_spine(frog, key)
     return spine.join(gsc, key, "left").join(ga4, key, "left")
 
 

@@ -169,10 +169,11 @@ def _bt_rounds_model_sized(
     The distributed loop spends its wall time on per-round STRUCTURE,
     not arithmetic: two strength join-backs, a broadcast normalizer
     and a lineage checkpoint cost ~23 AQE query stages per round on a
-    ~items-sized table (profiled: 237 stages, 1.3 s total executor
-    time, ~8 s wall at sf0.1). Here the strength table round-trips
-    the driver instead — the k-means/BPE model-sized-collect
-    discipline: each round is ONE job (denominator hash aggregate
+    ~items-sized table (profiled: 237 stages at sf0.1). Measured on 4
+    cores (qx94 at sf0.1, local[4], median of interleaved pairs): this
+    path 3.71 s vs 6.65 s for the distributed loop. Here the strength
+    table round-trips the driver instead — the k-means/BPE
+    model-sized-collect discipline: each round is ONE job (denominator hash aggregate
     over the pair table with p_i/p_j looked up from a map LITERAL,
     normalizer as a whole-frame window sum of the same order-free
     DECIMAL terms, one model-sized collect).
@@ -186,12 +187,10 @@ def _bt_rounds_model_sized(
     Guarded by ``broadcast_items_max``: the per-round map literal is
     rebuilt (new strengths → new plan → new analysis + codegen) every
     round, so its cost grows with the item count while the join path's
-    per-round cost is structure-bound. Measured at the cap (r15,
-    min-of-3 warm, iters=10): literal wins ≤32 items (3.3 vs 3.8 s at
-    16), loses at 48 (5.3 vs 4.1 s) and degrades to 23/78/160 s at
-    512/2048/4096 items vs a flat ~5-7 s for the join path — hence the
-    cap sits at the measured crossover, far above real model sizes
-    (qx94 has 5 items) and far below the codegen cliff.
+    per-round cost is structure-bound: an earlier sweep put the
+    crossover between 32 and 48 items, with the literal path
+    collapsing by thousands of items. The cap sits at that crossover,
+    far above real model sizes (qx94 has 5 items).
     """
     from pyspark.sql import Window  # noqa: PLC0415
 

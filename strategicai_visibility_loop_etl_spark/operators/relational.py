@@ -525,93 +525,6 @@ def sessionize_metrics(
     ).agg(*aggs)
 
 
-def _re_rounds_model_sized(
-    scen_trans: DataFrame,
-    init_keys: list,
-    scen_list: list,
-    horizon: int,
-) -> DataFrame:
-    """Value-iteration rounds with the (scen, state) → r vector fed
-    back per round as a nested map literal; see the call site in
-    :func:`removal_effect` for the rationale and parity argument.
-    Returns the final value table as (scen, state, r)."""
-    from ..functions.numeric import round_c  # noqa: PLC0415
-
-    spark = scen_trans.sparkSession
-
-    def _d(v):
-        return F.lit(v) if v is not None else F.lit(None).cast("double")
-
-    r: dict = {(k["scen"], k["state"]): 0.0 for k in init_keys}
-    for s in scen_list:
-        r[(s, "CONV")] = 1.0
-        r[(s, "DROP")] = 0.0
-    for _ in range(horizon):
-        per_scen = {s: [] for s in scen_list}
-        for (s, st), v in r.items():
-            per_scen[s].append((st, v))
-        rmap = F.create_map(
-            *[
-                c
-                for s in scen_list
-                for c in (
-                    F.lit(s),
-                    F.create_map(
-                        *[
-                            c2
-                            for st, v in sorted(per_scen[s])
-                            for c2 in (F.lit(st), _d(v))
-                        ]
-                    ),
-                )
-            ]
-        )
-        stepped = (
-            scen_trans.select(
-                "scen",
-                F.col("from").alias("state"),
-                round_c(
-                    F.col("p")
-                    * F.element_at(
-                        F.element_at(rmap, F.col("scen")), F.col("to")
-                    ),
-                    15,
-                ).alias("__t"),
-            )
-            .groupBy("scen", "state")
-            .agg(
-                F.sum(F.col("__t").cast("decimal(38,15)"))
-                .cast("double")
-                .alias("r")
-            )
-            .collect()
-        )
-        r = {(x["scen"], x["state"]): x["r"] for x in stepped}
-        for s in scen_list:
-            r[(s, "CONV")] = 1.0
-            r[(s, "DROP")] = 0.0
-    # Materialize the final vector as a LITERAL explode, not
-    # createDataFrame: parallelizing local Python rows costs one
-    # Python-worker round trip per partition per CONSUMER (profiled:
-    # three 32-task, zero-CPU stages per query run); the literal array
-    # is pure JVM, one task, and re-executes for free.
-    rows = F.array(
-        *[
-            F.struct(
-                F.lit(s).alias("scen"),
-                F.lit(st).alias("state"),
-                _d(v).alias("r"),
-            )
-            for (s, st), v in sorted(r.items())
-        ]
-    )
-    return (
-        spark.range(0, 1, 1, 1)
-        .select(F.explode(rows).alias("__x"))
-        .select("__x.scen", "__x.state", "__x.r")
-    )
-
-
 def removal_effect(
     df: DataFrame,
     seq_col: str,
@@ -620,7 +533,6 @@ def removal_effect(
     conversion_state: str,
     tiebreak_col: str | None = None,
     horizon: int = 8,
-    model_max_entries: int = 128,
 ) -> DataFrame:
     """Markov removal-effect attribution (Anderl et al. 2016 shape) —
     the model-based alternative to Shapley attribution (row 152) that
@@ -772,65 +684,41 @@ def removal_effect(
         .localCheckpoint(eager=False)
     )
 
-    # Value iteration. The scenario-state table is model-sized by
-    # construction (states² × scenarios), so the default path runs
-    # the rounds with the value vector round-tripped through the
-    # driver as a nested map LITERAL (optimization r14, the
-    # k-means/BPE model-sized-collect discipline): one hash-aggregate
-    # job per round instead of a join + union + lineage checkpoint
-    # (profiled at sf0.1: 276 AQE query stages, ~6 s wall, with
-    # per-stage turnaround — not arithmetic — the cost). Collected
-    # doubles re-enter as literals, so every arithmetic step is the
-    # IDENTICAL Spark expression over identical values and the
-    # unrolled SQL twin replays unchanged (equivalence to the join
-    # form pinned in tests). A lookup on a state absent from the
-    # value vector yields NULL and the decimal SUM skips it — the
-    # exact effect of the inner join dropping that row. Degenerate
-    # universes beyond ``model_max_entries`` keep the join path —
-    # the per-round nested map literal is rebuilt (re-analyzed,
-    # re-codegen'd) every round, so it degrades with entry count
-    # (measured r15, horizon=8: literal ~8.5 s at ~290 entries,
-    # 21 s at ~1k, 69 s at ~3.8k vs a flat ~6-7 s join path), while
-    # real models stay tiny (qx95: ~35 entries). The cap sits near
-    # the measured crossover with headroom for real chains.
-    init_keys = (
-        scen_trans.select("scen", F.col("from").alias("state"))
-        .distinct()
-        .collect()
-    )
-    scen_list = sorted({k["scen"] for k in init_keys})
-    if 0 < len(init_keys) + 2 * len(scen_list) <= model_max_entries:
-        r = _re_rounds_model_sized(scen_trans, init_keys, scen_list, horizon)
-    else:
-        absorbing = scens.select(
-            "scen", F.lit("CONV").alias("state"), F.lit(1.0).alias("r")
-        ).unionAll(
-            scens.select(
-                "scen", F.lit("DROP").alias("state"), F.lit(0.0).alias("r")
+    # Value iteration: per round, one join of the transitions against
+    # the value vector, a decimal SUM per (scen, state), and a lineage
+    # checkpoint. A driver-side map-literal form of the same rounds was
+    # flat against this loop on 4 cores (qx95 at sf0.1, local[4]: 5.12
+    # vs 5.27 s median over 10 interleaved pairs, rows identical), so
+    # the join loop is the only path.
+    absorbing = scens.select(
+        "scen", F.lit("CONV").alias("state"), F.lit(1.0).alias("r")
+    ).unionAll(
+        scens.select(
+            "scen", F.lit("DROP").alias("state"), F.lit(0.0).alias("r")
+        )
+    ).localCheckpoint(eager=False)
+    nonabs0 = scen_trans.select(
+        "scen", F.col("from").alias("state")
+    ).distinct().select("scen", "state", F.lit(0.0).alias("r"))
+    r = nonabs0.unionAll(absorbing).localCheckpoint(eager=False)
+    for _ in range(horizon):
+        stepped = (
+            scen_trans.join(
+                r.withColumnRenamed("state", "to"), ["scen", "to"]
             )
-        ).localCheckpoint(eager=False)
-        nonabs0 = scen_trans.select(
-            "scen", F.col("from").alias("state")
-        ).distinct().select("scen", "state", F.lit(0.0).alias("r"))
-        r = nonabs0.unionAll(absorbing).localCheckpoint(eager=False)
-        for _ in range(horizon):
-            stepped = (
-                scen_trans.join(
-                    r.withColumnRenamed("state", "to"), ["scen", "to"]
-                )
-                .select(
-                    "scen",
-                    F.col("from").alias("state"),
-                    round_c(F.col("p") * F.col("r"), 15).alias("__t"),
-                )
-                .groupBy("scen", "state")
-                .agg(
-                    F.sum(F.col("__t").cast("decimal(38,15)"))
-                    .cast("double")
-                    .alias("r")
-                )
+            .select(
+                "scen",
+                F.col("from").alias("state"),
+                round_c(F.col("p") * F.col("r"), 15).alias("__t"),
             )
-            r = stepped.unionAll(absorbing).localCheckpoint(eager=False)
+            .groupBy("scen", "state")
+            .agg(
+                F.sum(F.col("__t").cast("decimal(38,15)"))
+                .cast("double")
+                .alias("r")
+            )
+        )
+        r = stepped.unionAll(absorbing).localCheckpoint(eager=False)
 
     p_conv = r.filter(F.col("state") == "START").select(
         "scen", F.col("r").alias("p_conv")

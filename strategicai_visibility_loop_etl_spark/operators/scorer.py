@@ -47,16 +47,6 @@ def _poly_hash(s: Column) -> Column:
     )
 
 
-def _poly_hash_codes(codes: Column) -> Column:
-    """Fold over a precomputed codepoint array (same values as
-    ``_poly_hash`` without re-splitting the string)."""
-    return F.aggregate(
-        codes,
-        F.lit(0).cast("long"),
-        lambda acc, c: (acc * F.lit(_FP_BASE) + c) % F.lit(_FP_MOD),
-    )
-
-
 def _poly_hash_gram(codes: Column, i: Column, n: int) -> Column:
     """Closed-form fold for the ``n``-codepoint gram starting at
     1-based ``i`` of ``codes``: Σ code_j·31^(n−1−j) mod 1e9+7.

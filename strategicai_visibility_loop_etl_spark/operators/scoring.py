@@ -9,10 +9,8 @@ even for overlapping or boundary-touching buckets.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.localframe import literal_frame
 
 
 def _parse_bucket_key(k: str) -> tuple[float, float] | None:
@@ -49,15 +47,6 @@ def expected_ctr_bucket_rows(scoring_cfg: dict) -> list[tuple[str, float, float,
             continue
         rows.append((str(key), rng[0], rng[1], _normalize_expected(val, units, uplift)))
     return rows
-
-
-def expected_ctr_buckets_df(spark: SparkSession, scoring_cfg: dict) -> DataFrame:
-    """Bucket config → tiny DataFrame (bucket, lo, hi, expected_ctr)."""
-    return literal_frame(
-        spark,
-        expected_ctr_bucket_rows(scoring_cfg),
-        "bucket string, lo double, hi double, expected_ctr double",
-    )
 
 
 def intent_multiplier(

@@ -18,10 +18,10 @@ s3a://, …), so behavior on a real cluster matches local runs instead
 of silently falling back when the driver's POSIX view can't see the
 data. An unresolvable scheme raises loudly rather than defaulting.
 
-Excel: Spark has no xlsx datasource; gated behind an import-try of
-pandas' optional engines and converted via ``spark.createDataFrame``.
-Excel exports are small config-ish files in practice; the 100 TB path
-is CSV/parquet.
+Excel: Spark has no xlsx datasource; the bundled zip+XML reader
+(``sources/xlsx.py``) parses the workbook on the driver and the rows
+enter via ``spark.createDataFrame``. Excel exports are small
+config-ish files in practice; the 100 TB path is CSV/parquet.
 """
 
 from __future__ import annotations
@@ -116,12 +116,8 @@ def _read_csv(spark: SparkSession, path: str, sep: str | None = None) -> DataFra
 
 
 def _read_excel(spark: SparkSession, path: str) -> DataFrame:
-    """xlsx → string-typed DataFrame (reference etl_merge.py:88-108).
-
-    Prefers the pandas/openpyxl engine when installed; otherwise falls
-    back to the bundled zip+XML reader (sources/xlsx.py) so an .xlsx
-    input never hard-stops on a missing optional dependency.
-    """
+    """xlsx → string-typed DataFrame (reference etl_merge.py:88-108),
+    parsed by the bundled zip+XML reader (sources/xlsx.py)."""
     import io  # noqa: PLC0415
 
     # Whole-file fetch through the Hadoop FS API: xlsx exports are
@@ -133,14 +129,6 @@ def _read_excel(spark: SparkSession, path: str) -> DataFrame:
         buf = io.BytesIO(bytes(stream.readAllBytes()))
     finally:
         stream.close()
-    try:
-        import openpyxl  # noqa: F401, PLC0415
-        import pandas as pd  # noqa: PLC0415
-
-        pdf = pd.read_excel(buf, dtype=str)
-        return spark.createDataFrame(pdf.astype("string").where(pdf.notna(), None))
-    except ImportError:
-        buf.seek(0)
     from pyspark.sql.types import StringType, StructField, StructType  # noqa: PLC0415
 
     from .xlsx import read_xlsx_rows  # noqa: PLC0415
@@ -157,23 +145,19 @@ def _read_excel(spark: SparkSession, path: str) -> DataFrame:
     return spark.createDataFrame(body, schema)
 
 
-def resolve_sibling_extension(path: str, spark: SparkSession | None = None) -> str:
+def resolve_sibling_extension(path: str, spark: SparkSession) -> str:
     """csv↔xlsx extension fallback (reference etl_merge.py:717-731):
     when the configured file is missing but a sibling with the paired
-    extension exists, use the sibling.
-
-    With ``spark`` given, existence resolves through the Hadoop FS API
-    (object-store-safe); without it, a driver-local ``os.path`` check
-    (kept for non-session callers; local paths only).
+    extension exists, use the sibling. Existence resolves through the
+    Hadoop FS API, so object-store paths behave like local ones.
     """
-    exists = (lambda p: _fs_exists(spark, p)) if spark is not None else os.path.exists
-    if exists(path):
+    if _fs_exists(spark, path):
         return path
     stem, ext = os.path.splitext(path)
     swaps = {".csv": (".xlsx", ".xls"), ".xlsx": (".csv",), ".xls": (".csv",)}
     for alt in swaps.get(ext.lower(), ()):
         candidate = stem + alt
-        if exists(candidate):
+        if _fs_exists(spark, candidate):
             return candidate
     return path
 

@@ -1,8 +1,8 @@
 """Minimal driver-side .xlsx reader: zip + SpreadsheetML XML, no engine.
 
 Covers the string-typed ingest contract of reference etl_merge.py:88-108
-(``pandas.read_excel(dtype=str)``) without requiring openpyxl: every
-cell surfaces as a string or None. Handled cell types: shared strings
+(``pandas.read_excel(dtype=str)``) with the standard library only:
+every cell surfaces as a string or None. Handled cell types: shared strings
 (``t="s"``), inline strings (``t="inlineStr"``), cached formula strings
 (``t="str"``), booleans (``t="b"`` → TRUE/FALSE), and raw numeric text.
 Number FORMATS are not interpreted — a date-styled cell surfaces its

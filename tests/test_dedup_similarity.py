@@ -87,6 +87,67 @@ def test_simhash_hot_bucket_guard(spark):
     assert dedup_simhash(df, max_bucket=2000).count() == 0
 
 
+# Column-built reference forms of the two signature aggregates. The
+# package builds each as ONE parsed SQL string (cheaper to construct);
+# these are the per-Column forms it replaced, kept as the equivalence
+# oracle.
+def _minhash_ref(df, num_hashes):
+    from strategicai_visibility_loop_etl_spark.operators.dedup import exploded_shingles
+
+    cols = [F.min(F.xxhash64(F.col("g"), F.lit(i))) for i in range(num_hashes)]
+    return exploded_shingles(df).groupBy("id").agg(F.array(*cols).alias("sig"))
+
+
+def _simhash64_ref(text):
+    from strategicai_visibility_loop_etl_spark.functions.text import tokens
+
+    counts = F.aggregate(
+        tokens(text),
+        F.array_repeat(F.lit(0).cast("long"), 64),
+        lambda acc, t: F.zip_with(
+            acc,
+            F.array(
+                *[
+                    (F.shiftright(F.xxhash64(t), i).bitwiseAND(F.lit(1)) * 2 - 1).cast("long")
+                    for i in range(64)
+                ]
+            ),
+            lambda a, d: a + d,
+        ),
+    )
+    bit_vals = F.zip_with(
+        counts,
+        F.array(*[F.shiftleft(F.lit(1).cast("long"), i) for i in range(64)]),
+        lambda c, bit: F.when(c > 0, bit).otherwise(F.lit(0).cast("long")),
+    )
+    return F.aggregate(bit_vals, F.lit(0).cast("long"), lambda acc, v: acc + v)
+
+
+def test_minhash_signatures_match_column_reference(spark):
+    from strategicai_visibility_loop_etl_spark.operators.dedup import minhash_signatures
+
+    df = _corpus(spark)
+    got = {r["id"]: list(r["sig"]) for r in minhash_signatures(df, num_hashes=64).collect()}
+    want = {r["id"]: list(r["sig"]) for r in _minhash_ref(df, 64).collect()}
+    assert set(got) == {1, 2, 3, 4, 5}
+    assert got == want
+
+
+def test_simhash_table_matches_column_reference(spark):
+    from strategicai_visibility_loop_etl_spark.operators.dedup import simhash_table
+
+    df = _corpus(spark)
+    got = {r["id"]: r["h"] for r in simhash_table(df).collect()}
+    want = {
+        r["doc_id"]: r["h"]
+        for r in df.select("doc_id", _simhash64_ref(F.col("text")).alias("h")).collect()
+    }
+    # simhash_table emits no row for a token-less doc; the expression
+    # form returns 0 for it.
+    assert set(got) == {1, 2, 3, 4, 5} and want[6] == 0
+    assert got == {i: want[i] for i in got}
+
+
 def _pathological_corpus(spark, n_identical=1000, n_bases=5000):
     """1k identical boilerplate docs + 10k near-dups (5k pairs of
     2 variants each) — the skew shape that melts naive LSH. Base docs

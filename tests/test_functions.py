@@ -19,7 +19,7 @@ from strategicai_visibility_loop_etl_spark.functions.text import (
     token_count,
     bpe_ish_token_count,
 )
-from strategicai_visibility_loop_etl_spark.functions.urls import looks_url_like, url_normalize
+from strategicai_visibility_loop_etl_spark.functions.urls import looks_url_like, url_normalize_df
 
 
 def _one(spark, expr, value, schema="v string"):
@@ -43,24 +43,27 @@ URL_CASES = [
 ]
 
 
+def _norm(spark, value, base=None, strip_all=False):
+    df = spark.createDataFrame([(value,)], "v string")
+    return url_normalize_df(df, "v", "r", base, strip_all).first()["r"]
+
+
 @pytest.mark.parametrize("raw,base,strip_all,expected", URL_CASES)
 def test_url_normalize(spark, raw, base, strip_all, expected):
-    got = _one(spark, url_normalize(F.col("v"), base, strip_all), raw)
-    assert got == expected
+    assert _norm(spark, raw, base, strip_all) == expected
 
 
 def test_url_normalize_idempotent(spark):
     vals = [(c[0],) for c in URL_CASES]
     df = spark.createDataFrame(vals, "v string")
-    once = df.select(url_normalize(F.col("v")).alias("n1"))
-    twice = once.select("n1", url_normalize(F.col("n1")).alias("n2"))
+    twice = url_normalize_df(url_normalize_df(df, "v", "n1"), "n1", "n2")
     for r in twice.collect():
         assert r["n1"] == r["n2"]
 
 
 def test_url_normalize_null_passthrough(spark):
-    assert _one(spark, url_normalize(F.col("v")), None) is None
-    assert _one(spark, url_normalize(F.col("v")), "   ") == "   "
+    assert _norm(spark, None) is None
+    assert _norm(spark, "   ") == "   "
 
 
 def test_looks_url_like(spark):
@@ -317,16 +320,13 @@ def test_fix_mojibake_preserves_bmp_pua_icon_chars(spark):
 
 
 def test_url_host_parity_with_normalizer_authority(spark):
-    """url_host must agree with the authority component url_normalize
+    """url_host must agree with the authority component url_normalize_df
     embeds (reference etl_merge.py:474-514 lowercases the netloc):
     for every URL with a scheme, the normalized output starts with
     scheme://host once userinfo/port are absent from the input, and
     url_host strips exactly the userinfo/port/trailing-dot decorations
     the normalizer's netloc handling tolerates."""
-    from strategicai_visibility_loop_etl_spark.functions.urls import (
-        url_host,
-        url_normalize,
-    )
+    from strategicai_visibility_loop_etl_spark.functions.urls import url_host
 
     cases = [
         (0, "https://WWW.Example.COM/Path?utm_source=x", "www.example.com"),
@@ -342,10 +342,8 @@ def test_url_host_parity_with_normalizer_authority(spark):
     df = spark.createDataFrame([(i, u) for i, u, _ in cases], "i long, u string")
     got = {
         r["i"]: r
-        for r in df.select(
-            "i",
-            url_host(F.col("u")).alias("h"),
-            url_normalize(F.col("u")).alias("n"),
+        for r in url_normalize_df(
+            df.withColumn("h", url_host(F.col("u"))), "u", "n"
         ).collect()
     }
     for i, _u, want in cases:

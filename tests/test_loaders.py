@@ -106,16 +106,10 @@ def test_autodetect_url_column(spark):
 
 
 def test_csv_xlsx_extension_fallback(spark, tmp_path):
-    from strategicai_visibility_loop_etl_spark.sources.readers import resolve_sibling_extension
-
-    csv_path = tmp_path / "export.csv"
-    csv_path.write_text("url,clicks\nhttps://e.com/a,1\n")
+    (tmp_path / "export.csv").write_text("url,clicks\nhttps://e.com/a,1\n")
     # Configured as .xlsx but only the .csv sibling exists -> falls back.
-    assert resolve_sibling_extension(str(tmp_path / "export.xlsx")) == str(csv_path)
     df = load_table_any(spark, str(tmp_path / "export.xlsx"))
     assert df.columns == ["url", "clicks"]
-    # Existing paths are returned untouched.
-    assert resolve_sibling_extension(str(csv_path)) == str(csv_path)
 
 
 _XLSX_PARTS = {
@@ -219,8 +213,8 @@ def test_remote_scheme_fails_loudly(spark, tmp_path):
 
 
 def test_sibling_fallback_via_hadoop_fs(spark, tmp_path):
-    """The spark-aware existence check resolves the csv sibling the
-    same way the os.path fallback does."""
+    """Existence resolves through the Hadoop FS API: a configured .xlsx
+    falls back to its csv sibling, an existing path is kept."""
     from strategicai_visibility_loop_etl_spark.sources.readers import (
         resolve_sibling_extension,
     )

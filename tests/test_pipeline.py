@@ -216,6 +216,30 @@ def test_cli_env_precedence_and_missing_file(spark, fixture_paths, tmp_path, mon
     assert "[ERROR] File not found for Screaming Frog" in capsys.readouterr().err
 
 
+def test_cli_xlsx_flag_falls_back_to_csv_sibling(spark, fixture_paths, tmp_path, monkeypatch, capsys):
+    """--frog x.xlsx with only x.csv on disk runs on the csv, as the
+    library loaders and the reference's resolve_input_path do."""
+    from strategicai_visibility_loop_etl_spark.__main__ import main
+
+    monkeypatch.setenv("SITE_BASE", "https://e.com")
+    monkeypatch.setenv("ETL_RUN_LOG", "0")
+    monkeypatch.setenv("ETL_AUTODETECT_LOG", "0")
+    frog_xlsx = fixture_paths["frog"][: -len(".csv")] + ".xlsx"
+    rc = main(
+        [
+            "--frog", frog_xlsx,
+            "--gsc", fixture_paths["gsc"],
+            "--ga4", fixture_paths["ga4"],
+            "--out", str(tmp_path / "xlsx_out"),
+        ],
+        spark=spark,
+    )
+    io = capsys.readouterr()
+    assert rc == 0, io.err
+    assert f"Frog: {fixture_paths['frog']} " in io.out
+    assert "Merged rows: 3" in io.out
+
+
 def test_cli_corpus_subcommand(spark, tmp_path, sf_dir):
     """`python -m strategicai_visibility_loop_etl_spark corpus` cleans a parquet
     documents table end-to-end."""

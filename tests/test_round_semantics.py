@@ -901,32 +901,3 @@ def test_bt_model_sized_rounds_match_distributed_loop(spark):
         ).collect()
     ]
     assert fast == slow
-
-
-@pytest.mark.sweep
-def test_removal_effect_model_sized_rounds_match_join_loop(spark):
-    """Optimization r14: value iteration via per-round map literals
-    must be bit-identical to the join+union+checkpoint form."""
-    from strategicai_visibility_loop_etl_spark.operators.relational import (
-        removal_effect,
-    )
-
-    rows = []
-    chans = ["A", "B", "C"]
-    for seq in range(40):
-        for t in range(1 + seq % 4):
-            rows.append((seq, t, chans[(seq * 7 + t * 3) % 3]))
-        if seq % 3 == 0:
-            rows.append((seq, 9, "purchase"))
-    df = spark.createDataFrame(rows, "seq long, t long, ch string")
-    fast = [
-        tuple(r)
-        for r in removal_effect(df, "seq", "t", "ch", "purchase").collect()
-    ]
-    slow = [
-        tuple(r)
-        for r in removal_effect(
-            df, "seq", "t", "ch", "purchase", model_max_entries=0
-        ).collect()
-    ]
-    assert fast == slow

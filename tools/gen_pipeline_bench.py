@@ -2,6 +2,8 @@
 
 Usage: python tools/gen_pipeline_bench.py [out_dir] [n_rows]
 
+out_dir defaults to <system tmp dir>/pipeline_bench.
+
 Then time the reference (env SITE_BASE=https://shop.example.com,
 FROG_CSV_PATH=... etl_merge.py) against
 plans.pipeline.run_visibility_pipeline on the same files.
@@ -9,9 +11,10 @@ plans.pipeline.run_visibility_pipeline on the same files.
 import os
 import random
 import sys
+import tempfile
 
 random.seed(42)
-d = sys.argv[1] if len(sys.argv) > 1 else '/root/repo/.scratch/bigdata'
+d = sys.argv[1] if len(sys.argv) > 1 else os.path.join(tempfile.gettempdir(), 'pipeline_bench')
 os.makedirs(d, exist_ok=True)
 N = int(sys.argv[2]) if len(sys.argv) > 2 else 1_000_000
 with open(f'{d}/frog.csv','w') as f:
