@@ -5,8 +5,7 @@ composition of the operators this engine already oracle-gates —
 language ID, quality scoring, PII redaction, exact dedup, near-dup
 cluster collapse, decontamination, chunking, packing, and shard
 assignment — in the order a FineWeb/RefinedWeb-style corpus pass runs
-them. Each stage is an independent lazy plan; the whole pipeline is a
-handful of narrow shuffles:
+them. The whole pipeline is a handful of narrow shuffles:
 
 0. domain gate   — blocklist/allowlist by URL host (broadcast dim,
                    map-side suffix match; the cheapest filter first)
@@ -24,6 +23,17 @@ handful of narrow shuffles:
                    frame (optional; (gram, id)-only shuffle)
 7. emit          — cleaned docs, plus optional chunked and packed
                    views and a deterministic shard assignment
+
+With near-dup off, the returned frames are lazy (only an opted-in
+``lm_filter.stage_path`` writes its table up front). With near-dup on
+(the default), ``run_corpus_pipeline`` runs eager jobs before it
+returns: the pair build and connected-components rounds, plus the
+module's one barrier, an eager ``localCheckpoint`` of the filtered,
+redacted corpus (``kept``) before stage 4. Every near-dup consumer and
+the ``clean`` frame read it instead of re-running the repair →
+annotate → filter → redact chain. Its cost: the kept rows sit in
+executor block storage for the life of the returned frames, and a lost
+block fails the job (fail-stop) instead of being recomputed.
 
 At 100 TB each stage's scale story is the underlying operator's (see
 their docstrings); this module adds no collect, no global window, no
@@ -116,8 +126,11 @@ def run_corpus_pipeline(
 
     ``docs`` needs (id_col, text_col); extra columns ride along.
     ``benchmark`` (id_col, text_col) enables decontamination when the
-    config asks for it. Returned frames are lazy — write or count them
-    to execute.
+    config asks for it. With near-dup off the returned frames are lazy —
+    write or count them to execute. With near-dup on this call runs
+    eager jobs (the ``kept`` checkpoint, the pair build and the CC
+    rounds; see the module docstring), and ``clean`` and the views on
+    it read the checkpointed rows. ``annotated`` stays lazy either way.
     """
     cfg = {**default_corpus_config(), **(cfg or {})}
     nd = {**default_corpus_config()["neardup"], **(cfg.get("neardup") or {})}
@@ -224,6 +237,12 @@ def run_corpus_pipeline(
     # is the first half of the near-dup pass — one digest shuffle total.
     clean = kept
     if nd["enable"]:
+        # The module's one barrier: without it each near-dup consumer
+        # (the max_bucket percentile job, the pair build's scans, the
+        # star edges, the clean rows) re-runs the regex chain, 4 times
+        # per warm run on the 250-doc perfbench corpus.
+        # localCheckpoint, NOT persist: see operators/clusters.py.
+        kept = kept.localCheckpoint(eager=True)
         reps, stars = collapse_exact(
             kept.select(id_col, text_col), text_col=text_col, id_col=id_col,
             min_tokens=nd["k"],

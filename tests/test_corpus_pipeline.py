@@ -7,6 +7,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from strategicai_visibility_loop_etl_spark.operators.clusters import (
+    cluster_representatives,
+    collapse_exact,
+    connected_components,
+)
+from strategicai_visibility_loop_etl_spark.operators.dedup import ngram_jaccard_pairs
+from strategicai_visibility_loop_etl_spark.operators.textprep import redact_pii
 from strategicai_visibility_loop_etl_spark.plans.corpus import (
     default_corpus_config,
     run_corpus_pipeline,
@@ -63,6 +70,38 @@ def test_corpus_pipeline_stages(corpus):
     shards = {r["doc_id"]: r["shard"] for r in out["shards"].collect()}
     assert set(shards) == {1, 4}
     assert all(0 <= s < 2 for s in shards.values())
+
+
+def test_corpus_pipeline_neardup_reads_kept_checkpoint(corpus):
+    """With near-dup on, the filtered + redacted corpus is materialized
+    once: ``clean`` reads it from the checkpoint (no redact/normalize
+    regex left in its plan) and equals the same operators composed
+    lazily with no barrier, in every column and row."""
+    cfg = default_corpus_config()
+    cfg["min_tokens"] = 6
+    cfg["neardup"] = {"threshold": 0.5}
+    out = run_corpus_pipeline(corpus, cfg)
+
+    plan = out["clean"]._jdf.queryExecution().optimizedPlan().toString()
+    assert "regexp_replace" not in plan, plan
+
+    nd = default_corpus_config()["neardup"]
+    kept = (
+        out["annotated"]
+        .filter(F.col("n_tokens").between(cfg["min_tokens"], cfg["max_tokens"]))
+        .withColumn("text", redact_pii(F.col("text")))
+    )
+    reps, stars = collapse_exact(kept.select("doc_id", "text"), min_tokens=nd["k"])
+    pairs = ngram_jaccard_pairs(
+        reps, k=nd["k"], threshold=0.5, max_bucket=nd["max_bucket"]
+    ).select("id_a", "id_b")
+    comp = connected_components(stars.unionByName(pairs), algorithm=nd["cc_algorithm"])
+    want = cluster_representatives(kept, comp)
+
+    assert out["clean"].columns == want.columns
+    got_rows = sorted(tuple(r) for r in out["clean"].collect())
+    assert got_rows == sorted(tuple(r) for r in want.collect())
+    assert [r[0] for r in got_rows] == [1, 4]
 
 
 def test_corpus_pipeline_minhash_method(corpus, tmp_path):

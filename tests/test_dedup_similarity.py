@@ -87,7 +87,8 @@ def test_simhash_hot_bucket_guard(spark):
     assert dedup_simhash(df, max_bucket=2000).count() == 0
 
 
-# Column-built reference forms of the two signature aggregates. The
+# Column-built reference forms of the minhash and simhash signatures and
+# the LSH band keys. The
 # package builds each as ONE parsed SQL string (cheaper to construct);
 # these are the per-Column forms it replaced, kept as the equivalence
 # oracle.
@@ -123,6 +124,23 @@ def _simhash64_ref(text):
     return F.aggregate(bit_vals, F.lit(0).cast("long"), lambda acc, v: acc + v)
 
 
+def _band_rows_ref(sig_df, num_hashes, bands):
+    r = num_hashes // bands
+    structs = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.xxhash64(
+                F.concat_ws(
+                    ",",
+                    *[F.element_at("sig", b * r + j + 1).cast("string") for j in range(r)],
+                )
+            ).alias("bh"),
+        )
+        for b in range(bands)
+    ]
+    return sig_df.select("id", F.inline(F.array(*structs)))
+
+
 def test_minhash_signatures_match_column_reference(spark):
     from strategicai_visibility_loop_etl_spark.operators.dedup import minhash_signatures
 
@@ -130,6 +148,19 @@ def test_minhash_signatures_match_column_reference(spark):
     got = {r["id"]: list(r["sig"]) for r in minhash_signatures(df, num_hashes=64).collect()}
     want = {r["id"]: list(r["sig"]) for r in _minhash_ref(df, 64).collect()}
     assert set(got) == {1, 2, 3, 4, 5}
+    assert got == want
+
+
+def test_band_rows_match_column_reference(spark):
+    from strategicai_visibility_loop_etl_spark.operators.dedup import (
+        _band_rows,
+        minhash_signatures,
+    )
+
+    sig = minhash_signatures(_corpus(spark), num_hashes=64)
+    got = sorted(tuple(r) for r in _band_rows(sig, 64, 16).collect())
+    want = sorted(tuple(r) for r in _band_rows_ref(sig, 64, 16).collect())
+    assert len(got) == 5 * 16
     assert got == want
 
 

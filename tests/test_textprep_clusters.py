@@ -234,11 +234,30 @@ def test_connected_components_chain_and_clique(spark):
     assert comp == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
 
 
+def _union_find_min_labels(pairs):
+    """Pure-Python oracle: {node: min node id of its component}."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)  # root stays the min id
+    return {x: find(x) for x in parent}
+
+
 @pytest.mark.sweep
 def test_connected_components_star_matches_propagation_random(spark):
     """Property: the alternating-star contraction and min-label
-    propagation agree exactly on random graphs (seeded, several shapes:
-    sparse, dense, with self-loops and duplicate edges)."""
+    propagation agree exactly with each other and with a union-find
+    oracle on random graphs (seeded, several shapes: sparse, dense,
+    with self-loops and duplicate edges)."""
     import random
 
     for seed, n, m in ((1, 40, 25), (2, 60, 90), (3, 30, 200)):
@@ -255,6 +274,7 @@ def test_connected_components_star_matches_propagation_random(spark):
             for r in connected_components(edges, algorithm="star").collect()
         }
         assert prop == star, (seed, {k: (prop[k], star.get(k)) for k in prop if prop[k] != star.get(k)})
+        assert prop == _union_find_min_labels(pairs), seed
 
 
 @pytest.mark.sweep
