@@ -27,7 +27,7 @@ import os
 import sys
 
 from .plans.pipeline import _resolve_input, load_config, run_visibility_pipeline
-from .sources.readers import resolve_sibling_extension
+from .sources.readers import _fs_exists, resolve_sibling_extension
 
 _DEMO_DIR = "data_demo"
 
@@ -219,14 +219,15 @@ def main(argv: list[str] | None = None, spark=None) -> int:
 
         spark = get_spark(cpus=args.cpus)
     try:
-        # The loaders apply the same fallback, so this check agrees
-        # with what the pipeline reads.
+        # The loaders apply the same fallback and resolve paths through
+        # the Hadoop FS API, so these checks agree with what the
+        # pipeline reads (file:// and other scheme URIs included).
         frog, gsc, ga4 = (resolve_sibling_extension(p, spark) for p in (frog, gsc, ga4))
         print(f"Resolved inputs -> Frog: {frog} | GSC: {gsc} | GA4: {ga4}")
 
         missing = [(tag, p) for tag, p in
                    (("Screaming Frog", frog), ("GSC", gsc), ("GA4", ga4))
-                   if not os.path.exists(p)]
+                   if not _fs_exists(spark, p)]
         if missing:
             for tag, p in missing:
                 print(f"[ERROR] File not found for {tag}: {p}", file=sys.stderr)

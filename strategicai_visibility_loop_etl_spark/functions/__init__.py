@@ -6,11 +6,9 @@ from .text import (
     bpe_ish_token_count,
     quality_score,
     lang_id_expr,
-    strip_html,
     fingerprint64,
-    shingles,
 )
-from .vectors import cosine_similarity, dot, l2_norm
+from .vectors import dot
 
 __all__ = [
     "url_normalize_df",
@@ -23,10 +21,6 @@ __all__ = [
     "bpe_ish_token_count",
     "quality_score",
     "lang_id_expr",
-    "strip_html",
     "fingerprint64",
-    "shingles",
-    "cosine_similarity",
     "dot",
-    "l2_norm",
 ]

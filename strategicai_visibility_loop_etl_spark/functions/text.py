@@ -152,46 +152,6 @@ def fingerprint64(col: Column) -> Column:
     return char_fold_hash(normalized_text(col))
 
 
-def shingles(col: Column, k: int = 3) -> Column:
-    """Word k-shingles (array<string>, distinct) of the normalized
-    text. flet-bound: the slice inside the per-shingle lambda must see
-    the token array as a lambda variable, or the regex tokenization
-    re-runs per shingle (see ``functions/exprs.flet``)."""
-    from .exprs import flet  # noqa: PLC0415
-
-    def body(toks: Column) -> Column:
-        n = F.size(toks)
-        idx = F.when(n >= k, F.sequence(F.lit(1), n - F.lit(k - 1))).otherwise(
-            F.array().cast("array<int>")
-        )
-        return F.array_distinct(
-            F.transform(idx, lambda i: F.array_join(F.slice(toks, i, k), " "))
-        )
-
-    return flet(tokens(col), body)
-
-
-def strip_html(col: Column) -> Column:
-    """Crude-but-fast HTML-to-text: drop script/style blocks, strip
-    tags, decode the common entities, collapse whitespace — the
-    pre-filter a crawl pipeline runs before real text extraction.
-    Pure ``regexp_replace`` chain (Java/RE2-common subset: non-greedy
-    dot, case-insensitive flags via inline ``(?i)``, no lookarounds),
-    so it whole-stage-codegens and needs no Python. Deliberately
-    conservative: malformed markup degrades to leftover text, never to
-    an error.
-    """
-    out = F.regexp_replace(col, r"(?is)<(script|style)[^>]*>.*?</\1>", " ")
-    out = F.regexp_replace(out, r"(?s)<!--.*?-->", " ")
-    out = F.regexp_replace(out, r"(?s)<[^>]+>", " ")
-    for ent, rep in (
-        ("&nbsp;", " "), ("&amp;", "&"), ("&lt;", "<"), ("&gt;", ">"),
-        ("&quot;", "\""), ("&#39;", "'"), ("&apos;", "'"),
-    ):
-        out = F.replace(out, F.lit(ent), F.lit(rep))
-    return F.trim(F.regexp_replace(out, r"\s+", " "))
-
-
 # "Sloppy windows-1252": the cp1252 mapping for 0x80-0x9F with latin-1
 # passthrough for the five undefined bytes — the decode browsers (and
 # ftfy) use, and the one that produces the mojibake seen in the wild.

@@ -2,14 +2,14 @@
 
 Two tiers, bit-identical results:
 
-- **Expression forms** (``dot`` / ``l2_norm`` / ``cosine_similarity``)
-  via ``F.zip_with`` + ``F.aggregate``. Higher-order functions run
-  interpreted (no whole-stage codegen) — measured ~20× slower than
-  codegen'd shapes — so these are the *reference* forms, usable
-  anywhere a Column is and handy for tiny frames.
+- **Expression form** (``dot``) via ``F.zip_with`` + ``F.aggregate``.
+  Higher-order functions run interpreted (no whole-stage codegen) —
+  measured ~20× slower than codegen'd shapes — so this is the
+  *reference* form, usable anywhere a Column is and handy for tiny
+  frames.
 - **Arrow forms** (``dot_arrow`` / ``l2_norm_arrow`` /
   ``cosine_arrow``): pandas UDFs that accumulate in float64 with the
-  SAME left-fold order as the expression forms — ``acc += a[:,j] *
+  SAME left-fold order as the expression form — ``acc += a[:,j] *
   b[:,j]`` over dims, vectorized across the batch — so every
   intermediate IEEE operation matches bit-for-bit (and matches
   DuckDB's ``list_dot_product``, which the oracle gate relies on).
@@ -17,7 +17,7 @@ Two tiers, bit-identical results:
   vectorized ops instead of an interpreted lambda per element.
 
 Vectors are assumed rectangular (fixed dim) and non-null in the Arrow
-forms — true for embedding tables; the expression forms null-propagate.
+forms — true for embedding tables; the expression form null-propagates.
 """
 
 from __future__ import annotations
@@ -37,21 +37,6 @@ def dot(a: Column, b: Column) -> Column:
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-
-
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
-def cosine_similarity(a: Column, b: Column) -> Column:
-    denom = l2_norm(a) * l2_norm(b)
-    return F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0))
 
 
 def _mat(vecs: pd.Series) -> np.ndarray:

@@ -37,32 +37,9 @@ from pyspark.sql import functions as F
 from ..functions.localframe import literal_frame
 
 from ..functions.numeric import round_c
-from ..functions.text import fingerprint64, normalized_text, shingles, tokens
+from ..functions.text import normalized_text, tokens
 
 _NUM_BITS = 64
-
-
-def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """One representative row (min id) per distinct normalized text.
-
-    Returns (digest, keep_id, n_dups). Only the 64-hex digest + id ride
-    the shuffle.
-    """
-    digest = F.sha2(normalized_text(F.col(text_col)), 256)
-    return (
-        df.select(digest.alias("digest"), F.col(id_col))
-        .groupBy("digest")
-        .agg(F.min(id_col).alias("keep_id"), F.count("*").alias("n_dups"))
-    )
-
-
-def dedup_fingerprint(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Group by rolling-hash fingerprint (cheap, collision-tolerant tier)."""
-    return (
-        df.select(fingerprint64(F.col(text_col)).alias("fingerprint"), F.col(id_col))
-        .groupBy("fingerprint")
-        .agg(F.min(id_col).alias("keep_id"), F.count("*").alias("n_dups"))
-    )
 
 
 def exploded_shingles(
@@ -494,16 +471,14 @@ def simhash_pairs(
     bands: int = 4,
 ) -> DataFrame:
     """Near-dup pairs from a ``(id, h)`` 64-bit fingerprint table —
-    the banded-Hamming protocol shared by text SimHash and the image
-    perceptual hash (``multimodal.image_neardup_pairs`` delegates
-    here on its (media_id, phash) projection).
+    the banded-Hamming protocol behind text SimHash.
 
     Pigeonhole bucketing: split the 64-bit hash into ``bands`` equal
     chunks; any pair within Hamming distance ``bands − 1`` agrees
     exactly on ≥ 1 chunk, so candidates = pairs sharing
     (chunk_idx, chunk_value). ``max_hamming`` must stay below
-    ``bands`` for that completeness guarantee. NULL fingerprints
-    (quarantined undecodable members) are excluded.
+    ``bands`` for that completeness guarantee. NULL fingerprints are
+    excluded.
     """
     if not 1 <= bands <= 64 or 64 % bands != 0:
         raise ValueError("bands must divide 64")
@@ -1076,11 +1051,11 @@ def line_df_index_write(
 
 
 def recover_count_index(index_path: str, sub: str, sweep: bool = False) -> None:
-    """Crash recovery for :func:`compact_count_index`'s two-rename
-    swap. Idempotent and cheap (one directory listing); called at
-    compaction entry (``sweep=True``) and by the incremental readers
-    (``sweep=False``), so a compaction that died between its renames
-    never strands the index:
+    """Crash recovery for a two-rename index swap (``rename(live,
+    _<sub>_old_*)`` then ``rename(_<sub>_compact_*, live)``).
+    Idempotent and cheap (one directory listing); called by the
+    incremental readers (``sweep=False``), so a swap that died between
+    its renames never strands the index:
 
     - live missing + a compact dir with ``_SUCCESS`` → the crash hit
       between ``rename(live, trash)`` and ``rename(tmp, live)``:
@@ -1129,51 +1104,6 @@ def recover_count_index(index_path: str, sub: str, sweep: bool = False) -> None:
                 os.rename(full, live)
             elif sweep:
                 shutil.rmtree(full, ignore_errors=True)
-
-
-def compact_count_index(
-    spark,
-    index_path: str,
-    sub: str,
-    key_col: str,
-) -> int:
-    """Fold an append-only (key, cnt) partial index — ``lines/`` of the
-    line-df index or ``grams/`` of the gram index — into one aggregated
-    file set: read partials, sum per key, write to a temp sibling, then
-    atomically swap directories. Keeps reader cost O(distinct keys)
-    after arbitrarily many batch appends; run on schedule exactly like
-    any merge-on-read table's compaction. Returns the compacted row
-    count.
-
-    The swap is two renames (live → trash, tmp → live) — the same
-    local-FS/HDFS rename discipline as the streaming ledger
-    (``streaming/sink.py``); on an object store route it through the
-    table format's commit instead. A crash between the two renames is
-    recoverable: :func:`recover_count_index` (run here on entry and by
-    every incremental reader) promotes the fully-written compacted dir
-    or restores the old one, so no state is ever stranded. Callers
-    must not run compaction concurrently with an ``update_index``
-    append.
-    """
-    import shutil
-    import uuid
-
-    recover_count_index(index_path, sub, sweep=True)
-    live = os.path.join(index_path, sub)
-    partials = spark.read.parquet(live)
-    folded = partials.groupBy(key_col).agg(F.sum("cnt").alias("cnt"))
-    tag = uuid.uuid4().hex[:8]
-    tmp = os.path.join(index_path, f"_{sub}_compact_{tag}")
-    folded.write.mode("overwrite").parquet(tmp)
-    n = spark.read.parquet(tmp).count()
-    trash = os.path.join(index_path, f"_{sub}_old_{tag}")
-    os.rename(live, trash)
-    os.rename(tmp, live)
-    shutil.rmtree(trash, ignore_errors=True)
-    # drop the session's cached file listing for the swapped path, or
-    # the next reader resolves the pre-compaction part files
-    spark.catalog.refreshByPath(live)
-    return n
 
 
 def boilerplate_excision_incremental(
@@ -1333,249 +1263,6 @@ def boilerplate_excision_incremental(
             F.lit(nxt).cast("long").alias("seq"),
         ).write.mode("append").parquet(os.path.join(index_path, "ids"))
     return out
-
-
-def minhash_index_write(
-    df: DataFrame,
-    index_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    num_hashes: int = 64,
-    mode: str = "overwrite",
-) -> None:
-    """Materialize (or append to) a persistent MinHash signature index
-    at ``index_path`` — the (id, sig) parquet table the incremental
-    path dedups against."""
-    minhash_signatures(df, text_col, id_col, k, num_hashes).write.mode(
-        mode
-    ).parquet(index_path)
-
-
-def read_minhash_index(spark, index_path: str) -> DataFrame:
-    """Merge-on-read view of the signature index: one (id, sig) row
-    per id. A never-refreshed index (no ``seq`` column) passes
-    through without a shuffle; once any ``refresh=True`` batch has
-    written versioned rows, the highest-``seq`` signature wins per id
-    (legacy rows read as seq 0 via schema merge) — one id-keyed
-    aggregate over the index, the price of mutability. Fold it back
-    to one physical row per id on schedule with
-    :func:`compact_minhash_index`.
-
-    Runs the shared two-rename crash recovery first (mutation-free,
-    ``sweep=False``) — the same discipline as the grams/lines count
-    index readers — so a :func:`compact_minhash_index` that died
-    between its renames never strands the index for readers."""
-    norm = index_path.rstrip("/")
-    parent, base = os.path.split(norm)
-    recover_count_index(parent, base, sweep=False)
-    raw = spark.read.option("mergeSchema", "true").parquet(index_path)
-    if "seq" not in raw.columns:
-        return raw
-    seq = F.coalesce(F.col("seq"), F.lit(0)).cast("long")
-    return (
-        raw.select("id", "sig", seq.alias("__seq"))
-        .groupBy("id")
-        .agg(F.max_by("sig", F.col("__seq")).alias("sig"))
-    )
-
-
-def compact_minhash_index(spark, index_path: str) -> int:
-    """Fold a refreshed (versioned) signature index back to one
-    physical row per id — latest signature, max seq KEPT so later
-    refreshes keep monotone versions. Same two-rename swap +
-    crash-recovery discipline as :func:`compact_count_index`
-    (:func:`recover_count_index` over the parent directory works
-    unchanged because the naming convention is shared). Returns the
-    compacted row count."""
-    import shutil
-    import uuid
-
-    norm = index_path.rstrip("/")
-    parent, base = os.path.split(norm)
-    recover_count_index(parent, base, sweep=True)
-    raw = spark.read.option("mergeSchema", "true").parquet(norm)
-    if "seq" not in raw.columns:
-        raw = raw.withColumn("seq", F.lit(0).cast("long"))
-    seq = F.coalesce(F.col("seq"), F.lit(0)).cast("long")
-    folded = (
-        raw.select("id", "sig", seq.alias("seq"))
-        .groupBy("id")
-        .agg(
-            F.max_by("sig", F.col("seq")).alias("sig"),
-            F.max("seq").alias("seq"),
-        )
-        .select("id", "sig", "seq")
-    )
-    tag = uuid.uuid4().hex[:8]
-    tmp = os.path.join(parent, f"_{base}_compact_{tag}")
-    folded.write.mode("overwrite").parquet(tmp)
-    n = spark.read.parquet(tmp).count()
-    trash = os.path.join(parent, f"_{base}_old_{tag}")
-    os.rename(norm, trash)
-    os.rename(tmp, norm)
-    shutil.rmtree(trash, ignore_errors=True)
-    spark.catalog.refreshByPath(norm)
-    return n
-
-
-def dedup_minhash_incremental(
-    new_docs: DataFrame,
-    index_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    threshold: float = 0.7,
-    max_bucket: int | str = 2000,
-    update_index: bool = False,
-    stage_path: str | None = None,
-    refresh: bool = False,
-) -> DataFrame:
-    """Near-dup pairs for an INCOMING BATCH against an existing
-    signature index, without touching archived text: the operational
-    shape of dedup at 100 TB, where each crawl increment must check
-    against the accumulated corpus but re-shingling petabytes per
-    batch is off the table.
-
-    Only the new batch is shingled and min-hashed; the archived side
-    contributes band keys recomputed from its STORED signatures
-    (map-side arithmetic, no text access, ~num_hashes longs per doc).
-    Candidates are a band join of new-batch rows against (archive ∪
-    new) rows — old↔old pairs are never generated — and verification
-    estimates Jaccard from the two signatures exactly as the batch
-    path does. Bucket caps resolve over the union's bucket-size
-    distribution, so ``"auto"`` sees the same skew the batch run
-    would. Returns canonical (id_a < id_b) pairs where at least one
-    side is new; ``update_index=True`` appends the new signatures to
-    the index afterwards — anti-joined against ids already present, so
-    a re-crawled document id can never create duplicate (id, sig)
-    index rows (which would fan out ambiguous pairs in later batches).
-
-    By default the index ASSUMES IMMUTABLE CONTENT PER ID: if a
-    re-crawled id arrives with changed text, the STORED signature
-    stays authoritative and later batches keep comparing against the
-    old content. ``refresh=True`` is the mutable-content mode: the
-    batch's signatures REPLACE the stored ones for every id in the
-    batch — stale archive rows are excluded from pair generation, and
-    ``update_index`` appends the whole batch as VERSIONED rows
-    (``seq`` = stored max + 1; readers resolve latest-per-id through
-    :func:`read_minhash_index`, fold physically on schedule with
-    :func:`compact_minhash_index`). Equivalence contract for refresh
-    (pytest-asserted): the pairs equal a fresh-corpus run where the
-    archive never contained the stale content. Making the call
-    idempotent-per-batch is the caller's batch-id ledger concern —
-    see ``streaming/sink.py``.
-
-    Equivalence contract (pytest-asserted): identical to running the
-    full batch path over archive+batch and keeping the pairs that
-    involve a new document.
-    """
-    spark = new_docs.sparkSession
-    new_sig = _stage_roundtrip(
-        minhash_signatures(new_docs, text_col, id_col, k, num_hashes),
-        stage_path,
-    )
-    old_sig = read_minhash_index(spark, index_path)
-    archive = (
-        old_sig.join(new_sig.select("id"), "id", "left_anti")
-        if refresh
-        else old_sig
-    )
-    pairs = incremental_pairs_from_signatures(
-        new_sig, archive, num_hashes, bands, threshold, max_bucket
-    )
-    if update_index:
-        # force pair computation BEFORE the index mutates under it
-        pairs = pairs.localCheckpoint()
-        if refresh:
-            # every batch id's signature becomes authoritative: append
-            # versioned rows one seq past the stored max (one bounded
-            # aggregate over the raw index — a single long).
-            raw = spark.read.option("mergeSchema", "true").parquet(
-                index_path
-            )
-            if "seq" in raw.columns:
-                top = raw.agg(
-                    F.max(F.coalesce(F.col("seq"), F.lit(0)))
-                ).first()[0]
-                nxt = int(top or 0) + 1
-            else:
-                nxt = 1
-            new_sig.withColumn("seq", F.lit(nxt).cast("long")).write.mode(
-                "append"
-            ).parquet(index_path)
-        else:
-            # re-crawled ids must not duplicate in the index: the
-            # stored signature stays authoritative, the batch's copy
-            # is dropped
-            fresh = new_sig.join(old_sig.select("id"), "id", "left_anti")
-            fresh.write.mode("append").parquet(index_path)
-    return pairs
-
-
-def incremental_pairs_from_signatures(
-    new_sig: DataFrame,
-    old_sig: DataFrame | None,
-    num_hashes: int = 64,
-    bands: int = 16,
-    threshold: float = 0.7,
-    max_bucket: int | str = 2000,
-) -> DataFrame:
-    """The signature-level core of ``dedup_minhash_incremental``:
-    canonical pairs involving at least one NEW signature, given the
-    archive's (id, sig) table (or None for the very first batch —
-    then it is plain within-batch LSH). Shared by the batch API and
-    the streaming dedup-on-arrival sink."""
-    if old_sig is None:
-        union_sig = new_sig
-        rows_new = _band_rows(new_sig, num_hashes, bands)
-        rows_all = rows_new
-    else:
-        union_sig = old_sig.unionByName(new_sig)
-        rows_new = _band_rows(new_sig, num_hashes, bands)
-        rows_all = _band_rows(old_sig, num_hashes, bands).unionByName(rows_new)
-
-    bucket_sizes = rows_all.groupBy("band", "bh").agg(F.count("*").alias("n"))
-    cap = resolve_max_bucket(bucket_sizes, max_bucket)
-    ok = bucket_sizes.filter(
-        (F.col("n") > 1) & (F.col("n") <= cap)
-    ).select("band", "bh")
-
-    a = rows_new.join(ok, ["band", "bh"]).select(
-        "band", "bh", F.col("id").alias("id_a")
-    )
-    b = rows_all.join(ok, ["band", "bh"]).select(
-        "band", "bh", F.col("id").alias("id_b")
-    )
-    cand = (
-        a.join(b, ["band", "bh"])
-        .filter(F.col("id_a") != F.col("id_b"))
-        .select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sa = union_sig.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = union_sig.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    cand = cand.join(sa, "id_a").join(sb, "id_b")
-    # one parsed expression, not num_hashes python-built Columns
-    # (py4j construction cost — optimization r15); same left-chained
-    # integer adds over the same element_at comparisons
-    agree = F.expr(
-        " + ".join(
-            f"cast((element_at(sig_a, {i + 1}) = element_at(sig_b, {i + 1})) as int)"
-            for i in range(num_hashes)
-        )
-    )
-    est = agree.cast("double") / F.lit(float(num_hashes))
-    return (
-        cand.withColumn("jaccard_est", round_c(est, 6))
-        .filter(F.col("jaccard_est") >= threshold)
-        .select("id_a", "id_b", "jaccard_est")
-    )
 
 
 def lsh_band_plan(

@@ -328,9 +328,6 @@ def k_anonymity_violations(
 
     One hash aggregate + one filter; NULL quasi values group as their
     own combination (a NULL zip code is itself identifying when rare).
-    Companion :func:`k_anonymize` SUPPRESSES the violating rows —
-    suppression (not generalization) because it is lossless about
-    what it keeps and needs no domain hierarchy.
     """
     from pyspark.sql import functions as F
 
@@ -342,30 +339,6 @@ def k_anonymity_violations(
         .filter(F.col("n") < k)
         .orderBy("n", *quasi_cols)
     )
-
-
-def k_anonymize(df, quasi_cols: list[str], k: int = 5):
-    """Suppression form of the k-anonymity gate: drop every row whose
-    quasi-identifier combination has fewer than ``k`` occurrences —
-    the output is k-anonymous over ``quasi_cols`` by construction.
-    One aggregate + one broadcast-able semi join on the combination;
-    no window."""
-    from pyspark.sql import functions as F
-
-    if k < 2:
-        raise ValueError("k must be >= 2")
-    safe = (
-        df.groupBy(*quasi_cols)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") >= k)
-        .select(*quasi_cols)
-    )
-    # null-safe semi join: NULL quasi values are legitimate groups
-    cond = None
-    for c in quasi_cols:
-        t = df[c].eqNullSafe(safe[c])
-        cond = t if cond is None else (cond & t)
-    return df.join(safe, cond, "left_semi")
 
 
 def l_diversity_violations(

@@ -52,7 +52,12 @@ def pagerank(
     - rank update: r'(v) = (1−d)/N + d·(Σ_{u→v} r(u)/outdeg(u)
       + dangling/N); parallel edges contribute once each.
     - N never hits the driver: the node count rides a broadcast 1-row
-      frame, so the operator is a pure plan (no count() action).
+      frame (no count() action).
+    - not a pure plan: the call runs ``iters + 3`` eager local
+      checkpoints (out-degrees, decorated edges, initial ranks, each
+      round's ranks). Each round's ranks feed both a shuffle join and
+      a broadcast aggregate; a lazily checkpointed frame shared that
+      way can deadlock the DAG scheduler against the broadcast thread.
     - exactness: per-edge contributions and new ranks round via
       ``round_c(·,12)`` → DECIMAL(28,12) before any SUM, making each
       iteration's fixed arithmetic reproducible anywhere.
@@ -65,9 +70,9 @@ def pagerank(
     # anti-join — without BOTH cuts the edge scan + deg aggregate
     # replays per iteration.
     outdeg = (
-        e.groupBy("src").agg(F.count("*").alias("__deg")).localCheckpoint(eager=False)
+        e.groupBy("src").agg(F.count("*").alias("__deg")).localCheckpoint(eager=True)
     )
-    edged = e.join(outdeg, "src").localCheckpoint(eager=False)
+    edged = e.join(outdeg, "src").localCheckpoint(eager=True)
 
     ranks = (
         n1.crossJoin(F.broadcast(total))
@@ -77,7 +82,7 @@ def pagerank(
             .cast(_DEC)
             .alias("rank"),
         )
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=True)
     )
     base = F.lit(1.0 - damping)
     for _ in range(iters):
@@ -108,7 +113,7 @@ def pagerank(
             .crossJoin(F.broadcast(dangling))
             .crossJoin(F.broadcast(total))
             .select("id", round_c(val, 12).cast(_DEC).alias("rank"))
-            .localCheckpoint(eager=False)
+            .localCheckpoint(eager=True)
         )
     return ranks
 

@@ -5,8 +5,7 @@
   (SURVEY row 14; the reference's multi-export merge use case,
   reference etl_merge.py:88-108 reads several export shapes of the
   same logical source).
-- ``pivot_counts`` / ``conditional_agg`` — pivot / sum(when()) event
-  breakdowns (SURVEY row 15).
+- ``pivot_counts`` — pivot event breakdowns (SURVEY row 15).
 - ``funnel_steps`` — ordered conversion funnel (earliest step-i event
   strictly after step i−1), one shuffle key for all stages.
 
@@ -169,19 +168,6 @@ def salted_join(
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
     )
     return l_s.join(r_s, [key, "__salt"], how).drop("__salt")
-
-
-def conditional_agg(
-    df: DataFrame,
-    group_col: str,
-    cond_col: str,
-    conditions: dict[str, Column],
-) -> DataFrame:
-    """sum(when(cond, x)) breakdown — the shuffle-free-wide alternative
-    to pivot when conditions are arbitrary expressions, one hash
-    aggregate, map-side partial agg."""
-    aggs = [F.sum(F.when(cond, F.col(cond_col))).alias(name) for name, cond in conditions.items()]
-    return df.groupBy(group_col).agg(*aggs)
 
 
 def shapley_attribution(

@@ -25,7 +25,6 @@
 
 from __future__ import annotations
 
-import math
 import random
 
 import numpy as np
@@ -389,8 +388,7 @@ def _signature(vec_col, planes: list[list[float]]):
     (vectors × planesᵀ → sign bits → packed int64). The expression
     alternative — nbits interpreted aggregate-lambdas per row — is the
     slow path by orders of magnitude at corpus scale; this is the
-    declared Python boundary for the ANN signature, mirroring the
-    multimodal decode boundary.
+    declared Python boundary for the ANN signature.
     """
     plane_matrix = np.asarray(planes, dtype=np.float64).T  # (dim, nbits)
     weights = (1 << np.arange(plane_matrix.shape[1], dtype=np.uint64)).astype(np.uint64)
@@ -658,16 +656,6 @@ def kmeans_assign(
     )
 
 
-def cluster_sizes(assignment: DataFrame) -> DataFrame:
-    """Per-cluster membership counts and mean distance from the
-    assignment table: (cluster, n_members, avg_sq_dist). One partial
-    hash aggregate."""
-    return assignment.groupBy("cluster").agg(
-        F.count("*").alias("n_members"),
-        round_c(F.avg("sq_dist"), 6).alias("avg_sq_dist"),
-    )
-
-
 def semantic_neardup_pairs(
     corpus: DataFrame,
     n_clusters: int = 16,
@@ -738,36 +726,6 @@ def semantic_neardup_pairs(
             round_c(cosine_arrow(F.col("vec_a"), F.col("vec_b")), 6).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
-    )
-
-
-def semantic_dedup(
-    corpus: DataFrame,
-    n_clusters: int = 16,
-    iters: int = 2,
-    threshold: float = 0.95,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    max_cluster: int | str = "auto",
-) -> DataFrame:
-    """Full SemDeDup keep/drop decision: (id, rep_id, keep) — one
-    representative (the minimum id) survives per semantic near-dup
-    component. Pairs from ``semantic_neardup_pairs``; component
-    formation by the oracle-checked ``connected_components``."""
-    from .clusters import connected_components  # noqa: PLC0415
-
-    pairs = semantic_neardup_pairs(
-        corpus, n_clusters, iters, threshold, corpus_id, corpus_vec, max_cluster
-    ).select("id_a", "id_b")
-    comp = connected_components(pairs)
-    spine = corpus.select(F.col(corpus_id).alias("id"))
-    return (
-        spine.join(comp, "id", "left")
-        .select(
-            "id",
-            F.coalesce("component", F.col("id")).alias("rep_id"),
-            (F.coalesce("component", F.col("id")) == F.col("id")).alias("keep"),
-        )
     )
 
 
@@ -1385,28 +1343,6 @@ def _centroid_components(
         round_c(
             F.col("s").cast("double") / F.col("n").cast("double"), 9
         ).alias("c"),
-    )
-
-
-def group_centroids(
-    df: DataFrame,
-    group_col: str,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Per-group mean embedding as an array column (group, centroid),
-    assembled from :func:`_centroid_components` — model-sized output
-    (one row per group)."""
-    return (
-        _centroid_components(df, group_col, vec_col)
-        .groupBy(group_col)
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("dim"), F.col("c")))
-                ),
-                lambda e: e["c"],
-            ).alias("centroid")
-        )
     )
 
 

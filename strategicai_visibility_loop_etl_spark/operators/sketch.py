@@ -205,33 +205,6 @@ def heavy_hitters(
     )
 
 
-def approx_heavy_hitters(
-    df: DataFrame,
-    text_col: str = "text",
-    top_k: int = 50,
-    max_items_tracked: int = 10000,
-) -> DataFrame:
-    """Sketch-based heavy hitters via ``approx_top_k`` (single-pass,
-    bounded state): (token, approx_count) rows, most frequent first.
-
-    The at-scale alternative when the vocabulary itself is too large
-    to hash-aggregate exactly; counts for true heavy hitters are exact
-    as long as they dominate ``max_items_tracked``. Verified against
-    the exact census by containment/tolerance tests (approx output is
-    engine-specific, so no cross-engine oracle)."""
-    toks = df.select(
-        F.explode(
-            F.split(normalized_text(F.coalesce(F.col(text_col), F.lit(""))), " ")
-        ).alias("token")
-    ).filter(F.length("token") >= 1)
-    sk = toks.agg(
-        F.expr(f"approx_top_k(token, {top_k}, {max_items_tracked})").alias("tk")
-    )
-    return sk.select(F.explode("tk").alias("e")).select(
-        F.col("e.item").alias("token"), F.col("e.count").alias("approx_count")
-    )
-
-
 def cms_shard_sketches(
     df: DataFrame,
     value_col: str,

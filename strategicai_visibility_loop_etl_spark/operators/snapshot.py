@@ -9,8 +9,8 @@ comparison itself a first-class distributed op:
   changed / unchanged between two snapshots by content fingerprint.
   One full-outer shuffled join on the key — only (key, fingerprint)
   ride the shuffle, never document bodies; with both snapshots
-  written bucketed on the key (sources/sinks.py) the Exchange
-  disappears entirely. Status is a pure codegen'd CASE.
+  written bucketed on the key, the Exchange disappears entirely.
+  Status is a pure codegen'd CASE.
 - ``scd2_intervals`` — compress a change log into type-2
   slowly-changing-dimension rows (value, effective_from,
   effective_to, is_current). Two window passes over ONE shuffle on
@@ -376,8 +376,7 @@ def id_dictionary_build(
     ids) that otherwise ride every shuffle of a 100 TB pipeline as
     full strings. Pair with :func:`id_dictionary_update` (append-only
     growth: existing ids NEVER change — the property that makes the
-    encoding safe to persist and join against historical outputs) and
-    :func:`encode_with_dictionary`.
+    encoding safe to persist and join against historical outputs).
 
     Scale shape: numbering uses the SHARED distributed two-pass
     prefix sum (`global_prefix_sum` — range-partition, local
@@ -446,26 +445,3 @@ def id_dictionary_update(
         )
     )
     return dictionary.select("key", "key_id").unionByName(assigned)
-
-
-def encode_with_dictionary(
-    df: DataFrame,
-    dictionary: DataFrame,
-    key_col: str,
-    out_col: str = "key_id",
-) -> DataFrame:
-    """Attach the dictionary id for ``key_col`` (left
-    join — unseen keys get NULL, the caller's signal to run
-    :func:`id_dictionary_update` first). No broadcast hint: AQE
-    broadcasts small dictionaries and shuffle-joins web-scale ones.
-    """
-    if out_col in df.columns:
-        raise ValueError(
-            f"df already has a column named {out_col!r} -- pass a "
-            "different out_col (a silent duplicate would fail later "
-            "with AMBIGUOUS_REFERENCE, far from the cause)"
-        )
-    d = dictionary.select(
-        F.col("key").alias(key_col), F.col("key_id").alias(out_col)
-    )
-    return df.join(d, key_col, "left")

@@ -203,32 +203,6 @@ def repetition_metrics(
     )
 
 
-def term_document_frequency(
-    df: DataFrame,
-    top_k: int = 50,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Top-``top_k`` terms by document frequency: (term, df).
-
-    Per-doc distinct terms (``array_distinct`` before the explode — no
-    shuffle spent on within-doc dedup), one partial-aggregable count
-    per term, then a TakeOrdered top-k (never a global sort of the
-    vocabulary). Deterministic tiebreak: df desc, term asc.
-    """
-    norm = normalized_text(F.coalesce(F.col(text_col), F.lit("")))
-    ex = (
-        df.select(F.explode(F.array_distinct(F.split(norm, " "))).alias("term"))
-        .filter(F.col("term") != "")
-    )
-    return (
-        ex.groupBy("term")
-        .agg(F.count("*").alias("doc_freq"))
-        .orderBy(F.desc("doc_freq"), F.asc("term"))
-        .limit(top_k)
-    )
-
-
 def drop_common_lines(
     df: DataFrame,
     max_doc_freq: int = 1,

@@ -3,9 +3,12 @@
 Counterpart of reference etl_merge.py:733-1012 ``main()``: resolve
 inputs (env > config > defaults), load + normalize the three sources,
 aggregate, merge on the crawl spine, derive + score, emit slices and
-run/governance metadata. Everything between read and write is one lazy
-logical plan per output — Catalyst sees the whole pipeline and prunes /
-pushes down per sink.
+run/governance metadata. Without ``out_dir`` every output is one lazy
+logical plan — Catalyst sees the whole pipeline and prunes / pushes
+down per sink. With ``out_dir`` two parquet barriers cut that plan:
+the merge result is staged under ``_stage/merge`` and re-read before
+derive/score, and ``merged`` is written and re-read before the slices
+derive from it.
 """
 
 from __future__ import annotations
@@ -144,11 +147,13 @@ def run_visibility_pipeline(
     ga4_path: str | None = None,
     out_dir: str | None = None,
 ) -> dict[str, DataFrame]:
-    """Run the full merge; returns {'merged', 'ctr_underperf', 'schema_gaps'}.
+    """Run the full merge; returns {'merged', 'ctr_underperf', 'schema_gaps'},
+    plus 'ctr_debug' when ``output.write_slices`` is set.
 
     Writes parquet outputs when ``out_dir`` is given (parquet, not CSV —
-    at 100 TB the sink must be splittable and column-pruned; a CSV
-    mirror is one ``.write.csv`` away for the reference's consumers).
+    at 100 TB the sink must be splittable and column-pruned).
+    ``output.csv_mirror`` additionally writes each output as a header'd
+    CSV directory ``<name>_csv`` for the reference's consumers.
     """
     cfg = cfg or default_config()
     site_base = os.getenv("SITE_BASE", "").strip() or None

@@ -57,25 +57,3 @@ def get_spark(app_name: str = "strategicai_visibility_loop_etl_spark", cpus: int
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
-
-
-def register_views(spark: SparkSession, data_dir: str, tables: list[str] | None = None) -> list[str]:
-    """Register each ``<data_dir>/<name>.parquet`` as a temp view so the
-    whole engine is reachable through plain ``spark.sql(...)`` — the
-    SQL front door next to the DataFrame one. Returns the view names.
-
-    Views are lazy metadata: no data is read until a query runs, and
-    every registered query (and any ad-hoc SQL) then benefits from the
-    same Catalyst pushdown/pruning as the DataFrame API.
-    """
-    import glob
-    import os as _os
-
-    if tables is None:
-        tables = sorted(
-            _os.path.splitext(_os.path.basename(p))[0]
-            for p in glob.glob(_os.path.join(data_dir, "*.parquet"))
-        )
-    for t in tables:
-        spark.read.parquet(_os.path.join(data_dir, f"{t}.parquet")).createOrReplaceTempView(t)
-    return list(tables)

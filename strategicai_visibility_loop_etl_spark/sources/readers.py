@@ -194,251 +194,3 @@ def load_table_any(spark: SparkSession, path: str) -> DataFrame:
     if ext not in {".parquet", ".orc", ".json", ".jsonl", ".ndjson"}:
         df = df.select([F.col(c).cast("string").alias(c) for c in df.columns])
     return df
-
-
-def read_jsonl_robust(
-    spark: SparkSession,
-    path: str,
-    schema: str,
-    corrupt_col: str = "_corrupt_record",
-) -> tuple[DataFrame, DataFrame]:
-    """Schema'd JSONL read that quarantines malformed lines instead of
-    failing the job or silently nulling them: returns
-    ``(good, corrupt)`` frames.
-
-    Web-scale JSONL exports always contain some broken lines; FAILFAST
-    kills a 100-TB job on the first one, and plain PERMISSIVE leaves
-    nulled rows indistinguishable from legitimately-null data. This
-    reads PERMISSIVE with an explicit corrupt-record column (explicit
-    ``schema`` — no inference pass over the corpus), splits on its
-    nullness, and returns the quarantine frame for the dead-letter
-    sink. ``good`` drops the marker column; ``corrupt`` carries the
-    raw offending line.
-    """
-    full_schema = f"{schema}, {corrupt_col} string"
-    df = (
-        spark.read.schema(full_schema)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
-        .json(path)
-        # Spark requires materializing via cache/checkpoint-free plans
-        # when filtering on the corrupt column alone; referencing the
-        # full row keeps the plan legal.
-        .cache()
-    )
-    good = df.filter(F.col(corrupt_col).isNull()).drop(corrupt_col)
-    corrupt = df.filter(F.col(corrupt_col).isNotNull()).select(
-        F.col(corrupt_col).alias("raw_line")
-    )
-    return good, corrupt
-
-
-def read_warc_lite(spark: SparkSession, path: str) -> DataFrame:
-    """Raw crawl-record ingest: WARC-shaped record streams → one row
-    per record with parsed headers and payload.
-
-    Training corpora start life as WARC dumps (Common Crawl et al.).
-    This reads the WARC-lite subset — records delimited by a
-    ``WARC/1.0`` version line, ``Key: Value`` header block, blank
-    line, then the payload — using Spark's text datasource with a
-    custom record delimiter, so splitting happens at the Hadoop input
-    layer: a 100 TB dump fans out by HDFS block, no driver-side
-    parsing and no whole-file reads (gzipped members are the usual
-    non-splittable exception — one task per .gz file). Header parsing
-    is a pure-expression regex pass over each record's header block.
-
-    Columns: ``warc_type``, ``target_uri``, ``warc_date``,
-    ``content_length`` (long, NULL if absent/garbled), ``headers``
-    (map<string,string>, FIRST occurrence per key — WARC legally
-    repeats keys such as ``WARC-Concurrent-To``, and later values of
-    a repeated key are dropped; use ``read_warc_gz`` for full
-    multi-value header structs), ``payload``.
-
-    Real WARC adds gzip member framing and digest/continuation
-    semantics; this reader deliberately stops at the record/header/
-    payload shape (the part Spark should own) — wire a real warcio
-    pass through ``mapInPandas`` if byte-exact WARC is needed.
-    """
-    raw = spark.read.option("lineSep", "WARC/1.0").text(path)
-    rec = F.col("value")
-    # Every record: optional leading CRLF remnants, header block,
-    # blank line, payload (may itself contain blank lines).
-    parts = F.split(rec, r"\r?\n\r?\n", 2)
-    hb = F.trim(F.element_at(parts, 1))
-    payload = F.element_at(parts, 2)
-    keys = F.regexp_extract_all(hb, F.lit(r"(?m)^([\w-]+):[^\n]*$"), 1)
-    vals = F.transform(
-        F.regexp_extract_all(hb, F.lit(r"(?m)^[\w-]+:([^\n]*)$"), 1),
-        lambda v: F.trim(v),
-    )
-    # WARC legally repeats header keys (e.g. WARC-Concurrent-To), but
-    # Spark's default mapKeyDedupPolicy=EXCEPTION would fail the whole
-    # read on a duplicate — keep the FIRST occurrence of each key
-    # (header blocks are tiny, the O(n²) array_position is fine).
-    ents = F.zip_with(keys, vals, lambda k, v: F.struct(k.alias("key"), v.alias("value")))
-    first = F.filter(
-        ents, lambda e, i: F.array_position(keys, e["key"]) == i + F.lit(1)
-    )
-    hdrs = F.map_from_entries(first)
-    return (
-        raw.filter(F.length(F.trim(rec)) > 0)
-        .select(hdrs.alias("headers"), payload.alias("payload"))
-        .select(
-            F.col("headers")["WARC-Type"].alias("warc_type"),
-            F.col("headers")["WARC-Target-URI"].alias("target_uri"),
-            F.col("headers")["WARC-Date"].alias("warc_date"),
-            F.col("headers")["Content-Length"]
-            .try_cast("long")
-            .alias("content_length"),
-            "headers",
-            F.coalesce(F.col("payload"), F.lit("")).alias("payload"),
-        )
-    )
-
-
-WARC_GZ_SCHEMA = (
-    "src_file string, warc_type string, target_uri string, "
-    "warc_date string, content_length long, "
-    "headers array<struct<key:string,value:string>>, "
-    "payload binary, digest_ok boolean"
-)
-
-
-def _iter_warc_records(raw: bytes):
-    """Yield (version, header_pairs, payload) from a (possibly
-    multi-member) gzip WARC byte stream. Pure-Python, executor-side."""
-    import zlib
-
-    d = zlib.decompressobj(47)  # gzip wrapper, auto header detect
-    buf = bytearray()
-    data = raw
-    while data:
-        buf += d.decompress(data)
-        data = d.unused_data
-        if data and d.eof:
-            d = zlib.decompressobj(47)  # next gzip member
-        elif not d.eof:
-            break  # truncated member: parse what we have
-    mv = bytes(buf)
-    pos = 0
-    n = len(mv)
-    while pos < n:
-        # skip inter-record CRLF padding
-        while pos < n and mv[pos : pos + 1] in (b"\r", b"\n"):
-            pos += 1
-        if pos >= n:
-            break
-        hdr_end = mv.find(b"\r\n\r\n", pos)
-        sep_len = 4
-        if hdr_end < 0:
-            hdr_end = mv.find(b"\n\n", pos)
-            sep_len = 2
-        if hdr_end < 0:
-            break  # garbled tail
-        block = mv[pos:hdr_end].decode("utf-8", errors="replace")
-        lines = block.replace("\r\n", "\n").split("\n")
-        version = lines[0].strip()
-        pairs = []
-        for ln in lines[1:]:
-            if ":" in ln:
-                k, v = ln.split(":", 1)
-                pairs.append((k.strip(), v.strip()))
-        clen = 0
-        for k, v in pairs:
-            if k.lower() == "content-length":
-                try:
-                    clen = int(v)
-                except ValueError:
-                    clen = 0
-                break
-        body_start = hdr_end + sep_len
-        payload = mv[body_start : body_start + clen]
-        yield version, pairs, payload
-        pos = body_start + clen
-
-
-def read_warc_gz(spark: SparkSession, path: str) -> DataFrame:
-    """Real WARC ingest: per-record gzip-member ``.warc.gz`` dumps
-    (the Common Crawl wire format) → one row per record with FULL
-    multi-value headers, binary payload and block-digest verification.
-
-    This is the documented ``mapInPandas`` escape hatch of
-    :func:`read_warc_lite` made real. Scale shape: gzip members are
-    not block-splittable, so the parallel unit is the FILE — exactly
-    how Common Crawl ships (tens of thousands of ~1 GiB segment
-    files): ``binaryFile`` lists and distributes whole files, one
-    Arrow-batched Python task decompresses member-by-member
-    (``zlib.decompressobj`` over ``unused_data``, no third-party
-    deps) and walks records by the WARC framing (version line, header
-    block, blank line, ``Content-Length`` bytes of payload). Nothing
-    ever collects to the driver; per-file memory is one decompressed
-    segment.
-
-    Differences from ``read_warc_lite`` (the splittable text-mode
-    subset): headers come back as ``array<struct<key,value>>``
-    preserving EVERY occurrence of legally-repeated keys
-    (``WARC-Concurrent-To``); the payload is ``binary`` (HTTP bodies
-    are not UTF-8); and ``digest_ok`` verifies the record's
-    ``WARC-Block-Digest`` (``sha1:BASE32`` per the WARC 1.0/1.1 spec)
-    against the payload — NULL when the record carries no digest,
-    False on corruption.
-    """
-    import base64
-    import hashlib
-
-    files = spark.read.format("binaryFile").load(path)
-
-    def parse(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for _, file_row in pdf.iterrows():
-                src = file_row["path"]
-                for version, pairs, payload in _iter_warc_records(
-                    bytes(file_row["content"])
-                ):
-                    if not version.startswith("WARC/"):
-                        continue
-                    hmap = {}
-                    for k, v in pairs:
-                        hmap.setdefault(k.lower(), v)
-                    digest_ok = None
-                    dig = hmap.get("warc-block-digest")
-                    if dig and dig.lower().startswith("sha1:"):
-                        want = dig.split(":", 1)[1].strip().upper()
-                        got = base64.b32encode(
-                            hashlib.sha1(payload).digest()
-                        ).decode("ascii")
-                        digest_ok = got == want
-                    clen = None
-                    if "content-length" in hmap:
-                        try:
-                            clen = int(hmap["content-length"])
-                        except ValueError:
-                            clen = None
-                    rows.append(
-                        {
-                            "src_file": src,
-                            "warc_type": hmap.get("warc-type"),
-                            "target_uri": hmap.get("warc-target-uri"),
-                            "warc_date": hmap.get("warc-date"),
-                            "content_length": clen,
-                            "headers": [
-                                {"key": k, "value": v} for k, v in pairs
-                            ],
-                            "payload": payload,
-                            "digest_ok": digest_ok,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "src_file", "warc_type", "target_uri", "warc_date",
-                    "content_length", "headers", "payload", "digest_ok",
-                ],
-            )
-
-    return files.select("path", "content").mapInPandas(
-        parse, WARC_GZ_SCHEMA
-    )

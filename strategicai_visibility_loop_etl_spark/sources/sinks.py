@@ -1,170 +1,14 @@
-"""Output sinks: partitioned / bucketed writes for shuffle-free reuse.
+"""Output sinks: Hive-style partitioned parquet with dynamic overwrite.
 
-At 100 TB the win is not the write — it's every downstream join and
-aggregation on the bucket key skipping its shuffle. ``write_bucketed``
-persists a DataFrame as a bucketed table (sorted within buckets);
-two tables bucketed on the same key × count join with NO exchange on
-either side, and a groupBy on the key needs no shuffle at all.
-
-Bucketed tables require the session catalog (``saveAsTable``); plain
-``parquet(path)`` cannot carry bucket metadata. Partitioned writes
-(``partition_cols``) compose: partition pruning eliminates files,
-bucketing eliminates shuffles.
+Partition pruning eliminates files: a reader filtering on the
+partition columns lists only the matching directories.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: Sequence[str],
-    num_buckets: int = 64,
-    partition_cols: Sequence[str] | None = None,
-    mode: str = "overwrite",
-    path: str | None = None,
-) -> None:
-    """Persist ``df`` as a bucketed (and optionally partitioned) table.
-
-    ``num_buckets`` sizing: aim for buckets of 100-500 MB at the target
-    scale — too few buckets caps join parallelism, too many makes small
-    files. Data is sorted within buckets by the bucket key so
-    merge-joins need no sort either.
-    """
-    writer = df.write.mode(mode).format("parquet")
-    if path:
-        writer = writer.option("path", path)
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer = writer.bucketBy(num_buckets, *bucket_cols).sortBy(*bucket_cols)
-    writer.saveAsTable(table)
-
-
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    """Read a catalog table (bucket metadata flows into planning)."""
-    return spark.table(table)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    in_path: str,
-    out_path: str,
-    target_mb: int = 256,
-) -> int:
-    """Rewrite a directory of (typically many small) parquet files into
-    ~``target_mb``-sized files; returns the output file count.
-
-    The nightly small-files compaction every long-lived ingest needs:
-    streaming/micro-batch sinks accumulate thousands of KB-scale files
-    and scan planning (file listing + footer reads + one task per tiny
-    split) comes to dominate. Output file count = ceil(input bytes /
-    target), sized from the Hadoop FS API (object-store safe — never
-    ``os.listdir``); the rewrite is one round-robin repartition, no
-    key assumption. For sort/cluster-aware layouts use
-    ``write_bucketed`` instead — this keeps only sizes, not order.
-    """
-    import math
-
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(in_path)
-    fs = p.getFileSystem(conf)
-    total = fs.getContentSummary(p).getLength()
-    n_files = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
-    spark.read.parquet(in_path).repartition(n_files).write.mode("overwrite").parquet(out_path)
-    out_p = jvm.org.apache.hadoop.fs.Path(out_path)
-    statuses = fs.listStatus(out_p)
-    return sum(
-        1 for i in range(len(statuses)) if statuses[i].getPath().getName().endswith(".parquet")
-    )
-
-
-def zorder_value(cols: Sequence, bits: int = 16):
-    """Morton (Z-order) interleave of up to a few numeric columns,
-    each pre-normalized to ``[0, 2^bits)`` — the multi-dimensional
-    clustering key behind data-skipping layouts (Delta OPTIMIZE
-    ZORDER BY, Hudi clustering). Pure codegen bit arithmetic: for each
-    of ``bits`` positions, bit ``i`` of column ``j`` lands at output
-    position ``i × n_cols + j``."""
-    from pyspark.sql import functions as F
-
-    n = len(cols)
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        for j, c in enumerate(cols):
-            bit = F.shiftright(c.cast("long"), i).bitwiseAND(F.lit(1))
-            z = z.bitwiseOR(F.shiftleft(bit, i * n + j))
-    return z
-
-
-def _write_curve_clustered(
-    df: DataFrame,
-    path: str,
-    cols: Sequence[str],
-    key_fn,
-    bits: int,
-    num_files: int | None,
-    mode: str,
-) -> None:
-    """Shared body of the space-filling-curve sinks: min-max-normalize
-    ``cols`` to ``bits`` bits via ONE scalar aggregate (broadcast
-    literals, no window), compute the curve key with ``key_fn``,
-    range-partition on it (the only shuffle), sort within partitions,
-    write."""
-    from pyspark.sql import functions as F
-
-    stats = df.agg(
-        *[F.min(c).alias(f"mn_{c}") for c in cols],
-        *[F.max(c).alias(f"mx_{c}") for c in cols],
-    ).first()
-    top = (1 << bits) - 1
-    scaled = []
-    for c in cols:
-        mn, mx = stats[f"mn_{c}"], stats[f"mx_{c}"]
-        span = (mx - mn) or 1
-        scaled.append(
-            ((F.col(c) - F.lit(mn)) * F.lit(top) / F.lit(span)).cast("long")
-        )
-    keyed = df.withColumn("__curve", key_fn(scaled))
-    if num_files:
-        keyed = keyed.repartitionByRange(num_files, "__curve")
-    else:
-        keyed = keyed.repartitionByRange("__curve")
-    keyed.sortWithinPartitions("__curve").drop("__curve").write.mode(
-        mode
-    ).parquet(path)
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    zorder_cols: Sequence[str],
-    bits: int = 16,
-    num_files: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write ``df`` as parquet clustered by the Z-order of
-    ``zorder_cols``: rows close in EVERY clustered dimension land in
-    the same files, so parquet min/max stats prune scans filtered on
-    ANY of the dimensions — the layout lever for 100-TB tables queried
-    along more than one column (a plain sort only skips on its leading
-    column).
-
-    Each column min-max-normalizes to ``bits`` bits via one scalar
-    aggregate (broadcast literals, no window); the interleaved key
-    drives ``repartitionByRange`` (range exchange ≈ the only shuffle)
-    plus an intra-partition sort. Stats-based skipping is asserted by
-    the sink tests: per-file value ranges shrink ~√files per dimension
-    vs an unclustered write.
-    """
-    _write_curve_clustered(
-        df, path, zorder_cols, lambda sc: zorder_value(sc, bits), bits,
-        num_files, mode,
-    )
+from pyspark.sql import DataFrame
 
 
 def write_partitioned(
@@ -212,71 +56,3 @@ def write_partitioned(
             spark.conf.set(key, prev)
         else:
             spark.conf.unset(key)
-
-
-def hilbert_value(xcol, ycol, bits: int = 16):
-    """2-D Hilbert curve index of two columns pre-normalized to
-    ``[0, 2^bits)`` — pure codegen: a ``bits``-step fold carrying
-    (d, x, y) through the classic xy2d quadrant-rotation recurrence.
-
-    Why offer it next to ``zorder_value``: the Hilbert curve is the
-    space-filling curve with TRUE adjacency — every consecutive pair
-    of curve positions is grid-adjacent (|Δx|+|Δy| = 1, pinned in
-    pytest), where Z-order takes long diagonal jumps at quadrant
-    boundaries. Same shuffle shape, better locality → tighter
-    COMBINED per-file min/max spans at equal file counts. 2-D only by design
-    (higher dimensions need Gray-code state tables; ``zorder_value``
-    remains the n-D tool) — and 2-D is the common layout pair
-    (time × key, host × path).
-    """
-    from pyspark.sql import functions as F
-
-    steps = F.array(*[F.lit(1 << i).cast("long") for i in range(bits - 1, -1, -1)])
-    init = F.struct(
-        F.lit(0).cast("long").alias("d"),
-        xcol.cast("long").alias("x"),
-        ycol.cast("long").alias("y"),
-    )
-
-    def step(acc, s):
-        rx = F.when(acc["x"].bitwiseAND(s) > 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        ry = F.when(acc["y"].bitwiseAND(s) > 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        d2 = acc["d"] + s * s * (rx * 3).bitwiseXOR(ry)
-        # rotate the quadrant: only when ry == 0; mirror when rx == 1,
-        # then swap x/y.
-        fx = F.when(rx == 1, s - 1 - acc["x"]).otherwise(acc["x"])
-        fy = F.when(rx == 1, s - 1 - acc["y"]).otherwise(acc["y"])
-        nx = F.when(ry == 0, fy).otherwise(acc["x"])
-        ny = F.when(ry == 0, fx).otherwise(acc["y"])
-        return F.struct(d2.alias("d"), nx.alias("x"), ny.alias("y"))
-
-    return F.aggregate(steps, init, step, lambda acc: acc["d"])
-
-
-def write_hilbert(
-    df: DataFrame,
-    path: str,
-    cluster_cols: Sequence[str],
-    bits: int = 16,
-    num_files: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Parquet clustered by the 2-D Hilbert index of ``cluster_cols``
-    — ``write_zordered`` with the better curve: same single
-    range-exchange + intra-partition sort shape, same min-max
-    normalization via one scalar aggregate, tighter COMBINED
-    per-file spans (the sink test asserts Hilbert's normalized span
-    summed over both dimensions ≤ Z-order's at equal file counts;
-    per-dimension spans trade off between the curves)."""
-    if len(cluster_cols) != 2:
-        raise ValueError(
-            "write_hilbert clusters exactly 2 columns (use write_zordered for n-D)"
-        )
-    _write_curve_clustered(
-        df, path, cluster_cols,
-        lambda sc: hilbert_value(sc[0], sc[1], bits), bits, num_files, mode,
-    )

@@ -1,13 +1,4 @@
-from .events import (
-    events_windowed_agg,
-    sliding_distinct_users,
-    streaming_dedup,
-    streaming_visibility_update,
-)
+from .events import stream_stream_attribution
+from .sessions import sessionize_batch
 
-__all__ = [
-    "events_windowed_agg",
-    "sliding_distinct_users",
-    "streaming_dedup",
-    "streaming_visibility_update",
-]
+__all__ = ["sessionize_batch", "stream_stream_attribution"]

@@ -1,63 +1,15 @@
 """Structured Streaming operators over the events stream.
 
 The reference is batch-only; a visibility engine at scale ingests
-analytics events continuously. These are standard Structured Streaming
-shapes: watermarked tumbling-window aggregation (late data handled by
-the watermark, state bounded), streaming dedup within the watermark,
-and a foreachBatch incremental merge for exactly-once-ish sink updates.
-
-All functions accept a *streaming* DataFrame (``spark.readStream``) and
-return the transformed streaming frame; callers attach the sink. Tests
-drive them with the file source over the testdata parquet +
-``processAllAvailable()``.
+analytics events continuously. ``stream_stream_attribution`` is the
+watermarked stream-stream interval join. It accepts *streaming* or
+batch DataFrames and returns the joined frame; callers attach the sink.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def events_windowed_agg(
-    events: DataFrame,
-    window_dur: str = "1 hour",
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Tumbling-window per-event-type counts + value sums with a watermark."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window_dur).alias("w"), F.col("event_type"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum("value").alias("sum_value"),
-            F.approx_count_distinct("user_id").alias("approx_users"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n_events",
-            "sum_value",
-            "approx_users",
-        )
-    )
-
-
-def streaming_dedup(
-    events: DataFrame,
-    keys: list[str] | None = None,
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Drop duplicate events within the watermark horizon.
-
-    State is bounded by the watermark — the 100 TB/day concern with
-    streaming dedup is unbounded state, which
-    ``dropDuplicatesWithinWatermark`` exists to solve.
-    """
-    keys = keys or ["event_id"]
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
 
 
 def stream_stream_attribution(
@@ -93,60 +45,4 @@ def stream_stream_attribution(
     )
     return v.join(c, cond, "inner").select(
         F.col("__vk").alias(key), "view_id", "click_id", "view_ts", "click_ts"
-    )
-
-
-def streaming_visibility_update(
-    events: DataFrame,
-    spine: DataFrame,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Continuously enrich a static spine with streaming per-key activity.
-
-    Stream-static join: per-micro-batch aggregates joined against the
-    broadcastable static dimension — the streaming analog of the batch
-    visibility merge.
-    """
-    per_key = (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), "1 hour").alias("w"), F.col(key))
-        .agg(F.count("*").alias("n_events"), F.sum("value").alias("sum_value"))
-    )
-    return per_key.join(F.broadcast(spine), key, "left")
-
-
-def sliding_distinct_users(
-    events: DataFrame,
-    window_dur: str = "7 days",
-    slide: str = "1 day",
-    watermark: str = "1 day",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Streaming twin of the DAU/WAU sliding-window engagement query
-    (qx06): distinct-user pressure per sliding window, continuously.
-
-    Exact ``countDistinct`` is not a streaming aggregate (its state is
-    the full value set); the streaming-correct form is the HLL
-    ``approx_count_distinct``, whose per-window state is a KB sketch —
-    the same store-sketches-not-rows trade the batch engine exposes via
-    ``hll_shard_sketches``. ``n_events`` stays exact. Each event joins
-    its ≤ window/slide containing windows before the shuffle; state is
-    bounded by watermark + window count, and late events beyond the
-    watermark drop instead of reopening closed windows.
-    """
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window_dur, slide).alias("w"))
-        .agg(
-            F.approx_count_distinct("user_id").alias("approx_users"),
-            F.count("*").alias("n_events"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "approx_users",
-            "n_events",
-        )
     )

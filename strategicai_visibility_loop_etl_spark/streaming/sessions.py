@@ -1,109 +1,14 @@
-"""Custom stateful streaming: gap-based sessionization.
+"""Gap-based sessionization.
 
-``sessionize`` assigns events to per-user sessions that close after
-``gap`` of inactivity — the canonical custom-stateful-operator example
-(SURVEY §2 row 39's ``applyInPandasWithState`` design). State per key
-is one open session (start, last-seen, count, value sum); a watermark
-bounds state and late events beyond it are dropped by the engine.
-
-The batch twin ``sessionize_batch`` computes identical sessions with a
-window (lag → gap flag → cumulative session id) and is used by tests
-as the oracle for the streaming path.
+``sessionize_batch`` assigns events to per-user sessions that close
+after ``gap`` of inactivity, with a window (lag → gap flag → cumulative
+session id) — one shuffle on the key.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-SESSION_SCHEMA = (
-    "user_id long, session_start timestamp, session_end timestamp, "
-    "n_events long, sum_value double"
-)
-_STATE_SCHEMA = "start long, last long, n long, v double"
-
-
-def sessionize(
-    events: DataFrame,
-    gap_seconds: int = 1800,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming gap sessionization via applyInPandasWithState.
-
-    Emits one row per CLOSED session (closed by a later event beyond
-    the gap, or by processing-time timeout once the stream idles).
-
-    Caveat for tests/drivers: ``processAllAvailable()`` never returns
-    on a ProcessingTimeTimeout query — live state keeps scheduling
-    "cleaning up state" batches. Poll the sink with a deadline instead.
-    """
-    gap_us = gap_seconds * 1_000_000
-
-    def fn(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:
-            if state.exists:
-                start, last, n, v = state.get
-                state.remove()
-                yield pd.DataFrame(
-                    {
-                        "user_id": [user_id],
-                        "session_start": [pd.Timestamp(start, unit="us")],
-                        "session_end": [pd.Timestamp(last, unit="us")],
-                        "n_events": [n],
-                        "sum_value": [v],
-                    }
-                )
-            return
-
-        rows = pd.concat(list(pdfs))
-        rows = rows.sort_values(ts_col)
-        ts_us = rows[ts_col].astype("int64") // 1000  # ns -> us
-        vals = rows["value"].fillna(0.0)
-
-        if state.exists:
-            start, last, n, v = state.get
-        else:
-            start, last, n, v = None, None, 0, 0.0
-
-        closed = {"user_id": [], "session_start": [], "session_end": [], "n_events": [], "sum_value": []}
-        for t, val in zip(ts_us, vals):
-            if start is None:
-                start, last, n, v = t, t, 1, float(val)
-            elif t - last > gap_us:
-                closed["user_id"].append(user_id)
-                closed["session_start"].append(pd.Timestamp(start, unit="us"))
-                closed["session_end"].append(pd.Timestamp(last, unit="us"))
-                closed["n_events"].append(n)
-                closed["sum_value"].append(v)
-                start, last, n, v = t, t, 1, float(val)
-            else:
-                last, n, v = t, n + 1, v + float(val)
-
-        state.update((int(start), int(last), int(n), float(v)))
-        state.setTimeoutDuration(gap_seconds * 1000)
-        if closed["user_id"]:
-            yield pd.DataFrame(closed)
-
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            fn,
-            outputStructType=SESSION_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-        )
-    )
 
 
 def sessionize_batch(
@@ -112,8 +17,8 @@ def sessionize_batch(
     ts_col: str = "ts",
     key_col: str = "user_id",
 ) -> DataFrame:
-    """Batch twin: identical session assignment via windows (lag → new-
-    session flag → running session index), one shuffle on the key."""
+    """Session assignment via windows (lag → new-session flag → running
+    session index), one shuffle on the key."""
     w = Window.partitionBy(key_col).orderBy(ts_col)
     # Interval comparison, not cast-to-epoch: works for TIMESTAMP and
     # TIMESTAMP_NTZ alike (NTZ forbids numeric casts) and never touches

@@ -1,33 +1,27 @@
-"""Exactly-once streaming MERGE sink.
+"""Ledgered exactly-once sink for the incremental ANN index.
 
 Structured Streaming's checkpoint gives at-least-once delivery of
 micro-batches to ``foreachBatch``; end-to-end exactly-once follows
 when the sink is IDEMPOTENT per (batch_id, batch contents). This
-module implements the classic transactional-sink protocol over plain
-parquet:
+module implements the transactional-sink protocol over plain parquet
+for ANN index maintenance on arrival:
 
-- every batch MERGEs (upserts by key) into the latest committed
-  snapshot and writes the result as a NEW versioned snapshot
-  ``v{batch_id}`` — never in place;
-- a batch-id ledger marker commits the version ATOMICALLY (tmp file +
-  ``os.replace``) only after the snapshot write completes;
+- every batch writes its own directory ``b{batch_id}`` — never in
+  place;
+- a batch-id ledger marker commits the batch ATOMICALLY (tmp file +
+  ``os.replace``) only after the data write completes;
 - a replayed batch (crash after data write, before marker — or any
   at-least-once redelivery) either finds its marker and no-ops, or
-  overwrites the same ``v{batch_id}`` directory with identical content
+  overwrites the same ``b{batch_id}`` directory with identical content
   and commits — both end states are byte-equal, so restarts can
   neither lose nor duplicate rows;
-- readers resolve state through the ledger (highest committed id),
-  never by directory listing alone, so a torn snapshot without a
-  marker is invisible.
+- readers resolve state through the ledger (committed ids), never by
+  directory listing alone, so a torn batch without a marker is
+  invisible.
 
 The marker ledger uses local-filesystem atomic rename; on an object
 store or HDFS the same protocol runs through the FileSystem API or a
-table format's commit log (Delta/Iceberg) — the PROTOCOL is what this
-module demonstrates and tests (kill-and-replay included).
-
-At 100 TB the full-snapshot rewrite per batch becomes a compacted
-merge-on-read (append deltas, compact on schedule); the ledger logic
-is unchanged.
+table format's commit log (Delta/Iceberg).
 """
 
 from __future__ import annotations
@@ -36,30 +30,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from ..operators.snapshot import upsert
-from .events import streaming_visibility_update
-
-_KEY = "__eo_key"
-_SEP = "\x1f"
-_ESC = "\x10"
-
-
-def _merge_key(key_cols: list[str]):
-    """Injective composite merge key: each component renders as
-    ``v<value>`` or ``n`` for NULL, so (NULL, x) and ('', x) can never
-    collide into one upsert key (plain concat_ws renders NULL as the
-    empty string). Component values are escaped before joining —
-    ``\\x10`` doubles, ``\\x1f`` becomes ``\\x10\\x1f`` — so a value
-    that CONTAINS the separator cannot forge another tuple's key
-    (e.g. ('a\\x1fvb',) vs ('a','b'))."""
-    parts = []
-    for c in key_cols:
-        v = F.col(c).cast("string")
-        v = F.regexp_replace(v, _ESC, _ESC + _ESC)
-        v = F.regexp_replace(v, _SEP, _ESC + _SEP)
-        parts.append(F.coalesce(F.concat(F.lit("v"), v), F.lit("n")))
-    return F.concat_ws(_SEP, *parts)
 
 
 def _ledger_dir(target_dir: str) -> str:
@@ -71,502 +41,6 @@ def committed_batches(target_dir: str) -> list[int]:
     if not os.path.isdir(led):
         return []
     return sorted(int(n) for n in os.listdir(led) if n.isdigit())
-
-
-def read_latest(spark: SparkSession, target_dir: str) -> DataFrame | None:
-    """The latest COMMITTED snapshot (ledger-resolved), or None."""
-    ids = committed_batches(target_dir)
-    if not ids:
-        return None
-    return spark.read.parquet(os.path.join(target_dir, f"v{ids[-1]}"))
-
-
-def read_version(
-    spark: SparkSession,
-    target_dir: str,
-    batch_id: int,
-    ledger_dir: str | None = None,
-) -> DataFrame:
-    """Time-travel read: the snapshot committed by EXACTLY
-    ``batch_id``. Resolution goes through the ledger, never the
-    filesystem listing — a torn ``v{id}`` directory whose marker was
-    never written is invisible, exactly as it is to ``read_latest``.
-    Raises ``ValueError`` on an uncommitted id (including torn
-    writes) and ``FileNotFoundError`` if the committed snapshot
-    directory was vacuumed out from under the ledger.
-
-    ``ledger_dir`` covers the excision-on-arrival sinks, whose
-    ledger lives in the INDEX directory while versioned outputs land
-    in ``out_dir`` — pass the index dir there; the default (the
-    target itself) is the MERGE-sink layout."""
-    led = ledger_dir if ledger_dir is not None else target_dir
-    if batch_id not in committed_batches(led):
-        raise ValueError(
-            f"batch {batch_id} was never committed in {led} "
-            "(uncommitted or torn write)"
-        )
-    version_dir = os.path.join(target_dir, f"v{batch_id}")
-    if not os.path.isdir(version_dir):
-        raise FileNotFoundError(
-            f"batch {batch_id} is committed but {version_dir} is gone "
-            "(vacuumed?); time travel to it is no longer possible"
-        )
-    return spark.read.parquet(version_dir)
-
-
-def read_asof(
-    spark: SparkSession,
-    target_dir: str,
-    batch_id: int,
-    ledger_dir: str | None = None,
-) -> DataFrame | None:
-    """Time-travel read: the latest committed snapshot with id ≤
-    ``batch_id`` (the AS OF semantics of the table formats this sink
-    family emulates), or None when nothing that old is committed.
-    Ledger-resolved like :func:`read_version`, so torn writes and
-    in-flight batches never surface."""
-    led = ledger_dir if ledger_dir is not None else target_dir
-    ids = [i for i in committed_batches(led) if i <= batch_id]
-    if not ids:
-        return None
-    return read_version(spark, target_dir, ids[-1], ledger_dir=ledger_dir)
-
-
-def exactly_once_upsert(
-    batch_df: DataFrame,
-    batch_id: int,
-    target_dir: str,
-    key_cols: list[str],
-) -> None:
-    """The foreachBatch body: idempotent ledgered MERGE (see module
-    docstring). Safe to call again with the same (batch_id, contents)
-    any number of times, at any interruption point."""
-    marker = os.path.join(_ledger_dir(target_dir), str(batch_id))
-    if os.path.exists(marker):
-        return  # this batch already committed — redelivery no-ops
-    spark = batch_df.sparkSession
-    batch = batch_df.withColumn(_KEY, _merge_key(key_cols))
-    current = read_latest(spark, target_dir)
-    if current is None:
-        merged = batch
-    else:
-        merged = upsert(
-            current.withColumn(_KEY, _merge_key(key_cols)),
-            batch,
-            _KEY,
-        )
-    version_dir = os.path.join(target_dir, f"v{batch_id}")
-    merged.drop(_KEY).write.mode("overwrite").parquet(version_dir)
-    os.makedirs(_ledger_dir(target_dir), exist_ok=True)
-    tmp = marker + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(f"v{batch_id}")
-    os.replace(tmp, marker)  # the atomic commit point
-
-
-def start_visibility_upsert_stream(
-    events: DataFrame,
-    spine: DataFrame,
-    target_dir: str,
-    checkpoint_dir: str,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    watermark: str = "2 hours",
-):
-    """End-to-end exactly-once visibility maintenance: the streaming
-    per-(window, key) activity aggregate joined to the static spine
-    (``streaming_visibility_update``), delivered through the ledgered
-    MERGE sink in update mode. Returns the started StreamingQuery;
-    read state with :func:`read_latest`."""
-    upd = streaming_visibility_update(
-        events, spine, key=key, ts_col=ts_col, watermark=watermark
-    )
-    cols = [c for c in upd.columns if c != "w"]
-    flat = upd.select(F.col("w.start").alias("window_start"), *cols)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        exactly_once_upsert(
-            batch_df, batch_id, target_dir, ["window_start", key]
-        )
-
-    return (
-        flat.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def read_signature_index(
-    spark: SparkSession, index_dir: str, latest: bool = False
-) -> DataFrame | None:
-    """The accumulated (id, sig) index: the union of every COMMITTED
-    batch's signature directory (ledger-resolved — a crashed batch's
-    orphan directory is invisible). ``latest=True`` is the
-    mutable-content (refresh) view: the batch id IS the version, so
-    the highest committed batch's signature wins per id — one
-    id-keyed aggregate, deterministic on replay because redelivered
-    batches overwrite their own directory with identical content."""
-    ids = committed_batches(index_dir)
-    if not ids:
-        return None
-    paths = [os.path.join(index_dir, f"b{i}") for i in ids]
-    if not latest:
-        return spark.read.parquet(*paths)
-    from functools import reduce  # noqa: PLC0415
-
-    parts = [
-        spark.read.parquet(p).withColumn(
-            "__seq", F.lit(int(i)).cast("long")
-        )
-        for i, p in zip(ids, paths)
-    ]
-    union = reduce(lambda a, b: a.unionByName(b), parts)
-    return (
-        union.groupBy("id")
-        .agg(F.max_by("sig", F.col("__seq")).alias("sig"))
-    )
-
-
-def dedup_on_arrival_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    index_dir: str,
-    pairs_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    threshold: float = 0.7,
-    max_bucket: int | str = 2000,
-    refresh: bool = False,
-) -> None:
-    """foreachBatch body: incremental MinHash dedup-on-arrival with
-    the ledgered exactly-once protocol. Each micro-batch is shingled
-    once, checked against the ACCUMULATED signature index (archive
-    side = stored signatures only, the `dedup_minhash_incremental`
-    economics), its near-dup pairs land in ``pairs_dir/v{batch_id}``
-    and its signatures in ``index_dir/b{batch_id}`` — a per-batch
-    DIRECTORY, not an append, so a redelivered batch overwrites the
-    same paths with identical content; the ledger marker commits both
-    atomically at the end. The index reader unions committed batch
-    directories, so a crash at any point either replays to an
-    identical state or leaves the batch invisible.
-
-    By default a doc_id already present in the committed index (a
-    re-crawled document) is anti-joined OUT of the batch before
-    anything is written or compared: its stored signature stays
-    authoritative (content per id is assumed immutable, as in
-    ``dedup_minhash_incremental``), its pairs were emitted when first
-    seen, and no duplicate (id, sig) index rows can fan out ambiguous
-    pairs in later batches. ``refresh=True`` is the mutable-content
-    mode: the batch's signatures become authoritative for every id it
-    carries — the batch directory number IS the version, readers
-    resolve latest-per-id (``read_signature_index(latest=True)``),
-    and the stale archive rows are excluded from this batch's pair
-    generation. Deterministic on replay either way because only
-    committed predecessor batches are visible.
-
-    The two modes must not mix on one index: once any refresh batch
-    commits (a ``_refresh_mode`` marker records it), the committed
-    dirs can hold several versioned rows per id, and a non-refresh
-    call's raw-union read would fan out ambiguous pairs — so it
-    raises instead. Refresh calls on a never-refreshed index are
-    always safe (version resolution over unique ids is a no-op)."""
-    from ..operators.dedup import (
-        incremental_pairs_from_signatures,
-        minhash_signatures,
-    )
-
-    marker = os.path.join(_ledger_dir(index_dir), str(batch_id))
-    if os.path.exists(marker):
-        return  # redelivery of a committed batch: no-op
-    mode_marker = os.path.join(_ledger_dir(index_dir), "_refresh_mode")
-    if not refresh and os.path.exists(mode_marker):
-        raise ValueError(
-            "index has committed refresh batches (versioned rows per "
-            "id); call dedup_on_arrival_batch with refresh=True"
-        )
-    spark = batch_df.sparkSession
-    sig_dir = os.path.join(index_dir, f"b{batch_id}")
-    old_sig = read_signature_index(spark, index_dir, latest=refresh)
-    batch_sig = minhash_signatures(batch_df, text_col, id_col, k, num_hashes)
-    if old_sig is not None and not refresh:
-        batch_sig = batch_sig.join(
-            old_sig.select("id"), "id", "left_anti"
-        )
-    batch_sig.write.mode("overwrite").parquet(sig_dir)
-    new_sig = spark.read.parquet(sig_dir)
-    archive = old_sig
-    if refresh and old_sig is not None:
-        archive = old_sig.join(new_sig.select("id"), "id", "left_anti")
-    pairs = incremental_pairs_from_signatures(
-        new_sig, archive, num_hashes, bands, threshold, max_bucket
-    )
-    pairs.write.mode("overwrite").parquet(
-        os.path.join(pairs_dir, f"v{batch_id}")
-    )
-    os.makedirs(_ledger_dir(index_dir), exist_ok=True)
-    if refresh and not os.path.exists(mode_marker):
-        # recorded BEFORE the batch commits: if we crash in between,
-        # the batch is invisible but the index is already (vacuously)
-        # marked — the safe direction
-        with open(mode_marker, "w", encoding="utf-8") as fh:
-            fh.write("refresh")
-    tmp = marker + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(f"b{batch_id}")
-    os.replace(tmp, marker)  # atomic commit of index + pairs
-
-
-def start_dedup_on_arrival_stream(
-    docs_stream: DataFrame,
-    index_dir: str,
-    pairs_dir: str,
-    checkpoint_dir: str,
-    **kwargs,
-):
-    """Streaming crawl ingest with dedup-on-arrival: every arriving
-    micro-batch of documents is checked against everything ingested
-    before it and becomes part of the archive for the next batch.
-    Returns the started StreamingQuery; read the accumulated pairs
-    with ``spark.read.parquet(f"{pairs_dir}/v*")`` filtered through
-    ``committed_batches(index_dir)``."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        dedup_on_arrival_batch(
-            batch_df, batch_id, index_dir, pairs_dir, **kwargs
-        )
-
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def read_line_index(spark: SparkSession, index_dir: str):
-    """(folded line-df frame, ids frame) from the COMMITTED batches of
-    a streaming line-excision index — ledger-resolved like
-    :func:`read_signature_index`; both None before the first commit."""
-    ids = committed_batches(index_dir)
-    if not ids:
-        return None, None
-    lines = spark.read.parquet(
-        *[os.path.join(index_dir, f"b{i}", "lines") for i in ids]
-    )
-    seen = spark.read.parquet(
-        *[os.path.join(index_dir, f"b{i}", "ids") for i in ids]
-    )
-    return lines, seen
-
-
-def line_excision_on_arrival_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    index_dir: str,
-    out_dir: str,
-    min_df: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> None:
-    """foreachBatch body: incremental cross-doc line excision with the
-    ledgered exactly-once protocol — the streaming twin of
-    ``boilerplate_excision_incremental``, as ``dedup_on_arrival_batch``
-    is of ``dedup_minhash_incremental``. Each micro-batch excises
-    against the line document-frequencies ACCUMULATED over committed
-    predecessors plus its own, writes cleaned docs to
-    ``out_dir/v{batch_id}`` and its (line-hash, cnt) partials + ids to
-    ``index_dir/b{batch_id}``, then commits both atomically.
-
-    Semantics are arrival-prefix semantics: a document is cleaned with
-    the df known AT its arrival (a line that only becomes boilerplate
-    in a later crawl does not retroactively clean earlier output) —
-    the standard contract for clean-on-ingest pipelines. Re-crawled
-    ids are anti-joined out (immutable-content assumption); replay of
-    a committed batch no-ops, replay of an uncommitted one rebuilds
-    byte-identical state because only committed predecessors are
-    visible.
-    """
-    from ..operators.dedup import _excise_hit_lines, _line_tables
-
-    marker = os.path.join(_ledger_dir(index_dir), str(batch_id))
-    if os.path.exists(marker):
-        return  # redelivery of a committed batch: no-op
-    spark = batch_df.sparkSession
-    lines_idx, seen_ids = read_line_index(spark, index_dir)
-    fresh = batch_df
-    if seen_ids is not None:
-        fresh = batch_df.join(
-            seen_ids.withColumnRenamed("id", id_col), id_col, "left_anti"
-        )
-    base, pos = _line_tables(fresh, text_col, id_col)
-    batch_dir = os.path.join(index_dir, f"b{batch_id}")
-    batch_cnt = (
-        pos.select("id", "lh")
-        .distinct()
-        .groupBy("lh")
-        .agg(F.count("*").alias("cnt"))
-    )
-    batch_cnt.write.mode("overwrite").parquet(
-        os.path.join(batch_dir, "lines")
-    )
-    fresh.select(F.col(id_col).alias("id")).distinct().write.mode(
-        "overwrite"
-    ).parquet(os.path.join(batch_dir, "ids"))
-    staged_cnt = spark.read.parquet(os.path.join(batch_dir, "lines"))
-    total = staged_cnt.withColumnRenamed("cnt", "__cnt_new")
-    if lines_idx is not None:
-        old = (
-            lines_idx.join(total.select("lh"), "lh", "left_semi")
-            .groupBy("lh")
-            .agg(F.sum("cnt").alias("__cnt_old"))
-        )
-        total = total.join(old, "lh", "left")
-    else:
-        total = total.withColumn("__cnt_old", F.lit(None).cast("long"))
-    boiler = total.filter(
-        F.col("__cnt_new") + F.coalesce("__cnt_old", F.lit(0)) >= min_df
-    ).select("lh")
-    out = _excise_hit_lines(base, pos, boiler, id_col)
-    out.write.mode("overwrite").parquet(os.path.join(out_dir, f"v{batch_id}"))
-    os.makedirs(_ledger_dir(index_dir), exist_ok=True)
-    tmp = marker + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(f"b{batch_id}")
-    os.replace(tmp, marker)  # atomic commit of output + index
-
-
-def start_line_excision_stream(
-    docs_stream: DataFrame,
-    index_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    **kwargs,
-):
-    """Streaming crawl ingest with clean-on-arrival line excision:
-    every arriving micro-batch is cleaned against all boilerplate seen
-    before it and contributes its lines to the index for the next
-    batch. Read accumulated output via ``out_dir/v*`` filtered through
-    ``committed_batches(index_dir)``."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        line_excision_on_arrival_batch(
-            batch_df, batch_id, index_dir, out_dir, **kwargs
-        )
-
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def read_gram_index(spark: SparkSession, index_dir: str):
-    """(folded gram-count frame, ids frame) from the COMMITTED batches
-    of a streaming ExactSubstr index; both None before the first
-    commit."""
-    ids = committed_batches(index_dir)
-    if not ids:
-        return None, None
-    grams = spark.read.parquet(
-        *[os.path.join(index_dir, f"b{i}", "grams") for i in ids]
-    )
-    seen = spark.read.parquet(
-        *[os.path.join(index_dir, f"b{i}", "ids") for i in ids]
-    )
-    return grams, seen
-
-
-def exactsubstr_on_arrival_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    index_dir: str,
-    out_dir: str,
-    k: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_match_tokens: int | None = None,
-) -> None:
-    """foreachBatch body: ExactSubstr excision-on-arrival with the
-    ledgered exactly-once protocol — the streaming twin of
-    ``exactsubstr_incremental``, completing the batch/incremental/
-    streaming matrix for the substring granularity (MinHash and line
-    excision have the same three forms). A batch position is excised
-    when its k-gram's occurrences across committed predecessors plus
-    the batch itself reach two; arrival-prefix semantics, re-crawl
-    guard and replay behavior exactly as
-    ``line_excision_on_arrival_batch``. ``min_match_tokens`` is the
-    Lee et al. minimum-match length, threaded to the shared span
-    excision exactly as in the batch and incremental paths."""
-    from ..operators.dedup import _excise_hit_spans, _gram_tables
-
-    marker = os.path.join(_ledger_dir(index_dir), str(batch_id))
-    if os.path.exists(marker):
-        return  # redelivery of a committed batch: no-op
-    spark = batch_df.sparkSession
-    grams_idx, seen_ids = read_gram_index(spark, index_dir)
-    fresh = batch_df
-    if seen_ids is not None:
-        fresh = batch_df.join(
-            seen_ids.withColumnRenamed("id", id_col), id_col, "left_anti"
-        )
-    base, pos = _gram_tables(fresh, k, text_col, id_col)
-    batch_dir = os.path.join(index_dir, f"b{batch_id}")
-    batch_cnt = pos.groupBy("gh").agg(F.count("*").alias("cnt"))
-    batch_cnt.write.mode("overwrite").parquet(
-        os.path.join(batch_dir, "grams")
-    )
-    fresh.select(F.col(id_col).alias("id")).distinct().write.mode(
-        "overwrite"
-    ).parquet(os.path.join(batch_dir, "ids"))
-    total = spark.read.parquet(
-        os.path.join(batch_dir, "grams")
-    ).withColumnRenamed("cnt", "__cnt_new")
-    if grams_idx is not None:
-        old = (
-            grams_idx.join(total.select("gh"), "gh", "left_semi")
-            .groupBy("gh")
-            .agg(F.sum("cnt").alias("__cnt_old"))
-        )
-        total = total.join(old, "gh", "left")
-    else:
-        total = total.withColumn("__cnt_old", F.lit(None).cast("long"))
-    dup = total.filter(
-        F.col("__cnt_new") + F.coalesce("__cnt_old", F.lit(0)) > 1
-    ).select("gh")
-    out = _excise_hit_spans(base, pos, dup, k, id_col, min_match_tokens)
-    out.write.mode("overwrite").parquet(os.path.join(out_dir, f"v{batch_id}"))
-    os.makedirs(_ledger_dir(index_dir), exist_ok=True)
-    tmp = marker + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(f"b{batch_id}")
-    os.replace(tmp, marker)  # atomic commit of output + index
-
-
-def start_exactsubstr_stream(
-    docs_stream: DataFrame,
-    index_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    **kwargs,
-):
-    """Streaming crawl ingest with ExactSubstr excision-on-arrival."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        exactsubstr_on_arrival_batch(
-            batch_df, batch_id, index_dir, out_dir, **kwargs
-        )
-
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
 
 
 def read_ann_index(spark: SparkSession, index_dir: str) -> DataFrame | None:
@@ -627,282 +101,3 @@ def ann_index_on_arrival_batch(
     with open(tmp, "w", encoding="utf-8") as fh:
         fh.write(f"b{batch_id}")
     os.replace(tmp, marker)
-
-
-def start_ann_index_stream(
-    vec_stream: DataFrame,
-    index_dir: str,
-    centroid_path: str,
-    checkpoint_dir: str,
-    **kwargs,
-):
-    """Streaming embedding ingest with ANN-index-maintenance-on-
-    arrival: every arriving micro-batch of vectors joins the
-    searchable index as soon as its ledger marker commits."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        ann_index_on_arrival_batch(
-            batch_df, batch_id, index_dir, centroid_path, **kwargs
-        )
-
-    return (
-        vec_stream.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def agg_state_on_arrival_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    state_dir: str,
-    group_cols: list[str],
-    value_col: str,
-) -> None:
-    """foreachBatch body: streaming incremental materialized-view
-    maintenance with the ledgered exactly-once protocol — the
-    streaming twin of ``operators.snapshot.agg_state`` /
-    ``merge_agg_states``, as the dedup sinks are of their batch APIs.
-    Each micro-batch writes ITS OWN mergeable state (cnt, decimal
-    sum, min, max per group) to ``state_dir/b{batch_id}``; the
-    marker commits it. Because states merge exactly (decimal sums),
-    the reader's fold over committed batches equals the from-scratch
-    aggregate over every committed row — redelivery overwrites the
-    same directory with identical content and replays to identical
-    state.
-
-    Per-batch cost: ONE aggregate over the batch (group-count-sized
-    output), never a read of prior state — the write path is O(batch)
-    regardless of history, and the merge cost moves to readers (who
-    fold state rows, not raw rows). :func:`compact_agg_state` folds
-    the accumulated batch states behind an atomic manifest when the
-    batch count grows unwieldy.
-
-    The (group_cols, value_col) configuration is recorded in a
-    ``_schema`` ledger marker on the first commit; a later stream
-    pointed at the same ``state_dir`` with a DIFFERENT configuration
-    raises instead of silently folding incompatible sums (the states
-    share one physical schema, so nothing downstream would catch it).
-    """
-    import json  # noqa: PLC0415
-
-    from ..operators.snapshot import agg_state  # noqa: PLC0415
-
-    marker = os.path.join(_ledger_dir(state_dir), str(batch_id))
-    if os.path.exists(marker):
-        return  # redelivery of a committed batch: no-op
-    cfg = {"group_cols": list(group_cols), "value_col": value_col}
-    cfg_marker = os.path.join(_ledger_dir(state_dir), "_schema")
-    if os.path.exists(cfg_marker):
-        with open(cfg_marker, encoding="utf-8") as fh:
-            stored = json.load(fh)
-        if stored != cfg:
-            raise ValueError(
-                f"state_dir was built with {stored}, got {cfg}: "
-                "incompatible aggregate states must not fold together"
-            )
-    agg_state(batch_df, group_cols, value_col).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(state_dir, f"b{batch_id}"))
-    os.makedirs(_ledger_dir(state_dir), exist_ok=True)
-    if not os.path.exists(cfg_marker):
-        # recorded before the batch commits — the safe direction
-        with open(cfg_marker, "w", encoding="utf-8") as fh:
-            json.dump(cfg, fh)
-    tmp = marker + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(f"b{batch_id}")
-    os.replace(tmp, marker)
-
-
-def _agg_state_dirs(state_dir: str, asof: int | None = None) -> list[str]:
-    """The directories an aggregate view folds over: the fold-manifest
-    dir (when :func:`compact_agg_state` has run) plus every committed
-    batch dir NEWER than the fold horizon — older batch markers stay
-    in the ledger purely for redelivery no-ops. With ``asof``, only
-    batches with id ≤ ``asof`` participate (the time-travel prefix);
-    an ``asof`` BELOW the fold horizon raises ``ValueError`` — those
-    per-batch states were folded together and vacuumed, so the prefix
-    is no longer reconstructible (the retention trade every table
-    format makes). AT the horizon, the manifest dir IS the exact
-    as-of state. This is the ONE place that knows the state layout
-    (_fold manifest schema, b{i} dir naming)."""
-    import json  # noqa: PLC0415
-
-    ids = committed_batches(state_dir)
-    if asof is not None:
-        ids = [i for i in ids if i <= asof]
-    manifest = os.path.join(state_dir, "_fold")
-    if not os.path.exists(manifest):
-        return [os.path.join(state_dir, f"b{i}") for i in ids]
-    with open(manifest, encoding="utf-8") as fh:
-        m = json.load(fh)
-    if asof is not None and asof < m["upto"]:
-        raise ValueError(
-            f"as-of {asof} predates the compaction horizon "
-            f"{m['upto']} in {state_dir}; those per-batch states were "
-            "folded and vacuumed"
-        )
-    dirs = [os.path.join(state_dir, m["dir"])]
-    dirs += [
-        os.path.join(state_dir, f"b{i}") for i in ids if i > m["upto"]
-    ]
-    return dirs
-
-
-def _fold_agg_dirs(
-    spark: SparkSession, dirs: list[str], finalize: bool
-) -> DataFrame | None:
-    from ..operators.snapshot import finalize_agg, merge_agg_states
-
-    if not dirs:
-        return None
-    merged = merge_agg_states(*[spark.read.parquet(d) for d in dirs])
-    return finalize_agg(merged) if finalize else merged
-
-
-def read_agg_state(
-    spark: SparkSession, state_dir: str, finalize: bool = True
-) -> DataFrame | None:
-    """Fold the current aggregate view (one re-aggregate over state
-    rows — group-count × surviving-dirs, not raw rows): the fold
-    manifest's compacted state plus every newer committed batch.
-    ``finalize=True`` adds ``avg``; None before any commit."""
-    return _fold_agg_dirs(spark, _agg_state_dirs(state_dir), finalize)
-
-
-def read_agg_state_asof(
-    spark: SparkSession,
-    state_dir: str,
-    batch_id: int,
-    finalize: bool = True,
-) -> DataFrame | None:
-    """Time-travel fold of the agg-state sink: the aggregate view AS
-    OF ``batch_id`` — the fold of every committed batch with id ≤
-    ``batch_id``. Mergeable states make this exact: the as-of view is
-    just a fold over a ledger prefix, no snapshot was ever stored.
-
-    Compaction bounds how far back travel reaches: batches at or
-    below the fold horizon were folded together and their dirs
-    deleted, so an as-of BELOW the horizon raises ``ValueError``
-    (the retention trade every table format makes); AT the horizon,
-    the manifest dir IS the exact as-of state. Torn batch dirs are
-    invisible (ledger-resolved), matching :func:`read_agg_state` —
-    both resolve through :func:`_agg_state_dirs`, the one place that
-    knows the state layout."""
-    return _fold_agg_dirs(
-        spark, _agg_state_dirs(state_dir, asof=batch_id), finalize
-    )
-
-
-def compact_agg_state(spark: SparkSession, state_dir: str) -> int:
-    """Fold the accumulated per-batch states behind one ATOMIC
-    manifest commit — the agg-state analog of
-    ``compact_minhash_index``, shaped for the ledgered layout (batch
-    dirs can never be renamed away in place, because their markers
-    must keep absorbing redeliveries forever):
-
-    1. merge every currently-referenced state dir into a fresh fold
-       dir ``f<tag>`` (never a ``b*`` name — fold dirs can't collide
-       with future batch ids);
-    2. commit by ``os.replace`` of the ``_fold`` manifest (dir name +
-       the highest batch id it covers) — the single atomic step;
-    3. best-effort delete of the superseded dirs (the previous fold
-       dir and covered ``b*`` dirs). A crash before (2) leaves an
-       orphan fold dir no reader references; after (2), readers
-       already resolve through the new manifest and the leftovers are
-       garbage swept by the NEXT compaction.
-
-    Batch markers are never touched: a redelivered pre-compaction
-    batch still finds its marker and no-ops. Returns the folded row
-    count."""
-    import json  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
-
-    from ..operators.snapshot import merge_agg_states  # noqa: PLC0415
-
-    # ONE ledger listing drives everything below. Deriving `dirs`
-    # from a second listing (the old _agg_state_dirs call) was a
-    # TOCTOU: a batch committed between the two listings would be
-    # folded and deleted while the manifest recorded a stale `upto`
-    # below its id — every later reader would then resolve the
-    # deleted dir and crash. With a single snapshot, `max(ids)` is by
-    # construction the highest batch the fold actually covers.
-    ids = committed_batches(state_dir)
-    manifest_path = os.path.join(state_dir, "_fold")
-    upto = -1
-    dirs = []
-    if os.path.exists(manifest_path):
-        with open(manifest_path, encoding="utf-8") as fh:
-            m = json.load(fh)
-        upto = m["upto"]
-        dirs.append(os.path.join(state_dir, m["dir"]))
-    dirs += [os.path.join(state_dir, f"b{i}") for i in ids if i > upto]
-    if not dirs:
-        return 0
-    # sweep leftovers of crashed prior attempts: fold dirs no manifest
-    # references, AND committed batch dirs already covered by the
-    # manifest horizon (a crash during step 3's deletion orphans them;
-    # they are never in a later referenced set, so without this they
-    # leak forever — readers resolve through the manifest and never
-    # see i <= upto dirs, so removal is safe)
-    referenced = {os.path.basename(d) for d in dirs}
-    for name in os.listdir(state_dir):
-        full = os.path.join(state_dir, name)
-        if name in referenced or not os.path.isdir(full):
-            continue
-        orphan_fold = name.startswith("f")
-        covered_batch = (
-            name.startswith("b")
-            and name[1:].isdigit()
-            and int(name[1:]) <= upto
-        )
-        if orphan_fold or covered_batch:
-            shutil.rmtree(full, ignore_errors=True)
-    folded = merge_agg_states(*[spark.read.parquet(d) for d in dirs])
-    tag = uuid.uuid4().hex[:8]
-    fold_dir = f"f{tag}"
-    folded.write.mode("overwrite").parquet(
-        os.path.join(state_dir, fold_dir)
-    )
-    n = spark.read.parquet(os.path.join(state_dir, fold_dir)).count()
-    manifest = os.path.join(state_dir, "_fold")
-    tmp = manifest + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        # max over the SAME snapshot the fold read — a batch committed
-        # after the listing is neither folded nor claimed, so a later
-        # compaction picks it up (no TOCTOU). `ids` can only be empty
-        # when no manifest exists either (dirs would be empty), so the
-        # fallback to the prior horizon is pure defensiveness.
-        json.dump({"dir": fold_dir, "upto": max(ids) if ids else upto}, fh)
-    os.replace(tmp, manifest)  # the atomic commit
-    for d in dirs:  # superseded: old fold dir + covered batch dirs
-        shutil.rmtree(d, ignore_errors=True)
-    return n
-
-
-def start_agg_state_stream(
-    stream_df: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    group_cols: list[str],
-    value_col: str,
-):
-    """Streaming rollup maintenance: every arriving micro-batch folds
-    into the persistent mergeable state; ``read_agg_state`` serves
-    the always-current aggregate. Returns the started
-    StreamingQuery."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        agg_state_on_arrival_batch(
-            batch_df, batch_id, state_dir, group_cols, value_col
-        )
-
-    return (
-        stream_df.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )

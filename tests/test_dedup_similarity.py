@@ -8,8 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from strategicai_visibility_loop_etl_spark.operators.dedup import (
-    dedup_exact,
-    dedup_fingerprint,
     dedup_minhash_lsh,
     dedup_simhash,
     ngram_jaccard_pairs,
@@ -36,20 +34,6 @@ def _corpus(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_dedup_exact_groups_case_and_whitespace(spark):
-    out = {r["keep_id"]: r["n_dups"] for r in dedup_exact(_corpus(spark)).collect()}
-    # 1,2,3 collapse; 4, 5, 6 stand alone.
-    assert out[1] == 3
-    assert out[4] == 1
-    assert out[5] == 1
-    assert out[6] == 1
-
-
-def test_dedup_fingerprint_matches_exact_grouping(spark):
-    out = {r["keep_id"]: r["n_dups"] for r in dedup_fingerprint(_corpus(spark)).collect()}
-    assert out[1] == 3 and out[4] == 1
-
-
 def test_ngram_jaccard_finds_near_dups(spark):
     pairs = {
         (r["id_a"], r["id_b"]): r["jaccard"]
@@ -70,6 +54,39 @@ def test_minhash_lsh_finds_near_dups(spark):
     assert pairs[(1, 3)] == 1.0
     assert (1, 4) in pairs
     assert not any(5 in p for p in pairs)
+
+
+def test_dedup_exact_groups_case_and_whitespace(spark):
+    """The exact-duplicate collapse keys on normalized text: case and
+    whitespace variants join the group of their minimum id; a one-word
+    edit or an empty text does not."""
+    from strategicai_visibility_loop_etl_spark.operators.clusters import collapse_exact
+
+    reps, stars = collapse_exact(_corpus(spark))
+    # 1,2,3 collapse; 4 and 5 stand alone; 6 (no tokens) is dropped.
+    assert sorted(r["doc_id"] for r in reps.collect()) == [1, 4, 5]
+    assert sorted((r["id_a"], r["id_b"]) for r in stars.collect()) == [(1, 2), (1, 3)]
+
+
+def test_dedup_fingerprint_matches_exact_grouping(spark):
+    """Grouping by ``fingerprint64`` (the document fingerprint tier)
+    gives the same groups as the exact sha2 collapse."""
+    from strategicai_visibility_loop_etl_spark.functions.text import fingerprint64
+    from strategicai_visibility_loop_etl_spark.operators.clusters import collapse_exact
+
+    corpus = _corpus(spark).filter(F.col("text") != "")
+    by_fp = {
+        r["rep"]: r["n"]
+        for r in corpus.groupBy(fingerprint64(F.col("text")).alias("fp"))
+        .agg(F.min("doc_id").alias("rep"), F.count("*").alias("n"))
+        .collect()
+    }
+    assert by_fp == {1: 3, 4: 1, 5: 1}
+    reps, stars = collapse_exact(corpus)
+    exact = {r["doc_id"]: 1 for r in reps.collect()}
+    for r in stars.collect():
+        exact[r["id_a"]] += 1
+    assert by_fp == exact
 
 
 def test_simhash_finds_near_dups(spark):
@@ -453,17 +470,12 @@ def test_exactsubstr_min_match_tokens(spark, tmp_path):
     """Lee et al. 2022's minimum-match length (they use 50): merged
     duplicate spans SHORTER than min_match_tokens survive — short
     idioms and citations — while spans >= L still excise (true
-    boilerplate). Verified identically on the batch, incremental, and
-    streaming-foreachBatch paths; n_spans counts kept spans only."""
-    import os
-
+    boilerplate). Verified identically on the batch and incremental
+    paths; n_spans counts kept spans only."""
     from strategicai_visibility_loop_etl_spark.operators.dedup import (
         exactsubstr_dedup,
         exactsubstr_incremental,
         substr_gram_index_write,
-    )
-    from strategicai_visibility_loop_etl_spark.streaming.sink import (
-        exactsubstr_on_arrival_batch,
     )
 
     k, L = 8, 50
@@ -507,18 +519,6 @@ def test_exactsubstr_min_match_tokens(spark, tmp_path):
     assert len(inc) == 1
     assert inc[0]["clean_text"] == got[1]["clean_text"]
     assert inc[0]["n_spans"] == got[1]["n_spans"]
-
-    # Streaming foreachBatch body: same batch against the ledgered
-    # index dir, L threaded through.
-    sidx = str(tmp_path / "sidx")
-    sout = str(tmp_path / "sout")
-    exactsubstr_on_arrival_batch(archive, 0, sidx, sout, k=k)
-    exactsubstr_on_arrival_batch(
-        batch, 1, sidx, sout, k=k, min_match_tokens=L
-    )
-    sres = spark.read.parquet(os.path.join(sout, "v1")).collect()
-    assert len(sres) == 1
-    assert sres[0]["clean_text"] == got[1]["clean_text"]
 
 
 def _suffix_array_excision_oracle(docs: list[tuple[int, str]], L: int):
@@ -623,115 +623,6 @@ def test_exactsubstr_kgram_vs_suffix_array_boundaries(spark):
         kept_by_engine = set(got[d]["clean_text"].split())
         kept_by_oracle = set(oracle[d].split())
         assert kept_by_engine <= kept_by_oracle
-
-
-@pytest.mark.sweep
-def test_minhash_incremental_matches_full_recompute(spark, sf_dir, tmp_path):
-    """dedup_minhash_incremental(batch, index) == full batch LSH over
-    archive+batch restricted to pairs involving a new doc — without
-    re-shingling the archive."""
-    from strategicai_visibility_loop_etl_spark.operators.dedup import (
-        dedup_minhash_incremental,
-        dedup_minhash_lsh,
-        minhash_index_write,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    old = docs.filter(F.col("doc_id") % 5 != 0)
-    new = docs.filter(F.col("doc_id") % 5 == 0)
-    idx = str(tmp_path / "mh_index")
-    minhash_index_write(old, idx)
-
-    inc = dedup_minhash_incremental(
-        new, idx, threshold=0.5, max_bucket=10_000
-    ).collect()
-
-    full = dedup_minhash_lsh(
-        docs, threshold=0.5, max_bucket=10_000
-    ).collect()
-    new_ids = {r["doc_id"] for r in new.collect()}
-    want = {
-        (r["id_a"], r["id_b"], r["jaccard_est"])
-        for r in full
-        if r["id_a"] in new_ids or r["id_b"] in new_ids
-    }
-    got = {(r["id_a"], r["id_b"], r["jaccard_est"]) for r in inc}
-    assert got == want
-    assert got, "fixture must produce at least one cross/new pair"
-    # old-old pairs never appear
-    assert all(a in new_ids or b in new_ids for a, b, _ in got)
-
-
-@pytest.mark.sweep
-def test_minhash_incremental_index_update(spark, tmp_path):
-    """update_index=True appends batch signatures: the NEXT batch sees
-    this batch's docs as archive."""
-    from strategicai_visibility_loop_etl_spark.operators.dedup import (
-        dedup_minhash_incremental,
-        minhash_index_write,
-    )
-
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    idx = str(tmp_path / "idx")
-    d0 = spark.createDataFrame([(1, base)], "doc_id long, text string")
-    minhash_index_write(d0, idx)
-
-    batch1 = spark.createDataFrame(
-        [(2, base + " tail")], "doc_id long, text string"
-    )
-    p1 = dedup_minhash_incremental(
-        batch1, idx, threshold=0.5, max_bucket=100, update_index=True
-    ).collect()
-    assert {(r["id_a"], r["id_b"]) for r in p1} == {(1, 2)}
-
-    # batch 2 duplicates batch 1's doc -> must pair against id 2,
-    # which only exists in the index via the update
-    batch2 = spark.createDataFrame(
-        [(3, base + " tail")], "doc_id long, text string"
-    )
-    p2 = dedup_minhash_incremental(
-        batch2, idx, threshold=0.5, max_bucket=100
-    ).collect()
-    assert (2, 3) in {(r["id_a"], r["id_b"]) for r in p2}
-
-
-@pytest.mark.sweep
-def test_minhash_incremental_recrawled_id_no_index_dup(spark, tmp_path):
-    """A re-crawled doc_id in a later batch must NOT duplicate its
-    (id, sig) row in the index — duplicates would fan out ambiguous
-    pair rows in every subsequent batch (ADVICE r7)."""
-    from strategicai_visibility_loop_etl_spark.operators.dedup import (
-        dedup_minhash_incremental,
-        minhash_index_write,
-    )
-
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    idx = str(tmp_path / "idx")
-    d0 = spark.createDataFrame(
-        [(1, base), (2, base + " tail")], "doc_id long, text string"
-    )
-    minhash_index_write(d0, idx)
-
-    # batch re-crawls id 1 (same text) and adds a new id 3
-    batch = spark.createDataFrame(
-        [(1, base), (3, base + " tail two")], "doc_id long, text string"
-    )
-    dedup_minhash_incremental(
-        batch, idx, threshold=0.5, max_bucket=100, update_index=True
-    ).collect()
-    sig = spark.read.parquet(idx)
-    counts = {r["id"]: r["n"] for r in
-              sig.groupBy("id").count().withColumnRenamed("count", "n").collect()}
-    assert counts == {1: 1, 2: 1, 3: 1}  # id 1 not duplicated, id 3 appended
-
-    # next batch still pairs cleanly (one row per candidate pair)
-    nxt = spark.createDataFrame([(4, base)], "doc_id long, text string")
-    p = dedup_minhash_incremental(nxt, idx, threshold=0.5, max_bucket=100)
-    rows = [(r["id_a"], r["id_b"]) for r in p.collect()]
-    assert len(rows) == len(set(rows))  # no fan-out duplicates
-    assert (1, 4) in set(rows)
 
 
 def test_quantized_ann_recall_vs_float(spark, sf_dir):
@@ -999,12 +890,15 @@ def test_exactsubstr_incremental_index_update_and_recrawl(spark, tmp_path):
 
 
 def test_compact_count_index_preserves_results(spark, tmp_path):
-    """Compaction folds N batch-append partial files into one
-    aggregated set with identical excision behavior before and after
-    (and strictly fewer rows when keys repeat across appends)."""
+    """Batch appends to the line-df index leave one partial count file
+    per append; the incremental reader folds them, so a line counted
+    once per append reaches min_df and excises. Compacting the index
+    (rewriting ``lines/`` as the folded aggregate) leaves the excision
+    unchanged."""
+    import shutil
+
     from strategicai_visibility_loop_etl_spark.operators.dedup import (
         boilerplate_excision_incremental,
-        compact_count_index,
         line_df_index_write,
     )
 
@@ -1016,30 +910,22 @@ def test_compact_count_index_preserves_results(spark, tmp_path):
         line_df_index_write(
             spark.createDataFrame([(i, f"{promo}\nbody {i}")], schema), idx
         )
-    before = spark.read.parquet(f"{idx}/lines")
-    n_before = before.count()
-    # fold driver-side BEFORE compaction deletes the partial files
-    want = {
-        r["lh"]: r["s"]
-        for r in before.groupBy("lh").agg(F.sum("cnt").alias("s")).collect()
-    }
+    lines = spark.read.parquet(f"{idx}/lines")
+    sums = lines.groupBy("lh").agg(F.sum("cnt").alias("s"))
+    assert lines.count() > sums.count()  # promo's 3 partials unfolded
+    assert sums.agg(F.max("s")).first()[0] == 3
 
     probe = spark.createDataFrame([(99, f"{promo}\nprobe body")], schema)
-    out_before = boilerplate_excision_incremental(
-        probe, idx, min_df=2
-    ).first()
+    out = boilerplate_excision_incremental(probe, idx, min_df=2).first()
+    assert promo not in out["clean_text"]
 
-    n = compact_count_index(spark, idx, "lines", "lh")
-    after = spark.read.parquet(f"{idx}/lines")
-    assert after.count() == n < n_before  # promo's 3 partials folded
-    got = {r["lh"]: r["cnt"] for r in after.collect()}
-    assert got == want
-
-    out_after = boilerplate_excision_incremental(
-        probe, idx, min_df=2
-    ).first()
-    assert out_after["clean_text"] == out_before["clean_text"]
-    assert promo not in out_after["clean_text"]
+    folded = str(tmp_path / "cidx_folded")
+    shutil.copytree(idx, folded)
+    shutil.rmtree(f"{folded}/lines")
+    sums.withColumnRenamed("s", "cnt").write.parquet(f"{folded}/lines")
+    assert spark.read.parquet(f"{folded}/lines").count() == sums.count()
+    out_folded = boilerplate_excision_incremental(probe, folded, min_df=2).first()
+    assert out_folded["clean_text"] == out["clean_text"]
 
 
 @pytest.mark.sweep
@@ -1260,17 +1146,16 @@ def test_random_projection_jl_distance_preservation(spark):
 
 @pytest.mark.sweep
 def test_compact_count_index_crash_recovery(spark, tmp_path):
-    """A compaction that dies between its two renames must not strand
-    the index: recover_count_index (run by compaction entry and every
-    incremental reader) promotes the fully-written compacted dir, or
-    restores the old dir when no complete replacement exists, and
-    sweeps stale leftovers when live is intact."""
+    """An index swap that dies between its two renames must not strand
+    the index: recover_count_index (run by every incremental reader)
+    promotes the fully-written replacement dir, or restores the old
+    dir when no complete replacement exists, and sweeps stale
+    leftovers when live is intact."""
     import os
     import shutil
 
     from strategicai_visibility_loop_etl_spark.operators.dedup import (
         boilerplate_excision_incremental,
-        compact_count_index,
         line_df_index_write,
         recover_count_index,
     )
@@ -1287,8 +1172,7 @@ def test_compact_count_index_crash_recovery(spark, tmp_path):
     want = boilerplate_excision_incremental(probe, idx, min_df=2).first()
 
     # Crash scenario 1: between rename(live, trash) and
-    # rename(tmp, live) — live missing, complete compact dir present.
-    compact_count_index(spark, idx, "lines", "lh")  # writes folded live
+    # rename(tmp, live) — live missing, complete replacement present.
     shutil.copytree(live, os.path.join(idx, "_lines_compact_deadbeef"))
     os.rename(live, os.path.join(idx, "_lines_old_deadbeef"))
     # the reader itself recovers (no explicit recover call needed);
@@ -1320,13 +1204,13 @@ def test_compact_count_index_crash_recovery(spark, tmp_path):
     assert got2["clean_text"] == want["clean_text"]
 
     # Crash scenario 3: live intact, stale leftovers — swept, and the
-    # next compaction (which recovers on entry) still folds correctly.
+    # next append still reads correctly.
     shutil.copytree(live, os.path.join(idx, "_lines_compact_aa11aa11"))
     shutil.copytree(live, os.path.join(idx, "_lines_old_bb22bb22"))
     line_df_index_write(
         spark.createDataFrame([(7, f"{promo}\nbody 7")], schema), idx
     )
-    compact_count_index(spark, idx, "lines", "lh")
+    recover_count_index(idx, "lines", sweep=True)
     leftovers = [d for d in os.listdir(idx) if d.startswith("_lines_")]
     assert leftovers == []
     got3 = boilerplate_excision_incremental(probe, idx, min_df=2).first()
@@ -1411,114 +1295,6 @@ def test_ivfpq_stage_write_error_releases_pool(spark, sf_dir, tmp_path):
     leaked = [t.name for t in threading.enumerate()
               if t not in before and t.name.startswith("ThreadPoolExecutor")]
     assert leaked == []
-
-
-@pytest.mark.sweep
-def test_minhash_refresh_replaces_stale_content(spark, sf_dir, tmp_path):
-    """refresh=True is the mutable-content mode (the round-9 verdict's
-    item 3): a re-crawled id whose text CHANGED produces the same
-    pairs as a fresh corpus that never contained the stale content,
-    and after update_index later batches compare against the NEW
-    signature — while the default (immutable) mode keeps the stored
-    signature authoritative."""
-    from strategicai_visibility_loop_etl_spark.operators.dedup import (
-        compact_minhash_index,
-        dedup_minhash_incremental,
-        dedup_minhash_lsh,
-        minhash_index_write,
-        read_minhash_index,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    archive = docs.filter(F.col("doc_id") < 400)
-    idx = str(tmp_path / "mh_refresh")
-    minhash_index_write(archive, idx)
-
-    # the re-crawl: doc 7 now carries doc 11's text (a mutation that
-    # flips its near-dup neighborhood), doc 9000 is brand new.
-    moved = docs.filter(F.col("doc_id") == 11).first()["text"]
-    batch = spark.createDataFrame(
-        [(7, moved), (9000, moved + " trailing revision")],
-        "doc_id long, text string",
-    )
-    pairs = dedup_minhash_incremental(
-        batch, idx, threshold=0.5, max_bucket=10_000,
-        update_index=True, refresh=True,
-    ).collect()
-
-    # oracle: full LSH over the corpus AS IF doc 7 always had the new
-    # text, restricted to pairs involving the batch ids.
-    fresh_corpus = archive.filter(F.col("doc_id") != 7).unionByName(batch)
-    full = dedup_minhash_lsh(
-        fresh_corpus, threshold=0.5, max_bucket=10_000
-    ).collect()
-    batch_ids = {7, 9000}
-    want = {
-        (r["id_a"], r["id_b"], r["jaccard_est"])
-        for r in full
-        if r["id_a"] in batch_ids or r["id_b"] in batch_ids
-    }
-    got = {(r["id_a"], r["id_b"], r["jaccard_est"]) for r in pairs}
-    assert got == want
-    assert any(7 in (a, b) and 11 in (a, b) for a, b, _ in got), (
-        "mutated doc must pair with its NEW neighborhood"
-    )
-
-    # the index now resolves doc 7 to the refreshed signature: a next
-    # batch near-dup of the NEW text pairs with 7 ...
-    probe_new = spark.createDataFrame(
-        [(9001, moved + " tiny tail")], "doc_id long, text string"
-    )
-    p2 = dedup_minhash_incremental(
-        probe_new, idx, threshold=0.5, max_bucket=10_000
-    ).collect()
-    assert any({r["id_a"], r["id_b"]} == {7, 9001} for r in p2)
-
-    # ... and compaction folds versions without changing resolution.
-    latest_before = {
-        r["id"]: r["sig"] for r in read_minhash_index(spark, idx).collect()
-    }
-    n = compact_minhash_index(spark, idx)
-    latest_after = {
-        r["id"]: r["sig"] for r in read_minhash_index(spark, idx).collect()
-    }
-    assert latest_after == latest_before and n == len(latest_before)
-
-
-@pytest.mark.sweep
-def test_minhash_default_mode_keeps_stored_signature(spark, tmp_path):
-    """Control for the refresh test: without refresh, a re-crawled id
-    with changed text neither rewrites the index nor re-pairs — the
-    stored signature stays authoritative for later batches."""
-    from strategicai_visibility_loop_etl_spark.operators.dedup import (
-        dedup_minhash_incremental,
-        minhash_index_write,
-        read_minhash_index,
-    )
-
-    a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    b = "one two three four five six seven eight nine ten eleven"
-    idx = str(tmp_path / "mh_imm")
-    minhash_index_write(
-        spark.createDataFrame([(1, a)], "doc_id long, text string"), idx
-    )
-    # re-crawl id 1 with UNRELATED text b; immutable mode drops it
-    dedup_minhash_incremental(
-        spark.createDataFrame([(1, b)], "doc_id long, text string"),
-        idx, threshold=0.5, max_bucket=100, update_index=True,
-    ).collect()
-    # a near-dup of the ORIGINAL text still pairs with 1
-    p = dedup_minhash_incremental(
-        spark.createDataFrame(
-            [(2, a + " tail")], "doc_id long, text string"
-        ),
-        idx, threshold=0.5, max_bucket=100,
-    ).collect()
-    assert any({r["id_a"], r["id_b"]} == {1, 2} for r in p)
-    # the re-crawl appended nothing: the index still holds only id 1
-    assert read_minhash_index(spark, idx).count() == 1
 
 
 def test_ivf_lists_stage_partitioned_and_pruned(spark, sf_dir, tmp_path):
@@ -1834,41 +1610,6 @@ def test_simhash_pairs_null_fingerprints_quarantined(spark):
         simhash_pairs(hashed, bands=7)
     with _pytest.raises(ValueError, match="pigeonhole"):
         simhash_pairs(hashed, max_hamming=4, bands=4)
-
-
-def test_read_minhash_index_runs_crash_recovery(spark, tmp_path):
-    """read_minhash_index (and through it dedup_minhash_incremental)
-    must run the shared two-rename crash recovery: a
-    compact_minhash_index that died between rename(live, trash) and
-    rename(tmp, live) leaves no live dir, and without recovery every
-    reader fails until another compaction."""
-    import os
-    import shutil
-
-    from strategicai_visibility_loop_etl_spark.operators.dedup import (
-        compact_minhash_index,
-        minhash_index_write,
-        read_minhash_index,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"document body number {i} with shared words") for i in range(4)],
-        "doc_id long, text string",
-    )
-    idx = str(tmp_path / "midx")
-    minhash_index_write(docs, idx)
-    compact_minhash_index(spark, idx)
-    want = sorted(map(tuple, read_minhash_index(spark, idx).collect()))
-
-    # crash between the two renames: live gone, complete compact dir
-    shutil.copytree(idx, str(tmp_path / "_midx_compact_deadbeef"))
-    os.rename(idx, str(tmp_path / "_midx_old_deadbeef"))
-    got = sorted(map(tuple, read_minhash_index(spark, idx).collect()))
-    assert got == want
-    assert os.path.exists(idx)
-    # the reader pass is non-destructive: trash survives for the
-    # compactor's sweep
-    assert os.path.exists(str(tmp_path / "_midx_old_deadbeef"))
 
 
 def test_ivf_stage_path_reuse_truncates_stale_lists(spark, sf_dir, tmp_path):

@@ -963,7 +963,6 @@ from strategicai_visibility_loop_etl_spark.operators.drift import (  # noqa: E40
     js_divergence_pairs,
 )
 from strategicai_visibility_loop_etl_spark.operators.snapshot import (  # noqa: E402
-    encode_with_dictionary,
     id_dictionary_build,
     id_dictionary_update,
 )
@@ -985,14 +984,6 @@ def test_dictionary_dense_sorted_and_stable(spark):
     # Idempotent under redelivery.
     d3 = id_dictionary_update(d2, _keys(spark, ["b", "q"]), "k")
     assert {r["key"]: r["key_id"] for r in d3.collect()} == rows2
-
-
-def test_dictionary_encode_unseen_null(spark):
-    d = id_dictionary_build(_keys(spark, ["a", "b"]), "k")
-    df = _keys(spark, ["a", "c"])
-    out = {r["k"]: r["key_id"] for r in
-           encode_with_dictionary(df, d, "k").collect()}
-    assert out["a"] == 1 and out["c"] is None
 
 
 def test_dictionary_empty_start(spark):
@@ -1073,13 +1064,6 @@ def test_js_null_and_space_groups_both_pair(spark):
     assert len(pairs) == 3
     assert (" ", None) in pairs and ("a", None) in pairs
     assert (" ", "a") in pairs or ("a", " ") in pairs
-
-
-def test_encode_rejects_out_col_collision(spark):
-    d = id_dictionary_build(_keys(spark, ["a"]), "k")
-    df = _keys(spark, ["a"]).withColumn("key_id", F.lit(1))
-    with pytest.raises(ValueError):
-        encode_with_dictionary(df, d, "k")
 
 
 # -------------------------------------------- schema drift / coverage

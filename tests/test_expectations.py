@@ -213,14 +213,13 @@ def test_fleiss_kappa_degenerate_panels_read_as_null(spark):
 
 def test_k_anonymity_violations_and_suppression(spark):
     """k-anonymity gate (capability row 181): rare quasi combinations
-    surface rarest-first; suppression leaves a k-anonymous table; NULL
-    quasi values are their own (potentially rare) combination;
-    k < 2 rejected."""
+    surface rarest-first; suppressing the reported combinations leaves
+    a k-anonymous table; NULL quasi values are their own (potentially
+    rare) combination, counted null-safely; k < 2 rejected."""
     import pytest as _pytest
 
     from strategicai_visibility_loop_etl_spark.operators.governance import (
         k_anonymity_violations,
-        k_anonymize,
     )
 
     rows = (
@@ -234,19 +233,24 @@ def test_k_anonymity_violations_and_suppression(spark):
     assert [(r["country"], r["zip"], r["n"]) for r in v] == [
         (None, "9999", 1), ("NL", "1012", 1), ("BE", "2000", 2),
     ]
-    safe = k_anonymize(df, ["country", "zip"], k=3)
+    # The report is complete: a null-safe anti join on it suppresses
+    # every violating row and leaves a k-anonymous table.
+    vdf = k_anonymity_violations(df, ["country", "zip"], k=3)
+    safe = df.join(
+        vdf,
+        df["country"].eqNullSafe(vdf["country"]) & df["zip"].eqNullSafe(vdf["zip"]),
+        "left_anti",
+    )
     assert safe.count() == 5
     assert k_anonymity_violations(safe, ["country", "zip"], k=3).count() == 0
-    # NULL groups CAN survive when large enough (null-safe semi join)
+    # A NULL group large enough is no violation: country=NL has 6 rows
+    # and country=None has 5 (null-safe grouping); only BE (2) reports.
     nulls = spark.createDataFrame(
         [(None, "x", i) for i in range(4)],
         "country string, zip string, uid long",
     )
-    widened = k_anonymize(df.unionByName(nulls), ["country"], k=5)
-    # country=NL has 6 rows (>=5) and country=None has 5 rows (>=5,
-    # null-safe grouping); BE (2) drops
-    kept = {(r["country"]) for r in widened.collect()}
-    assert kept == {"NL", None} and widened.count() == 11
+    widened = k_anonymity_violations(df.unionByName(nulls), ["country"], k=5)
+    assert [(r["country"], r["n"]) for r in widened.collect()] == [("BE", 2)]
     with _pytest.raises(ValueError):
         k_anonymity_violations(df, ["country"], k=1)
 

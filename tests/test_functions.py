@@ -15,7 +15,6 @@ from strategicai_visibility_loop_etl_spark.functions.text import (
     fingerprint64,
     lang_id_expr,
     quality_score,
-    shingles,
     token_count,
     bpe_ish_token_count,
 )
@@ -132,9 +131,16 @@ def test_fingerprint64(spark):
 
 
 def test_shingles(spark):
-    got = _one(spark, shingles(F.col("v"), 2), "a b c a b")
-    assert sorted(got) == ["a b", "b c", "c a"]
-    assert _one(spark, shingles(F.col("v"), 3), "one two") == []
+    """Word k-gram shingles of the normalized text: one row per
+    distinct gram per document, none when the text is shorter than k."""
+    from strategicai_visibility_loop_etl_spark.operators.dedup import exploded_shingles
+
+    df = spark.createDataFrame(
+        [(1, "a b c a b"), (2, "one two")], "doc_id long, text string"
+    )
+    got = sorted(r["g"] for r in exploded_shingles(df, k=2).filter("id = 1").collect())
+    assert got == ["a b", "b c", "c a"]
+    assert exploded_shingles(df, k=3).filter("id = 2").count() == 0
 
 
 def test_lang_id(spark):
@@ -194,28 +200,6 @@ def test_freq_items_sketch_covers_true_frequents(spark, sf_dir):
         if r["count"] / total >= 0.2
     }
     assert truth <= found, (truth, found)
-
-
-def test_strip_html_tags_entities_whitespace(spark):
-    from pyspark.sql import functions as F
-
-    from strategicai_visibility_loop_etl_spark.functions.text import strip_html
-
-    rows = [
-        (1, "<html><head><style>body{color:red}</style></head>"
-            "<body><h1>Title</h1><p>Hello &amp; welcome &lt;here&gt;.</p>"
-            "<script>alert('x')</script><!-- note --></body></html>"),
-        (2, "plain text stays"),
-        (3, "<p>broken <b>markup"),
-        (4, "A&nbsp;B"),
-    ]
-    df = spark.createDataFrame(rows, "id long, html string")
-    out = {r["id"]: r["t"] for r in
-           df.select("id", strip_html(F.col("html")).alias("t")).collect()}
-    assert out[1] == "Title Hello & welcome <here>."
-    assert out[2] == "plain text stays"
-    assert out[3] == "broken markup"
-    assert out[4] == "A B"
 
 
 def test_fix_mojibake_real_cp1252_roundtrip(spark):

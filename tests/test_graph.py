@@ -50,6 +50,22 @@ def test_pagerank_no_edges_uniform_and_deterministic(spark):
     assert a == b
 
 
+def test_pagerank_checkpoints_eagerly(spark):
+    """Every round's ranks feed a shuffle join and a broadcast
+    aggregate; a lazily checkpointed frame shared that way can deadlock
+    the DAG scheduler against the broadcast thread. So the checkpoints
+    materialize inside the call: the frame pagerank returns is already
+    checkpointed before anything consumes it. (A job count does not tell
+    the two apart: under AQE a lazy checkpoint runs its shuffle and
+    broadcast stages too.)"""
+    nodes = spark.createDataFrame([(i,) for i in range(4)], "id long")
+    edges = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 0), (2, 3)], "src long, dst long"
+    )
+    ranks = pagerank(nodes, edges, iters=3)
+    assert ranks._jdf.queryExecution().logical().rdd().isCheckpointed()
+
+
 def test_triangle_count_known_graph(spark):
     from strategicai_visibility_loop_etl_spark.operators.graph import (
         triangle_count,

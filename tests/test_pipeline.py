@@ -240,6 +240,31 @@ def test_cli_xlsx_flag_falls_back_to_csv_sibling(spark, fixture_paths, tmp_path,
     assert "Merged rows: 3" in io.out
 
 
+def test_cli_accepts_file_uri_inputs(spark, fixture_paths, tmp_path, monkeypatch, capsys):
+    """Input existence resolves through the Hadoop FS API, like the
+    loaders: file:// URIs the loaders read are not 'File not found'."""
+    from pathlib import Path
+
+    from strategicai_visibility_loop_etl_spark.__main__ import main
+
+    monkeypatch.setenv("SITE_BASE", "https://e.com")
+    monkeypatch.setenv("ETL_RUN_LOG", "0")
+    monkeypatch.setenv("ETL_AUTODETECT_LOG", "0")
+    uri = {k: Path(v).as_uri() for k, v in fixture_paths.items()}
+    rc = main(
+        [
+            "--frog", uri["frog"],
+            "--gsc", uri["gsc"],
+            "--ga4", uri["ga4"],
+            "--out", str(tmp_path / "uri_out"),
+        ],
+        spark=spark,
+    )
+    io = capsys.readouterr()
+    assert rc == 0, io.err
+    assert "Merged rows: 3" in io.out
+
+
 def test_cli_corpus_subcommand(spark, tmp_path, sf_dir):
     """`python -m strategicai_visibility_loop_etl_spark corpus` cleans a parquet
     documents table end-to-end."""

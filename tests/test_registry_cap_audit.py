@@ -76,14 +76,10 @@ CANARY_OPS = {
     "simhash_pairs",
     "token_cosine_pairs",
     "embedding_neardup_pairs",
-    "image_neardup_pairs",
     "negative_pairs",
     "fuzzy_match_pairs",
     "blocking_quality",
     "anomaly_ctr_underperf",
-    "dedup_minhash_incremental",
-    "incremental_pairs_from_signatures",
-    "dedup_on_arrival_batch",
 }
 
 #: (caller_fn, operator, param) -> (value, oracle_query, marker)

@@ -430,7 +430,6 @@ def test_centroid_similarity_hand_example(spark):
     NaN)."""
     from strategicai_visibility_loop_etl_spark.operators.similarity import (
         centroid_similarity,
-        group_centroids,
     )
 
     df = spark.createDataFrame(
@@ -442,8 +441,6 @@ def test_centroid_similarity_hand_example(spark):
         ],
         "g string, embedding array<double>",
     )
-    cents = {r["g"]: r["centroid"] for r in group_centroids(df, "g").collect()}
-    assert cents["gx"] == [3.0, 0.0] and cents["gy"] == [0.0, 5.0]
     sims = {
         (r["group_a"], r["group_b"]): r["cosine"]
         for r in centroid_similarity(df, "g").collect()

@@ -13,17 +13,13 @@ from pyspark.sql import functions as F
 
 from strategicai_visibility_loop_etl_spark.operators.dedup import benchmark_overlap
 from strategicai_visibility_loop_etl_spark.operators.sketch import (
-    approx_heavy_hitters,
     bloom_position_set,
     bloom_prefilter_overlap,
     heavy_hitters,
     hll_merge_estimate,
     hll_shard_sketches,
 )
-from strategicai_visibility_loop_etl_spark.operators.similarity import (
-    cluster_sizes,
-    kmeans_assign,
-)
+from strategicai_visibility_loop_etl_spark.operators.similarity import kmeans_assign
 from strategicai_visibility_loop_etl_spark.operators.textprep import weighted_sample_k
 
 
@@ -41,6 +37,34 @@ def test_bloom_prefilter_matches_exact_path(spark, sf_dir):
     exact = {tuple(r) for r in benchmark_overlap(corpus, bench, k=8).collect()}
     bloom = {tuple(r) for r in bloom_prefilter_overlap(corpus, bench, k=8).collect()}
     assert bloom == exact and len(exact) > 0
+
+
+def test_approx_heavy_hitters_contains_exact_top(spark, sf_dir):
+    """A count-min sketch far wider than the vocabulary, built per
+    shard and merged, estimates the exact top-5 tokens of
+    ``heavy_hitters`` at their exact counts."""
+    from strategicai_visibility_loop_etl_spark.functions.text import normalized_text
+    from strategicai_visibility_loop_etl_spark.operators.sketch import (
+        cms_estimate,
+        cms_merge,
+        cms_shard_sketches,
+    )
+
+    docs = _docs(spark, sf_dir)
+    exact = heavy_hitters(docs, top_k=5).collect()
+    toks = docs.select(
+        (F.col("doc_id") % 4).alias("shard"),
+        F.explode(
+            F.split(normalized_text(F.coalesce(F.col("text"), F.lit(""))), " ")
+        ).alias("token"),
+    ).filter(F.length("token") >= 1)
+    width = 1 << 16
+    merged = cms_merge(cms_shard_sketches(toks, "token", "shard", width=width))
+    queries = spark.createDataFrame([(r["token"],) for r in exact], "token string")
+    est = {r["value"]: r["est"] for r in
+           cms_estimate(merged, queries, "token", width=width).collect()}
+    for r in exact:
+        assert est[r["token"]] == r["n_occurrences"], r["token"]
 
 
 def test_bloom_prefilter_tiny_filter_still_exact(spark, sf_dir):
@@ -105,17 +129,6 @@ def test_heavy_hitters_ranked_and_shares_sum_below_one(spark, sf_dir):
     assert 0 < sum(r["freq_share"] for r in hh) <= 1.0 + 1e-9
 
 
-def test_approx_heavy_hitters_contains_exact_top(spark, sf_dir):
-    """With maxItemsTracked far above the vocabulary, the sketch's top
-    set must contain the exact top-5 with exact counts."""
-    docs = _docs(spark, sf_dir)
-    exact = heavy_hitters(docs, top_k=5).collect()
-    approx = {r["token"]: r["approx_count"] for r in
-              approx_heavy_hitters(docs, top_k=50, max_items_tracked=10000).collect()}
-    for r in exact:
-        assert approx.get(r["token"]) == r["n_occurrences"], r["token"]
-
-
 @pytest.mark.sweep
 def test_kmeans_assign_covers_corpus_once(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -123,8 +136,8 @@ def test_kmeans_assign_covers_corpus_once(spark, sf_dir):
     n = emb.count()
     assert a.count() == n
     assert a.select("id").distinct().count() == n
-    sizes = cluster_sizes(a)
-    assert sizes.agg(F.sum("n_members")).first()[0] == n
+    sizes = a.groupBy("cluster").count()
+    assert sizes.agg(F.sum("count")).first()[0] == n
     bad = a.filter((F.col("cluster") < 0) | (F.col("cluster") >= 8)).count()
     assert bad == 0
     assert a.filter(F.col("sq_dist") < -1e-6).count() == 0
@@ -209,28 +222,31 @@ def test_resample_daily_ffill_fills_gaps_with_last_value(spark):
 
 
 def test_semantic_dedup_keep_flags_consistent(spark, sf_dir):
+    """SemDeDup keep/drop from the semantic pairs: one representative
+    (the component minimum over ``connected_components``) survives per
+    near-dup component, and no pair keeps both endpoints."""
+    from strategicai_visibility_loop_etl_spark.operators.clusters import (
+        connected_components,
+    )
     from strategicai_visibility_loop_etl_spark.operators.similarity import (
-        semantic_dedup,
         semantic_neardup_pairs,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    out = semantic_dedup(emb, n_clusters=8, iters=1, threshold=0.3,
-                         max_cluster=10**6)
-    rows = out.collect()
-    n = emb.count()
-    assert len(rows) == n
-    # Every representative keeps itself; every dropped row points at a
-    # kept representative with a smaller-or-equal id.
-    kept = {r["id"] for r in rows if r["keep"]}
-    for r in rows:
-        assert r["rep_id"] in kept
-        assert r["rep_id"] <= r["id"]
-        assert r["keep"] == (r["rep_id"] == r["id"])
-    # Pairs above the threshold never have both endpoints kept.
-    pairs = semantic_neardup_pairs(emb, n_clusters=8, iters=1, threshold=0.3,
-                                   max_cluster=10**6).collect()
+    pairs_df = semantic_neardup_pairs(emb, n_clusters=8, iters=1, threshold=0.3,
+                                      max_cluster=10**6)
+    pairs = pairs_df.collect()
     assert len(pairs) > 0
+    assert all(p["id_a"] < p["id_b"] and p["cosine"] >= 0.3 for p in pairs)
+
+    comp = {r["id"]: r["component"] for r in
+            connected_components(pairs_df.select("id_a", "id_b")).collect()}
+    ids = [r["vec_id"] for r in emb.select("vec_id").collect()]
+    rep = {i: comp.get(i, i) for i in ids}
+    kept = {i for i in ids if rep[i] == i}
+    for i in ids:
+        assert rep[i] in kept
+        assert rep[i] <= i
     for p in pairs:
         assert not (p["id_a"] in kept and p["id_b"] in kept)
 

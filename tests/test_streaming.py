@@ -10,14 +10,7 @@ from datetime import datetime, timedelta
 import pytest
 from pyspark.sql import functions as F
 
-from strategicai_visibility_loop_etl_spark.streaming.events import (
-    events_windowed_agg,
-    streaming_dedup,
-    streaming_visibility_update,
-)
-
-
-pytestmark = pytest.mark.sweep  # streaming protocol equivalences (micro-batch restarts, exactly-once, batch twins)
+pytestmark = pytest.mark.sweep  # streaming protocol equivalences (batch twins, ledgered sink)
 
 SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double"
 
@@ -35,7 +28,7 @@ def _event_rows():
                 float(i % 5),
             )
         )
-    # Duplicate a slice of event_ids (same ts) for the dedup test.
+    # Duplicate a slice of event_ids (same ts): redelivered events.
     for i in range(0, 40, 2):
         rows.append((i, t0 + timedelta(minutes=7 * i), i % 10, ["view", "click", "purchase"][i % 3], float(i % 5)))
     return rows
@@ -59,50 +52,6 @@ def _run_to_memory(stream_df, name, mode, ckpt_dir):
     q.processAllAvailable()
     q.stop()
     return name
-
-
-def test_events_windowed_agg_matches_batch(spark, tmp_path):
-    src, batch_df = _write_stream_source(spark, tmp_path)
-    stream = spark.readStream.schema(SCHEMA).parquet(src)
-    out = events_windowed_agg(stream, window_dur="1 hour", watermark="2 hours")
-    name = _run_to_memory(out, "win_agg_test", "complete", tmp_path)
-
-    got = {
-        (r["window_start"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in spark.sql(f"select * from {name}").collect()
-    }
-    expected_df = (
-        batch_df.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("s"))
-        .select(F.col("w.start").alias("ws"), "event_type", "n", "s")
-    )
-    expected = {(r["ws"], r["event_type"]): (r["n"], r["s"]) for r in expected_df.collect()}
-    assert got == expected
-    assert len(got) > 10
-
-
-def test_streaming_dedup_drops_duplicates(spark, tmp_path):
-    src, batch_df = _write_stream_source(spark, tmp_path)
-    stream = spark.readStream.schema(SCHEMA).parquet(src)
-    out = streaming_dedup(stream, keys=["event_id"], watermark="24 hours")
-    name = _run_to_memory(out, "dedup_test", "append", tmp_path)
-
-    n = spark.sql(f"select count(distinct event_id) c, count(*) n from {name}").first()
-    assert n["n"] == n["c"], "duplicates survived streaming dedup"
-    assert n["n"] == batch_df.select("event_id").distinct().count()
-
-
-def test_streaming_visibility_update(spark, tmp_path):
-    src, _ = _write_stream_source(spark, tmp_path)
-    spine = spark.createDataFrame(
-        [(i, f"user-{i}") for i in range(10)], "user_id long, name string"
-    )
-    stream = spark.readStream.schema(SCHEMA).parquet(src)
-    out = streaming_visibility_update(stream, spine, key="user_id")
-    name = _run_to_memory(out, "vis_update_test", "append", tmp_path)
-    rows = spark.sql(f"select * from {name}").collect()
-    assert len(rows) > 0
-    assert all(r["name"] == f"user-{r['user_id']}" for r in rows)
 
 
 def test_stream_stream_attribution_matches_batch(spark, tmp_path):
@@ -137,98 +86,82 @@ def test_stream_stream_attribution_matches_batch(spark, tmp_path):
     assert len(got) > 10  # the synthetic cadence guarantees matches
 
 
-def test_sliding_distinct_users_matches_batch(spark, tmp_path):
-    """The streaming sliding-window distinct (qx06's twin) executed for
-    real: exact event counts must equal the batch twin per window;
-    approx_users within HLL tolerance of the exact batch distinct."""
-    from strategicai_visibility_loop_etl_spark.streaming.events import (
-        sliding_distinct_users,
-    )
-
-    src, batch_df = _write_stream_source(spark, tmp_path)
-    stream = spark.readStream.schema(SCHEMA).parquet(src)
-    out = sliding_distinct_users(
-        stream, window_dur="2 hours", slide="1 hour", watermark="1 hour"
-    )
-    name = _run_to_memory(out, "sliding_distinct", "append", tmp_path)
-    got = {
-        r["window_start"]: (r["approx_users"], r["n_events"])
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
-    }
-    exact = {
-        r["ws"]: (r["nu"], r["ne"])
-        for r in batch_df.groupBy(
-            F.window("ts", "2 hours", "1 hour").alias("w")
-        )
-        .agg(
-            F.countDistinct("user_id").alias("nu"), F.count("*").alias("ne")
-        )
-        .select(F.col("w.start").alias("ws"), "nu", "ne")
-        .collect()
-    }
-    # Append mode only emits windows the watermark has closed — every
-    # emitted window must match the batch twin; most windows close.
-    assert len(got) >= len(exact) // 2 and len(got) > 0
-    for ws, (au, ne) in got.items():
-        enu, ene = exact[ws]
-        assert ne == ene, (ws, ne, ene)
-        assert abs(au - enu) <= max(2, 0.1 * enu), (ws, au, enu)
-
-
 def test_checkpoint_restart_exactly_once(spark, tmp_path):
-    """Kill-and-restart correctness: a windowed aggregation stopped
-    mid-stream and restarted from its checkpoint must neither drop nor
-    double-count — the final complete-mode result equals the batch
-    computation over ALL data, though the two halves were processed by
-    two different query incarnations."""
+    """Kill-and-restart correctness: a stream-stream attribution join
+    stopped mid-stream and restarted from its checkpoint must neither
+    drop nor double-count — the file sink's rows equal the batch join
+    over ALL data as a multiset, though the two halves were processed
+    by two query incarnations and views from the first half match
+    clicks from the second only through the restored join state."""
+    from collections import Counter
+
+    from strategicai_visibility_loop_etl_spark.streaming.events import (
+        stream_stream_attribution,
+    )
+
     src = str(tmp_path / "restart_src")
-    ckpt = tmp_path / "restart_ckpt"
+    out_dir = str(tmp_path / "restart_out")
+    ckpt = str(tmp_path / "restart_ckpt")
     rows = _event_rows()
     half = len(rows) // 2
-    df1 = spark.createDataFrame(rows[:half], SCHEMA)
-    df1.coalesce(1).write.mode("overwrite").parquet(src)
+    spark.createDataFrame(rows[:half], SCHEMA).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(src)
 
     def start():
         stream = spark.readStream.schema(SCHEMA).parquet(src)
-        out = events_windowed_agg(stream, window_dur="1 hour", watermark="2 hours")
+        out = stream_stream_attribution(
+            stream.filter(F.col("event_type") == "view"),
+            stream.filter(F.col("event_type") == "click"),
+            watermark="24 hours",
+            horizon="2 hours",
+        )
         return (
-            out.writeStream.format("memory")
-            .queryName("restart_test")
-            .outputMode("complete")
-            .option("checkpointLocation", str(ckpt))
-            .start()
+            out.writeStream.format("parquet")
+            .outputMode("append")
+            .option("checkpointLocation", ckpt)
+            .start(out_dir)
         )
 
     q = start()
     q.processAllAvailable()
     q.stop()  # first incarnation dies after processing half the data
 
-    df2 = spark.createDataFrame(rows[half:], SCHEMA)
-    df2.coalesce(1).write.mode("append").parquet(src)
+    spark.createDataFrame(rows[half:], SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(src)
     q = start()  # second incarnation resumes from the checkpoint
     q.processAllAvailable()
     q.stop()
 
-    got = {
-        (r["window_start"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in spark.sql("select * from restart_test").collect()
-    }
+    got = Counter(
+        (r["view_id"], r["click_id"]) for r in spark.read.parquet(out_dir).collect()
+    )
     full = spark.createDataFrame(rows, SCHEMA)
-    expected = {
-        (r["ws"], r["event_type"]): (r["n"], r["s"])
-        for r in full.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("s"))
-        .select(F.col("w.start").alias("ws"), "event_type", "n", "s")
-        .collect()
-    }
+    expected = Counter(
+        (r["view_id"], r["click_id"])
+        for r in stream_stream_attribution(
+            full.filter(F.col("event_type") == "view"),
+            full.filter(F.col("event_type") == "click"),
+            watermark="24 hours",
+            horizon="2 hours",
+        ).collect()
+    )
     assert got == expected
+    # the restored state carried at least one cross-incarnation match
+    first_ids = {r[0] for r in rows[:half]}
+    assert any(v in first_ids and c not in first_ids for v, c in got)
 
 
 def test_watermark_drops_late_data_in_append_mode(spark, tmp_path):
-    """The watermark contract, demonstrated: an event arriving later
-    than watermark behind the stream's max event time must NOT reopen
-    its (already emitted) window."""
-    from datetime import datetime
+    """The watermark contract, demonstrated on the attribution join: a
+    click arriving later than the watermark behind the stream's max
+    event time must NOT join its (already expired) view, while an
+    in-time click in the same micro-batch does. The batch twin, which
+    has no watermark, keeps both pairs."""
+    from strategicai_visibility_loop_etl_spark.streaming.events import (
+        stream_stream_attribution,
+    )
 
     src = str(tmp_path / "late_src")
     ckpt = tmp_path / "late_ckpt"
@@ -237,158 +170,48 @@ def test_watermark_drops_late_data_in_append_mode(spark, tmp_path):
     def write(rows, mode):
         spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode(mode).parquet(src)
 
-    # Batch 1: events in hours 0 and 6 — max event time 06:30, so the
-    # 1-hour watermark closes every window ending before 05:30.
-    write(
-        [(1, t.replace(hour=0, minute=10), 1, "view", 1.0),
-         (2, t.replace(hour=0, minute=20), 2, "view", 1.0),
-         (3, t.replace(hour=6, minute=30), 3, "view", 1.0)],
-        "overwrite",
-    )
-
-    def start():
-        stream = spark.readStream.schema(SCHEMA).parquet(src)
-        out = events_windowed_agg(stream, window_dur="1 hour", watermark="1 hour")
-        return (
-            out.writeStream.format("memory")
-            .queryName("late_test")
-            .outputMode("append")
-            .option("checkpointLocation", str(ckpt))
-            .start()
+    def attribute(df):
+        return stream_stream_attribution(
+            df.filter(F.col("event_type") == "view"),
+            df.filter(F.col("event_type") == "click"),
+            watermark="1 hour",
+            horizon="1 hour",
         )
 
-    q = start()
-    q.processAllAvailable()
-    # Batch 2: a straggler for hour 0 — 6+ hours late, beyond the
-    # watermark. It must be dropped, not re-emit/extend hour 0.
-    write([(4, t.replace(hour=0, minute=40), 4, "view", 1.0)], "append")
-    q.processAllAvailable()
-    q.stop()
-
-    rows = {r["window_start"].hour: r["n_events"]
-            for r in spark.sql("select * from late_test").collect()}
-    assert rows.get(0) == 2, rows  # straggler NOT counted
-
-
-def test_exactly_once_upsert_sink_survives_replay_and_restart(spark, tmp_path):
-    """End-to-end exactly-once: the ledgered MERGE sink under (a) full
-    redelivery of a committed batch, (b) a torn write — snapshot on
-    disk, crash before the ledger commit — and (c) a genuine stream
-    restart from the checkpoint with new data. No loss, no dups: the
-    final state equals the batch-computed truth over all events."""
-    import os
-
-    from strategicai_visibility_loop_etl_spark.streaming.sink import (
-        committed_batches,
-        exactly_once_upsert,
-        read_latest,
-        start_visibility_upsert_stream,
+    # Batch 1: max event time 06:40, so the 1-hour watermark passes
+    # 05:30 and user 1's 00:10 view expires.
+    batch1 = [
+        (1, t.replace(hour=0, minute=10), 1, "view", 1.0),
+        (2, t.replace(hour=6, minute=30), 3, "view", 1.0),
+        (3, t.replace(hour=6, minute=40), 3, "click", 1.0),
+    ]
+    # Batch 2: a click for user 1 at 00:20 — 6+ hours late — and an
+    # in-time click for user 3.
+    batch2 = [
+        (4, t.replace(hour=0, minute=20), 1, "click", 1.0),
+        (5, t.replace(hour=6, minute=50), 3, "click", 1.0),
+    ]
+    write(batch1, "overwrite")
+    stream = spark.readStream.schema(SCHEMA).parquet(src)
+    q = (
+        attribute(stream).writeStream.format("memory")
+        .queryName("late_test")
+        .outputMode("append")
+        .option("checkpointLocation", str(ckpt))
+        .start()
     )
-
-    t0 = datetime(2024, 1, 1, 0, 0, 0)
-
-    def batch1():
-        return [(i, t0 + timedelta(minutes=13 * i), i % 3, "view", float(i))
-                for i in range(20)]
-
-    def batch2():
-        # Stays INSIDE the 2h watermark horizon of batch1 (whose max ts
-        # is t0+4h07): updates user 0's existing t0+3h window AND opens
-        # new keys — exercising both MERGE arms. (Events older than
-        # max_ts − watermark would be dropped by design, not merged.)
-        return [(100 + i, t0 + timedelta(minutes=200 + i), 0, "view", 2.0)
-                for i in range(5)] + \
-               [(200 + i, t0 + timedelta(minutes=250 + 7 * i), 3, "view", 10.0)
-                for i in range(10)]
-
-    src = str(tmp_path / "eo_src")
-    target = str(tmp_path / "eo_target")
-    ckpt = str(tmp_path / "eo_ckpt")
-    spine = spark.createDataFrame(
-        [(0, "gold"), (1, "silver"), (2, "bronze"), (3, "new")],
-        "user_id long, segment string",
-    )
-    spark.createDataFrame(batch1(), SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src)
-
-    def start():
-        events = spark.readStream.schema(SCHEMA).parquet(src)
-        return start_visibility_upsert_stream(events, spine, target, ckpt)
-
-    q = start()
+    q.processAllAvailable()
+    write(batch2, "append")
     q.processAllAvailable()
     q.stop()
 
-    state1 = {
-        (r["window_start"], r["user_id"]): r
-        for r in read_latest(spark, target).collect()
+    got = {(r["view_id"], r["click_id"]) for r in spark.sql("select * from late_test").collect()}
+    assert got == {(2, 3), (2, 5)}, got
+    batch = {
+        (r["view_id"], r["click_id"])
+        for r in attribute(spark.createDataFrame(batch1 + batch2, SCHEMA)).collect()
     }
-    assert state1 and all(r["segment"] is not None for r in state1.values())
-    ids1 = committed_batches(target)
-
-    # (a) redeliver the last committed batch verbatim — must no-op
-    last = ids1[-1]
-    replay = spark.read.parquet(os.path.join(target, f"v{last}")).select(
-        "window_start", "user_id", "n_events", "sum_value", "segment"
-    )
-    exactly_once_upsert(replay, last, target, ["window_start", "user_id"])
-    after = {
-        (r["window_start"], r["user_id"]): r
-        for r in read_latest(spark, target).collect()
-    }
-    assert after.keys() == state1.keys()
-    assert all(
-        after[k]["sum_value"] == state1[k]["sum_value"] for k in state1
-    ), "replayed batch double-applied"
-
-    # (b) torn write: crash happened AFTER the snapshot write but
-    # BEFORE the ledger commit — rip out the marker and redeliver
-    os.remove(os.path.join(target, "_applied", str(last)))
-    exactly_once_upsert(replay, last, target, ["window_start", "user_id"])
-    assert committed_batches(target)[-1] == last
-    torn = {
-        (r["window_start"], r["user_id"]): r["sum_value"]
-        for r in read_latest(spark, target).collect()
-    }
-    assert torn == {k: v["sum_value"] for k, v in state1.items()}
-
-    # (c) restart from the checkpoint with a second source file
-    spark.createDataFrame(batch2(), SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    q = start()
-    q.processAllAvailable()
-    q.stop()
-
-    final = {
-        (r["window_start"], r["user_id"]): r
-        for r in read_latest(spark, target).collect()
-    }
-    truth = {
-        (r["window_start"], r["user_id"]): r
-        for r in (
-            spark.read.parquet(src)
-            .groupBy(
-                F.window("ts", "1 hour").alias("w"), F.col("user_id")
-            )
-            .agg(F.count("*").alias("n_events"), F.sum("value").alias("sum_value"))
-            .join(F.broadcast(spine), "user_id", "left")
-            .select(
-                F.col("w.start").alias("window_start"), "user_id",
-                "n_events", "sum_value", "segment",
-            )
-            .collect()
-        )
-    }
-    assert final.keys() == truth.keys(), (
-        len(final), len(truth),
-    )
-    for k, want in truth.items():
-        got = final[k]
-        assert (got["n_events"], got["sum_value"], got["segment"]) == (
-            want["n_events"], want["sum_value"], want["segment"],
-        ), (k, got, want)
+    assert batch == {(1, 4), (2, 3), (2, 5)}
 
 
 def test_streaming_structural_clean_matches_batch(spark, tmp_path):
@@ -432,349 +255,13 @@ def test_streaming_structural_clean_matches_batch(spark, tmp_path):
     assert batch[1].count("nav bar repeated line here.") == 1
 
 
-def test_dedup_on_arrival_stream(spark, tmp_path):
-    """Streaming dedup-on-arrival: batches check against everything
-    ingested before them; the accumulated pair set equals the full
-    batch recompute restricted to cross/new pairs per arrival order;
-    redelivery of a committed batch no-ops."""
-    from strategicai_visibility_loop_etl_spark.operators.dedup import (
-        dedup_minhash_lsh,
-    )
-    from strategicai_visibility_loop_etl_spark.streaming.sink import (
-        committed_batches,
-        dedup_on_arrival_batch,
-        read_signature_index,
-    )
-
-    base = "the quick brown fox jumps over the lazy dog near the river bank"
-    docs = [
-        (1, base),
-        (2, base + " tail"),            # near-dup of 1
-        (3, "completely different text about gardening tulips and soil"),
-        (4, base + " tail"),            # exact dup of 2, near-dup of 1
-        (5, "another unrelated document talking about spark internals"),
-    ]
-    batches = [docs[0:2], docs[2:4], docs[4:5]]
-    idx = str(tmp_path / "idx")
-    prs = str(tmp_path / "pairs")
-
-    def mk(rows):
-        return spark.createDataFrame(rows, "doc_id long, text string")
-
-    for bid, rows in enumerate(batches):
-        dedup_on_arrival_batch(
-            mk(rows), bid, idx, prs, threshold=0.5, max_bucket=100
-        )
-    assert committed_batches(idx) == [0, 1, 2]
-    assert read_signature_index(spark, idx).count() == 5
-
-    got = set()
-    for bid in committed_batches(idx):
-        for r in spark.read.parquet(f"{prs}/v{bid}").collect():
-            got.add((r["id_a"], r["id_b"]))
-    # full recompute over everything: all pairs (arrival order means
-    # every pair was new-vs-archive or within-batch at some point)
-    full = {
-        (r["id_a"], r["id_b"])
-        for r in dedup_minhash_lsh(
-            mk(docs), threshold=0.5, max_bucket=100
-        ).collect()
-    }
-    assert got == full
-    assert (1, 2) in got and (2, 4) in got and (1, 4) in got
-
-    # redelivery: replaying batch 1 must change nothing
-    before = read_signature_index(spark, idx).count()
-    dedup_on_arrival_batch(
-        mk(batches[1]), 1, idx, prs, threshold=0.5, max_bucket=100
-    )
-    assert read_signature_index(spark, idx).count() == before
-
-    # and the real streaming wiring delivers the same protocol
-    from strategicai_visibility_loop_etl_spark.streaming.sink import (
-        start_dedup_on_arrival_stream,
-    )
-
-    src = str(tmp_path / "stream_src")
-    mk(docs).coalesce(1).write.mode("overwrite").parquet(src)
-    idx2, prs2 = str(tmp_path / "idx2"), str(tmp_path / "pairs2")
-    q = start_dedup_on_arrival_stream(
-        spark.readStream.schema("doc_id long, text string").parquet(src),
-        idx2, prs2, str(tmp_path / "ckpt"),
-        threshold=0.5, max_bucket=100,
-    )
-    q.processAllAvailable()
-    q.stop()
-    got2 = set()
-    for bid in committed_batches(idx2):
-        for r in spark.read.parquet(f"{prs2}/v{bid}").collect():
-            got2.add((r["id_a"], r["id_b"]))
-    assert got2 == full
-
-
-def test_exactly_once_upsert_null_key_not_empty_string(spark, tmp_path):
-    """(NULL, x) and ('', x) are DIFFERENT merge keys: plain concat_ws
-    renders NULL as '' and would collide them into one upsert row
-    (ADVICE r7). The null-marker key must keep both."""
-    from strategicai_visibility_loop_etl_spark.streaming.sink import (
-        exactly_once_upsert,
-        read_latest,
-    )
-
-    target = str(tmp_path / "nullkey")
-    b0 = spark.createDataFrame(
-        [(None, "x", 1.0), ("", "x", 2.0), ("a", "x", 3.0)],
-        "k1 string, k2 string, v double",
-    )
-    exactly_once_upsert(b0, 0, target, ["k1", "k2"])
-    state = read_latest(spark, target).collect()
-    assert len(state) == 3, "NULL and '' keys collided"
-
-    # an update addressed to the '' key must not touch the NULL row
-    b1 = spark.createDataFrame([("", "x", 20.0)], "k1 string, k2 string, v double")
-    exactly_once_upsert(b1, 1, target, ["k1", "k2"])
-    got = {(r["k1"], r["k2"]): r["v"] for r in read_latest(spark, target).collect()}
-    assert got == {(None, "x"): 1.0, ("", "x"): 20.0, ("a", "x"): 3.0}
-
-
-def test_merge_key_separator_injection_proof(spark, tmp_path):
-    """A key VALUE containing the \\x1f separator must not forge
-    another tuple's composite key (ADVICE r8): ('a\\x1fvb', 'c') and
-    ('a', 'b\\x1fvc') previously rendered identically. Component
-    escaping makes the key injective."""
-    from strategicai_visibility_loop_etl_spark.streaming.sink import (
-        exactly_once_upsert,
-        read_latest,
-    )
-
-    target = str(tmp_path / "sepkey")
-    rows = [
-        ("a\x1fvb", "c", 1.0),
-        ("a", "b\x1fvc", 2.0),
-        ("a\x10", "b", 3.0),   # escape char itself must round-trip
-        ("a", "\x10b", 4.0),
-    ]
-    b0 = spark.createDataFrame(rows, "k1 string, k2 string, v double")
-    exactly_once_upsert(b0, 0, target, ["k1", "k2"])
-    state = read_latest(spark, target).collect()
-    assert len(state) == 4, "separator-containing key values collided"
-
-    # an update addressed to one colliding twin must not touch the other
-    b1 = spark.createDataFrame(
-        [("a\x1fvb", "c", 10.0)], "k1 string, k2 string, v double"
-    )
-    exactly_once_upsert(b1, 1, target, ["k1", "k2"])
-    got = {(r["k1"], r["k2"]): r["v"] for r in read_latest(spark, target).collect()}
-    assert got[("a\x1fvb", "c")] == 10.0
-    assert got[("a", "b\x1fvc")] == 2.0
-
-
-def test_dedup_on_arrival_recrawled_id_single_index_row(spark, tmp_path):
-    """A doc_id re-crawled in a LATER micro-batch must not duplicate
-    its (id, sig) row in the unioned signature index (ADVICE r8 —
-    same fan-out failure dedup_minhash_incremental guards against):
-    the stored signature stays authoritative, the re-seen copy is
-    anti-joined out before the batch writes its b{id} directory."""
-    from strategicai_visibility_loop_etl_spark.streaming.sink import (
-        committed_batches,
-        dedup_on_arrival_batch,
-        read_signature_index,
-    )
-
-    base = "the quick brown fox jumps over the lazy dog near the river bank"
-
-    def mk(rows):
-        return spark.createDataFrame(rows, "doc_id long, text string")
-
-    idx = str(tmp_path / "idx")
-    prs = str(tmp_path / "pairs")
-    dedup_on_arrival_batch(
-        mk([(1, base), (2, base + " tail")]), 0, idx, prs,
-        threshold=0.5, max_bucket=100,
-    )
-    # batch 1 re-crawls doc 1 (same content) alongside a new near-dup
-    dedup_on_arrival_batch(
-        mk([(1, base), (3, base + " extra")]), 1, idx, prs,
-        threshold=0.5, max_bucket=100,
-    )
-    sig = read_signature_index(spark, idx)
-    counts = {r["id"]: r["n"] for r in sig.groupBy("id").count().withColumnRenamed("count", "n").collect()}
-    assert counts == {1: 1, 2: 1, 3: 1}, f"duplicate index rows: {counts}"
-
-    # pairs stay duplicate-free and still cover new-vs-archive
-    got = []
-    for bid in committed_batches(idx):
-        got += [
-            (r["id_a"], r["id_b"])
-            for r in spark.read.parquet(f"{prs}/v{bid}").collect()
-        ]
-    assert len(got) == len(set(got)), "duplicate pair rows fanned out"
-    assert (1, 3) in got
-
-
-def test_line_excision_on_arrival_stream(spark, tmp_path):
-    """Streaming clean-on-arrival line excision: each batch cleans
-    with the df accumulated through its own arrival (prefix
-    semantics), redelivery no-ops, re-crawled ids are dropped, and
-    the real streaming wiring reproduces the manual protocol."""
-    from strategicai_visibility_loop_etl_spark.operators.dedup import (
-        boilerplate_line_excision,
-    )
-    from strategicai_visibility_loop_etl_spark.streaming.sink import (
-        committed_batches,
-        line_excision_on_arrival_batch,
-        start_line_excision_stream,
-    )
-
-    nav = "home | products | contact"
-    docs = [
-        (1, f"{nav}\nfirst page body"),
-        (2, f"{nav}\nsecond page body"),      # nav df hits 2 here
-        (3, "standalone page no shared lines"),
-        (4, f"{nav}\nfourth page body"),
-    ]
-    schema = "doc_id long, text string"
-    batches = [docs[0:1], docs[1:3], docs[3:4]]
-
-    def mk(rows):
-        return spark.createDataFrame(rows, schema)
-
-    idx = str(tmp_path / "lidx")
-    out = str(tmp_path / "lout")
-    for bid, rows in enumerate(batches):
-        line_excision_on_arrival_batch(mk(rows), bid, idx, out, min_df=2)
-    assert committed_batches(idx) == [0, 1, 2]
-
-    got = {}
-    for bid in committed_batches(idx):
-        for r in spark.read.parquet(f"{out}/v{bid}").collect():
-            got[r["doc_id"]] = r
-    assert set(got) == {1, 2, 3, 4}
-    # prefix semantics: doc 1 arrived when nav was unique -> kept;
-    # docs 2 and 4 arrived when nav df >= 2 -> excised
-    assert nav in got[1]["clean_text"]
-    assert nav not in got[2]["clean_text"]
-    assert nav not in got[4]["clean_text"]
-    assert got[3]["n_removed"] == 0
-    # each batch equals the batch-incremental contract: full recompute
-    # over everything ARRIVED SO FAR restricted to that batch
-    prefix = boilerplate_line_excision(mk(docs[0:3]), min_df=2)
-    want2 = {r["doc_id"]: r for r in prefix.collect() if r["doc_id"] in (2, 3)}
-    for i in (2, 3):
-        assert got[i]["clean_text"] == want2[i]["clean_text"]
-
-    # redelivery of batch 1 (and a re-crawl of doc 2 inside a NEW
-    # batch id) must not duplicate index rows or outputs
-    line_excision_on_arrival_batch(mk(batches[1]), 1, idx, out, min_df=2)
-    line_excision_on_arrival_batch(
-        mk([(2, f"{nav}\nsecond page body"), (5, "fresh fifth page")]),
-        9, idx, out, min_df=2,
-    )
-    v9 = {r["doc_id"] for r in spark.read.parquet(f"{out}/v9").collect()}
-    assert v9 == {5}, "re-crawled id re-emitted"
-    from strategicai_visibility_loop_etl_spark.streaming.sink import (
-        read_line_index,
-    )
-    _lines, seen = read_line_index(spark, idx)
-    ids = sorted(r["id"] for r in seen.collect())
-    assert ids == [1, 2, 3, 4, 5]
-
-    # real streaming wiring: same docs through a parquet stream
-    src = str(tmp_path / "src")
-    mk(docs).coalesce(1).write.mode("overwrite").parquet(src)
-    idx2, out2 = str(tmp_path / "lidx2"), str(tmp_path / "lout2")
-    q = start_line_excision_stream(
-        spark.readStream.schema(schema).parquet(src),
-        idx2, out2, str(tmp_path / "ck"), min_df=2,
-    )
-    q.processAllAvailable()
-    q.stop()
-    total = sum(
-        spark.read.parquet(f"{out2}/v{b}").count()
-        for b in committed_batches(idx2)
-    )
-    assert total == len(docs)
-
-
-def test_exactsubstr_on_arrival_stream(spark, tmp_path):
-    """Streaming ExactSubstr-on-arrival: spans excise with the gram
-    occurrences accumulated through each batch's arrival; prefix
-    semantics, redelivery no-op, re-crawl guard."""
-    from strategicai_visibility_loop_etl_spark.operators.dedup import (
-        exactsubstr_dedup,
-    )
-    from strategicai_visibility_loop_etl_spark.streaming.sink import (
-        committed_batches,
-        exactsubstr_on_arrival_batch,
-        start_exactsubstr_stream,
-    )
-
-    span = "accept all cookies or manage preferences in settings now ok"
-    docs = [
-        (1, f"first page unique opening {span} first tail"),
-        (2, f"second page other body {span} second tail"),
-        (3, "nothing shared with anything at all here truly"),
-        (4, f"fourth page {span} fourth tail"),
-    ]
-    schema = "doc_id long, text string"
-    batches = [docs[0:1], docs[1:3], docs[3:4]]
-
-    def mk(rows):
-        return spark.createDataFrame(rows, schema)
-
-    idx, out = str(tmp_path / "gidx"), str(tmp_path / "gout")
-    for bid, rows in enumerate(batches):
-        exactsubstr_on_arrival_batch(mk(rows), bid, idx, out, k=5)
-    assert committed_batches(idx) == [0, 1, 2]
-    got = {}
-    for bid in committed_batches(idx):
-        for r in spark.read.parquet(f"{out}/v{bid}").collect():
-            got[r["doc_id"]] = r
-    # prefix semantics: doc 1's span was unique at arrival; 2 and 4 hit
-    assert got[1]["n_removed"] == 0
-    assert got[2]["n_removed"] > 0 and span not in got[2]["clean_text"]
-    assert got[4]["n_removed"] > 0
-    assert got[3]["n_removed"] == 0
-    # batch 1 equals the incremental contract vs everything so far
-    want = {
-        r["doc_id"]: r
-        for r in exactsubstr_dedup(mk(docs[0:3]), k=5).collect()
-    }
-    assert got[2]["clean_text"] == want[2]["clean_text"]
-
-    # redelivery no-op + re-crawl guard
-    exactsubstr_on_arrival_batch(mk(batches[1]), 1, idx, out, k=5)
-    exactsubstr_on_arrival_batch(
-        mk([(2, docs[1][1]), (5, "fresh fifth page entirely new words")]),
-        9, idx, out, k=5,
-    )
-    v9 = {r["doc_id"] for r in spark.read.parquet(f"{out}/v9").collect()}
-    assert v9 == {5}
-
-    # streaming wiring
-    src = str(tmp_path / "src")
-    mk(docs).coalesce(1).write.mode("overwrite").parquet(src)
-    idx2, out2 = str(tmp_path / "gidx2"), str(tmp_path / "gout2")
-    q = start_exactsubstr_stream(
-        spark.readStream.schema(schema).parquet(src),
-        idx2, out2, str(tmp_path / "ck2"), k=5,
-    )
-    q.processAllAvailable()
-    q.stop()
-    total = sum(
-        spark.read.parquet(f"{out2}/v{b}").count()
-        for b in committed_batches(idx2)
-    )
-    assert total == len(docs)
-
-
 def test_ann_index_on_arrival_stream(spark, sf_dir, tmp_path):
     """ANN index maintenance on arrival (capability row 142): batches
     assign against frozen centroids and join the committed index;
     search over the accumulated index EQUALS a from-scratch
     assignment of the full corpus under the same centroids;
     redelivery no-ops; a re-delivered vec_id keeps its stored
-    assignment; the real writeStream wiring commits the same state."""
+    assignment."""
     from pyspark.sql import functions as F
 
     from strategicai_visibility_loop_etl_spark.operators.similarity import (
@@ -786,7 +273,6 @@ def test_ann_index_on_arrival_stream(spark, sf_dir, tmp_path):
         ann_index_on_arrival_batch,
         committed_batches,
         read_ann_index,
-        start_ann_index_stream,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
@@ -834,470 +320,3 @@ def test_ann_index_on_arrival_stream(spark, sf_dir, tmp_path):
     acc2 = read_ann_index(spark, idx)
     assert acc2.count() == emb.count()
     assert acc2.groupBy("vec_id").count().filter("count > 1").count() == 0
-
-    # Real writeStream wiring delivers the same committed state.
-    src = str(tmp_path / "vec_src")
-    emb.coalesce(1).write.mode("overwrite").parquet(src)
-    idx2 = str(tmp_path / "annidx2")
-    q = start_ann_index_stream(
-        spark.readStream.schema("vec_id long, embedding array<double>").parquet(src),
-        idx2, cent_path, str(tmp_path / "ckpt_ann"),
-    )
-    q.processAllAvailable()
-    q.stop()
-    got2 = sorted(
-        map(
-            tuple,
-            ivf_search_index(
-                read_ann_index(spark, idx2), queries, cent_df, k=5, n_probe=3
-            ).collect(),
-        )
-    )
-    assert got2 == full
-
-
-def test_dedup_on_arrival_refresh_mode(spark, tmp_path):
-    """Streaming content-refresh: with refresh=True a re-crawled id's
-    NEW signature becomes authoritative (batch dir = version,
-    latest-per-id read), its pairs reflect the new content, and
-    redelivery still no-ops."""
-    from strategicai_visibility_loop_etl_spark.streaming.sink import (
-        committed_batches,
-        dedup_on_arrival_batch,
-        read_signature_index,
-    )
-
-    a = "the quick brown fox jumps over the lazy dog near the river bank"
-    b = "completely different text about gardening tulips rich dark soil"
-
-    def mk(rows):
-        return spark.createDataFrame(rows, "doc_id long, text string")
-
-    idx = str(tmp_path / "idx")
-    prs = str(tmp_path / "pairs")
-    kw = dict(threshold=0.5, max_bucket=100, refresh=True)
-    # batch 0: docs 1 (text a) and 3 (text b)
-    dedup_on_arrival_batch(mk([(1, a), (3, b)]), 0, idx, prs, **kw)
-    # batch 1: doc 1 RE-CRAWLED with text b (mutation) — must pair
-    # with 3 (its new neighborhood), not with its old self
-    dedup_on_arrival_batch(mk([(1, b + " tail")]), 1, idx, prs, **kw)
-    p1 = {
-        (r["id_a"], r["id_b"])
-        for r in spark.read.parquet(f"{prs}/v1").collect()
-    }
-    assert p1 == {(1, 3)}
-
-    # latest view resolves id 1 to the batch-1 signature
-    latest = read_signature_index(spark, idx, latest=True)
-    assert latest.count() == 2
-    # batch 2: near-dup of the NEW text pairs with both 1 and 3; a
-    # near-dup of the OLD text pairs with NEITHER
-    dedup_on_arrival_batch(
-        mk([(9, b + " tail tweak"), (8, a + " tail")]), 2, idx, prs, **kw
-    )
-    p2 = {
-        (r["id_a"], r["id_b"])
-        for r in spark.read.parquet(f"{prs}/v2").collect()
-    }
-    assert (1, 9) in p2 and (3, 9) in p2
-    assert not any(8 in pr for pr in p2), p2
-
-    # redelivery of the refresh batch: identical overwrite, no-op
-    before = sorted(committed_batches(idx))
-    dedup_on_arrival_batch(mk([(1, b + " tail")]), 1, idx, prs, **kw)
-    assert sorted(committed_batches(idx)) == before
-    assert read_signature_index(spark, idx, latest=True).count() == 4
-
-
-def test_dedup_on_arrival_mode_mixing_raises(spark, tmp_path):
-    """Once a refresh batch commits, a non-refresh call on the same
-    index must raise — its raw-union read would fan out ambiguous
-    pairs from the versioned duplicate rows."""
-    import pytest as _pytest
-
-    from strategicai_visibility_loop_etl_spark.streaming.sink import (
-        dedup_on_arrival_batch,
-    )
-
-    a = "the quick brown fox jumps over the lazy dog near the river bank"
-
-    def mk(rows):
-        return spark.createDataFrame(rows, "doc_id long, text string")
-
-    idx = str(tmp_path / "idx")
-    prs = str(tmp_path / "pairs")
-    dedup_on_arrival_batch(
-        mk([(1, a)]), 0, idx, prs, threshold=0.5, max_bucket=100,
-        refresh=True,
-    )
-    with _pytest.raises(ValueError, match="refresh"):
-        dedup_on_arrival_batch(
-            mk([(2, a + " tail")]), 1, idx, prs,
-            threshold=0.5, max_bucket=100,
-        )
-    # refresh-mode continuation still works
-    dedup_on_arrival_batch(
-        mk([(2, a + " tail")]), 1, idx, prs, threshold=0.5,
-        max_bucket=100, refresh=True,
-    )
-
-
-def test_agg_state_on_arrival_equals_full_aggregate(spark, sf_dir, tmp_path):
-    """Streaming incremental MV maintenance: per-batch mergeable
-    states fold to exactly the from-scratch aggregate of every
-    committed row; redelivery no-ops; an uncommitted (torn) batch is
-    invisible; the real streaming wiring delivers the same protocol."""
-    import os
-    import shutil
-
-    from strategicai_visibility_loop_etl_spark.operators.snapshot import (
-        agg_state,
-        finalize_agg,
-    )
-    from strategicai_visibility_loop_etl_spark.streaming.sink import (
-        agg_state_on_arrival_batch,
-        committed_batches,
-        read_agg_state,
-    )
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "event_type", "value"
-    )
-    batches = [ev.filter(F.col("event_id") % 3 == i) for i in range(3)]
-    sd = str(tmp_path / "state")
-    for bid, b in enumerate(batches):
-        agg_state_on_arrival_batch(b, bid, sd, ["event_type"], "value")
-    assert committed_batches(sd) == [0, 1, 2]
-
-    got = sorted(map(tuple, read_agg_state(spark, sd).collect()))
-    want = sorted(
-        map(tuple, finalize_agg(agg_state(ev, ["event_type"], "value")).collect())
-    )
-    assert got == want
-
-    # redelivery no-ops (even with DIFFERENT content — marker wins)
-    agg_state_on_arrival_batch(batches[0].limit(1), 0, sd, ["event_type"], "value")
-    assert sorted(map(tuple, read_agg_state(spark, sd).collect())) == want
-
-    # a torn batch (data dir, no marker) is invisible
-    shutil.copytree(os.path.join(sd, "b2"), os.path.join(sd, "b7"))
-    assert sorted(map(tuple, read_agg_state(spark, sd).collect())) == want
-
-    # real streaming wiring: replay the same rows through a rate-free
-    # file stream and compare
-    from strategicai_visibility_loop_etl_spark.streaming.sink import (
-        start_agg_state_stream,
-    )
-
-    src = str(tmp_path / "src")
-    ev.write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema(ev.schema).parquet(src)
-    )
-    sd2 = str(tmp_path / "state2")
-    q = start_agg_state_stream(
-        stream, sd2, str(tmp_path / "ckpt"), ["event_type"], "value"
-    )
-    q.processAllAvailable()
-    q.stop()
-    got2 = sorted(map(tuple, read_agg_state(spark, sd2).collect()))
-    assert got2 == want
-
-
-def test_agg_state_compaction_and_schema_guard(spark, sf_dir, tmp_path):
-    """Fold-manifest compaction: the folded view equals the full
-    aggregate, post-compaction batches keep folding in, redelivery of
-    a pre-compaction batch still no-ops, a crashed fold attempt
-    (orphan f-dir, no manifest) is invisible and swept, and a
-    reconfigured stream pointed at the same state_dir raises."""
-    import os
-    import shutil
-
-    import pytest as _pytest
-
-    from strategicai_visibility_loop_etl_spark.operators.snapshot import (
-        agg_state,
-        finalize_agg,
-    )
-    from strategicai_visibility_loop_etl_spark.streaming.sink import (
-        agg_state_on_arrival_batch,
-        compact_agg_state,
-        read_agg_state,
-    )
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "event_type", "value"
-    )
-    parts = [ev.filter(F.col("event_id") % 4 == i) for i in range(4)]
-    sd = str(tmp_path / "state")
-    for bid in range(3):
-        agg_state_on_arrival_batch(parts[bid], bid, sd, ["event_type"], "value")
-
-    def snap(df):
-        return sorted(map(tuple, df.collect()))
-
-    upto3 = snap(
-        finalize_agg(
-            agg_state(
-                ev.filter(F.col("event_id") % 4 < 3), ["event_type"], "value"
-            )
-        )
-    )
-    # crashed fold attempt: orphan f-dir without a manifest — invisible
-    shutil.copytree(os.path.join(sd, "b0"), os.path.join(sd, "fdeadbeef"))
-    assert snap(read_agg_state(spark, sd)) == upto3
-
-    n = compact_agg_state(spark, sd)
-    assert n == len(upto3)
-    assert snap(read_agg_state(spark, sd)) == upto3
-    assert not os.path.exists(os.path.join(sd, "fdeadbeef"))  # swept
-    assert not os.path.exists(os.path.join(sd, "b0"))  # superseded
-
-    # redelivery of a compacted-away batch: marker survives -> no-op
-    agg_state_on_arrival_batch(parts[0], 0, sd, ["event_type"], "value")
-    assert snap(read_agg_state(spark, sd)) == upto3
-
-    # a post-compaction batch folds in on top of the manifest
-    agg_state_on_arrival_batch(parts[3], 3, sd, ["event_type"], "value")
-    full = snap(finalize_agg(agg_state(ev, ["event_type"], "value")))
-    assert snap(read_agg_state(spark, sd)) == full
-
-    # second compaction folds manifest + new batch
-    compact_agg_state(spark, sd)
-    assert snap(read_agg_state(spark, sd)) == full
-
-    # reconfigured stream on the same dir raises
-    with _pytest.raises(ValueError, match="incompatible"):
-        agg_state_on_arrival_batch(
-            parts[0].withColumnRenamed("value", "v2"), 9, sd,
-            ["event_type"], "v2",
-        )
-
-
-def test_compact_agg_state_sweeps_orphaned_covered_batches(
-    spark, sf_dir, tmp_path
-):
-    """A crash during compaction step 3 (deleting superseded dirs) can
-    orphan covered b* dirs: they are never in a later run's referenced
-    set, so the entry sweep must remove any committed batch dir whose
-    id <= the manifest horizon — otherwise an unbounded disk leak."""
-    import os
-    import shutil
-
-    from strategicai_visibility_loop_etl_spark.streaming.sink import (
-        agg_state_on_arrival_batch,
-        compact_agg_state,
-        read_agg_state,
-    )
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "event_type", "value"
-    )
-    parts = [ev.filter(F.col("event_id") % 3 == i) for i in range(3)]
-    sd = str(tmp_path / "state")
-    for bid in range(2):
-        agg_state_on_arrival_batch(parts[bid], bid, sd, ["event_type"], "value")
-
-    def snap(df):
-        return sorted(map(tuple, df.collect()))
-
-    backup = str(tmp_path / "b0_backup")
-    shutil.copytree(os.path.join(sd, "b0"), backup)
-    compact_agg_state(spark, sd)
-    want = snap(read_agg_state(spark, sd))
-    # simulate the step-3 crash: a covered batch dir reappears
-    shutil.copytree(backup, os.path.join(sd, "b0"))
-    # readers resolve through the manifest — the orphan is invisible
-    assert snap(read_agg_state(spark, sd)) == want
-    # a later batch arrives, then the NEXT compaction's entry sweep
-    # removes the orphan (it is <= the manifest horizon)
-    agg_state_on_arrival_batch(parts[2], 2, sd, ["event_type"], "value")
-    compact_agg_state(spark, sd)
-    assert not os.path.exists(os.path.join(sd, "b0"))
-    full = snap(read_agg_state(spark, sd))
-    # and the folded view still equals the full aggregate
-    from strategicai_visibility_loop_etl_spark.operators.snapshot import (
-        agg_state,
-        finalize_agg,
-    )
-
-    assert full == snap(finalize_agg(agg_state(ev, ["event_type"], "value")))
-
-
-def test_compact_agg_state_single_snapshot_horizon(spark, sf_dir, tmp_path):
-    """The fold manifest's horizon derives from the SAME ledger
-    snapshot the fold read (the TOCTOU fix): after compaction the
-    manifest covers exactly the folded ids, later batches (including
-    id gaps) keep folding in, and a second compaction absorbs them."""
-    import json
-    import os
-
-    from strategicai_visibility_loop_etl_spark.streaming.sink import (
-        agg_state_on_arrival_batch,
-        compact_agg_state,
-        read_agg_state,
-    )
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "event_type", "value"
-    )
-    parts = [ev.filter(F.col("event_id") % 3 == i) for i in range(3)]
-    sd = str(tmp_path / "state")
-    agg_state_on_arrival_batch(parts[0], 0, sd, ["event_type"], "value")
-    agg_state_on_arrival_batch(parts[1], 1, sd, ["event_type"], "value")
-    compact_agg_state(spark, sd)
-    with open(os.path.join(sd, "_fold"), encoding="utf-8") as fh:
-        assert json.load(fh)["upto"] == 1
-    # a batch with an id GAP lands after compaction: readable, then
-    # absorbed by the next compaction with the horizon advanced
-    agg_state_on_arrival_batch(parts[2], 5, sd, ["event_type"], "value")
-    def snap(df):
-        return sorted(map(tuple, df.collect()))
-
-    full = snap(read_agg_state(spark, sd))
-    compact_agg_state(spark, sd)
-    with open(os.path.join(sd, "_fold"), encoding="utf-8") as fh:
-        assert json.load(fh)["upto"] == 5
-    assert snap(read_agg_state(spark, sd)) == full
-    assert not os.path.exists(os.path.join(sd, "b5"))
-
-
-def test_time_travel_reads_merge_sink(spark, tmp_path):
-    """read_version/read_asof resolve any committed snapshot through
-    the ledger: exact id, as-of floor semantics, torn writes
-    invisible, redelivery cannot rewrite history, a vacuumed snapshot
-    fails loudly, and the excision sinks' split ledger/out layout
-    resolves via ledger_dir."""
-    import os
-    import shutil
-
-    import pytest
-
-    from strategicai_visibility_loop_etl_spark.streaming.sink import (
-        exactly_once_upsert,
-        read_asof,
-        read_latest,
-        read_version,
-    )
-
-    target = str(tmp_path / "t")
-    mk = lambda rows: spark.createDataFrame(rows, "k int, v string")
-    exactly_once_upsert(mk([(1, "a"), (2, "b")]), 0, target, ["k"])
-    exactly_once_upsert(mk([(2, "B"), (3, "c")]), 1, target, ["k"])
-    exactly_once_upsert(mk([(1, "A2")]), 2, target, ["k"])
-
-    def snap(df):
-        return {r["k"]: r["v"] for r in df.collect()}
-
-    assert snap(read_version(spark, target, 0)) == {1: "a", 2: "b"}
-    assert snap(read_version(spark, target, 1)) == {1: "a", 2: "B", 3: "c"}
-    assert snap(read_version(spark, target, 2)) == {1: "A2", 2: "B", 3: "c"}
-    # as-of floor: ≤ semantics, not exact-match
-    assert snap(read_asof(spark, target, 1)) == snap(
-        read_version(spark, target, 1)
-    )
-    assert snap(read_asof(spark, target, 99)) == snap(
-        read_latest(spark, target)
-    )
-    assert read_asof(spark, target, -1) is None
-
-    # uncommitted id raises; a TORN write (dir present, marker never
-    # committed) is equally invisible
-    with pytest.raises(ValueError):
-        read_version(spark, target, 7)
-    shutil.copytree(os.path.join(target, "v1"), os.path.join(target, "v7"))
-    with pytest.raises(ValueError):
-        read_version(spark, target, 7)
-    assert snap(read_asof(spark, target, 7)) == snap(
-        read_version(spark, target, 2)
-    )
-
-    # redelivery with DIFFERENT content cannot rewrite history
-    exactly_once_upsert(mk([(9, "z")]), 1, target, ["k"])
-    assert snap(read_version(spark, target, 1)) == {1: "a", 2: "B", 3: "c"}
-
-    # a vacuumed-but-committed snapshot fails loudly, and does not
-    # silently fall back to an older one
-    shutil.rmtree(os.path.join(target, "v0"))
-    with pytest.raises(FileNotFoundError):
-        read_version(spark, target, 0)
-    with pytest.raises(FileNotFoundError):
-        read_asof(spark, target, 0)
-
-    # excision-sink layout: ledger in the INDEX dir, versioned output
-    # in out_dir — resolved via ledger_dir
-    from strategicai_visibility_loop_etl_spark.streaming.sink import (
-        exactsubstr_on_arrival_batch,
-    )
-
-    idx, out = str(tmp_path / "idx"), str(tmp_path / "out")
-    docs = spark.createDataFrame(
-        [(1, "one two three four five six seven eight nine")],
-        "doc_id long, text string",
-    )
-    exactsubstr_on_arrival_batch(docs, 0, idx, out, k=8)
-    got = read_version(spark, out, 0, ledger_dir=idx).collect()
-    assert len(got) == 1 and got[0]["doc_id"] == 1
-    with pytest.raises(ValueError):
-        read_version(spark, out, 3, ledger_dir=idx)
-
-
-def test_agg_state_asof_prefix_folds_and_horizon(spark, sf_dir, tmp_path):
-    """read_agg_state_asof folds exactly the ledger prefix ≤ the
-    requested id (mergeable states make the as-of view exact without
-    stored snapshots); torn dirs are invisible; compaction bounds
-    travel — below the fold horizon raises, at/above it still works."""
-    import os
-    import shutil
-
-    import pytest
-
-    from strategicai_visibility_loop_etl_spark.operators.snapshot import (
-        agg_state,
-        finalize_agg,
-    )
-    from strategicai_visibility_loop_etl_spark.streaming.sink import (
-        agg_state_on_arrival_batch,
-        compact_agg_state,
-        read_agg_state,
-        read_agg_state_asof,
-    )
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "event_type", "value"
-    )
-    batches = [ev.filter(F.col("event_id") % 3 == i) for i in range(3)]
-    sd = str(tmp_path / "state")
-    for bid, b in enumerate(batches):
-        agg_state_on_arrival_batch(b, bid, sd, ["event_type"], "value")
-
-    def snap(df):
-        return sorted(map(tuple, df.collect()))
-
-    def want_upto(n):
-        rows = ev.filter(F.col("event_id") % 3 <= n)
-        return snap(finalize_agg(agg_state(rows, ["event_type"], "value")))
-
-    assert snap(read_agg_state_asof(spark, sd, 0)) == want_upto(0)
-    assert snap(read_agg_state_asof(spark, sd, 1)) == want_upto(1)
-    assert snap(read_agg_state_asof(spark, sd, 2)) == want_upto(2)
-    # floor semantics past the head; None before any commit
-    assert snap(read_agg_state_asof(spark, sd, 9)) == want_upto(2)
-    assert read_agg_state_asof(spark, sd, -1) is None
-    # torn dir (no marker) is invisible to as-of
-    shutil.copytree(os.path.join(sd, "b2"), os.path.join(sd, "b8"))
-    assert snap(read_agg_state_asof(spark, sd, 9)) == want_upto(2)
-
-    # compaction horizon: below raises, at/above still serves
-    compact_agg_state(spark, sd)
-    assert snap(read_agg_state_asof(spark, sd, 2)) == want_upto(2)
-    assert snap(read_agg_state_asof(spark, sd, 9)) == want_upto(2)
-    with pytest.raises(ValueError):
-        read_agg_state_asof(spark, sd, 1)
-    # post-compaction batches keep folding into as-of prefixes
-    extra = ev.filter(F.col("event_id") % 3 == 0).limit(50)
-    agg_state_on_arrival_batch(extra, 3, sd, ["event_type"], "value")
-    assert snap(read_agg_state_asof(spark, sd, 2)) == want_upto(2)
-    assert snap(read_agg_state_asof(spark, sd, 3)) == snap(
-        read_agg_state(spark, sd)
-    )

@@ -172,6 +172,31 @@ def test_topk_per_stratum_exact_deterministic_stable(spark):
     assert g <= (got | new_keys)
 
 
+def test_term_df_topk_and_tiebreak(spark):
+    """``tfidf_top_terms`` document frequency counts a within-doc
+    repeat once; equal scores rank by term."""
+    from strategicai_visibility_loop_etl_spark.operators.textprep import tfidf_top_terms
+
+    df = spark.createDataFrame(
+        [
+            (1, "alpha beta beta"),   # within-doc repeat counts once
+            (2, "alpha gamma"),
+            (3, "alpha beta"),
+            (4, "epsilon delta"),     # equal tf and df: term breaks the tie
+        ],
+        "doc_id long, text string",
+    )
+    rows = tfidf_top_terms(df, top_k=2).collect()
+    assert {(r["term"], r["doc_freq"]) for r in rows} == {
+        ("alpha", 3), ("beta", 2), ("gamma", 1), ("delta", 1), ("epsilon", 1),
+    }
+    assert {(r["doc_id"], r["term"]): r["tf"] for r in rows}[(1, "beta")] == 2
+    doc4 = sorted((r["rank"], r["term"]) for r in rows if r["doc_id"] == 4)
+    assert doc4 == [(1, "delta"), (2, "epsilon")]
+    top1 = tfidf_top_terms(df, top_k=1).filter("doc_id = 4").collect()
+    assert [r["term"] for r in top1] == ["delta"]
+
+
 def test_scd2_intervals_runs_and_nulls(spark):
     from strategicai_visibility_loop_etl_spark.operators.snapshot import scd2_intervals
 
@@ -205,23 +230,6 @@ def test_snapshot_diff_statuses(spark):
     )
     out = {r["url"]: r["status"] for r in snapshot_diff(old, new, key_col="url").collect()}
     assert out == {1: "unchanged", 2: "changed", 3: "removed", 4: "added"}
-
-
-def test_term_df_topk_and_tiebreak(spark):
-    from strategicai_visibility_loop_etl_spark.operators.textprep import (
-        term_document_frequency,
-    )
-
-    df = spark.createDataFrame(
-        [
-            (1, "alpha beta beta"),   # within-doc repeat counts once
-            (2, "alpha gamma"),
-            (3, "alpha beta"),
-        ],
-        "doc_id long, text string",
-    )
-    rows = term_document_frequency(df, top_k=2).collect()
-    assert [(r["term"], r["doc_freq"]) for r in rows] == [("alpha", 3), ("beta", 2)]
 
 
 def test_connected_components_chain_and_clique(spark):
