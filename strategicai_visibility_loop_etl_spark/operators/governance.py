@@ -18,9 +18,11 @@ from __future__ import annotations
 import csv
 import os
 import re
+import threading
 from datetime import datetime, timezone
 
 _REMOTE_SCHEME = re.compile(r"^(?!file:)[a-zA-Z][a-zA-Z0-9+.-]*://")
+_APPEND_LOCK = threading.Lock()
 
 
 def _env_bool(name: str, default: bool) -> bool:
@@ -31,6 +33,10 @@ def _env_bool(name: str, default: bool) -> bool:
 
 
 def _append_csv(path: str, header: list[str], row: list) -> None:
+    """Append ``row`` (and ``header`` first, to a new file) under a
+    module lock, so loaders running on concurrent threads never
+    interleave partial rows or both write the header. Rows land in the
+    order the appends complete, not the order the callers started."""
     if _REMOTE_SCHEME.match(path):
         raise ValueError(
             f"governance logs are driver-local append-only CSV; got remote path {path!r}. "
@@ -41,7 +47,7 @@ def _append_csv(path: str, header: list[str], row: list) -> None:
     parent = os.path.dirname(path)
     if parent:
         os.makedirs(parent, exist_ok=True)
-    with open(path, "a", newline="") as fh:
+    with _APPEND_LOCK, open(path, "a", newline="") as fh:
         writer = csv.writer(fh)
         if fh.tell() == 0:
             writer.writerow(header)

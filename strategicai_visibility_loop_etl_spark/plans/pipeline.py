@@ -3,23 +3,42 @@
 Counterpart of reference etl_merge.py:733-1012 ``main()``: resolve
 inputs (env > config > defaults), load + normalize the three sources,
 aggregate, merge on the crawl spine, derive + score, emit slices and
-run/governance metadata. Without ``out_dir`` every output is one lazy
-logical plan — Catalyst sees the whole pipeline and prunes / pushes
-down per sink. With ``out_dir`` two parquet barriers cut that plan:
-the merge result is staged under ``_stage/merge`` and re-read before
-derive/score, and ``merged`` is written and re-read before the slices
-derive from it.
+run/governance metadata.
+
+Without ``out_dir`` every output is one lazy logical plan: Catalyst
+sees the whole pipeline and prunes / pushes down per sink. With
+``out_dir`` the call runs in three phases; the jobs of a phase do not
+depend on each other, so it submits them together to a thread pool it
+owns and joins before the next phase:
+
+- A, loads: ``load_frog``, ``load_gsc`` and ``load_ga4`` each fire a
+  CSV-header job and build their plan concurrently (also without
+  ``out_dir``).
+- B, two parquet barriers, serial: the merge result is staged under
+  ``_stage/merge`` and re-read before derive/score, then ``merged`` is
+  written and re-read. The ``merged`` write also observes its row
+  count and the CSV mirror's int-vs-float decision, so neither costs a
+  job of its own.
+- C, sinks: every slice parquet write and every CSV-mirror write read
+  the re-read ``merged`` and run concurrently. The run-log row is
+  appended after they have all joined.
+
+Pool threads inherit the caller's job group, description, scheduler
+pool and session tags. A failing job is raised only after every
+sibling in its phase has ended.
 """
 
 from __future__ import annotations
 
 import os
 import time
-import uuid
+from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, FloatType
+from pyspark.util import inheritable_thread_target
 
 from ..operators.aggregate import agg_ga4, agg_gsc
 from ..operators.anomaly import anomaly_ctr_underperf, ctr_candidates, schema_gaps
@@ -83,9 +102,11 @@ def _resolve_input(env_name: str, cfg: dict, cfg_key: str, default: str | None) 
 # etl_merge.py:860-902): ratio/config-derived columns are float by
 # construction there -> always "%.6f"; crawl/provenance ints are Int64
 # by construction -> always bare ints. Raw metric sums (clicks,
-# sessions, ...) take pandas' data-dependent inference: int64 (bare)
-# when fully populated and integral, float64 ("%.6f") otherwise — the
-# formatter reproduces that decision with one aggregate over the output.
+# sessions, ...) take pandas' data-dependent inference on ``merged``:
+# int64 (bare) when fully populated and integral, float64 ("%.6f")
+# otherwise. The reference's slices are row subsets of that frame and
+# keep its dtypes, so one decision, observed on the merged write,
+# renders every mirror.
 _MIRROR_FLOAT_COLS = {
     "ctr", "ctr_pct", "position", "expected_ctr", "expected_ctr_uplift",
     "ctr_deficit", "intent_multiplier", "missed_clicks", "missed_clicks_eff",
@@ -95,38 +116,41 @@ _MIRROR_INT_COLS = {
     "status_code", "click_depth", "inlinks", "word_count",
     "avg_engagement_time", "run_timestamp", "priority_rank",
 }
+_ROWS = "__rows"
 
 
-def format_csv_mirror(df: DataFrame) -> DataFrame:
-    """Render float columns the way the reference's CSV writer does.
+def _is_float(f) -> bool:
+    return isinstance(f.dataType, (DoubleType, FloatType))
+
+
+def _merged_metrics(df: DataFrame) -> list:
+    """What the ``merged`` write observes: its row count (the run log's
+    ``rows_merged``) and, per raw metric column, 1 when pandas would
+    infer float64 for it (a null or a non-integral value), else 0."""
+    fixed = _MIRROR_FLOAT_COLS | _MIRROR_INT_COLS
+    return [F.count(F.lit(1)).alias(_ROWS)] + [
+        F.max(
+            F.when(F.col(f.name).isNull() | (F.col(f.name) != F.floor(f.name)), 1).otherwise(0)
+        ).alias(f.name)
+        for f in df.schema.fields
+        if _is_float(f) and f.name not in fixed
+    ]
+
+
+def format_csv_mirror(df: DataFrame, int_like: set[str]) -> DataFrame:
+    """Render float columns the way the reference's CSV writer does:
+    bare ints for the crawl ints and the ``int_like`` raw metrics,
+    ``%.6f`` for every other float column.
 
     ``%.6f`` never diverges between engines on bround'ed inputs: an
     exact decimal tie at the 7th digit (…5×10⁻⁷) is not representable
     in binary, so Java's and C's correctly-rounded formatting agree on
     every double.
     """
-    from pyspark.sql.types import DoubleType, FloatType  # noqa: PLC0415
-
-    dbl = [f.name for f in df.schema.fields if isinstance(f.dataType, (DoubleType, FloatType))]
-    dynamic = [c for c in dbl if c not in _MIRROR_FLOAT_COLS and c not in _MIRROR_INT_COLS]
-    int_like: set[str] = set()
-    if dynamic:
-        flags = df.agg(
-            *[
-                F.max(
-                    F.when(
-                        F.col(c).isNull() | (F.col(c) != F.floor(c)), F.lit(1)
-                    ).otherwise(F.lit(0))
-                ).alias(c)
-                for c in dynamic
-            ]
-        ).first()
-        int_like = {c for c in dynamic if not (flags[c] or 0)}
-
     out_cols = []
     for f in df.schema.fields:
         c = f.name
-        if not isinstance(f.dataType, (DoubleType, FloatType)):
+        if not _is_float(f):
             out_cols.append(F.col(c))
         elif c in _MIRROR_INT_COLS or c in int_like:
             out_cols.append(F.col(c).cast("long").alias(c))
@@ -137,6 +161,34 @@ def format_csv_mirror(df: DataFrame) -> DataFrame:
                 ).alias(c)
             )
     return df.select(*out_cols)
+
+
+def _write_csv_mirror(df: DataFrame, int_like: set[str], path: str) -> None:
+    # escape='"' doubles embedded quotes like pandas' QUOTE_MINIMAL;
+    # emptyValue='' renders empty strings bare (Spark's default '""'
+    # would diff vs pandas). Distributed CSV (one part per partition),
+    # never coalesce(1): a single-file write funnels the whole output
+    # through one task.
+    format_csv_mirror(df, int_like).write.mode("overwrite").option(
+        "header", True
+    ).option("escape", '"').option("emptyValue", "").csv(path)
+
+
+def _run_concurrently(spark: SparkSession, calls: list[tuple]) -> list:
+    """Run each ``(fn, *args)`` on its own thread of a pool this call
+    owns and return the results in call order.
+
+    The pool is joined before anything is returned or raised, so a
+    failure surfaces only after every sibling (and its Spark jobs) has
+    ended; the first failure in call order is raised. Each target is
+    wrapped separately, so each thread gets its own copy of the
+    caller's local properties (job group, description, scheduler pool)
+    and a group one thread sets does not leak into its siblings.
+    """
+    with ThreadPoolExecutor(max_workers=max(len(calls), 1)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(fn), *args)
+                   for fn, *args in calls]
+    return [f.result() for f in futures]
 
 
 def run_visibility_pipeline(
@@ -199,17 +251,20 @@ def _run_pipeline(
     site_base: str | None,
     strip_all: bool,
 ) -> dict[str, DataFrame]:
-    frog = load_frog(spark, frog_path, site_base, strip_all)
-    gsc = agg_gsc(load_gsc(spark, gsc_path, site_base, strip_all))
-    ga4 = agg_ga4(load_ga4(spark, ga4_path, site_base, strip_all))
+    # Phase A: each loader fires its own CSV-header job.
+    frog, gsc, ga4 = _run_concurrently(spark, [
+        (load, spark, path, site_base, strip_all)
+        for load, path in ((load_frog, frog_path), (load_gsc, gsc_path), (load_ga4, ga4_path))
+    ])
 
-    base = merge_visibility(frog, gsc, ga4)
+    base = merge_visibility(frog, agg_gsc(gsc), agg_ga4(ga4))
     if out_dir:
-        # Stage the merge result to parquet and re-read it. The derive/
-        # score stages each broadcast a scalar aggregate (clicks total,
-        # CTR median) whose plan branch re-executes everything beneath
-        # it — with the staged read that's a cheap column-pruned parquet
-        # scan instead of the whole load→normalize→merge subtree.
+        # Phase B. Stage the merge result to parquet and re-read it.
+        # The derive/score stages each broadcast a scalar aggregate
+        # (clicks total, CTR median) whose plan branch re-executes
+        # everything beneath it — with the staged read that's a cheap
+        # column-pruned parquet scan instead of the whole
+        # load→normalize→merge subtree.
         # (persist() is NOT equivalent: intra-query cache population is
         # racy across branches and measured slower than the recompute.)
         stage_path = os.path.join(out_dir, "_stage", "merge")
@@ -267,7 +322,10 @@ def _run_pipeline(
         # the pipeline cost), and at 100 TB the re-read is the only
         # shape that doesn't hold the working set in executor memory.
         merged_path = os.path.join(out_dir, "merged")
-        merged.write.mode("overwrite").parquet(merged_path)
+        observed = Observation()
+        merged.observe(observed, *_merged_metrics(merged)).write.mode(
+            "overwrite"
+        ).parquet(merged_path)
         merged = spark.read.parquet(merged_path)
 
     outputs = {"merged": merged}
@@ -282,33 +340,28 @@ def _run_pipeline(
         outputs["schema_gaps"] = schema_gaps(merged)
 
     if out_dir:
-        # Parquet is the at-scale sink (splittable, column-pruned);
-        # output.csv_mirror additionally writes header'd CSV directories
-        # for the reference's downstream consumers. Distributed CSV (one
-        # part per partition), never coalesce(1) — a single-file write
-        # funnels the whole output through one task.
-        csv_mirror = bool((cfg.get("output", {}) or {}).get("csv_mirror", False))
-        for name, df in outputs.items():
-            if name != "merged":
-                df.write.mode("overwrite").parquet(os.path.join(out_dir, name))
-            if csv_mirror:
-                # escape='"' doubles embedded quotes like pandas'
-                # QUOTE_MINIMAL; emptyValue='' renders empty strings
-                # bare (Spark's default '""' would diff vs pandas).
-                format_csv_mirror(df).write.mode("overwrite").option(
-                    "header", True
-                ).option("escape", '"').option("emptyValue", "").csv(
-                    os.path.join(out_dir, f"{name}_csv")
-                )
+        # Phase C. Parquet is the at-scale sink (splittable,
+        # column-pruned); output.csv_mirror additionally writes
+        # header'd CSV directories for the reference's downstream
+        # consumers.
+        metrics = observed.get
+        rows_merged = metrics.pop(_ROWS)
+        int_like = {c for c, not_int in metrics.items() if not not_int}
+        sinks = [(df.write.mode("overwrite").parquet, os.path.join(out_dir, name))
+                 for name, df in outputs.items() if name != "merged"]
+        if (cfg.get("output", {}) or {}).get("csv_mirror", False):
+            sinks += [(_write_csv_mirror, df, int_like, os.path.join(out_dir, f"{name}_csv"))
+                      for name, df in outputs.items()]
+        _run_concurrently(spark, sinks)
         # Governance run log (reference :986-1004): one append-only row
         # per run, env-gated via ETL_RUN_LOG / ETL_RUN_LOG_PATH.
         append_run_log(
             run_id,
             run_ts,
-            merged.count(),
+            rows_merged,
             frog_path,
             gsc_path,
             ga4_path,
-            os.path.join(out_dir, "merged"),
+            merged_path,
         )
     return outputs

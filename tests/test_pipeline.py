@@ -1,11 +1,16 @@
 """End-to-end pipeline parity vs a pandas-computed oracle on
-reference-shaped fixtures, plus governance-log assertions (SURVEY §5c)."""
+reference-shaped fixtures, plus governance-log assertions (SURVEY §5c).
+
+The reference-parity and CLI end-to-end runs are ``sweep``; the
+concurrency contract of ``run_visibility_pipeline`` (job group, job
+count, error path, governance appends) runs in the fast tier."""
 
 from __future__ import annotations
 
 import csv
 import os
 import textwrap
+import threading
 
 import pandas as pd
 import pytest
@@ -15,8 +20,7 @@ from strategicai_visibility_loop_etl_spark.plans.pipeline import (
     run_visibility_pipeline,
 )
 
-
-pytestmark = pytest.mark.sweep  # reference-parity pipeline + CLI end-to-end
+sweep = pytest.mark.sweep  # reference-parity pipeline + CLI end-to-end
 
 FROG = """
 Address,Status Code,Title 1,Word Count,Structured Data
@@ -51,6 +55,23 @@ def fixture_paths(tmp_path):
     return paths
 
 
+def _vis_cfg(fixture_paths: dict) -> dict:
+    cfg = default_config()
+    cfg["inputs"] = {
+        "screaming_frog": fixture_paths["frog"],
+        "gsc": fixture_paths["gsc"],
+        "ga4": fixture_paths["ga4"],
+    }
+    cfg["output"].update(csv_mirror=True, write_slices=True)
+    return cfg
+
+
+def _drain_listener_bus(spark) -> None:
+    """Wait until the status store has seen every posted job event."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+
+
+@sweep
 def test_pipeline_parity_with_pandas_oracle(spark, fixture_paths, tmp_path, monkeypatch):
     monkeypatch.setenv("SITE_BASE", "https://e.com")
     monkeypatch.setenv("ETL_RUN_LOG", "0")
@@ -109,6 +130,7 @@ def test_pipeline_parity_with_pandas_oracle(spark, fixture_paths, tmp_path, monk
     assert gaps == {"https://e.com/b"}
 
 
+@sweep
 def test_pipeline_governance_logs(spark, fixture_paths, tmp_path, monkeypatch):
     run_log = tmp_path / "logs" / "runs.csv"
     auto_log = tmp_path / "logs" / "auto.csv"
@@ -135,7 +157,9 @@ def test_pipeline_governance_logs(spark, fixture_paths, tmp_path, monkeypatch):
 
     with open(auto_log) as fh:
         auto_rows = list(csv.DictReader(fh))
-    assert {r["source"] for r in auto_rows} == {"screaming_frog", "gsc", "ga4"}
+    # One whole row per source, though the loaders append concurrently.
+    assert sorted(r["source"] for r in auto_rows) == ["ga4", "gsc", "screaming_frog"]
+    assert all(None not in r and None not in r.values() for r in auto_rows)
     gsc_row = next(r for r in auto_rows if r["source"] == "gsc")
     assert "url" in gsc_row["mapped_fields"].split(";")
 
@@ -145,6 +169,7 @@ def test_pipeline_governance_logs(spark, fixture_paths, tmp_path, monkeypatch):
     assert len(merged_back) == 3
 
 
+@sweep
 def test_pipeline_csv_mirror(spark, fixture_paths, tmp_path, monkeypatch):
     """output.csv_mirror writes header'd CSV directories alongside
     parquet for the reference's downstream consumers."""
@@ -165,6 +190,7 @@ def test_pipeline_csv_mirror(spark, fixture_paths, tmp_path, monkeypatch):
     assert "url" in back.columns and "missed_clicks" in back.columns
 
 
+@sweep
 def test_cli_entrypoint_runs_pipeline(spark, fixture_paths, tmp_path, monkeypatch, capsys):
     """`python -m strategicai_visibility_loop_etl_spark` front door: flags resolve
     inputs, the pipeline runs, parquet outputs land under --out."""
@@ -194,6 +220,7 @@ def test_cli_entrypoint_runs_pipeline(spark, fixture_paths, tmp_path, monkeypatc
     assert "Merged rows: 3" in capsys.readouterr().out
 
 
+@sweep
 def test_cli_env_precedence_and_missing_file(spark, fixture_paths, tmp_path, monkeypatch, capsys):
     """Env vars beat config (reference resolve_input_path precedence);
     a missing input is a clean [ERROR] + exit 1, like the reference."""
@@ -216,6 +243,7 @@ def test_cli_env_precedence_and_missing_file(spark, fixture_paths, tmp_path, mon
     assert "[ERROR] File not found for Screaming Frog" in capsys.readouterr().err
 
 
+@sweep
 def test_cli_xlsx_flag_falls_back_to_csv_sibling(spark, fixture_paths, tmp_path, monkeypatch, capsys):
     """--frog x.xlsx with only x.csv on disk runs on the csv, as the
     library loaders and the reference's resolve_input_path do."""
@@ -240,6 +268,7 @@ def test_cli_xlsx_flag_falls_back_to_csv_sibling(spark, fixture_paths, tmp_path,
     assert "Merged rows: 3" in io.out
 
 
+@sweep
 def test_cli_accepts_file_uri_inputs(spark, fixture_paths, tmp_path, monkeypatch, capsys):
     """Input existence resolves through the Hadoop FS API, like the
     loaders: file:// URIs the loaders read are not 'File not found'."""
@@ -265,6 +294,7 @@ def test_cli_accepts_file_uri_inputs(spark, fixture_paths, tmp_path, monkeypatch
     assert "Merged rows: 3" in io.out
 
 
+@sweep
 def test_cli_corpus_subcommand(spark, tmp_path, sf_dir):
     """`python -m strategicai_visibility_loop_etl_spark corpus` cleans a parquet
     documents table end-to-end."""
@@ -289,13 +319,16 @@ def test_cli_corpus_subcommand(spark, tmp_path, sf_dir):
     assert set(shards["shard"]) <= {0, 1}
 
 
+@sweep
 def test_csv_mirror_bytes_match_pandas_rendering(spark, fixture_paths, tmp_path, monkeypatch):
-    """The mirror must be byte-identical (modulo row order) to the
+    """Every mirror must be byte-identical (modulo row order) to the
     reference's rendering mechanism — pandas ``to_csv(index=False,
     float_format="%.6f")`` over the same data with the reference's
     dtype contract: ratio/config columns float by construction, crawl
     ints Int64 by construction, raw metric sums inferred int64 when
-    fully populated and integral."""
+    fully populated and integral. The reference renders each slice as
+    a row subset of its merged frame, so a slice keeps merged's dtypes
+    even where its own rows happen to be integral."""
     import glob
     import io
 
@@ -304,15 +337,8 @@ def test_csv_mirror_bytes_match_pandas_rendering(spark, fixture_paths, tmp_path,
     monkeypatch.setenv("SITE_BASE", "https://e.com")
     monkeypatch.setenv("ETL_RUN_LOG", "0")
     monkeypatch.setenv("ETL_AUTODETECT_LOG", "0")
-    cfg = default_config()
-    cfg["inputs"] = {
-        "screaming_frog": fixture_paths["frog"],
-        "gsc": fixture_paths["gsc"],
-        "ga4": fixture_paths["ga4"],
-    }
-    cfg["output"]["csv_mirror"] = True
     out = tmp_path / "out"
-    run_visibility_pipeline(spark, cfg, out_dir=str(out))
+    run_visibility_pipeline(spark, _vis_cfg(fixture_paths), out_dir=str(out))
 
     float_by_construction = {
         "ctr", "ctr_pct", "position", "expected_ctr", "expected_ctr_uplift",
@@ -332,15 +358,129 @@ def test_csv_mirror_bytes_match_pandas_rendering(spark, fixture_paths, tmp_path,
             # fully-populated integral columns.
             if pdf[c].notna().all() and (pdf[c] % 1 == 0).all():
                 pdf[c] = pdf[c].astype("int64")
-    buf = io.StringIO()
-    pdf.to_csv(buf, index=False, float_format="%.6f")
-    exp_header, *exp_rows = buf.getvalue().splitlines()
 
-    got_rows, got_header = [], None
-    for part in glob.glob(str(out / "merged_csv" / "part-*")):
-        with open(part) as fh:
-            lines = fh.read().splitlines()
-        got_header = lines[0]
-        got_rows += lines[1:]
-    assert got_header == exp_header
-    assert sorted(got_rows) == sorted(exp_rows)
+    def expected(frame):
+        buf = io.StringIO()
+        frame.to_csv(buf, index=False, float_format="%.6f")
+        header, *rows = buf.getvalue().splitlines()
+        return header, sorted(rows)
+
+    def got(name):
+        header, rows = None, []
+        for part in glob.glob(str(out / f"{name}_csv" / "part-*")):
+            with open(part) as fh:
+                lines = fh.read().splitlines()
+            if lines:
+                header = lines[0]
+                rows += lines[1:]
+        return header, sorted(rows)
+
+    assert got("merged") == expected(pdf)
+    for name in ("ctr_underperf", "ctr_debug", "schema_gaps"):
+        part = pd.read_parquet(out / name)
+        assert len(part) > 0, name
+        # The slice's own columns (priority_rank, intent_note) come from
+        # its parquet; every merged column from the merged frame.
+        own = [c for c in part.columns if c not in pdf.columns]
+        subset = pdf[pdf["url"].isin(part["url"])].merge(part[["url", *own]], on="url")
+        assert got(name) == expected(subset[list(part.columns)]), name
+
+
+def test_pipeline_jobs_carry_caller_job_group(spark, fixture_paths, tmp_path, monkeypatch):
+    """Every job the call fires, on the caller's thread or a pool
+    thread, carries the caller's job group; the job count on this
+    fixture is pinned."""
+    monkeypatch.setenv("SITE_BASE", "https://e.com")
+    monkeypatch.setenv("ETL_RUN_LOG", "0")
+    monkeypatch.setenv("ETL_AUTODETECT_LOG", "0")
+    monkeypatch.delenv("ETL_AUTODETECT_LOG_COUNT", raising=False)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    _drain_listener_bus(spark)
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("g", "visibility pipeline")
+    try:
+        run_visibility_pipeline(spark, _vis_cfg(fixture_paths), out_dir=str(tmp_path / "out"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    _drain_listener_bus(spark)
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+    # 36 when every CSV mirror ran its own dtype aggregate and the run
+    # log its own count; the merged write now observes both.
+    assert len(tracker.getJobIdsForGroup("g")) == 27
+
+
+def test_pipeline_sink_error_raised_after_siblings_end(spark, fixture_paths, tmp_path, monkeypatch):
+    """A failing sink write is raised only after every sibling job has
+    ended; the call's pool threads are joined and the constraint-
+    propagation conf is restored."""
+    monkeypatch.setenv("SITE_BASE", "https://e.com")
+    monkeypatch.setenv("ETL_RUN_LOG", "0")
+    monkeypatch.setenv("ETL_AUTODETECT_LOG", "0")
+    out = tmp_path / "out"
+    out.mkdir()
+    # A self-referencing symlink where the ctr_debug directory goes:
+    # overwrite cannot clear it and every task fails to create its
+    # attempt directory. (A plain file would just be deleted.)
+    os.symlink("ctr_debug", out / "ctr_debug")
+    key = "spark.sql.constraintPropagation.enabled"
+    spark.conf.set(key, "true")
+    before = set(threading.enumerate())
+    with pytest.raises(Exception, match="ctr_debug"):
+        run_visibility_pipeline(spark, _vis_cfg(fixture_paths), out_dir=str(out))
+    _drain_listener_bus(spark)
+    assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
+    leaked = [t.name for t in threading.enumerate()
+              if t not in before and t.name.startswith("ThreadPoolExecutor")]
+    assert leaked == []
+    assert spark.conf.get(key) == "true"
+    # Every sibling sink ran to its end.
+    for name in ("ctr_underperf", "schema_gaps", *(f"{n}_csv" for n in
+                 ("merged", "ctr_underperf", "ctr_debug", "schema_gaps"))):
+        assert os.path.exists(out / name / "_SUCCESS"), name
+
+
+def test_governance_append_is_thread_safe(tmp_path, monkeypatch):
+    """N threads appending at once leave one header and N whole rows.
+    The row writer is slowed to two flushed halves with a thread switch
+    between them, so appends that are not serialized interleave."""
+    import io
+    import time
+    import types
+
+    from strategicai_visibility_loop_etl_spark.operators import governance
+
+    class HalvingWriter:
+        def __init__(self, fh):
+            self.fh = fh
+
+        def writerow(self, row):
+            buf = io.StringIO()
+            csv.writer(buf).writerow(row)
+            line = buf.getvalue()
+            for half in (line[: len(line) // 2], line[len(line) // 2:]):
+                self.fh.write(half)
+                self.fh.flush()
+                time.sleep(0.001)
+
+    monkeypatch.setattr(governance, "csv", types.SimpleNamespace(writer=HalvingWriter))
+    path = str(tmp_path / "log.csv")
+    header = ["i", "payload"]
+    n = 8
+    start = threading.Barrier(n)
+
+    def append(i: int) -> None:
+        start.wait()
+        governance._append_csv(path, header, [i, f"row-{i}"])
+
+    threads = [threading.Thread(target=append, args=(i,)) for i in range(n)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=30)
+    assert not any(t.is_alive() for t in threads)
+    with open(path, newline="") as fh:
+        rows = list(csv.reader(fh))
+    assert rows[0] == header
+    assert sorted(rows[1:], key=lambda r: int(r[0])) == [[str(i), f"row-{i}"] for i in range(n)]
