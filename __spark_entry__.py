@@ -169,22 +169,11 @@ def _parallelize_scan(spark: SparkSession, df: DataFrame) -> DataFrame:
     return df.repartition(p)
 
 
-def _exact_sums() -> bool:
-    """Sum mode switch: SPARK_GRAFT_EXACT_SUMS=0 flips every _dsum to a
-    plain double sum — the production choice at 100 TB (decimal adds
-    ~2× to sum-heavy aggregations; see BASELINE.md for the measured
-    delta). Default ON: the correctness gate pins the exact,
-    order-independent decimal form that hash-matches DuckDB."""
-    return os.getenv("SPARK_GRAFT_EXACT_SUMS", "1").strip().lower() not in {"0", "false", "no"}
-
-
 def _dsum(col, alias: str):
-    """Exact, order-independent double sum via decimal (see module doc),
-    or a plain double sum under SPARK_GRAFT_EXACT_SUMS=0."""
+    """Exact, order-independent double sum via decimal (see module doc):
+    the form the correctness gate pins, hash-matching DuckDB."""
     c = F.col(col) if isinstance(col, str) else col
-    if _exact_sums():
-        return F.sum(c.cast(DEC)).cast("double").alias(alias)
-    return F.sum(c.cast("double")).alias(alias)
+    return F.sum(c.cast(DEC)).cast("double").alias(alias)
 
 
 def _rd(col, n: int):
@@ -4791,7 +4780,7 @@ def _doc_graph_edges(spark: SparkSession, sf_dir: str):
         )
         # four consumers (ring, hashed, the count, the result join) —
         # checkpoint so the single-partition rank window runs once.
-        .localCheckpoint(eager=True)
+        .localCheckpoint()
     )
     docs = mapping.select("id")
     total = docs.agg(F.count("*").alias("__n"))

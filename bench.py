@@ -136,38 +136,7 @@ def main() -> None:
     transient = {n: e for n, e in errors.items() if n in timings}
     total = sum(timings.values())
 
-    # Second pass: the production sum mode (plain double sums instead of
-    # the oracle-exact decimal form) over the sum-heavy queries, so the
-    # at-scale number is tracked round-over-round, not just in
-    # BASELINE.md prose. The env flag is read at plan-build time, so
-    # rebuilding each DataFrame picks it up.
-    fast_sum_queries = [
-        n for n in ("q01_pricing_summary", "q03_top_orders", "q05_region_volume",
-                    "q10_visibility_merge", "q33_moving_metrics", "q40_avg_qty_outliers",
-                    "q54_event_cube")
-        if n in qs
-    ]
-    prev_mode = os.environ.get("SPARK_GRAFT_EXACT_SUMS")
-    os.environ["SPARK_GRAFT_EXACT_SUMS"] = "0"
-    fast_timings: dict[str, float] = {}
-    try:
-        for _ in range(reps):
-            for name in fast_sum_queries:
-                t0 = time.perf_counter()
-                try:
-                    qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-                except Exception:  # noqa: BLE001
-                    continue
-                dt = round(time.perf_counter() - t0, 3)
-                if name not in fast_timings or dt < fast_timings[name]:
-                    fast_timings[name] = dt
-    finally:
-        if prev_mode is None:
-            os.environ.pop("SPARK_GRAFT_EXACT_SUMS", None)
-        else:
-            os.environ["SPARK_GRAFT_EXACT_SUMS"] = prev_mode
-
-    # Third pass: the qx* extra registry (operators beyond the
+    # Second pass: the qx* extra registry (operators beyond the
     # driver's 50-query gate). Timed separately and NOT counted in the
     # headline total, so round-over-round totals stay comparable.
     extra_timings: dict[str, float] = {}
@@ -203,7 +172,6 @@ def main() -> None:
         "reps": reps,
         "failures": failures,
         "transient_errors": transient,
-        "queries_fast_sums": fast_timings,
         "queries_extra": extra_timings,
         "load_avg_1m": load_1m,
         # ADDITIVE observability (round 15, driver `suspect_cpus_ignored`

@@ -185,7 +185,7 @@ def bpe_train(
         state.write.mode("overwrite").parquet(stage_path)
         state = df.sparkSession.read.parquet(stage_path)
     else:
-        state = state.localCheckpoint(eager=False)
+        state = state.localCheckpoint()
 
     merges: list[dict] = []
     rounds = 0
@@ -227,7 +227,7 @@ def bpe_train(
         state = state.select("cnt", _unwrap(replaced).alias("syms"))
         rounds += 1
         if rounds % checkpoint_every == 0:
-            state = state.localCheckpoint(eager=False)
+            state = state.localCheckpoint()
     if stats_out is not None:
         stats_out["rounds"] = rounds  # == Spark job rounds, not merges
     return merges

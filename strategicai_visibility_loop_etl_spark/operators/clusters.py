@@ -12,15 +12,16 @@ shallow (dup clusters are cliques or short chains), so a handful.
 
 Scale shape: each round is one join + one aggregate, both shuffling on
 node id — the same partitioning every round, which AQE/exchange reuse
-co-locates. ``localCheckpoint`` truncates the lineage each round so
-the plan doesn't grow with iterations (the classic iterative-algorithm
-footgun). The per-round convergence count is a scalar action, not a
+co-locates. An eager ``localCheckpoint`` truncates the lineage each
+round so the plan doesn't grow with iterations (the classic
+iterative-algorithm footgun). The per-round convergence scalar rides
+the checkpoint job as an ``Observation``: one job per round, no
 collect of the frame.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import normalized_text
@@ -110,8 +111,8 @@ def connected_components(
     # Symmetrize by EXPLODE, not union-with-swap: Catalyst expands a
     # self-union into two copies of the edges subtree, so the pair
     # generator (shingle index / window over the corpus) would execute
-    # TWICE inside the one eager-checkpoint job that is supposed to pin
-    # it. The explode reads the subtree exactly once.
+    # TWICE inside the one checkpoint job that is supposed to pin it.
+    # The explode reads the subtree exactly once.
     sym = (
         edges.select(
             F.explode(
@@ -122,7 +123,7 @@ def connected_components(
             ).alias("__e")
         )
         .select("__e.a", "__e.b")
-        .localCheckpoint(eager=True)
+        .localCheckpoint()
     )
     # The node derivation IS round 1 (optimization r15): instead of a
     # distinct + self-label (same shuffle as a groupBy on the node id),
@@ -132,7 +133,7 @@ def connected_components(
     labels = (
         sym.groupBy(F.col("a").alias("id"))
         .agg(F.least(F.min("b"), F.min("a")).alias("component"))
-        .localCheckpoint(eager=True)
+        .localCheckpoint()
     )
     # Self-loops make each round ONE join + ONE aggregate (optimization
     # r15): the (id, id) row carries the node's own current label
@@ -146,12 +147,11 @@ def connected_components(
     )
 
     for _ in range(max_iter):
-        # Lazy checkpoint: the convergence count below is the FIRST
-        # action on the frame, so one job both materializes the round's
-        # blocks (truncating lineage, as before) and returns the count
-        # — the eager-checkpoint + separate-count form paid two driver
-        # round trips per round for the same work.
-        updated = (
+        # The convergence count is observed on the checkpoint job: one
+        # job both materializes the round (truncating lineage) and
+        # returns the count.
+        changed = Observation()
+        labels = (
             sym2.join(
                 labels.select(F.col("id").alias("b"), F.col("component").alias("nc")),
                 "b",
@@ -161,16 +161,14 @@ def connected_components(
                 F.min("nc").alias("component"),
                 F.min(F.when(F.col("a") == F.col("b"), F.col("nc"))).alias("__old"),
             )
-            .select(
-                "id",
-                "component",
-                (F.col("component") < F.col("__old")).alias("__changed"),
+            .observe(
+                changed,
+                F.count_if(F.col("component") < F.col("__old")).alias("n"),
             )
-            .localCheckpoint(eager=False)
+            .select("id", "component")
+            .localCheckpoint()
         )
-        changed = updated.filter(F.col("__changed")).count()
-        labels = updated.drop("__changed")
-        if changed == 0:
+        if changed.get["n"] == 0:
             return labels
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds "
@@ -195,14 +193,15 @@ def _connected_components_star(
     one edge to its component's minimum node.
 
     Convergence is detected by an order-insensitive checksum
-    (count + sum of xxhash64) of the canonical edge set — one scalar
-    aggregate per round, no driver-side edge collection.
+    (count + sum of xxhash64) of the canonical edge set, observed on
+    each round's checkpoint job — no extra job, no driver-side edge
+    collection.
     """
     # Materialize the input projection ONCE: nodes and the canonical
     # edge set both consume it, and the node derivation explodes rather
     # than self-unions — without this the edges subtree (possibly a
     # whole candidate generator) would execute three times.
-    # localCheckpoint, NOT persist: a persisted block lost mid-build is
+    # A checkpoint, NOT persist: a persisted block lost mid-build is
     # silently recomputed from the untruncated lineage, and if the
     # upstream candidate generator is order-sensitive the two consumers
     # can see DIVERGENT edge sets (the round-7 prefix-sum bug class);
@@ -211,29 +210,31 @@ def _connected_components_star(
     # the ContextCleaner rather than pinned for all O(log n) rounds.
     raw = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint()
     nodes = (
         raw.select(F.explode(F.array("a", "b")).alias("id"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .localCheckpoint()
     )
-    e = (
+
+    def _checksummed(df: DataFrame):
+        # decimal(38,0) accumulator: a long sum of xxhash64 values
+        # overflows (ANSI mode throws on it).
+        chk = Observation()
+        cp = df.observe(
+            chk,
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.xxhash64("hi", "lo").cast("decimal(38,0)")).alias("h"),
+        ).localCheckpoint()
+        return cp, (chk.get["n"], chk.get["h"])
+
+    e, prev = _checksummed(
         raw.filter(F.col("a") != F.col("b"))
         .select(F.greatest("a", "b").alias("hi"), F.least("a", "b").alias("lo"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     del raw
 
-    def _checksum(df: DataFrame):
-        # decimal(38,0) accumulator: a long sum of xxhash64 values
-        # overflows (ANSI mode throws on it).
-        return df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64("hi", "lo").cast("decimal(38,0)")).alias("h"),
-        ).first()
-
-    prev = _checksum(e)
     for _ in range(max_iter):
         # Large-star over the symmetric view: m = min(N(u) ∪ {u});
         # emit (v, m) for every neighbor v > u.
@@ -262,12 +263,8 @@ def _connected_components_star(
             .filter(F.col("v") != F.col("m"))
             .select(F.col("v").alias("hi"), F.col("m").alias("lo"))
             .distinct()
-            # lazy: the checksum below is the first action, so one job
-            # materializes the round AND returns the convergence scalar
-            .localCheckpoint(eager=False)
         )
-        e = small
-        chk = _checksum(e)
+        e, chk = _checksummed(small)
         if chk == prev:
             roots_or_isolated = nodes.join(
                 e.select(F.col("hi").alias("id")), "id", "left_anti"

@@ -225,7 +225,7 @@ def duplicate_span_fraction(
     pg = (
         pos.groupBy("id", "g")
         .agg(F.count("*").alias("__c"))
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     dup = (
         pg.groupBy("g")
@@ -816,7 +816,6 @@ def exactsubstr_incremental(
     re-crawled ids' stale content replaced.
     """
     spark = new_docs.sparkSession
-    recover_count_index(index_path, "grams")
     ids_idx = spark.read.parquet(os.path.join(index_path, "ids"))
     gram_partials = spark.read.parquet(os.path.join(index_path, "grams"))
     details_path = os.path.join(index_path, "details")
@@ -1050,62 +1049,6 @@ def line_df_index_write(
     ).write.mode("append").parquet(os.path.join(index_path, "ids"))
 
 
-def recover_count_index(index_path: str, sub: str, sweep: bool = False) -> None:
-    """Crash recovery for a two-rename index swap (``rename(live,
-    _<sub>_old_*)`` then ``rename(_<sub>_compact_*, live)``).
-    Idempotent and cheap (one directory listing); called by the
-    incremental readers (``sweep=False``), so a swap that died between
-    its renames never strands the index:
-
-    - live missing + a compact dir with ``_SUCCESS`` → the crash hit
-      between ``rename(live, trash)`` and ``rename(tmp, live)``:
-      promote the fully-written compacted dir (it folds the same
-      rows), then drop the trash.
-    - live missing + only an old dir → the compacted dir was lost
-      too (partial write, no ``_SUCCESS``): restore the pre-compaction
-      directory — nothing is ever deleted before a replacement is
-      live.
-    - live present → leftovers are stale (crash before the swap, or
-      after it completed but before trash removal). Only the
-      COMPACTOR deletes them (``sweep=True``): a reader must never
-      rmtree a sibling, because a live-present + compact-dir-present
-      state is indistinguishable from an IN-FLIGHT compaction that
-      just wrote its tmp — a reader deleting it would crash the
-      compactor mid-swap. Readers are mutation-free whenever a live
-      directory exists.
-
-    Concurrency contract: recovery handles CRASHED compactions; a
-    reader racing a LIVE compaction is excluded the same way
-    concurrent appends are (the live dir vanishes for an instant
-    between the two renames — schedule compaction off the read path,
-    as with any merge-on-read table).
-    """
-    import shutil
-
-    live = os.path.join(index_path, sub)
-    compact_pre, old_pre = f"_{sub}_compact_", f"_{sub}_old_"
-    try:
-        entries = sorted(os.listdir(index_path))
-    except FileNotFoundError:
-        return
-    # Promote a complete compacted dir first — it is the newest
-    # equivalent state; only fall back to the old dir if none exists.
-    for name in entries:
-        full = os.path.join(index_path, name)
-        if name.startswith(compact_pre):
-            if not os.path.exists(live) and os.path.exists(
-                os.path.join(full, "_SUCCESS")
-            ):
-                os.rename(full, live)
-            elif sweep:
-                shutil.rmtree(full, ignore_errors=True)
-        elif name.startswith(old_pre):
-            if not os.path.exists(live):
-                os.rename(full, live)
-            elif sweep:
-                shutil.rmtree(full, ignore_errors=True)
-
-
 def boilerplate_excision_incremental(
     new_docs: DataFrame,
     index_path: str,
@@ -1152,7 +1095,6 @@ def boilerplate_excision_incremental(
     content.
     """
     spark = new_docs.sparkSession
-    recover_count_index(index_path, "lines")
     ids_idx = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(index_path, "ids")
     )
@@ -1531,7 +1473,7 @@ def token_cosine_pairs(
     # replayable table is wanted.
     postings = token_posting_lists(df, text_col, id_col, k)
     if stage_path is None:
-        postings = postings.localCheckpoint(eager=False)
+        postings = postings.localCheckpoint()
     posting_sizes = postings.groupBy("tok").agg(F.count("*").alias("n"))
     cap = resolve_max_bucket(posting_sizes, max_df)
     hot = posting_sizes.filter(F.col("n") > cap)

@@ -522,7 +522,7 @@ def js_divergence_pairs(
         )
         .groupBy("__g", "__t")
         .agg(F.count(F.lit(1)).cast("long").alias("__c"))
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     totals = counts.groupBy("__g").agg(
         F.sum("__c").cast("long").alias("__n")

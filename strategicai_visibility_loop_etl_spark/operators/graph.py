@@ -19,14 +19,18 @@ same iterations reproduces every rank bit-for-bit.
 Per-iteration ``localCheckpoint`` is the Pregel barrier: the ranks
 frame feeds two consumers per iteration (contributions + dangling
 mass) and the next iteration besides — without the cut, iteration
-``t`` re-executes the whole lineage ``2^t`` times. At cluster scale
-this is where a real checkpoint (or a staged parquet round-trip)
-goes; the cadence is identical.
+``t`` re-executes the whole lineage ``2^t`` times. Every checkpoint
+in this module is eager: the iterative operators are not pure plans,
+each call runs its rounds as jobs before it returns, and no lazily
+checkpointed frame is ever shared by a shuffle and a broadcast (the
+shape that can deadlock the DAG scheduler). At cluster scale this is
+where a real checkpoint (or a staged parquet round-trip) goes; the
+cadence is identical.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..functions.numeric import round_c
@@ -70,9 +74,9 @@ def pagerank(
     # anti-join — without BOTH cuts the edge scan + deg aggregate
     # replays per iteration.
     outdeg = (
-        e.groupBy("src").agg(F.count("*").alias("__deg")).localCheckpoint(eager=True)
+        e.groupBy("src").agg(F.count("*").alias("__deg")).localCheckpoint()
     )
-    edged = e.join(outdeg, "src").localCheckpoint(eager=True)
+    edged = e.join(outdeg, "src").localCheckpoint()
 
     ranks = (
         n1.crossJoin(F.broadcast(total))
@@ -82,7 +86,7 @@ def pagerank(
             .cast(_DEC)
             .alias("rank"),
         )
-        .localCheckpoint(eager=True)
+        .localCheckpoint()
     )
     base = F.lit(1.0 - damping)
     for _ in range(iters):
@@ -113,7 +117,7 @@ def pagerank(
             .crossJoin(F.broadcast(dangling))
             .crossJoin(F.broadcast(total))
             .select("id", round_c(val, 12).cast(_DEC).alias("rank"))
-            .localCheckpoint(eager=True)
+            .localCheckpoint()
         )
     return ranks
 
@@ -273,9 +277,9 @@ def label_propagation(
     Per-iteration shape: one join (labels → undirected edge list),
     one (node, label) hash aggregate, one per-node top-1 window
     (WindowGroupLimit prunes to the argmax row), a left join back to
-    the vertex spine, and a ``localCheckpoint`` barrier (the
+    the vertex spine, and an eager ``localCheckpoint`` barrier (the
     pagerank cadence — without it round ``t`` replays the whole
-    lineage).
+    lineage), so the call materializes ``iters + 2`` checkpoints.
     """
     n1 = nodes.select(F.col(id_col).alias("id"))
     e = edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
@@ -284,11 +288,9 @@ def label_propagation(
         ef.select("s", "d")
         .unionAll(ef.select(F.col("d").alias("s"), F.col("s").alias("d")))
         .distinct()
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
-    labels = n1.select("id", F.col("id").alias("label")).localCheckpoint(
-        eager=False
-    )
+    labels = n1.select("id", F.col("id").alias("label")).localCheckpoint()
     w = Window.partitionBy("id").orderBy(
         F.col("cnt").desc(), F.col("nl")
     )
@@ -314,7 +316,7 @@ def label_propagation(
                 "id",
                 F.coalesce(F.col("new_label"), F.col("label")).alias("label"),
             )
-            .localCheckpoint(eager=False)
+            .localCheckpoint()
         )
     return labels
 
@@ -394,14 +396,14 @@ def hits(
     already-agreed values — so any partitioning and a DuckDB
     unrolled twin land bit-identically.  Per round: two
     co-partitioned joins + two hash aggregates on the edge list, two
-    1-row broadcast normalizers, localCheckpoint barriers (lineage
-    otherwise replays 2^t).
+    1-row broadcast normalizers, eager localCheckpoint barriers
+    (lineage otherwise replays 2^t) that run inside the call.
     """
     n1 = nodes.select(F.col(id_col).alias("id"))
     e = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     total = n1.agg(F.count("*").alias("__n"))
     init = (
@@ -412,7 +414,7 @@ def hits(
             .cast(_DEC)
             .alias("score"),
         )
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     hubs = init
     auths = init
@@ -435,7 +437,7 @@ def hits(
                 )
                 .alias("score"),
             )
-            .localCheckpoint(eager=False)
+            .localCheckpoint()
         )
 
     for _ in range(iters):
@@ -492,12 +494,13 @@ def k_core(
 
     Scale shape (per round): one degree hash aggregate over the
     surviving edges + two semi joins restricting edge endpoints —
-    all key-partitioned, no windows, no collects. Convergence is a
-    scalar ``count()`` action per round (the connected-components
-    discipline) and each round's edge set is ``localCheckpoint``-cut
-    so lineage never snowballs. Rounds needed = peeling depth
-    (degeneracy ordering layers), typically tens on web graphs —
-    NOT diameter-bound like label propagation.
+    all key-partitioned, no windows, no collects. Each round's edge
+    set is cut by an eager ``localCheckpoint`` so lineage never
+    snowballs, and its row count (the convergence scalar) is observed
+    on that checkpoint job — the connected-components discipline.
+    Rounds needed = peeling depth (degeneracy ordering layers),
+    typically tens on web graphs — NOT diameter-bound like label
+    propagation.
 
     Self-loops are dropped and parallel edges collapse before
     peeling (degree = distinct-neighbor count, matching
@@ -508,12 +511,16 @@ def k_core(
     e = edges.select(
         F.col(src_col).alias("s"), F.col(dst_col).alias("d")
     ).filter(F.col("s") != F.col("d"))
-    cur = (
+
+    def _cut(ed: DataFrame) -> tuple[DataFrame, int]:
+        rows = Observation()
+        cp = ed.observe(rows, F.count(F.lit(1)).alias("n")).localCheckpoint()
+        return cp, rows.get["n"]
+
+    cur, prev = _cut(
         e.select(
             F.least("s", "d").alias("a"), F.greatest("s", "d").alias("b")
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
+        ).distinct()
     )
 
     def _degrees(ed: DataFrame) -> DataFrame:
@@ -524,23 +531,20 @@ def k_core(
             .agg(F.count("*").alias("deg"))
         )
 
-    def _peel_once(ed: DataFrame) -> DataFrame:
+    def _peel_once(ed: DataFrame) -> tuple[DataFrame, int]:
         keep = _degrees(ed).filter(F.col("deg") >= k).select("id")
-        return (
+        return _cut(
             ed.join(keep.withColumnRenamed("id", "a"), "a", "left_semi")
             .join(keep.withColumnRenamed("id", "b"), "b", "left_semi")
             .select("a", "b")
-            .localCheckpoint(eager=False)
         )
 
     if iters is not None:
         for _ in range(iters):
-            cur = _peel_once(cur)
+            cur = _peel_once(cur)[0]
     else:
-        prev = cur.count()
         while True:
-            cur = _peel_once(cur)
-            n = cur.count()
+            cur, n = _peel_once(cur)
             if n == prev:
                 break
             prev = n
@@ -568,9 +572,9 @@ def bfs_distances(
     Per round (synchronous frontier relaxation, Bellman-Ford
     specialized to unit weights): candidates = frontier ⋈ edges (one
     key-partitioned shuffle), new distance table = union + per-node
-    MIN hash aggregate, lineage ``localCheckpoint``-cut per round
-    (the pagerank discipline — iteration t must not re-execute
-    iteration t−1's plan). Only the FRONTIER (nodes first reached
+    MIN hash aggregate, lineage cut per round by an eager
+    ``localCheckpoint`` (the pagerank discipline — iteration t must not
+    re-execute iteration t−1's plan). Only the FRONTIER (nodes first reached
     last round) joins the edge table, so round cost tracks the
     expanding wave, not the visited set; a fixed ``iters`` makes the
     run replayable by an unrolled SQL twin (the k_core contract —
@@ -604,12 +608,12 @@ def bfs_distances(
                 )
             ).alias("__e")
         ).select(F.col("__e.s").alias("s"), F.col("__e.d").alias("d"))
-    e = e.distinct().localCheckpoint(eager=False)
+    e = e.distinct().localCheckpoint()
     dist = (
         seeds.select(F.col(seed_col).alias("id"))
         .distinct()
         .select("id", F.lit(0).cast("int").alias("dist"))
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     frontier = dist
     for r in range(1, iters + 1):
@@ -625,11 +629,10 @@ def bfs_distances(
             dist.unionByName(cand)
             .groupBy("id")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
+            .localCheckpoint()
         )
-        # Nodes first reached THIS round: they alone expand next.
-        frontier = merged.filter(F.col("dist") == r).localCheckpoint(
-            eager=False
-        )
+        # Nodes first reached THIS round: they alone expand next. A
+        # filter over the checkpoint, so it needs no barrier of its own.
+        frontier = merged.filter(F.col("dist") == r)
         dist = merged
     return dist

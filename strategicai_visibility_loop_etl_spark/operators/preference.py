@@ -12,8 +12,9 @@ Shape at 100 TB: duel volume is the big-data side — one hash
 aggregate collapses duels to the per-pair count table (pairs <<
 duels); each MM round is two strength join-backs + one denominator
 hash aggregate over the PAIR table + a 1-row broadcast normalizer.
-Strengths stay distributed (item count can be large); per-round
-``localCheckpoint`` cuts the iteration lineage.
+Strengths stay distributed (item count can be large); a per-round
+eager ``localCheckpoint`` cuts the iteration lineage, so the rounds
+run as jobs inside the call.
 
 No analog in the reference (a pandas visibility ETL has no ranking
 estimation).
@@ -21,7 +22,7 @@ estimation).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.numeric import round_c
@@ -77,13 +78,15 @@ def bradley_terry(
         )
         .groupBy("i", "j")
         .agg(F.sum("n").alias("n"))
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     wins = (
         dir_counts.groupBy("w")
         .agg(F.sum("n").alias("wins"))
         .select(F.col("w").alias("item"), "wins")
     )
+    # the item count (the normalization gauge) rides the checkpoint job
+    n_obs = Observation()
     items = (
         edges.select(F.col("i").alias("item"))
         .distinct()
@@ -91,13 +94,14 @@ def bradley_terry(
         .select(
             "item", F.coalesce("wins", F.lit(0).cast("long")).alias("wins")
         )
-        .localCheckpoint(eager=False)
+        .observe(n_obs, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
     )
     games = edges.groupBy("i").agg(F.sum("n").alias("games")).select(
         F.col("i").alias("item"), "games"
     )
 
-    n_items = items.count()  # scalar, once — the normalization gauge
+    n_items = n_obs.get["n"]
     if 0 < n_items <= broadcast_items_max:
         return _bt_rounds_model_sized(edges, items, games, n_items, iters)
     p = items.select("item", F.lit(1.0).alias("p"))
@@ -145,7 +149,7 @@ def bradley_terry(
                     12,
                 ).alias("p"),
             )
-            .localCheckpoint(eager=False)
+            .localCheckpoint()
         )
     return (
         items.join(games, "item")

@@ -551,7 +551,7 @@ def removal_effect(
     Scale shape: the corpus-sized work is the per-sequence window +
     one transition hash aggregate (the qx80 shape). Everything after
     runs on the transition table (states², model-sized by
-    construction) × (channels + 1) scenarios; per-round
+    construction) × (channels + 1) scenarios; a per-round eager
     ``localCheckpoint`` cuts the iteration lineage.
 
     Output per channel: (channel, p_full, p_removed, removal_effect,
@@ -634,7 +634,7 @@ def removal_effect(
         round_c(
             F.col("n").cast("double") / F.col("__tot").cast("double"), 12
         ).alias("p"),
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint()
 
     channels = (
         probs.select(F.col("from").alias("ch"))
@@ -645,7 +645,7 @@ def removal_effect(
         literal_frame(
             probs.sparkSession, [("__full__",)], "scen string"
         )
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint()
     scen_trans = (
         probs.crossJoin(F.broadcast(scens))
         .filter((F.col("scen") == "__full__") | (F.col("from") != F.col("scen")))
@@ -667,7 +667,7 @@ def removal_effect(
             .cast("double")
             .alias("p")
         )
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
 
     # Value iteration: per round, one join of the transitions against
@@ -682,11 +682,11 @@ def removal_effect(
         scens.select(
             "scen", F.lit("DROP").alias("state"), F.lit(0.0).alias("r")
         )
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint()
     nonabs0 = scen_trans.select(
         "scen", F.col("from").alias("state")
     ).distinct().select("scen", "state", F.lit(0.0).alias("r"))
-    r = nonabs0.unionAll(absorbing).localCheckpoint(eager=False)
+    r = nonabs0.unionAll(absorbing).localCheckpoint()
     for _ in range(horizon):
         stepped = (
             scen_trans.join(
@@ -704,7 +704,7 @@ def removal_effect(
                 .alias("r")
             )
         )
-        r = stepped.unionAll(absorbing).localCheckpoint(eager=False)
+        r = stepped.unionAll(absorbing).localCheckpoint()
 
     p_conv = r.filter(F.col("state") == "START").select(
         "scen", F.col("r").alias("p_conv")
@@ -726,7 +726,7 @@ def removal_effect(
                 ),
             ).alias("re"),
         )
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     tot_re = effects.agg(
         F.sum(F.col("re").cast("decimal(38,12)")).cast("double").alias("__s")

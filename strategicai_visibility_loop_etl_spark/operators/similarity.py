@@ -29,7 +29,7 @@ import random
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -240,16 +240,17 @@ def ivf_topk(
                 assigned, f"{stage_path}/lists", ["cluster"],
                 dynamic_overwrite=False, distribute=True,
             )
-            # computed ONCE (lineage cut): the pruning collect and the
+            # computed ONCE (lineage cut): the pruning set and the
             # search join share the same probe table instead of
-            # re-running the queries×centroids assignment per consumer
-            probes = _probe_lists(
-                queries, cent_df, n_probe, query_id, query_vec
-            ).localCheckpoint(eager=False)
-            probed = sorted(
-                r["cluster"]
-                for r in probes.select("cluster").distinct().collect()
+            # re-running the queries×centroids assignment per consumer;
+            # the probed-cluster set rides the checkpoint job
+            probed_obs = Observation()
+            probes = (
+                _probe_lists(queries, cent_df, n_probe, query_id, query_vec)
+                .observe(probed_obs, F.collect_set("cluster").alias("c"))
+                .localCheckpoint()
             )
+            probed = sorted(probed_obs.get["c"])
             # surface write errors before the read-back
             cents_write.result()
             lists_write.result()
@@ -1118,7 +1119,7 @@ def ivfpq_topk(
             F.zip_with(F.col(corpus_vec), F.col("centroid"), lambda a, b: a - b).alias(
                 "rvec"
             ),
-        ).localCheckpoint(eager=False)
+        ).localCheckpoint()
 
         books = _train_pq_codebooks(resid, m, ksub, iters, corpus_id, "rvec", dim)
         book_df = _codebook_df(spark, books, "code")
@@ -1176,13 +1177,14 @@ def ivfpq_topk(
                     dynamic_overwrite=False, distribute=True,
                 )
             )
-            # lineage cut so the pruning collect and the downstream LUT
-            # build share one probe computation
-            probes = probes.localCheckpoint(eager=False)
-            probed = sorted(
-                r["cluster"]
-                for r in probes.select("cluster").distinct().collect()
-            )
+            # lineage cut so the pruning set and the downstream LUT
+            # build share one probe computation; the probed-cluster set
+            # rides the checkpoint job
+            probed_obs = Observation()
+            probes = probes.observe(
+                probed_obs, F.collect_set("cluster").alias("c")
+            ).localCheckpoint()
+            probed = sorted(probed_obs.get["c"])
             # surface write errors before the pruned read-back
             for fut in stage_writes:
                 fut.result()
@@ -1643,7 +1645,7 @@ def knn_label_audit(
     # majority join); without a lineage cut each one re-executes the
     # whole k-NN search — for the IVF leg that is re-training k-means
     # and re-probing per consumer. |audit|·k rows: model-sized.
-    nn = nn.localCheckpoint(eager=False)
+    nn = nn.localCheckpoint()
     votes = (
         nn.join(
             labeled.select(

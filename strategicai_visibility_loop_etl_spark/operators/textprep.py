@@ -1922,7 +1922,7 @@ def greedy_coverage_select(
         toks = (
             exploded_shingles(df, text_col, id_col, gram_n)
             .select("id", F.col("g").alias("t"))
-            .localCheckpoint(eager=False)
+            .localCheckpoint()
         )
     else:
         toks = (
@@ -1932,9 +1932,9 @@ def greedy_coverage_select(
                 F.explode(tokens(F.col(text_col))).alias("t"),
             )
             .distinct()
-            .localCheckpoint(eager=False)
+            .localCheckpoint()
         )
-    covered = toks.select("t").limit(0).localCheckpoint(eager=False)
+    covered = toks.select("t").limit(0).localCheckpoint()
     chosen: list[tuple[int, object, int]] = []
     chosen_ids: list = []
     for rnd in range(1, k + 1):
@@ -1959,7 +1959,7 @@ def greedy_coverage_select(
                 toks.filter(F.col("id") == F.lit(win_id)).select("t")
             )
             .distinct()
-            .localCheckpoint(eager=False)
+            .localCheckpoint()
         )
     id_type = dict(df.dtypes)[id_col]
     from ..functions.localframe import one_partition_frame  # noqa: PLC0415

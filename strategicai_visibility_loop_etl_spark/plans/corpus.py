@@ -242,7 +242,7 @@ def run_corpus_pipeline(
         # star edges, the clean rows) re-runs the regex chain, 4 times
         # per warm run on the 250-doc perfbench corpus.
         # localCheckpoint, NOT persist: see operators/clusters.py.
-        kept = kept.localCheckpoint(eager=True)
+        kept = kept.localCheckpoint()
         reps, stars = collapse_exact(
             kept.select(id_col, text_col), text_col=text_col, id_col=id_col,
             min_tokens=nd["k"],

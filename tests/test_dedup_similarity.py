@@ -1144,79 +1144,6 @@ def test_random_projection_jl_distance_preservation(spark):
     assert a == b
 
 
-@pytest.mark.sweep
-def test_compact_count_index_crash_recovery(spark, tmp_path):
-    """An index swap that dies between its two renames must not strand
-    the index: recover_count_index (run by every incremental reader)
-    promotes the fully-written replacement dir, or restores the old
-    dir when no complete replacement exists, and sweeps stale
-    leftovers when live is intact."""
-    import os
-    import shutil
-
-    from strategicai_visibility_loop_etl_spark.operators.dedup import (
-        boilerplate_excision_incremental,
-        line_df_index_write,
-        recover_count_index,
-    )
-
-    promo = "subscribe to our newsletter"
-    schema = "doc_id long, text string"
-    idx = str(tmp_path / "ridx")
-    for i in range(3):
-        line_df_index_write(
-            spark.createDataFrame([(i, f"{promo}\nbody {i}")], schema), idx
-        )
-    live = os.path.join(idx, "lines")
-    probe = spark.createDataFrame([(99, f"{promo}\nprobe body")], schema)
-    want = boilerplate_excision_incremental(probe, idx, min_df=2).first()
-
-    # Crash scenario 1: between rename(live, trash) and
-    # rename(tmp, live) — live missing, complete replacement present.
-    shutil.copytree(live, os.path.join(idx, "_lines_compact_deadbeef"))
-    os.rename(live, os.path.join(idx, "_lines_old_deadbeef"))
-    # the reader itself recovers (no explicit recover call needed);
-    # the stale trash dir survives until a compactor sweep — readers
-    # never delete siblings
-    got = boilerplate_excision_incremental(probe, idx, min_df=2).first()
-    assert got["clean_text"] == want["clean_text"]
-    assert os.path.exists(live)
-    assert os.path.exists(os.path.join(idx, "_lines_old_deadbeef"))
-    recover_count_index(idx, "lines", sweep=True)
-    assert not os.path.exists(os.path.join(idx, "_lines_old_deadbeef"))
-
-    # Crash scenario 2: tmp was written WITHOUT _SUCCESS (partial
-    # write) and live was already renamed away — restore the old dir.
-    spark.catalog.refreshByPath(live)
-    partial = os.path.join(idx, "_lines_compact_0badf00d")
-    shutil.copytree(live, partial)
-    os.remove(os.path.join(partial, "_SUCCESS"))
-    os.rename(live, os.path.join(idx, "_lines_old_0badf00d"))
-    recover_count_index(idx, "lines")
-    assert os.path.exists(live)
-    # the incomplete tmp survives the (non-destructive) reader pass
-    # and is swept by the next compactor entry
-    assert os.path.exists(partial)
-    recover_count_index(idx, "lines", sweep=True)
-    assert not os.path.exists(partial)
-    spark.catalog.refreshByPath(live)
-    got2 = boilerplate_excision_incremental(probe, idx, min_df=2).first()
-    assert got2["clean_text"] == want["clean_text"]
-
-    # Crash scenario 3: live intact, stale leftovers — swept, and the
-    # next append still reads correctly.
-    shutil.copytree(live, os.path.join(idx, "_lines_compact_aa11aa11"))
-    shutil.copytree(live, os.path.join(idx, "_lines_old_bb22bb22"))
-    line_df_index_write(
-        spark.createDataFrame([(7, f"{promo}\nbody 7")], schema), idx
-    )
-    recover_count_index(idx, "lines", sweep=True)
-    leftovers = [d for d in os.listdir(idx) if d.startswith("_lines_")]
-    assert leftovers == []
-    got3 = boilerplate_excision_incremental(probe, idx, min_df=2).first()
-    assert got3["clean_text"] == want["clean_text"]
-
-
 def test_ivfpq_codes_stage_partitioned_and_pruned(spark, sf_dir, tmp_path):
     """Staged IVF-PQ codes lay out Hive-partitioned by cluster and the
     query re-reads ONLY the probed inverted lists: the probe IN-filter
@@ -1555,40 +1482,6 @@ def test_exactsubstr_refresh_mixed_history_raises(spark, tmp_path):
             spark.createDataFrame([(1, "changed content")], schema),
             idx, k=8, refresh=True,
         )
-
-
-def test_recover_count_index_reader_is_nondestructive(spark, tmp_path):
-    """A READER's recovery pass must never delete a sibling dir while
-    live exists — a live-present + compact-dir state is
-    indistinguishable from an in-flight compaction; only the
-    compactor (sweep=True) removes stale leftovers."""
-    import os
-    import shutil
-
-    from strategicai_visibility_loop_etl_spark.operators.dedup import (
-        boilerplate_excision_incremental,
-        line_df_index_write,
-        recover_count_index,
-    )
-
-    promo = "subscribe to our newsletter"
-    schema = "doc_id long, text string"
-    idx = str(tmp_path / "nd_idx")
-    line_df_index_write(
-        spark.createDataFrame([(1, f"{promo}\nbody")], schema), idx
-    )
-    live = os.path.join(idx, "lines")
-    inflight = os.path.join(idx, "_lines_compact_inflight1")
-    shutil.copytree(live, inflight)
-    # reader-path recovery (sweep=False default): in-flight tmp intact
-    recover_count_index(idx, "lines")
-    assert os.path.isdir(inflight)
-    probe = spark.createDataFrame([(9, f"{promo}\nprobe")], schema)
-    boilerplate_excision_incremental(probe, idx, min_df=2).collect()
-    assert os.path.isdir(inflight)  # reading didn't destroy it either
-    # compactor-path recovery sweeps it
-    recover_count_index(idx, "lines", sweep=True)
-    assert not os.path.exists(inflight)
 
 
 def test_simhash_pairs_null_fingerprints_quarantined(spark):

@@ -5,8 +5,11 @@ from __future__ import annotations
 
 from decimal import Decimal
 
+import pytest
 from pyspark.sql import functions as F
 
+from strategicai_visibility_loop_etl_spark.operators import graph
+from strategicai_visibility_loop_etl_spark.operators.clusters import connected_components
 from strategicai_visibility_loop_etl_spark.operators.graph import pagerank
 
 
@@ -64,6 +67,64 @@ def test_pagerank_checkpoints_eagerly(spark):
     )
     ranks = pagerank(nodes, edges, iters=3)
     assert ranks._jdf.queryExecution().logical().rdd().isCheckpointed()
+
+
+_ITERATIVE = {
+    "label_propagation": lambda n, e: graph.label_propagation(n, e, iters=3),
+    "hits": lambda n, e: graph.hits(n, e, iters=3),
+    "k_core": lambda n, e: graph.k_core(e, k=1),
+    "bfs_distances": lambda n, e: graph.bfs_distances(e, n.limit(1), iters=3),
+    "connected_components": lambda n, e: connected_components(
+        e.select(F.col("src").alias("id_a"), F.col("dst").alias("id_b"))
+    ),
+}
+
+
+@pytest.mark.parametrize("op", list(_ITERATIVE))
+def test_iterative_operators_read_only_checkpoints(spark, op):
+    """The pagerank pin, for every other iterative graph operator: the
+    frame each returns reads nothing but checkpoints that already
+    materialized inside the call (hits joins its hub and authority
+    checkpoints, k_core aggregates its last edge checkpoint)."""
+    nodes = spark.createDataFrame([(i,) for i in range(4)], "id long")
+    edges = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 0), (2, 3)], "src long, dst long"
+    )
+    plan = _ITERATIVE[op](nodes, edges)._jdf.queryExecution().logical()
+    found = plan.collectLeaves()
+    leaves = [found.apply(i) for i in range(found.size())]
+    assert leaves
+    assert all(
+        leaf.getClass().getSimpleName() == "LogicalRDD" and leaf.rdd().isCheckpointed()
+        for leaf in leaves
+    )
+
+
+def test_connected_components_job_count(spark):
+    """Each propagation round is one checkpoint job that also observes
+    the round's changed count. 40 chains of 8 nodes converge after 7
+    rounds (the init aggregate is hop 1; the last round changes
+    nothing). The count is exact: a second job per round for the
+    convergence count, or a lazy round, moves it."""
+    edges = spark.createDataFrame(
+        [(c * 8 + i, c * 8 + i + 1) for c in range(40) for i in range(7)],
+        "id_a long, id_b long",
+    )
+    sc = spark.sparkContext
+    jvm_sc = sc._jsc.sc()
+    jvm_sc.listenerBus().waitUntilEmpty()
+    sc.setJobGroup("cc_job_count", "connected_components")
+    try:
+        comp = connected_components(edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jvm_sc.listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup("cc_job_count"))
+    assert {r["id"]: r["component"] for r in comp.collect()} == {
+        c * 8 + i: c * 8 for c in range(40) for i in range(8)
+    }
+    assert jobs == 38, jobs
 
 
 def test_triangle_count_known_graph(spark):

@@ -1,8 +1,10 @@
 """The session factory is the only place a SparkSession is configured,
-and its defaults are sized from the machine it runs on."""
+and its defaults are sized from the machine it runs on. Every
+``localCheckpoint`` uses Spark's default, eager form."""
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 
@@ -17,22 +19,43 @@ BUILDER_ALLOWED = {
 _BUILDER = re.compile(r"SparkSession\s*\.\s*[Bb]uilder\b")
 
 
-def test_only_the_factory_builds_a_session():
-    offenders = []
+def _py_sources():
+    """(repo-relative path, source) for every .py file in the repo."""
     for dirpath, dirnames, filenames in os.walk(ROOT):
         dirnames[:] = [d for d in dirnames if not d.startswith(".") and d != "__pycache__"]
         for name in filenames:
-            if not name.endswith(".py"):
-                continue
-            rel = os.path.relpath(os.path.join(dirpath, name), ROOT)
-            if rel in BUILDER_ALLOWED:
-                continue
-            with open(os.path.join(ROOT, rel), encoding="utf-8") as fh:
-                if _BUILDER.search(fh.read()):
-                    offenders.append(rel)
+            if name.endswith(".py"):
+                path = os.path.join(dirpath, name)
+                with open(path, encoding="utf-8") as fh:
+                    yield os.path.relpath(path, ROOT), fh.read()
+
+
+def test_only_the_factory_builds_a_session():
+    offenders = [
+        rel
+        for rel, src in _py_sources()
+        if rel not in BUILDER_ALLOWED and _BUILDER.search(src)
+    ]
     assert offenders == [], (
         "build the session with strategicai_visibility_loop_etl_spark.session.get_spark"
     )
+
+
+def test_every_local_checkpoint_is_eager():
+    """One checkpoint policy: ``df.localCheckpoint()`` with no argument.
+    A lazy checkpoint still runs the shuffle and broadcast stages beneath
+    it when the frame is built, and a lazily checkpointed frame shared by
+    a shuffle and a broadcast can deadlock the DAG scheduler."""
+    offenders = [
+        f"{rel}:{node.lineno}"
+        for rel, src in _py_sources()
+        for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "localCheckpoint"
+        and (node.args or node.keywords)
+    ]
+    assert offenders == [], "call localCheckpoint() with no argument"
 
 
 def test_defaults_come_from_the_box(monkeypatch):

@@ -1,39 +1,12 @@
-"""Production-sum mode: SPARK_GRAFT_EXACT_SUMS=0 swaps decimal-exact
-sums for plain double sums. The oracle gate pins the exact default;
-the fast mode must agree to double precision (it differs only in
-summation order / intermediate representation)."""
+"""Sum mode: every registry sum is the decimal-exact form the oracle
+gate pins (order-independent, hash-matching DuckDB)."""
 
 from __future__ import annotations
-
-import math
 
 import __spark_entry__ as entrymod
 
 
-def _q01_rows(spark, sf_dir):
+def test_default_is_exact_decimal(spark, sf_dir):
     df = entrymod.q01_pricing_summary(spark, sf_dir)
-    return {(r["l_returnflag"], r["l_linestatus"]): r.asDict() for r in df.collect()}, df
-
-
-def test_default_is_exact_decimal(spark, sf_dir, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_EXACT_SUMS", raising=False)
-    _, df = _q01_rows(spark, sf_dir)
     analyzed = df._jdf.queryExecution().analyzed().toString()
     assert "decimal(18,6)" in analyzed
-
-
-def test_fast_mode_close_to_exact(spark, sf_dir, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_EXACT_SUMS", raising=False)
-    exact, _ = _q01_rows(spark, sf_dir)
-    monkeypatch.setenv("SPARK_GRAFT_EXACT_SUMS", "0")
-    fast, df = _q01_rows(spark, sf_dir)
-    assert "decimal(18,6)" not in df._jdf.queryExecution().analyzed().toString()
-    assert set(exact) == set(fast)
-    for key, erow in exact.items():
-        frow = fast[key]
-        for col, ev in erow.items():
-            fv = frow[col]
-            if isinstance(ev, float):
-                assert math.isclose(ev, fv, rel_tol=1e-9), (key, col, ev, fv)
-            else:
-                assert ev == fv, (key, col)
