@@ -539,10 +539,7 @@ def q22_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     index loses nothing (max_bucket is sized above the corpus so the
     skew guard never prunes at test scale)."""
     docs = _t(spark, sf_dir, "documents", heavy=True)
-    return ngram_jaccard_pairs(
-        docs, k=3, threshold=0.5, max_bucket=10_000_000,
-        stage_path=f"{_SIG_STAGE}/ngram22",
-    )
+    return ngram_jaccard_pairs(docs, k=3, threshold=0.5, max_bucket=10_000_000)
 
 
 def q23_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -832,9 +829,7 @@ def _cc_comp_path(sf_dir: str) -> str:
     return f"{_SIG_STAGE}/cc42_{tag}"
 
 
-def _compute_components(
-    spark: SparkSession, sf_dir: str, stage_tag: str
-) -> DataFrame:
+def _compute_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from strategicai_visibility_loop_etl_spark.operators.clusters import (
         collapse_exact,
         connected_components,
@@ -842,8 +837,7 @@ def _compute_components(
 
     reps, stars = collapse_exact(_docs_with_dups(spark, sf_dir), min_tokens=3)
     pairs = ngram_jaccard_pairs(
-        reps, k=3, threshold=0.5, max_bucket=10_000_000,
-        stage_path=f"{_SIG_STAGE}/{stage_tag}",
+        reps, k=3, threshold=0.5, max_bucket=10_000_000
     ).select("id_a", "id_b")
     return connected_components(stars.unionByName(pairs))
 
@@ -866,7 +860,7 @@ def q42_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     formation runs once and downstream actions read its output. q42
     itself always recomputes (the staging write is components-sized,
     negligible), so its bench time stays the honest formation cost."""
-    comp = _compute_components(spark, sf_dir, "ngram42")
+    comp = _compute_components(spark, sf_dir)
     path = _cc_comp_path(sf_dir)
     comp.write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
@@ -2899,9 +2893,7 @@ def qx11_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         unigram_lm_scores,
     )
 
-    return unigram_lm_scores(
-        _t(spark, sf_dir, "documents"), stage_path=f"{_SIG_STAGE}/lm_x11"
-    ).orderBy("doc_id")
+    return unigram_lm_scores(_t(spark, sf_dir, "documents")).orderBy("doc_id")
 
 
 def qx12_cluster_reps(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2922,7 +2914,7 @@ def qx12_cluster_reps(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and stage it otherwise, so qx12 stands alone too.
     path = _cc_comp_path(sf_dir)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        _compute_components(spark, sf_dir, "ngram_x12").write.mode(
+        _compute_components(spark, sf_dir).write.mode(
             "overwrite"
         ).parquet(path)
     comp = spark.read.parquet(path)
@@ -3008,9 +3000,7 @@ def qx15_exactsubstr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return exactsubstr_dedup(
-        docs, k=8, stage_path=f"{_SIG_STAGE}/exactsubstr"
-    ).orderBy("doc_id")
+    return exactsubstr_dedup(docs, k=8).orderBy("doc_id")
 
 
 # BPE rounds for qx16/qx17: enough to produce multi-char subwords at
@@ -3044,9 +3034,7 @@ def _bpe_merges_staged(spark: SparkSession, sf_dir: str) -> list[dict]:
             for r in sorted(rows, key=lambda r: r["merge_rank"])
         ]
     docs = _t(spark, sf_dir, "documents").select("text")
-    merges = bpe_train(
-        docs, n_merges=_QX16_MERGES, stage_path=f"{_SIG_STAGE}/bpe_words_{tag}"
-    )
+    merges = bpe_train(docs, n_merges=_QX16_MERGES)
     bpe_merges_df(spark, merges).write.mode("overwrite").parquet(path)
     return merges
 
@@ -3054,7 +3042,7 @@ def _bpe_merges_staged(spark: SparkSession, sf_dir: str) -> list[dict]:
 def qx16_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed BPE tokenizer training (capability row 105, Sennrich
     et al. 2016): learn the first 16 merges over the documents corpus.
-    Relational shape: ONE corpus shuffle (word counts, staged), then
+    Relational shape: ONE corpus shuffle (word counts, checkpointed), then
     per merge round one explode+hash-agg over the word table's adjacent
     symbol pairs and a 1-row argmax collect; merge application is a
     literal replace on separator-wrapped symbol strings (greedy
@@ -3067,9 +3055,7 @@ def qx16_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents").select("text")
-    merges = bpe_train(
-        docs, n_merges=_QX16_MERGES, stage_path=f"{_SIG_STAGE}/bpe_words"
-    )
+    merges = bpe_train(docs, n_merges=_QX16_MERGES)
     # Producer leg of the staged-model convention: overwrite the stage
     # so qx17/qx84 consume this training instead of re-running it
     # (_bpe_merges_staged; the q42 -> qx12/qx36 amortization shape).
@@ -3128,7 +3114,6 @@ def qx40_bpe_train_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_merges=_QX40_MERGES,
         batch_size=_QX40_BATCH,
         candidate_pool=_QX40_POOL,
-        stage_path=f"{_SIG_STAGE}/bpe_words40",
     )
     return bpe_merges_df(spark, merges).orderBy("merge_rank")
 
@@ -3195,10 +3180,7 @@ def qx19_hashed_scorer(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents", heavy=True).select(
         "doc_id", "text", (F.col("lang") == "en").alias("__is_en")
     )
-    w = train_hashed_scorer(
-        docs, "__is_en", n_buckets=_QX19_BUCKETS,
-        stage_path=f"{_SIG_STAGE}/scorer19",
-    )
+    w = train_hashed_scorer(docs, "__is_en", n_buckets=_QX19_BUCKETS)
     return hashed_scorer_scores(
         docs, w, n_buckets=_QX19_BUCKETS
     ).orderBy("doc_id")
@@ -3223,7 +3205,7 @@ def qx20_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     target = docs.filter(F.col("source") == "src0").select("doc_id", "text")
     return dsir_select(
         docs.select("doc_id", "text"), target, k=_QX20_K,
-        n_buckets=_QX19_BUCKETS, stage_path=f"{_SIG_STAGE}/dsir20",
+        n_buckets=_QX19_BUCKETS,
     ).orderBy("sel_rank")
 
 
@@ -3238,9 +3220,7 @@ def qx21_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
         bigram_lm_scores,
     )
 
-    return bigram_lm_scores(
-        _t(spark, sf_dir, "documents"), stage_path=f"{_SIG_STAGE}/bgl21"
-    ).orderBy("doc_id")
+    return bigram_lm_scores(_t(spark, sf_dir, "documents")).orderBy("doc_id")
 
 
 def qx39_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3322,7 +3302,7 @@ def qx36_leakage_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = _cc_comp_path(sf_dir)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        _compute_components(spark, sf_dir, "ngram_x36").write.mode(
+        _compute_components(spark, sf_dir).write.mode(
             "overwrite"
         ).parquet(path)
     comp = spark.read.parquet(path)
@@ -3554,7 +3534,7 @@ def qx28_event_trends(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def qx27_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Okapi BM25 top-k retrieval (capability row 117): every 50th
-    document's first 3 normalized tokens form a query; the staged
+    document's first 3 normalized tokens form a query; the checkpointed
     (doc, term, tf, dl) posting table feeds corpus stats and the
     broadcast-query scoring join. Per-(query, doc, term) contributions
     round to DECIMAL before the pair sum (order-independent); DuckDB
@@ -3571,9 +3551,7 @@ def qx27_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query"
         ),
     )
-    return bm25_topk(
-        docs, queries, k=5, stage_path=f"{_SIG_STAGE}/bm27"
-    ).orderBy("query_id", "rank")
+    return bm25_topk(docs, queries, k=5).orderBy("query_id", "rank")
 
 
 def qx26_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3624,8 +3602,7 @@ def qx25_boilerplate_excision(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pages = synth_pages(_t(spark, sf_dir, "documents"))
     return boilerplate_line_excision(
-        pages, min_df=2, text_col="page",
-        stage_path=f"{_SIG_STAGE}/boiler25",
+        pages, min_df=2, text_col="page"
     ).orderBy("doc_id")
 
 
@@ -3656,7 +3633,6 @@ def qx41_boilerplate_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         idx,
         min_df=2,
         text_col="page",
-        stage_path=f"{_SIG_STAGE}/bli41",
     ).orderBy("doc_id")
 
 
@@ -3684,7 +3660,6 @@ def qx42_exactsubstr_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.filter(F.col("doc_id") % 10 == 0),
         idx,
         k=8,
-        stage_path=f"{_SIG_STAGE}/esi42",
     ).orderBy("doc_id")
 
 
@@ -4473,14 +4448,12 @@ def qx23_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k PMI bigram collocations (capability row 112, Church &
     Hanks 1990) on qx21's sentinel-pair foundation: PMI as a SUM of
     logs (overflow-proof, SQL-replayable term-for-term), one
-    corpus-scale aggregation staged, total ordering under ties."""
+    corpus-scale aggregation checkpointed, total ordering under ties."""
     from strategicai_visibility_loop_etl_spark.operators.textprep import (
         pmi_collocations,
     )
 
-    return pmi_collocations(
-        _t(spark, sf_dir, "documents"), stage_path=f"{_SIG_STAGE}/pmi23"
-    )
+    return pmi_collocations(_t(spark, sf_dir, "documents"))
 
 
 def qx22_c4_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5337,7 +5310,6 @@ def qx110_exactsubstr_minlen(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exactsubstr_dedup(
         docs,
         k=8,
-        stage_path=f"{_SIG_STAGE}/exactsubstr_ml",
         min_match_tokens=_QX110_MIN_MATCH,
     ).orderBy("doc_id")
 
@@ -5368,7 +5340,6 @@ def qx111_exactsubstr_incr_minlen(
         docs.filter(F.col("doc_id") % 10 == 0),
         idx,
         k=8,
-        stage_path=f"{_SIG_STAGE}/esi111",
         min_match_tokens=_QX110_MIN_MATCH,
     ).orderBy("doc_id")
 

@@ -169,8 +169,7 @@ def corpus_main(argv: list[str], spark=None) -> int:
         }
     if args.ppl_min or args.ppl_max:
         cfg["lm_filter"] = {"enable": True, "min_ppl": args.ppl_min,
-                            "max_ppl": args.ppl_max or None,
-                            "stage_path": os.path.join(args.out, "_stage", "lm")}
+                            "max_ppl": args.ppl_max or None}
 
     owns_spark = spark is None
     if owns_spark:

@@ -116,7 +116,6 @@ def bpe_train(
     n_merges: int = 20,
     text_col: str = "text",
     min_count: int = 1,
-    stage_path: str | None = None,
     checkpoint_every: int = 6,
     batch_size: int = 1,
     candidate_pool: int | None = None,
@@ -126,10 +125,10 @@ def bpe_train(
     merge table as a model-sized list of dicts
     (merge_rank/lhs/rhs/merged/pair_count).
 
-    Scale shape: the corpus shuffles ONCE (word counts, staged when
-    ``stage_path`` is given so rounds never re-scan the corpus); every
-    round shuffles only (symbol-pair, partial count) rows from the
-    word table and collects a model-sized candidate slice. Lineage over
+    Scale shape: the corpus shuffles ONCE (word counts, checkpointed so
+    rounds never re-scan the corpus); every round shuffles only
+    (symbol-pair, partial count) rows from the word table and collects
+    a model-sized candidate slice. Lineage over
     the evolving symbol column is cut every ``checkpoint_every``
     rounds.
 
@@ -180,12 +179,7 @@ def bpe_train(
     )
     if min_count > 1:
         words = words.filter(F.col("cnt") >= min_count)
-    state = words.select("cnt", F.split("w", "").alias("syms"))
-    if stage_path is not None:
-        state.write.mode("overwrite").parquet(stage_path)
-        state = df.sparkSession.read.parquet(stage_path)
-    else:
-        state = state.localCheckpoint()
+    state = words.select("cnt", F.split("w", "").alias("syms")).localCheckpoint()
 
     merges: list[dict] = []
     rounds = 0

@@ -68,7 +68,6 @@ def ngram_jaccard_pairs(
     k: int = 3,
     threshold: float = 0.8,
     max_bucket: int | str = 1000,
-    stage_path: str | None = None,
 ) -> DataFrame:
     """Near-dup pairs with word-k-gram Jaccard ≥ threshold.
 
@@ -85,10 +84,10 @@ def ngram_jaccard_pairs(
     sizes, both self-join sides, both hot-side joins, doc sizes), and
     because the hot set travels by broadcast there is no exchange for
     Spark to reuse — without a barrier the scan+NGram+explode subtree
-    re-executes per consumer. ``stage_path`` materializes it once
-    (measured 6.0 s → 3.6 s at sf0.1 steady-state).
+    re-executes per consumer. An eager ``localCheckpoint`` materializes
+    it once.
     """
-    ex = _stage_roundtrip(exploded_shingles(df, text_col, id_col, k), stage_path)
+    ex = exploded_shingles(df, text_col, id_col, k).localCheckpoint()
     sizes = ex.groupBy("id").agg(F.count("*").alias("n_sh"))
 
     posting_sizes = ex.groupBy("g").agg(F.count("*").alias("n"))
@@ -316,18 +315,19 @@ def resolve_max_bucket(
 
 
 def _stage_roundtrip(df: DataFrame, stage_path: str | None) -> DataFrame:
-    """Optionally write ``df`` to parquet and read it back.
+    """Materialize ``df`` once: an eager ``localCheckpoint``, or a
+    parquet write and read-back when ``stage_path`` is given.
 
-    Two jobs in one: (a) a materialization barrier — the signature table
-    is computed ONCE instead of re-executing the explode+agg subtree for
-    every plan branch that consumes it (bucket sizing AND both sides of
-    the self-join); (b) an engine-independent audit surface — the staged
-    parquet is exactly what the DuckDB oracle replays the LSH logic
-    over, so the banding/Hamming verification gets checked outside
-    Spark (the hashes themselves stay Spark-side by design).
+    The barrier computes the signature table ONCE instead of
+    re-executing the explode+agg subtree for every plan branch that
+    consumes it (bucket sizing AND both sides of the self-join). The
+    path's only purpose is the oracle audit table: the staged parquet
+    is exactly what the DuckDB oracle replays the LSH logic over, so
+    the banding/Hamming verification gets checked outside Spark (the
+    hashes themselves stay Spark-side by design).
     """
     if stage_path is None:
-        return df
+        return df.localCheckpoint()
     df.write.mode("overwrite").parquet(stage_path)
     return df.sparkSession.read.parquet(stage_path)
 
@@ -547,7 +547,6 @@ def exactsubstr_dedup(
     k: int = 8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    stage_path: str | None = None,
     min_match_tokens: int | None = None,
 ) -> DataFrame:
     """Cross-document exact-substring removal (the ExactSubstr pass of
@@ -570,16 +569,15 @@ def exactsubstr_dedup(
     so the only data-sized shuffles carry (gram-hash, id, pos) — never
     gram strings or document text; the duplicated-gram set comes from
     one hash aggregate over the hashes, and hit positions fold back to
-    one bounded-by-document-length sorted array per doc. Pass
-    ``stage_path`` at scale: it materializes the positional-hash table
-    once where the unstaged plan re-executes the tokenize+NGram+explode
-    subtree for both of its consumers (the dup aggregate and the hit
-    join). Span merging
-    and excision are pure array expressions on that array — no second
-    pass over the corpus, no per-token shuffle, no collect. Per-doc
-    expression cost is O(tokens × spans); spans ≤ tokens/(k+1), so the
-    worst case is O(tokens²/k) for pathological alternating-dup docs —
-    fine at real document lengths.
+    one bounded-by-document-length sorted array per doc. An eager
+    ``localCheckpoint`` materializes the positional-hash table once
+    where the lazy plan re-executes the tokenize+NGram+explode subtree
+    for both of its consumers (the dup aggregate and the hit join).
+    Span merging and excision are pure array expressions on that array
+    — no second pass over the corpus, no per-token shuffle, no collect.
+    Per-doc expression cost is O(tokens × spans); spans ≤ tokens/(k+1),
+    so the worst case is O(tokens²/k) for pathological alternating-dup
+    docs — fine at real document lengths.
 
     Exact semantics note: duplication counts gram OCCURRENCES, not
     distinct documents — a sentence pasted twice inside one document is
@@ -619,12 +617,12 @@ def exactsubstr_dedup(
     near-threshold repeats.
     """
     base, pos = _gram_tables(df, k, text_col, id_col)
-    # Both the dup-set aggregate and the hit join consume `pos`;
-    # unstaged, Catalyst expands it into TWO scan+NGram+explode
-    # subtrees (the corpus tokenizes and explodes twice). Staging
-    # materializes the positional hashes once — at 100 TB that halves
-    # the dominant map-side cost.
-    pos = _stage_roundtrip(pos, stage_path)
+    # Both the dup-set aggregate and the hit join consume `pos`; without
+    # the checkpoint Catalyst expands it into TWO scan+NGram+explode
+    # subtrees (the corpus tokenizes and explodes twice). The checkpoint materializes
+    # the positional hashes once — at 100 TB that halves the dominant
+    # map-side cost.
+    pos = pos.localCheckpoint()
     dup = (
         pos.groupBy("gh")
         .agg(F.count("*").alias("__c"))
@@ -783,7 +781,6 @@ def exactsubstr_incremental(
     text_col: str = "text",
     id_col: str = "doc_id",
     update_index: bool = False,
-    stage_path: str | None = None,
     refresh: bool = False,
     min_match_tokens: int | None = None,
 ) -> DataFrame:
@@ -862,7 +859,7 @@ def exactsubstr_incremental(
             ids_idx.select(F.col("id").alias(id_col)), id_col, "left_anti"
         )
     base, pos = _gram_tables(fresh, k, text_col, id_col)
-    pos = _stage_roundtrip(pos, stage_path)
+    pos = pos.localCheckpoint()
     batch_cnt = pos.groupBy("gh").agg(F.count("*").alias("__cnt_new"))
     archive_cnt = (
         gram_partials.join(batch_cnt.select("gh"), "gh", "left_semi")
@@ -923,7 +920,6 @@ def boilerplate_line_excision(
     min_df: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    stage_path: str | None = None,
 ) -> DataFrame:
     """Cross-document boilerplate line removal: any trimmed non-empty
     line whose corpus-wide DOCUMENT frequency is ≥ ``min_df`` is
@@ -942,14 +938,15 @@ def boilerplate_line_excision(
     never line text. Document frequency is one hash aggregate with a
     distinct-by-doc pre-collapse; hit positions fold back to one
     bounded-by-page-length array per doc; excision is a higher-order
-    filter over the page's own line array. ``stage_path`` materializes
-    the positional line-hash table once for its two consumers (the df
-    aggregate and the hit join) — one corpus pass total. Line identity
-    is the 64-bit xxhash of the trimmed line (collision odds the same
-    as ExactSubstr's gram hashing; the oracle replays from strings).
+    filter over the page's own line array. An eager ``localCheckpoint``
+    materializes the positional line-hash table once for its two
+    consumers (the df aggregate and the hit join) — one corpus pass
+    total. Line identity is the 64-bit xxhash of the trimmed line
+    (collision odds the same as ExactSubstr's gram hashing; the oracle
+    replays from strings).
     """
     base, pos = _line_tables(df, text_col, id_col)
-    pos = _stage_roundtrip(pos, stage_path)
+    pos = pos.localCheckpoint()
     boiler = (
         pos.select("id", "lh")
         .distinct()
@@ -1056,7 +1053,6 @@ def boilerplate_excision_incremental(
     text_col: str = "text",
     id_col: str = "doc_id",
     update_index: bool = False,
-    stage_path: str | None = None,
     refresh: bool = False,
 ) -> DataFrame:
     """Cross-document boilerplate excision for an INCOMING BATCH
@@ -1136,7 +1132,7 @@ def boilerplate_excision_incremental(
             ids_idx.select(F.col("id").alias(id_col)), id_col, "left_anti"
         )
     base, pos = _line_tables(fresh, text_col, id_col)
-    pos = _stage_roundtrip(pos, stage_path)
+    pos = pos.localCheckpoint()
     distinct_lh = pos.select("id", "lh").distinct()
     batch_cnt = distinct_lh.groupBy("lh").agg(
         F.count("*").alias("__cnt_new")
@@ -1429,7 +1425,6 @@ def token_cosine_pairs(
     threshold: float = 0.6,
     max_df: int | str = 1000,
     k: int = 1,
-    stage_path: str | None = None,
 ) -> DataFrame:
     """Near-dup pairs by TOKEN-VECTOR cosine ≥ threshold — the
     bag-of-words member of the dedup family (AllPairs-style inverted
@@ -1456,8 +1451,9 @@ def token_cosine_pairs(
     aggregate (hot set travels by broadcast), the inverted-index
     self-join grouped to (id_a, id_b) — per-term fan-out bounded by
     cap², the LSH economics — then two broadcast-able norm
-    join-backs. ``stage_path`` materializes the pruned postings once
-    (they feed the self-join twice and the norm aggregate).
+    join-backs. An eager ``localCheckpoint`` materializes the postings
+    once (they feed the hot-set census, the self-join twice and the
+    norm aggregate).
 
     ``k > 1`` scores cosine over the word-k-gram profile instead of
     unigrams (see :func:`token_posting_lists`) — the plagiarism-
@@ -1469,18 +1465,12 @@ def token_cosine_pairs(
     # broadcast, so there is no exchange for Spark to reuse — without
     # a barrier the tokenize+NGram+explode+count subtree re-executes
     # per consumer (the ngram_jaccard lesson; warm sf0.1 runs measured
-    # ~3x faster with the cut). stage_path materializes to parquet instead when a
-    # replayable table is wanted.
-    postings = token_posting_lists(df, text_col, id_col, k)
-    if stage_path is None:
-        postings = postings.localCheckpoint()
+    # ~3x faster with the cut).
+    postings = token_posting_lists(df, text_col, id_col, k).localCheckpoint()
     posting_sizes = postings.groupBy("tok").agg(F.count("*").alias("n"))
     cap = resolve_max_bucket(posting_sizes, max_df)
     hot = posting_sizes.filter(F.col("n") > cap)
-    pruned = _stage_roundtrip(
-        postings.join(F.broadcast(hot.select("tok")), "tok", "left_anti"),
-        stage_path,
-    )
+    pruned = postings.join(F.broadcast(hot.select("tok")), "tok", "left_anti")
 
     norms = pruned.groupBy("id").agg(
         F.sqrt(F.sum(F.col("tf") * F.col("tf")).cast("double")).alias("norm")

@@ -56,7 +56,6 @@ def bm25_topk(
     query_col: str = "query",
     query_id_col: str = "query_id",
     postings: DataFrame | None = None,
-    stage_path: str | None = None,
 ) -> DataFrame:
     """Top-``k`` documents per query under Okapi BM25.
 
@@ -67,16 +66,13 @@ def bm25_topk(
 
     Pass ``postings`` (from ``document_postings``, possibly read back
     from parquet) to reuse an existing index; otherwise one is built
-    and optionally staged at ``stage_path`` so corpus stats and the
-    scoring join all read one materialization.
+    and checkpointed so corpus stats and the scoring join all read one
+    materialization.
     """
     from ..functions.numeric import round_c  # noqa: PLC0415
 
     if postings is None:
-        postings = document_postings(docs, text_col, id_col)
-        if stage_path is not None:
-            postings.write.mode("overwrite").parquet(stage_path)
-            postings = docs.sparkSession.read.parquet(stage_path)
+        postings = document_postings(docs, text_col, id_col).localCheckpoint()
 
     # corpus stats fold from the postings: N, avgdl, df(term)
     nstats = (

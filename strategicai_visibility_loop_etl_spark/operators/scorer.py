@@ -131,7 +131,6 @@ def train_hashed_scorer(
     n_buckets: int = 1 << 18,
     char_n: int = 3,
     logw_decimals: int = 6,
-    stage_path: str | None = None,
 ) -> DataFrame:
     """Learn the (bucket, w) weight table from boolean/0-1 labels:
     naive-Bayes log-odds with add-one smoothing over ``n_buckets``
@@ -148,10 +147,7 @@ def train_hashed_scorer(
     agg = feats.groupBy("bucket").agg(
         F.sum("__y").alias("__pos"),
         (F.count("*") - F.sum("__y")).alias("__neg"),
-    )
-    if stage_path is not None:
-        agg.write.mode("overwrite").parquet(stage_path)
-        agg = df.sparkSession.read.parquet(stage_path)
+    ).localCheckpoint()
     tot = agg.agg(
         F.sum("__pos").alias("__tp"), F.sum("__neg").alias("__tn")
     )
@@ -247,7 +243,6 @@ def dsir_select(
     id_col: str = "doc_id",
     n_buckets: int = 1 << 18,
     char_n: int = 3,
-    stage_path: str | None = None,
 ) -> DataFrame:
     """Data Selection via Importance Resampling (Xie et al. 2023,
     "Data Selection for Language Models via Importance Resampling"):
@@ -261,7 +256,7 @@ def dsir_select(
     selection is reproducible across engines, runs and partitionings.
 
     Scale shape: weight training is two hash aggregates over the union
-    corpus (the bucket table stages when ``stage_path`` is given);
+    corpus (the bucket table is checkpointed once);
     scoring is qx19's explode + broadcast-weight join + per-doc
     DECIMAL sum; the top-k is a rank window over (key DESC, id) —
     TakeOrdered semantics, map tasks ship k rows each. Returns
@@ -275,7 +270,7 @@ def dsir_select(
     )
     w = train_hashed_scorer(
         src.unionByName(tgt), "__is_t", text_col="__t",
-        n_buckets=n_buckets, char_n=char_n, stage_path=stage_path,
+        n_buckets=n_buckets, char_n=char_n
     )
     scored = hashed_scorer_scores(
         df, w, text_col=text_col, id_col=id_col,

@@ -90,9 +90,8 @@ def score_expected_ctr(
     joins, pure codegen'd projection.
 
     Fallback expected CTR when no bucket matches = global median ctr
-    (reference :793-795) — computed as a scalar aggregate
-    (percentile_approx at scale; exact median is a full sort) and
-    broadcast via 1-row cross join.
+    (reference :793-795) — computed as a scalar aggregate and broadcast
+    via 1-row cross join.
     """
     scoring = cfg.get("scoring", {}) or {}
     thresholds = cfg.get("thresholds", {}) or {}
@@ -103,11 +102,8 @@ def score_expected_ctr(
 
     # Exact interpolated median for reference parity (pandas .median()
     # averages the two middle values). ``median`` is a real aggregate
-    # (no global sort), but buffers per-group values; at extreme scale
-    # flip approx_median=True for percentile_approx.
-    approx = bool(scoring.get("approx_median", False))
-    median_fn = "percentile_approx(ctr, 0.5, 10000)" if approx else "median(ctr)"
-    median_df = merged.select(F.expr(median_fn).alias("__ctr_median"))
+    # (no global sort).
+    median_df = merged.select(F.median("ctr").alias("__ctr_median"))
     with_median = merged.crossJoin(F.broadcast(median_df))
 
     fallback = (F.col("__ctr_median") / (100.0 if units.lower() == "percent" else 1.0)) * (

@@ -534,7 +534,6 @@ def unigram_lm_scores(
     text_col: str = "text",
     id_col: str = "doc_id",
     logp_decimals: int = 6,
-    stage_path: str | None = None,
 ) -> DataFrame:
     """CCNet-style language-model quality scoring with a unigram LM
     trained on the corpus itself: per document (id, n_tokens, nll,
@@ -572,15 +571,12 @@ def unigram_lm_scores(
         ).alias("token"),
     ).filter(F.length("token") >= 1)
     tf = toks.groupBy("id", "token").agg(F.count("*").alias("tf"))
-    lm = tf.groupBy("token").agg(F.sum("tf").alias("cnt"))
-    if stage_path is not None:
-        # Without materialization the lazy DAG recomputes ``tf`` for
-        # every downstream branch (LM, total, scoring) — three corpus
-        # scans. Staging the VOCABULARY-sized (token, cnt) table makes
-        # it the honest two passes of the CCNet recipe: one scan to
-        # train the LM, one to score against it.
-        lm.write.mode("overwrite").parquet(stage_path)
-        lm = df.sparkSession.read.parquet(stage_path)
+    # Without materialization the lazy DAG recomputes ``tf`` for every
+    # downstream branch (LM, total, scoring) — three corpus scans.
+    # Checkpointing the VOCABULARY-sized (token, cnt) table makes it the
+    # honest two passes of the CCNet recipe: one scan to train the LM,
+    # one to score against it.
+    lm = tf.groupBy("token").agg(F.sum("tf").alias("cnt")).localCheckpoint()
     total = lm.agg(F.sum("cnt").alias("__total"))
     # round_c here too (not just on nll/ppl): a single vocabulary
     # token whose ln(cnt/total)·10^d product straddles .5 would shift
@@ -874,7 +870,6 @@ def pmi_collocations(
     min_count: int = 5,
     k: int = 100,
     pmi_decimals: int = 6,
-    stage_path: str | None = None,
 ) -> DataFrame:
     """Top-k bigram collocations by pointwise mutual information
     (Church & Hanks 1990) — the classic corpus-analytics companion of
@@ -885,8 +880,8 @@ def pmi_collocations(
 
     One corpus-scale aggregation total: the (prev, cur) transition
     rows (with last-token sentinels, see ``_adjacent_pair_events``)
-    collapse to a vocabulary²-bounded global pair table, optionally
-    staged; bigram counts, unigram counts and N all fold from it
+    collapse to a vocabulary²-bounded global pair table, checkpointed
+    once; bigram counts, unigram counts and N all fold from it
     map-side, so the three model tables cost vocabulary-scale, not
     corpus-scale. The final top-k is a TakeOrdered over the pair
     table with a total ordering (rounded PMI desc, count desc, then
@@ -898,11 +893,9 @@ def pmi_collocations(
         _adjacent_pair_events(df, text_col, id_col)
         .groupBy("prev", "cur")
         .agg(F.count("*").alias("c"))
+        # one corpus pass: big/uni/N all fold from the checkpoint
+        .localCheckpoint()
     )
-    if stage_path is not None:
-        # one corpus pass: big/uni/N all fold from the staged table
-        g.write.mode("overwrite").parquet(stage_path)
-        g = df.sparkSession.read.parquet(stage_path)
     big = g.filter(F.col("cur").isNotNull()).select(
         "prev", "cur", F.col("c").alias("c2")
     )
@@ -1017,7 +1010,6 @@ def bigram_lm_scores(
     id_col: str = "doc_id",
     alpha: float = 0.4,
     logs_decimals: int = 6,
-    stage_path: str | None = None,
 ) -> DataFrame:
     """Bigram language-model quality scoring with Stupid Backoff
     (Brants et al. 2007, "Large Language Models in Machine
@@ -1041,7 +1033,7 @@ def bigram_lm_scores(
     sentinel row (``cur`` NULL) — so per-doc pair frequencies, the
     bigram LM, the unigram LM (= all token occurrences: transition
     sources + sentinels) AND the corpus total all derive from one
-    staged (id, prev, cur, tf) table; the corpus is never re-scanned
+    checkpointed (id, prev, cur, tf) table; the corpus is never re-scanned
     or re-tokenized. Scoring joins the per-doc pair vector against the
     model tables (AQE broadcasts them when small, SMJ at vocabulary
     scale — no hints). Per-transition log-scores round to DECIMAL
@@ -1052,12 +1044,10 @@ def bigram_lm_scores(
         _adjacent_pair_events(df, text_col, id_col)
         .groupBy("id", "prev", "cur")
         .agg(F.count("*").alias("tf"))
+        # FOUR consumers (bigram LM, unigram LM, corpus total,
+        # scoring); the checkpoint makes it one corpus pass.
+        .localCheckpoint()
     )
-    if stage_path is not None:
-        # The staged table feeds FOUR consumers (bigram LM, unigram
-        # LM, corpus total, scoring); staging makes it one corpus pass.
-        ptf.write.mode("overwrite").parquet(stage_path)
-        ptf = df.sparkSession.read.parquet(stage_path)
     transitions = ptf.filter(F.col("cur").isNotNull())
     big = transitions.groupBy("prev", "cur").agg(F.sum("tf").alias("c2"))
     uni = ptf.groupBy(F.col("prev").alias("tok")).agg(F.sum("tf").alias("c1"))

@@ -25,7 +25,7 @@ them. The whole pipeline is a handful of narrow shuffles:
                    views and a deterministic shard assignment
 
 With near-dup off, the returned frames are lazy (only an opted-in
-``lm_filter.stage_path`` writes its table up front). With near-dup on
+``lm_filter`` checkpoints its LM table up front). With near-dup on
 (the default), ``run_corpus_pipeline`` runs eager jobs before it
 returns: the pair build and connected-components rounds, plus the
 module's one barrier, an eager ``localCheckpoint`` of the filtered,
@@ -90,7 +90,6 @@ def default_corpus_config() -> dict:
             "cc_algorithm": "auto",  # propagation w/ star fallback
             "num_hashes": 64,       # minhash mode only
             "bands": 16,            # minhash mode only
-            "stage_path": None,     # minhash mode: signature staging
         },
         "domain_filter": {"enable": False, "url_col": "url",
                           "domain_col": None, "blocklist": None,
@@ -101,8 +100,7 @@ def default_corpus_config() -> dict:
         "structural": {"enable": False, "min_words_per_line": 5,
                        "min_sentences": 3, "bad_words": (),
                        "dedup_lines": True},
-        "lm_filter": {"enable": False, "min_ppl": 0.0, "max_ppl": None,
-                      "stage_path": None},
+        "lm_filter": {"enable": False, "min_ppl": 0.0, "max_ppl": None},
         "decontaminate": {"enable": False, "k": 8, "use_bloom": False},
         "domain_cap": {"enable": False, "domain_col": "source", "cap": 1000},
         "sample": {"enable": False, "k": 1000, "weight_col": "n_tokens"},
@@ -211,14 +209,10 @@ def run_corpus_pipeline(
     if lf["enable"]:
         from ..operators.textprep import unigram_lm_scores  # noqa: PLC0415
 
-        # stage_path materializes the vocabulary-sized LM table; without
-        # it the lazy DAG re-runs the whole upstream chain (repair →
-        # annotate → filter) once each for the LM, the scalar total,
-        # and the scoring branch — three corpus scans instead of two.
-        scores = unigram_lm_scores(
-            kept, text_col=text_col, id_col=id_col,
-            stage_path=lf.get("stage_path"),
-        )
+        # The operator checkpoints the vocabulary-sized LM table, so
+        # the upstream chain (repair → annotate → filter) runs twice (LM
+        # and scoring), not once more for the scalar total.
+        scores = unigram_lm_scores(kept, text_col=text_col, id_col=id_col)
         # LEFT join: a doc that tokenizes to nothing has no score row;
         # it is only dropped by a bound it actually violates (null ppl
         # fails both bound predicates), never by the join itself.
@@ -254,7 +248,6 @@ def run_corpus_pipeline(
                 reps, text_col=text_col, id_col=id_col, k=nd["k"],
                 num_hashes=nd["num_hashes"], bands=nd["bands"],
                 threshold=nd["threshold"], max_bucket=nd["max_bucket"],
-                stage_path=nd.get("stage_path"),
             ).select("id_a", "id_b")
         else:
             pairs = ngram_jaccard_pairs(

@@ -5,20 +5,17 @@ inputs (env > config > defaults), load + normalize the three sources,
 aggregate, merge on the crawl spine, derive + score, emit slices and
 run/governance metadata.
 
-Without ``out_dir`` every output is one lazy logical plan: Catalyst
-sees the whole pipeline and prunes / pushes down per sink. With
-``out_dir`` the call runs in three phases; the jobs of a phase do not
-depend on each other, so it submits them together to a thread pool it
-owns and joins before the next phase:
+The call runs in three phases; the jobs of a phase do not depend on
+each other, so it submits them together to a thread pool it owns and
+joins before the next phase:
 
 - A, loads: ``load_frog``, ``load_gsc`` and ``load_ga4`` each fire a
-  CSV-header job and build their plan concurrently (also without
-  ``out_dir``).
-- B, two parquet barriers, serial: the merge result is staged under
-  ``_stage/merge`` and re-read before derive/score, then ``merged`` is
-  written and re-read. The ``merged`` write also observes its row
-  count and the CSV mirror's int-vs-float decision, so neither costs a
-  job of its own.
+  CSV-header job and build their plan concurrently.
+- B, two barriers, serial: the merge result is an eager
+  ``localCheckpoint`` read by derive/score, then ``merged`` is written
+  to ``out_dir`` and re-read. The ``merged`` write also observes its
+  row count and the CSV mirror's int-vs-float decision, so neither
+  costs a job of its own.
 - C, sinks: every slice parquet write and every CSV-mirror write read
   the re-read ``merged`` and run concurrently. The run-log row is
   appended after they have all joined.
@@ -197,13 +194,15 @@ def run_visibility_pipeline(
     frog_path: str | None = None,
     gsc_path: str | None = None,
     ga4_path: str | None = None,
-    out_dir: str | None = None,
+    *,
+    out_dir: str,
 ) -> dict[str, DataFrame]:
     """Run the full merge; returns {'merged', 'ctr_underperf', 'schema_gaps'},
     plus 'ctr_debug' when ``output.write_slices`` is set.
 
-    Writes parquet outputs when ``out_dir`` is given (parquet, not CSV —
-    at 100 TB the sink must be splittable and column-pruned).
+    Writes parquet outputs under ``out_dir`` (parquet, not CSV — at
+    100 TB the sink must be splittable and column-pruned); every
+    returned frame reads the written ``merged``.
     ``output.csv_mirror`` additionally writes each output as a header'd
     CSV directory ``<name>_csv`` for the reference's consumers.
     """
@@ -227,10 +226,6 @@ def run_visibility_pipeline(
     # simply don't match a left join), so turn inference off for the
     # pipeline plan and restore afterwards. Measured: 43s → 20s on the
     # 1M-row merge, and zero codegen-fallback stages.
-    # (With out_dir=None the returned frames are lazy and evaluate after
-    # the conf is restored — they stay correct; stages touching the
-    # normalize tree may fall back to interpreted eval. The out_dir path
-    # — the at-scale shape — materializes inside the window.)
     cp_key = "spark.sql.constraintPropagation.enabled"
     cp_prev = spark.conf.get(cp_key, "true")
     spark.conf.set(cp_key, "false")
@@ -247,7 +242,7 @@ def _run_pipeline(
     frog_path: str,
     gsc_path: str,
     ga4_path: str,
-    out_dir: str | None,
+    out_dir: str,
     site_base: str | None,
     strip_all: bool,
 ) -> dict[str, DataFrame]:
@@ -257,19 +252,14 @@ def _run_pipeline(
         for load, path in ((load_frog, frog_path), (load_gsc, gsc_path), (load_ga4, ga4_path))
     ])
 
-    base = merge_visibility(frog, agg_gsc(gsc), agg_ga4(ga4))
-    if out_dir:
-        # Phase B. Stage the merge result to parquet and re-read it.
-        # The derive/score stages each broadcast a scalar aggregate
-        # (clicks total, CTR median) whose plan branch re-executes
-        # everything beneath it — with the staged read that's a cheap
-        # column-pruned parquet scan instead of the whole
-        # load→normalize→merge subtree.
-        # (persist() is NOT equivalent: intra-query cache population is
-        # racy across branches and measured slower than the recompute.)
-        stage_path = os.path.join(out_dir, "_stage", "merge")
-        base.write.mode("overwrite").parquet(stage_path)
-        base = spark.read.parquet(stage_path)
+    # Phase B. The derive/score stages each broadcast a scalar aggregate
+    # (clicks total, CTR median) whose plan branch re-executes
+    # everything beneath it — with the checkpoint that's a scan of
+    # materialized rows instead of the whole load→normalize→merge
+    # subtree. (persist() is NOT equivalent: intra-query cache
+    # population is racy across branches and measured slower than the
+    # recompute.)
+    base = merge_visibility(frog, agg_gsc(gsc), agg_ga4(ga4)).localCheckpoint()
     merged = derive_metrics(base)
 
     if (cfg.get("scoring", {}) or {}).get("enable", True):
@@ -315,18 +305,17 @@ def _run_pipeline(
     ]
     merged = merged.select(*cols)
 
-    if out_dir:
-        # Materialization barrier: write merged ONCE, then derive every
-        # slice from the re-read parquet. Without it each slice write
-        # re-executes the whole load→merge→score plan (measured 3-4×
-        # the pipeline cost), and at 100 TB the re-read is the only
-        # shape that doesn't hold the working set in executor memory.
-        merged_path = os.path.join(out_dir, "merged")
-        observed = Observation()
-        merged.observe(observed, *_merged_metrics(merged)).write.mode(
-            "overwrite"
-        ).parquet(merged_path)
-        merged = spark.read.parquet(merged_path)
+    # Materialization barrier: write merged ONCE, then derive every
+    # slice from the re-read parquet. Without it each slice write
+    # re-executes the whole load→merge→score plan (measured 3-4× the
+    # pipeline cost), and at 100 TB the re-read is the only shape that
+    # doesn't hold the working set in executor memory.
+    merged_path = os.path.join(out_dir, "merged")
+    observed = Observation()
+    merged.observe(observed, *_merged_metrics(merged)).write.mode(
+        "overwrite"
+    ).parquet(merged_path)
+    merged = spark.read.parquet(merged_path)
 
     outputs = {"merged": merged}
     anomaly_limit = int((cfg.get("scoring", {}) or {}).get("anomaly_limit", 100_000))
@@ -339,29 +328,27 @@ def _run_pipeline(
     if "schema_types" in merged.columns:
         outputs["schema_gaps"] = schema_gaps(merged)
 
-    if out_dir:
-        # Phase C. Parquet is the at-scale sink (splittable,
-        # column-pruned); output.csv_mirror additionally writes
-        # header'd CSV directories for the reference's downstream
-        # consumers.
-        metrics = observed.get
-        rows_merged = metrics.pop(_ROWS)
-        int_like = {c for c, not_int in metrics.items() if not not_int}
-        sinks = [(df.write.mode("overwrite").parquet, os.path.join(out_dir, name))
-                 for name, df in outputs.items() if name != "merged"]
-        if (cfg.get("output", {}) or {}).get("csv_mirror", False):
-            sinks += [(_write_csv_mirror, df, int_like, os.path.join(out_dir, f"{name}_csv"))
-                      for name, df in outputs.items()]
-        _run_concurrently(spark, sinks)
-        # Governance run log (reference :986-1004): one append-only row
-        # per run, env-gated via ETL_RUN_LOG / ETL_RUN_LOG_PATH.
-        append_run_log(
-            run_id,
-            run_ts,
-            rows_merged,
-            frog_path,
-            gsc_path,
-            ga4_path,
-            merged_path,
-        )
+    # Phase C. Parquet is the at-scale sink (splittable, column-pruned);
+    # output.csv_mirror additionally writes header'd CSV directories for
+    # the reference's downstream consumers.
+    metrics = observed.get
+    rows_merged = metrics.pop(_ROWS)
+    int_like = {c for c, not_int in metrics.items() if not not_int}
+    sinks = [(df.write.mode("overwrite").parquet, os.path.join(out_dir, name))
+             for name, df in outputs.items() if name != "merged"]
+    if (cfg.get("output", {}) or {}).get("csv_mirror", False):
+        sinks += [(_write_csv_mirror, df, int_like, os.path.join(out_dir, f"{name}_csv"))
+                  for name, df in outputs.items()]
+    _run_concurrently(spark, sinks)
+    # Governance run log (reference :986-1004): one append-only row per
+    # run, env-gated via ETL_RUN_LOG / ETL_RUN_LOG_PATH.
+    append_run_log(
+        run_id,
+        run_ts,
+        rows_merged,
+        frog_path,
+        gsc_path,
+        ga4_path,
+        merged_path,
+    )
     return outputs

@@ -176,32 +176,6 @@ def test_quantile_buckets_approx_plan_shape_unchanged(spark, sf_dir):
         )
 
 
-def test_scoring_approx_median_leg(spark):
-    """The approx_median config flag (scoring.py) actually runs and
-    its fallback expected-CTR derives from a median within the sketch
-    envelope of the exact one."""
-    from strategicai_visibility_loop_etl_spark.operators.scoring import (
-        score_expected_ctr,
-    )
-
-    rows = [
-        (f"u{i}", float(i % 37) / 40.0, None, 100.0) for i in range(500)
-    ]
-    merged = spark.createDataFrame(
-        rows, "url string, ctr double, position double, impressions double"
-    )
-    cfg_base = {"scoring": {}, "thresholds": {}}
-    exact = score_expected_ctr(merged, cfg_base)
-    cfg_apx = {"scoring": {"approx_median": True}, "thresholds": {}}
-    approx = score_expected_ctr(merged, cfg_apx)
-    e = exact.select("expected_ctr").first()["expected_ctr"]
-    a = approx.select("expected_ctr").first()["expected_ctr"]
-    vals = sorted(r[1] for r in rows)
-    lo, hi = _rank_envelope(vals, 0.5, 1.0 / 10_000)
-    assert lo <= a <= hi, (a, lo, hi, e)
-    assert approx.columns == exact.columns
-
-
 def test_quantile_normalize_approx_leg_tracks_exact(spark, sf_dir):
     """qx67's docstring promises the percentile_approx cut-point form
     at 100 TB — run it and bound its error against the exact form."""

@@ -12,7 +12,10 @@ from strategicai_visibility_loop_etl_spark.operators.clusters import (
     collapse_exact,
     connected_components,
 )
-from strategicai_visibility_loop_etl_spark.operators.dedup import ngram_jaccard_pairs
+from strategicai_visibility_loop_etl_spark.operators.dedup import (
+    exploded_shingles,
+    ngram_jaccard_pairs,
+)
 from strategicai_visibility_loop_etl_spark.operators.textprep import redact_pii
 from strategicai_visibility_loop_etl_spark.plans.corpus import (
     default_corpus_config,
@@ -104,7 +107,38 @@ def test_corpus_pipeline_neardup_reads_kept_checkpoint(corpus):
     assert [r[0] for r in got_rows] == [1, 4]
 
 
-def test_corpus_pipeline_minhash_method(corpus, tmp_path):
+def test_ngram_jaccard_pairs_reads_shingle_checkpoint(corpus):
+    """The exploded shingles are materialized once: every leaf of the
+    pair frame is that checkpoint, no NGram or explode of tokens is left
+    in its plan, and the pairs equal brute-force Jaccard over the same
+    shingle sets."""
+    pairs = ngram_jaccard_pairs(corpus, k=3, threshold=0.5, max_bucket=10**6)
+
+    plan = pairs._jdf.queryExecution().optimizedPlan()
+    assert "explode" not in plan.toString(), plan.toString()
+    assert "ngram" not in plan.toString().lower(), plan.toString()
+    found = plan.collectLeaves()
+    leaves = [found.apply(i) for i in range(found.size())]
+    assert leaves
+    assert all(
+        leaf.getClass().getSimpleName() == "LogicalRDD" and leaf.rdd().isCheckpointed()
+        for leaf in leaves
+    )
+
+    sh: dict[int, set] = {}
+    for r in exploded_shingles(corpus, k=3).collect():
+        sh.setdefault(r["id"], set()).add(r["g"])
+    want = {
+        (a, b): len(sh[a] & sh[b]) / len(sh[a] | sh[b])
+        for a in sh for b in sh
+        if a < b and len(sh[a] & sh[b]) / len(sh[a] | sh[b]) >= 0.5
+    }
+    got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pairs.collect()}
+    assert set(got) == set(want) and len(want) > 1
+    assert all(abs(got[p] - want[p]) < 1e-6 for p in want)
+
+
+def test_corpus_pipeline_minhash_method(corpus):
     """neardup.method='minhash' — the production-scale near-dup leg
     (banded MinHash-LSH instead of exact n-gram Jaccard; the r13
     decade measured 503 s vs 21.9 s for the same pair volume). On this
@@ -122,7 +156,6 @@ def test_corpus_pipeline_minhash_method(corpus, tmp_path):
         "num_hashes": 64,
         "bands": 16,
         "max_bucket": 10**6,
-        "stage_path": str(tmp_path / "minhash"),
     }
     out = run_corpus_pipeline(corpus, cfg)
     clean = {r["doc_id"] for r in out["clean"].collect()}
@@ -294,12 +327,10 @@ def test_corpus_pipeline_lm_filter_band(corpus):
     assert rows[12]["n_tokens"] == 3 and rows[12]["ppl"] > 0
 
 
-def test_corpus_pipeline_lm_filter_no_bounds_keeps_tokenless(spark, tmp_path):
+def test_corpus_pipeline_lm_filter_no_bounds_keeps_tokenless(spark):
     """Enabling lm_filter with both bounds off must not change the
     output set: token-less docs have no score row, ride through the
-    LEFT join with null ppl, and only a configured bound drops them.
-    Also exercises stage_path (the staged LM parquet is written and
-    read back)."""
+    LEFT join with null ppl, and only a configured bound drops them."""
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma alpha"), (2, "   "), (3, "beta beta delta")],
         "doc_id long, text string",
@@ -308,20 +339,14 @@ def test_corpus_pipeline_lm_filter_no_bounds_keeps_tokenless(spark, tmp_path):
     cfg["min_tokens"] = 0
     cfg["redact_pii"] = False
     cfg["neardup"] = {"enable": False}
-    stage = str(tmp_path / "lm_stage")
-    cfg["lm_filter"] = {"enable": True, "min_ppl": 0.0, "max_ppl": None,
-                        "stage_path": stage}
+    cfg["lm_filter"] = {"enable": True, "min_ppl": 0.0, "max_ppl": None}
     clean = run_corpus_pipeline(docs, cfg)["clean"]
     rows = {r["doc_id"]: r for r in clean.collect()}
     assert set(rows) == {1, 2, 3}           # nothing dropped by the join
     assert rows[2]["ppl"] is None           # unscorable, annotated null
     assert rows[1]["ppl"] is not None
-    import os
-
-    assert os.path.isdir(stage)             # LM table actually staged
     # with a bound configured, the token-less doc drops (cannot score)
-    cfg["lm_filter"] = {"enable": True, "min_ppl": 0.0, "max_ppl": 1e9,
-                        "stage_path": stage}
+    cfg["lm_filter"] = {"enable": True, "min_ppl": 0.0, "max_ppl": 1e9}
     kept = {r["doc_id"] for r in run_corpus_pipeline(docs, cfg)["clean"].collect()}
     assert kept == {1, 3}
 
@@ -425,3 +450,25 @@ def test_corpus_cli_structural_flag(spark, tmp_path):
     rows = {r["doc_id"]: r["text"] for r in clean.collect()}
     assert set(rows) == {1}
     assert rows[1].count("Repeated boilerplate line here again.") == 1
+
+
+def test_corpus_cli_out_holds_only_outputs(spark, tmp_path):
+    """--out receives the outputs and nothing else: the perplexity
+    filter's LM table is checkpointed, not staged under --out."""
+    import os
+
+    from strategicai_visibility_loop_etl_spark.__main__ import corpus_main
+
+    src = tmp_path / "docs.parquet"
+    spark.createDataFrame(
+        [(1, "alpha beta gamma alpha"), (2, "beta beta delta gamma")],
+        "doc_id long, text string",
+    ).write.parquet(str(src))
+    out = tmp_path / "out"
+    rc = corpus_main(
+        ["--input", str(src), "--out", str(out), "--no-neardup",
+         "--min-tokens", "1", "--ppl-min", "1"],
+        spark=spark,
+    )
+    assert rc == 0
+    assert sorted(os.listdir(out)) == ["clean"]

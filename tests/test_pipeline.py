@@ -82,7 +82,7 @@ def test_pipeline_parity_with_pandas_oracle(spark, fixture_paths, tmp_path, monk
         "gsc": fixture_paths["gsc"],
         "ga4": fixture_paths["ga4"],
     }
-    outs = run_visibility_pipeline(spark, cfg)
+    outs = run_visibility_pipeline(spark, cfg, out_dir=str(tmp_path / "out"))
     merged = {r["url"]: r for r in outs["merged"].collect()}
 
     # Spine dedup: /a kept once (4 frog rows -> 3 urls).
@@ -218,6 +218,28 @@ def test_cli_entrypoint_runs_pipeline(spark, fixture_paths, tmp_path, monkeypatc
         "https://e.com/a", "https://e.com/b", "https://e.com/c",
     }
     assert "Merged rows: 3" in capsys.readouterr().out
+
+
+@sweep
+def test_cli_out_holds_only_outputs(spark, fixture_paths, tmp_path, monkeypatch):
+    """--out receives the outputs and nothing else: no staging dir."""
+    from strategicai_visibility_loop_etl_spark.__main__ import main
+
+    monkeypatch.setenv("SITE_BASE", "https://e.com")
+    monkeypatch.setenv("ETL_RUN_LOG", "0")
+    monkeypatch.setenv("ETL_AUTODETECT_LOG", "0")
+    out = tmp_path / "cli_out"
+    rc = main(
+        [
+            "--frog", fixture_paths["frog"],
+            "--gsc", fixture_paths["gsc"],
+            "--ga4", fixture_paths["ga4"],
+            "--out", str(out),
+        ],
+        spark=spark,
+    )
+    assert rc == 0
+    assert sorted(os.listdir(out)) == ["ctr_underperf", "merged", "schema_gaps"]
 
 
 @sweep
@@ -407,8 +429,9 @@ def test_pipeline_jobs_carry_caller_job_group(spark, fixture_paths, tmp_path, mo
     _drain_listener_bus(spark)
     assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
     # 36 when every CSV mirror ran its own dtype aggregate and the run
-    # log its own count; the merged write now observes both.
-    assert len(tracker.getJobIdsForGroup("g")) == 27
+    # log its own count; the merged write now observes both. 27 while
+    # the merge barrier was a parquet write and read-back.
+    assert len(tracker.getJobIdsForGroup("g")) == 26
 
 
 def test_pipeline_sink_error_raised_after_siblings_end(spark, fixture_paths, tmp_path, monkeypatch):

@@ -58,6 +58,21 @@ def test_every_local_checkpoint_is_eager():
     assert offenders == [], "call localCheckpoint() with no argument"
 
 
+def test_registry_stages_only_what_an_oracle_reads():
+    """A registry query writes a table to parquet only when an oracle's
+    DuckDB SQL reads it back through ``read_parquet('{_SIG_STAGE}/…')``;
+    every other barrier is the operator's own ``localCheckpoint()``."""
+    with open(os.path.join(ROOT, "__spark_entry__.py"), encoding="utf-8") as fh:
+        src = fh.read()
+    read = set(re.findall(r"read_parquet\('\{_SIG_STAGE\}/([^/{']+)", src))
+    offenders = [
+        f"__spark_entry__.py:{src.count(chr(10), 0, m.start()) + 1} {m.group(1)}"
+        for m in re.finditer(r'stage_path=f"\{_SIG_STAGE\}/([^/"]+)', src)
+        if m.group(1) not in read
+    ]
+    assert offenders == [], "no oracle reads these staged tables"
+
+
 def test_defaults_come_from_the_box(monkeypatch):
     from strategicai_visibility_loop_etl_spark.session import default_cpus, default_driver_mem
 

@@ -26,7 +26,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -50,17 +49,13 @@ def main() -> None:
         ngram_jaccard_pairs,
     )
 
-    stage = tempfile.mkdtemp(prefix="q22_sampled_")
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .filter(F.expr(SAMPLE_PRED))
     )
     t0 = time.monotonic()
     # the registered q22 arguments verbatim (__spark_entry__.q22)
-    df = ngram_jaccard_pairs(
-        docs, k=3, threshold=0.5, max_bucket=10_000_000,
-        stage_path=f"{stage}/ngram22",
-    )
+    df = ngram_jaccard_pairs(docs, k=3, threshold=0.5, max_bucket=10_000_000)
     s_cols, s_rows, s_kinds = spark_result(df)
     spark_s = round(time.monotonic() - t0, 2)
 

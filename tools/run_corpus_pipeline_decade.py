@@ -36,7 +36,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -73,7 +72,6 @@ def main() -> None:
     # provably drops rows)
     benchmark = docs.filter(F.col("doc_id") % 997 == 3).select("doc_id", "text")
 
-    stage_root = tempfile.mkdtemp(prefix="corpus_decade_")
     sources = [r["source"] for r in docs.select("source").distinct().collect()]
     cfg = {
         "fix_encoding": True,
@@ -93,7 +91,6 @@ def main() -> None:
             "enable": True,
             "min_ppl": 2.0,
             "max_ppl": 1_000_000.0,
-            "stage_path": f"{stage_root}/lm",
         },
         "neardup": {
             "enable": True,
@@ -104,7 +101,6 @@ def main() -> None:
             "bands": 16,
             "max_bucket": "auto",
             "cc_algorithm": "auto",
-            "stage_path": f"{stage_root}/minhash",
         },
         "decontaminate": {"enable": True, "k": 8, "use_bloom": True},
         "domain_cap": {"enable": True, "domain_col": "source", "cap": 2000},

@@ -139,8 +139,7 @@ def _run_doc_family(args, timed, corpus) -> None:
         "ngram_jaccard",
         lambda: {
             "pairs": ngram_jaccard_pairs(
-                corpus, k=5, threshold=0.7, max_bucket="auto",
-                stage_path=os.path.join(args.stage, "ng"),
+                corpus, k=5, threshold=0.7, max_bucket="auto"
             ).count()
         },
     )
@@ -170,8 +169,7 @@ def _run_doc_family(args, timed, corpus) -> None:
     def _clusters():
         reps, stars = collapse_exact(corpus, min_tokens=5)
         pairs = ngram_jaccard_pairs(
-            reps, k=5, threshold=0.7, max_bucket="auto",
-            stage_path=os.path.join(args.stage, "ng_reps"),
+            reps, k=5, threshold=0.7, max_bucket="auto"
         ).select("id_a", "id_b")
         comp = connected_components(stars.unionByName(pairs))
         return {
@@ -221,9 +219,7 @@ def _run_doc_family(args, timed, corpus) -> None:
     )
 
     def _exactsubstr():
-        out = exactsubstr_dedup(
-            corpus, k=8, stage_path=os.path.join(args.stage, "xs")
-        )
+        out = exactsubstr_dedup(corpus, k=8)
         agg = out.agg(
             F.count("*").alias("docs"),
             F.sum("n_tokens").alias("tok"),
@@ -264,12 +260,7 @@ def _run_doc_family(args, timed, corpus) -> None:
             ),
         )
         c2 = corpus.unionByName(long_boiler)
-        out = exactsubstr_dedup(
-            c2,
-            k=8,
-            stage_path=os.path.join(args.stage, "xsml"),
-            min_match_tokens=50,
-        )
+        out = exactsubstr_dedup(c2, k=8, min_match_tokens=50)
         agg = out.agg(F.count("*").alias("docs")).first()
         lb = (
             out.filter(F.col("doc_id") >= 950_000_000)
@@ -318,7 +309,7 @@ def _run_doc_family(args, timed, corpus) -> None:
     )
 
     def _lm():
-        scores = unigram_lm_scores(corpus, stage_path=os.path.join(args.stage, "lm"))
+        scores = unigram_lm_scores(corpus)
         agg = scores.agg(
             F.count("*").alias("docs"),
             F.min("ppl").alias("min_ppl"),
@@ -352,10 +343,7 @@ def _run_doc_family(args, timed, corpus) -> None:
     pages = synth_pages(corpus)
 
     def _boiler_lines():
-        out = boilerplate_line_excision(
-            pages, min_df=2, text_col="page",
-            stage_path=os.path.join(args.stage, "bl"),
-        )
+        out = boilerplate_line_excision(pages, min_df=2, text_col="page")
         agg = out.agg(
             F.count("*").alias("docs"),
             F.sum("n_lines").alias("lines"),
@@ -401,13 +389,9 @@ def _run_doc_family(args, timed, corpus) -> None:
         shutil.rmtree(idx, ignore_errors=True)
         line_df_index_write(archive, idx, text_col="page")
         inc = boilerplate_excision_incremental(
-            batch, idx, min_df=2, text_col="page",
-            stage_path=os.path.join(args.stage, "bl_inc"),
+            batch, idx, min_df=2, text_col="page"
         )
-        full = boilerplate_line_excision(
-            pages, min_df=2, text_col="page",
-            stage_path=os.path.join(args.stage, "bl_full"),
-        ).join(batch.select("doc_id"), "doc_id", "left_semi")
+        full = boilerplate_line_excision(pages, min_df=2, text_col="page").join(batch.select("doc_id"), "doc_id", "left_semi")
 
         def digest(df):
             # hash sum as decimal(38,0): a long sum of 64-bit hashes
@@ -446,13 +430,8 @@ def _run_doc_family(args, timed, corpus) -> None:
         idx = os.path.join(args.stage, "gram_idx")
         shutil.rmtree(idx, ignore_errors=True)
         substr_gram_index_write(archive, idx, k=8)
-        inc = exactsubstr_incremental(
-            batch, idx, k=8,
-            stage_path=os.path.join(args.stage, "es_inc"),
-        )
-        full = _es_full(
-            corpus, k=8, stage_path=os.path.join(args.stage, "es_full")
-        ).join(batch.select("doc_id"), "doc_id", "left_semi")
+        inc = exactsubstr_incremental(batch, idx, k=8)
+        full = _es_full(corpus, k=8).join(batch.select("doc_id"), "doc_id", "left_semi")
 
         def digest(df):
             return df.agg(
@@ -479,9 +458,7 @@ def _run_doc_family(args, timed, corpus) -> None:
     )
 
     def _bigram():
-        scores = bigram_lm_scores(
-            corpus, stage_path=os.path.join(args.stage, "bg")
-        )
+        scores = bigram_lm_scores(corpus)
         n = scores.count()
         b = (
             scores.filter(F.col("doc_id") >= 900_000_000)
@@ -559,7 +536,6 @@ def _run_doc_family(args, timed, corpus) -> None:
             batch_size=256,
             candidate_pool=1024,
             min_count=2,
-            stage_path=os.path.join(args.stage, "bpe_words"),
             checkpoint_every=1,
             stats_out=stats,
         )
@@ -657,7 +633,7 @@ def _run_doc_family(args, timed, corpus) -> None:
     timed("bpe_encode_2000", _bpe_encode_2000)
 
     # BM25 over the full corpus: the posting index is one explode+agg
-    # (staged); 200 queries score via broadcast — the corpus-sized
+    # (checkpointed); 200 queries score via broadcast — the corpus-sized
     # side must never re-shuffle per query batch.
     from strategicai_visibility_loop_etl_spark.operators.retrieval import (
         bm25_topk,
@@ -668,10 +644,7 @@ def _run_doc_family(args, timed, corpus) -> None:
             F.col("doc_id").alias("query_id"),
             F.substring(F.col("text"), 1, 60).alias("query"),
         )
-        out = bm25_topk(
-            corpus, queries, k=10,
-            stage_path=os.path.join(args.stage, "bm"),
-        )
+        out = bm25_topk(corpus, queries, k=10)
         agg = out.agg(
             F.count("*").alias("rows"),
             F.countDistinct("query_id").alias("qs"),
