@@ -32,6 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.util import inheritable_thread_target
 
 from ..functions.localframe import one_partition_frame
 from ..functions.numeric import round_c
@@ -230,13 +231,16 @@ def ivf_topk(
         # consumers keep the driver-local frame, whose doubles the
         # parquet roundtrip reproduces exactly), the corpus-side list
         # write, and the query-side probe build.
+        # Each target is wrapped on its own, so each thread gets its own
+        # copy of the caller's job group and description.
+        spark = corpus.sparkSession
         with ThreadPoolExecutor(max_workers=2) as pool:
             cents_write = pool.submit(
-                cent_df.write.mode("overwrite").parquet,
+                inheritable_thread_target(spark)(cent_df.write.mode("overwrite").parquet),
                 f"{stage_path}/centroids",
             )
             lists_write = pool.submit(
-                write_partitioned,
+                inheritable_thread_target(spark)(write_partitioned),
                 assigned, f"{stage_path}/lists", ["cluster"],
                 dynamic_overwrite=False, distribute=True,
             )
@@ -1099,12 +1103,14 @@ def ivfpq_topk(
     # the doubles exactly), so the centroid write overlaps PQ training
     # and the codebook write overlaps encoding. All futures are joined
     # before the staged code table is read back.
+    # Each target is wrapped on its own, so each thread gets its own copy
+    # of the caller's job group and description.
     with ThreadPoolExecutor(max_workers=2) as stage_pool:
         stage_writes = []
         if stage_path is not None:
             stage_writes.append(
                 stage_pool.submit(
-                    cent_df.write.mode("overwrite").parquet,
+                    inheritable_thread_target(spark)(cent_df.write.mode("overwrite").parquet),
                     f"{stage_path}/centroids",
                 )
             )
@@ -1126,7 +1132,7 @@ def ivfpq_topk(
         if stage_path is not None:
             stage_writes.append(
                 stage_pool.submit(
-                    book_df.write.mode("overwrite").parquet,
+                    inheritable_thread_target(spark)(book_df.write.mode("overwrite").parquet),
                     f"{stage_path}/books",
                 )
             )
@@ -1172,7 +1178,7 @@ def ivfpq_topk(
             # independent legs — run them as concurrent jobs (guide §2.6).
             stage_writes.append(
                 stage_pool.submit(
-                    write_partitioned,
+                    inheritable_thread_target(spark)(write_partitioned),
                     codes, f"{stage_path}/codes", ["cluster"],
                     dynamic_overwrite=False, distribute=True,
                 )

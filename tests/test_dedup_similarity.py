@@ -383,28 +383,56 @@ def test_benchmark_overlap_planted_contamination(spark):
     assert got[4]["n_grams"] == 0 and got[4]["overlap_frac"] == 0.0
 
 
+def _duplicate_span_ref(rows, k):
+    """Per-position reference: {doc_id: (n_positions, n_dup_positions)},
+    a position being duplicated when its k-gram occurs in another doc."""
+    from collections import Counter
+
+    grams = {}
+    for doc_id, text in rows:
+        toks = " ".join((text or "").lower().split()).split(" ")
+        grams[doc_id] = [tuple(toks[i:i + k]) for i in range(len(toks) - k + 1)]
+    n_docs = Counter(g for gs in grams.values() for g in set(gs))
+    return {d: (len(gs), sum(n_docs[g] > 1 for g in gs)) for d, gs in grams.items()}
+
+
 def test_duplicate_span_fraction_position_weighted(spark):
+    """Exact (n_positions, n_dup_positions) against the per-position
+    reference, on a hand fixture (k=8) and a seeded small-vocabulary
+    corpus (k=3) whose answers are mostly strictly between 0 and 1."""
+    import random
+
     from strategicai_visibility_loop_etl_spark.operators.dedup import (
         duplicate_span_fraction,
     )
 
     boiler = "all rights reserved contact us for more information today"  # 9 toks, 2 grams
-    rows = [
+    hand = [
         (1, boiler + " unique tail one two three four five six seven"),
         (2, boiler),                 # shares the boiler grams with 1 and 3
         (3, boiler + " " + boiler),  # pastes it twice: dup positions count twice
         (4, "nothing shared here at all in this very different document"),
         (5, "short"),                # < k tokens
     ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r["id"]: r for r in duplicate_span_fraction(df, k=8).collect()}
-    assert got[2]["n_positions"] == 2 and got[2]["n_dup_positions"] == 2
-    assert got[4]["n_dup_positions"] == 0 and got[4]["dup_frac"] == 0.0
-    assert got[5]["n_positions"] == 0 and got[5]["dup_frac"] == 0.0
-    # Doc 3 is 18 tokens -> 11 positions.
-    assert got[3]["n_positions"] == 11
-    assert got[3]["n_dup_positions"] >= got[2]["n_dup_positions"]
-    assert 0 < got[1]["dup_frac"] < 1
+    rng = random.Random(7)
+    vocab = ["a", "b", "c", "d", "E", "f"]
+    seps = [" ", "  ", "\t", "\n"]
+    seeded = [
+        (i, "".join(rng.choice(vocab) + rng.choice(seps) for _ in range(rng.randint(0, 14))))
+        for i in range(30)
+    ] + [(30, None)]
+    for rows, k in ((hand, 8), (seeded, 3)):
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        got = {
+            r["id"]: (r["n_positions"], r["n_dup_positions"], r["dup_frac"])
+            for r in duplicate_span_fraction(df, k=k).collect()
+        }
+        ref = _duplicate_span_ref(rows, k)
+        assert {d: g[:2] for d, g in got.items()} == ref
+        for d, (n, dup, frac) in got.items():
+            assert frac == pytest.approx(dup / n if n else 0.0, abs=1e-6), d
+    assert sum(0 < dup < n for n, dup in ref.values()) >= 10  # seeded: fractional
+    assert _duplicate_span_ref(hand, 8)[1] == (11, 2)  # 2/11 on the hand fixture
 
 
 def test_exactsubstr_edge_cases(spark):
@@ -1222,6 +1250,38 @@ def test_ivfpq_stage_write_error_releases_pool(spark, sf_dir, tmp_path):
     leaked = [t.name for t in threading.enumerate()
               if t not in before and t.name.startswith("ThreadPoolExecutor")]
     assert leaked == []
+
+
+@pytest.mark.parametrize("op", ["ivf_topk", "ivfpq_topk"])
+def test_staging_pool_jobs_carry_caller_job_group(spark, sf_dir, tmp_path, op):
+    """The staging writes these operators run on their own pool threads
+    carry the caller's job group, like the caller-thread jobs."""
+    from strategicai_visibility_loop_etl_spark.operators import similarity
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+    qs = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"),
+    )
+    kw = dict(k=5, n_centroids=8, n_probe=2, iters=1)
+    if op == "ivfpq_topk":
+        kw.update(m=8, ksub=8, rerank=16)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    drain = sc._jsc.sc().listenerBus().waitUntilEmpty
+    drain()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("g", op)
+    try:
+        getattr(similarity, op)(emb, qs, **kw, stage_path=str(tmp_path / "st")).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    drain()
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+    assert tracker.getJobIdsForGroup("g")
 
 
 def test_ivf_lists_stage_partitioned_and_pruned(spark, sf_dir, tmp_path):

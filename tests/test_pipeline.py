@@ -507,3 +507,82 @@ def test_governance_append_is_thread_safe(tmp_path, monkeypatch):
         rows = list(csv.reader(fh))
     assert rows[0] == header
     assert sorted(rows[1:], key=lambda r: int(r[0])) == [[str(i), f"row-{i}"] for i in range(n)]
+
+
+# Runs the CLI, then (before exiting) records which class-data archives
+# the still-running gateway JVM has mapped. The run clock is fixed so two
+# runs' outputs can be compared byte for byte.
+_CLI_RECORDING_MAPS = """
+import json, sys, types
+from pyspark import SparkContext
+from strategicai_visibility_loop_etl_spark.__main__ import main
+from strategicai_visibility_loop_etl_spark.plans import pipeline
+pipeline.time = types.SimpleNamespace(time=lambda: 1700000000)
+rc = main(sys.argv[2:])
+pid = SparkContext._gateway.proc.pid
+with open(f"/proc/{pid}/maps") as fh:
+    maps = sorted({ln.split()[-1] for ln in fh if ln.rstrip().endswith(".jsa")})
+with open(sys.argv[1], "w") as fh:
+    json.dump({"rc": rc, "jvm_pid": pid, "jsa_maps": maps}, fh)
+"""
+
+
+@sweep
+def test_cli_same_with_and_without_class_data_archive(fixture_paths, tmp_path):
+    """With a fresh cache the first CLI run dumps the driver JVM's
+    class-data archive and publishes it before its process exits; the
+    second run's JVM maps it. Both runs print the same stdout (no JVM
+    CDS log line) and write the same outputs."""
+    import json
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    cds = tmp_path / "cache" / "strategicai_visibility_loop_etl_spark" / "cds"
+    env = dict(
+        os.environ, XDG_CACHE_HOME=str(tmp_path / "cache"), SITE_BASE="https://e.com",
+        ETL_RUN_LOG="0", ETL_AUTODETECT_LOG="0", RUN_ID="archive_check",
+        PYTHONPATH=os.pathsep.join(p for p in (root, os.environ.get("PYTHONPATH")) if p),
+    )
+    for var in ("SPARK_CONF_DIR", "HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH"):
+        env.pop(var, None)
+    runs = []
+    for i in (1, 2):
+        cwd = tmp_path / f"run{i}"
+        cwd.mkdir()
+        res = subprocess.run(
+            [sys.executable, "-c", _CLI_RECORDING_MAPS, str(cwd / "report.json"),
+             "--frog", fixture_paths["frog"], "--gsc", fixture_paths["gsc"],
+             "--ga4", fixture_paths["ga4"], "--out", "out", "--csv-mirror", "--write-slices"],
+            cwd=cwd, env=env, capture_output=True, text=True, timeout=600,
+        )
+        assert res.returncode == 0, res.stderr[-3000:]
+        report = json.loads((cwd / "report.json").read_text())
+        assert report["rc"] == 0
+        names = set(os.listdir(cds))
+        assert len(names) == 2 and "conf" in names, names  # no temp is left behind
+        (name,) = names - {"conf"}
+        assert name.endswith(".jsa"), name
+        archive = str(cds / name)
+        if i == 1:
+            assert archive not in report["jsa_maps"]  # this run dumped it
+            assert not os.path.exists(f"/proc/{report['jvm_pid']}")  # and its JVM is gone
+        else:
+            assert archive in report["jsa_maps"]
+        runs.append((res.stdout, cwd / "out"))
+
+    (out1, dir1), (out2, dir2) = runs
+    assert out1 == out2 and "Merged rows: 3" in out1
+    assert "[cds" not in out1 and "[warning]" not in out1
+    outputs = sorted(os.listdir(dir1))
+    assert outputs == sorted(os.listdir(dir2)) and "merged_csv" in outputs
+    for name in outputs:
+        if name.endswith("_csv"):
+            parts = [sorted(p.read_bytes() for p in (d / name).glob("part-*"))
+                     for d in (dir1, dir2)]
+            assert parts[0] == parts[1], name
+        else:
+            a, b = (pd.read_parquet(d / name) for d in (dir1, dir2))
+            key = list(a.columns)
+            assert a.sort_values(key).reset_index(drop=True).equals(
+                b.sort_values(key).reset_index(drop=True)), name
