@@ -70,9 +70,7 @@ DEC = "decimal(18,6)"
 # sharing one stage dir would read each other's half-written staged
 # tables. The pid suffix keeps each process's query/oracle pair
 # consistent; stale dirs from finished runs are swept opportunistically.
-_SIG_ROOT = os.environ.get(
-    "SPARK_GRAFT_SIG_STAGE_ROOT", os.path.join(tempfile.gettempdir(), "spark_graft_sig_stage")
-)
+_SIG_ROOT = os.path.join(tempfile.gettempdir(), "spark_graft_sig_stage")
 _SIG_STAGE = f"{_SIG_ROOT}/p{os.getpid()}"
 
 
@@ -768,11 +766,7 @@ def q38_group_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ``F.median``/``F.percentile`` are the exact (not approx) forms —
     they match DuckDB's ``median``/``quantile_cont`` bit-for-bit
-    because both sort and linearly interpolate. At 100 TB you'd reach
-    for ``percentile_approx`` (mergeable sketch, no global sort); that
-    swap is EXERCISED with asserted rank-error bounds in
-    ``tests/test_approx_percentiles.py``, with this exact form as its
-    accuracy oracle."""
+    because both sort and linearly interpolate."""
     li = _t(spark, sf_dir, "lineitem", heavy=True)
     return li.groupBy("l_returnflag").agg(
         _rd(F.median("l_extendedprice"), 6).alias("median_price"),
@@ -5079,8 +5073,8 @@ def qx100_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic contrastive negative sampling (capability row
     199): 3 hash-drawn negatives per document via bucketed argmin —
     no rand(), reproducible across engines/partitionings; DuckDB
-    replays the hashes and the per-draw argmin. ``buckets="auto"``
-    derives B = max(16, N/1000) from a corpus-count scalar subquery
+    replays the hashes and the per-draw argmin. The operator derives
+    B = max(16, N/1000) buckets from a corpus-count scalar subquery
     (mirrored in the oracle), so per-draw fan-out stays ~1000 and
     total work LINEAR in corpus size — the r13 decade sweep measured
     the old fixed-B form quadratic (1.6 s at sf0.1 → 212.9 s at
@@ -5092,7 +5086,6 @@ def qx100_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return negative_pairs(
         _t(spark, sf_dir, "documents", heavy=True).select("doc_id"),
         k=3,
-        buckets="auto",
     )
 
 

@@ -158,12 +158,10 @@ def corpus_main(argv: list[str], spark=None) -> int:
             "allowlist": _domain_list(args.allow_domains) if args.allow_domains else None,
             "url_col": args.domain_url_col or "url",
             "domain_col": args.domain_host_col,
-            "include_subdomains": True,
         }
     if args.structural:
         cfg["structural"] = {
             "enable": True,
-            "dedup_lines": True,
             "bad_words": tuple(_domain_list(args.bad_words))
             if args.bad_words else (),
         }

@@ -46,8 +46,6 @@ def quantile_buckets(
     value_col: str,
     group_cols: list[str],
     probs: tuple[float, ...] = (0.25, 0.5, 0.75),
-    approx: bool = False,
-    accuracy: int = 10_000,
 ) -> DataFrame:
     """Per-group quantile discretization: cut each group's values at
     its own quantiles, return the per-bucket histogram
@@ -58,24 +56,13 @@ def quantile_buckets(
     cutpoints, then the tiny (group, cutpoints) dim broadcasts back
     and the bucket assignment is a codegen'd comparison chain — no
     second wide shuffle beyond the histogram's own hash aggregate.
-
-    ``approx=False`` is the sort-based exact interpolated form (the
-    DuckDB oracle's ``quantile_cont``). ``approx=True`` swaps in
-    ``percentile_approx`` — a mergeable KLL-style sketch with no
-    per-group sort buffer, the 100 TB default; cut points then carry a
-    rank error ≤ n/``accuracy`` per group (tolerance-tested in
-    ``tests/test_approx_percentiles.py``). The plan shape is identical
-    either way.
+    Cut points are the sort-based exact interpolated percentiles (the
+    DuckDB oracle's ``quantile_cont``).
     """
     val = F.col(value_col).cast("double")
     base = df.select(*group_cols, val.alias("__v"))
     parr = F.array(*[F.lit(p) for p in probs])
-    cut_expr = (
-        F.percentile_approx("__v", parr, F.lit(accuracy))
-        if approx
-        else F.percentile("__v", parr)
-    )
-    cuts = base.groupBy(*group_cols).agg(cut_expr.alias("__cuts"))
+    cuts = base.groupBy(*group_cols).agg(F.percentile("__v", parr).alias("__cuts"))
     joined = base.join(F.broadcast(cuts), list(group_cols))
     bucket = F.lit(1)
     for i in range(len(probs)):
@@ -267,8 +254,7 @@ def mad_outliers(
     catch.
 
     Shape: two exact per-group medians (sort-based — the q38
-    contract; at 100 TB swap ``percentile_approx``, exercised with
-    bounds in ``tests/test_approx_percentiles.py``) on the SAME
+    contract) on the SAME
     group key — one wide shuffle reused across both aggregates and
     the two co-partitioned join-backs.  ``F.median`` matches DuckDB's
     ``median`` bit-for-bit (both sort + interpolate), so the flag
@@ -403,8 +389,7 @@ def winsorize(
     Adds ``p_lo``, ``p_hi`` and the clipped ``<value>_winsorized``
     next to every original column.  Percentiles are the exact
     interpolated form (`F.percentile` == DuckDB `quantile_cont`
-    bit-for-bit — the q38 contract; swap `percentile_approx` at
-    100 TB, exercised in test_approx_percentiles); the clip is
+    bit-for-bit — the q38 contract); the clip is
     least/greatest, engine-exact.  One group-key aggregate + one
     broadcast-able join-back.
     """
@@ -581,7 +566,6 @@ def moments_profile(
     value_col: str,
     group_cols: list[str],
     out_decimals: int = 6,
-    exact: bool = True,
 ) -> DataFrame:
     """Per-group higher-moment profile — mean, sample std, adjusted
     Fisher-Pearson skewness (G1) and sample excess kurtosis (G2) — the
@@ -606,15 +590,9 @@ def moments_profile(
     bias-corrected estimators are undefined); zero-variance groups
     report NULL for both (no shape to measure). NULL values excluded.
 
-    ``exact=True`` (default) rides DECIMAL power sums — exact,
-    order-independent, oracle-reproducible, at ~1 µs/row of BigDecimal
-    cost (Spark decimals wider than 18 digits leave the compact-long
-    fast path). ``exact=False`` is the production/at-scale mode (the
-    ``weighted_mean`` convention): plain double sums — same fixed
-    operation order but float addition is order-dependent in the low
-    bits across partitionings, so results can wobble in the last
-    couple of output decimals. Shape, guards and NULL contracts are
-    identical in both modes.
+    The power sums are DECIMAL — exact, order-independent and
+    oracle-reproducible, at ~1 µs/row of BigDecimal cost (Spark
+    decimals wider than 18 digits leave the compact-long fast path).
     """
     from ..functions.numeric import round_c  # noqa: PLC0415
 
@@ -656,26 +634,10 @@ def moments_profile(
             # that is otherwise one hash aggregate.
             F.min("__x").alias("__mn"),
             F.max("__x").alias("__mx"),
-            (
-                F.sum(F.col("__x").cast("decimal(28,6)"))
-                if exact
-                else F.sum("__x")
-            ).alias("__s1"),
-            (
-                F.sum(F.col("__x2").cast("decimal(32,6)"))
-                if exact
-                else F.sum("__x2")
-            ).alias("__s2"),
-            (
-                F.sum(F.col("__x3").cast("decimal(36,6)"))
-                if exact
-                else F.sum("__x3")
-            ).alias("__s3"),
-            (
-                F.sum(F.col("__x4").cast("decimal(38,6)"))
-                if exact
-                else F.sum("__x4")
-            ).alias("__s4"),
+            F.sum(F.col("__x").cast("decimal(28,6)")).alias("__s1"),
+            F.sum(F.col("__x2").cast("decimal(32,6)")).alias("__s2"),
+            F.sum(F.col("__x3").cast("decimal(36,6)")).alias("__s3"),
+            F.sum(F.col("__x4").cast("decimal(38,6)")).alias("__s4"),
         )
     )
     n = F.col("n").cast("double")

@@ -21,29 +21,12 @@ trainer iterates over a word-frequency dictionary, NOT the raw corpus
   the double-separator wrapping keeps adjacent matches from consuming
   each other's boundary. No UDF, no Python in the loop.
 
-Encoding has two physical paths with one contract (rank-order merge
-application, greedy left-to-right per merge):
-
-- ``expr``: one literal replace per merge, chained inside a
-  higher-order ``transform`` over the document's word array — zero
-  shuffles, pure codegen. Exact but its expression tree is
-  |merges| deep: at production vocabularies (32k merges) Catalyst/
-  codegen hits JVM method-size limits long before the plan runs.
-- ``broadcast``: the production path — words still split JVM-side
-  (identical tokenization by construction), then one Arrow-batched
-  ``pandas_udf`` applies the standard min-rank merge loop per DISTINCT
-  word (per-batch memo) against a broadcast pair→rank table. One
-  projection, zero shuffles, O(|word|·merges-applied) per distinct
-  word instead of a 32k-deep expression tree.
-
-The two paths agree on any WELL-FORMED merge table — one where each
-pair's operands are base characters or outputs of earlier-rank merges,
-which every ``bpe_train`` output is (batched or sequential): applying
-rank r can only create adjacencies involving r's freshly merged
-symbol, which no earlier-rank pair references, so in-rank-order global
-replace and min-rank-first merging produce identical segmentations
-(pytest pins cross-path equality on trained tables; the scale smoke
-re-pins it at 256 merges and runs the broadcast path at 2,000).
+Encoding is one codegen projection: one literal replace per merge,
+applied in rank order (greedy left-to-right per merge) and chained
+inside a higher-order ``transform`` over the document's word array —
+zero shuffles, no Python. The expression tree is |merges| deep, which
+suits the registry's small trained tables; at production vocabularies
+(32k merges) Catalyst/codegen would hit JVM method-size limits.
 
 Determinism contract (what the DuckDB oracle replays): ties on pair
 count break by (count DESC, left ASC, right ASC) in binary UTF-8
@@ -238,45 +221,11 @@ def bpe_merges_df(spark, merges: list[dict]) -> DataFrame:
     return one_partition_frame(spark, rows, MERGES_SCHEMA)
 
 
-def _apply_merges(word: str, ranks: dict) -> list[str]:
-    """Min-rank-first BPE segmentation of one word (the GPT-2 encode
-    loop): repeatedly merge every left-to-right non-overlapping
-    occurrence of the lowest-rank pair present. On a well-formed merge
-    table (see module docstring) this equals applying the merges in
-    rank order with global replaces — the ``expr`` path's semantics."""
-    syms = list(word)
-    while len(syms) > 1:
-        best_rank = None
-        best = None
-        for pair in zip(syms, syms[1:]):
-            r = ranks.get(pair)
-            if r is not None and (best_rank is None or r < best_rank):
-                best_rank, best = r, pair
-        if best is None:
-            break
-        a, b = best
-        merged = a + b
-        out: list[str] = []
-        i = 0
-        n = len(syms)
-        while i < n:
-            if i < n - 1 and syms[i] == a and syms[i + 1] == b:
-                out.append(merged)
-                i += 2
-            else:
-                out.append(syms[i])
-                i += 1
-        syms = out
-    return syms
-
-
 def bpe_encode(
     df: DataFrame,
     merges: list[dict],
     text_col: str = "text",
     id_col: str = "doc_id",
-    method: str = "auto",
-    expr_max_merges: int = 64,
 ) -> DataFrame:
     """Encode documents with a learned merge sequence: merges apply in
     rank order, greedy left-to-right per merge — identical to the
@@ -284,32 +233,9 @@ def bpe_encode(
     (id_col, n_words, n_bpe, encoded) where ``encoded`` is the
     space-joined BPE token stream of the whole document.
 
-    ``method``: ``"expr"`` chains one literal replace per merge inside
-    a single codegen projection (no shuffle, no Python) — exact, but
-    the expression tree is |merges| deep, so it is only viable for
-    small tables; ``"broadcast"`` is the production path for 32k-class
-    vocabularies — words still split JVM-side, then ONE Arrow-batched
-    ``pandas_udf`` segments each DISTINCT word (per-batch memo)
-    against a broadcast pair→rank dict via the min-rank merge loop
-    (:func:`_apply_merges`). ``"auto"`` picks ``expr`` up to
-    ``expr_max_merges`` and ``broadcast`` beyond. Both paths produce
-    identical output on any trained merge table (module docstring has
-    the argument; tests + the scale smoke pin it). One divergence
-    corner: the expr path inherits Java ``split("")``'s
-    surrogate-half artifact on astral-plane characters, where the
-    broadcast path treats a code point as one base symbol — on
-    BMP text (any normal corpus) the two are bit-identical.
-
-    Plan shape (either path): one projection over the scan — no
-    shuffle, no explode; ``broadcast`` is Arrow-batched, never
-    row-at-a-time.
+    One literal replace per merge inside a single codegen projection
+    (module docstring): no shuffle, no explode, no Python.
     """
-    if method not in ("auto", "expr", "broadcast"):
-        raise ValueError("method must be auto|expr|broadcast")
-    if method == "auto":
-        method = "expr" if len(merges) <= expr_max_merges else "broadcast"
-    if method == "broadcast":
-        return _bpe_encode_broadcast(df, merges, text_col, id_col)
 
     def enc(w: Column) -> Column:
         x = _wrap(F.split(w, ""))
@@ -343,71 +269,6 @@ def bpe_encode(
         F.col(id_col),
         e["n_words"].cast("long").alias("n_words"),
         e["n_bpe"].cast("long").alias("n_bpe"),
-        e["encoded"].alias("encoded"),
-    )
-
-
-def _bpe_encode_broadcast(
-    df: DataFrame,
-    merges: list[dict],
-    text_col: str,
-    id_col: str,
-) -> DataFrame:
-    """The production encode path (see :func:`bpe_encode`): broadcast
-    pair→rank table + one Arrow-batched segmentation projection.
-
-    Scale shape: the merge table ships ONCE per executor as a
-    SparkContext broadcast (a 32k-merge dict is single-digit MBs), not
-    per task through the closure; per Arrow batch a word→tokens memo
-    collapses the Zipf head, so hot words segment once per batch
-    regardless of corpus size. No shuffle anywhere — this composes
-    with any upstream partitioning.
-    """
-    import pandas as pd  # noqa: PLC0415
-
-    ranks = {
-        (m["lhs"], m["rhs"]): i
-        for i, m in enumerate(
-            sorted(merges, key=lambda m: m["merge_rank"])
-        )
-    }
-    bc = df.sparkSession.sparkContext.broadcast(ranks)
-
-    # no type hints: they'd force PySpark's hint-inference path, which
-    # rejects Series→DataFrame strings when pandas is module-local;
-    # an unannotated function is a SCALAR pandas UDF by default.
-    @F.pandas_udf("n_words long, n_bpe long, encoded string")
-    def enc(words_s):
-        rk = bc.value
-        memo: dict[str, list[str]] = {}
-        rows = []
-        for words in words_s:
-            if words is None:
-                words = []
-            n_bpe = 0
-            parts: list[list[str]] = []
-            for w in words:
-                toks = memo.get(w)
-                if toks is None:
-                    toks = _apply_merges(w, rk)
-                    memo[w] = toks
-                n_bpe += len(toks)
-                parts.append(toks)
-            rows.append(
-                (
-                    len(words),
-                    n_bpe,
-                    " ".join(t for toks in parts for t in toks),
-                )
-            )
-        return pd.DataFrame(rows, columns=["n_words", "n_bpe", "encoded"])
-
-    staged = df.select(F.col(id_col), enc(_clean_words(text_col)).alias("__e"))
-    e = F.col("__e")
-    return staged.select(
-        F.col(id_col),
-        e["n_words"].alias("n_words"),
-        e["n_bpe"].alias("n_bpe"),
         e["encoded"].alias("encoded"),
     )
 

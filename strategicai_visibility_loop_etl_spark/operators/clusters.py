@@ -8,7 +8,9 @@ min-label propagation: every node starts labeled with its own id, and
 each round takes the min of its own and its neighbors' labels. The
 label of a component's minimum node floods outward one hop per round,
 so convergence takes O(graph diameter) rounds — near-dup graphs are
-shallow (dup clusters are cliques or short chains), so a handful.
+shallow (dup clusters are cliques or short chains), so a handful. A
+component too deep to finish in ``max_iter`` rounds falls back to
+star contraction, which needs O(log n) rounds on any shape.
 
 Scale shape: each round is one join + one aggregate, both shuffling on
 node id — the same partitioning every round, which AQE/exchange reuse
@@ -74,40 +76,31 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 50,
-    algorithm: str = "propagation",
 ) -> DataFrame:
     """(id, component) for every node in ``edges``; component = min node
     id reachable through the undirected pair graph.
 
-    ``algorithm``:
-
-    - ``"propagation"`` (default): min-label propagation — one join +
-      one aggregate per round, O(diameter) rounds. The right choice for
-      near-dup graphs, whose components are cliques or short chains.
-    - ``"star"``: alternating large-star/small-star contraction
-      (Kiveris et al., "Connected Components in MapReduce and Beyond",
-      SoCC'14) — O(log n) rounds on ANY graph shape, so adversarially
-      deep (long-chain) components can't burn a round per hop. Each
-      round costs two grouped aggregates + joins, so per-round work is
-      higher; prefer it only when the graph may be deep.
-    - ``"auto"``: propagation first (the cheap common case); if it
-      hits ``max_iter`` without converging — a pathologically deep
-      component — fall back to star contraction instead of raising.
-
-    Raises if not converged after ``max_iter`` rounds (for propagation
-    that means a component with diameter > max_iter — degenerate for
-    near-dup graphs and worth failing loudly on; ``"auto"`` converts
-    that failure into the star fallback).
+    Min-label propagation runs first: one join + one aggregate per
+    round, O(diameter) rounds — the cheap common case for near-dup
+    graphs, whose components are cliques or short chains. If it hits
+    ``max_iter`` without converging (a pathologically deep component)
+    the graph is solved again by alternating large-star/small-star
+    contraction (Kiveris et al., "Connected Components in MapReduce
+    and Beyond", SoCC'14): O(log n) rounds on ANY graph shape, at two
+    grouped aggregates + joins per round. Raises only if that too
+    fails to converge in ``max_iter`` rounds.
     """
-    if algorithm == "star":
+    labels = _connected_components_propagation(edges, src, dst, max_iter)
+    if labels is None:
         return _connected_components_star(edges, src, dst, max_iter)
-    if algorithm == "auto":
-        try:
-            return connected_components(edges, src, dst, max_iter, "propagation")
-        except RuntimeError:
-            return _connected_components_star(edges, src, dst, max_iter)
-    if algorithm != "propagation":
-        raise ValueError(f"unknown algorithm: {algorithm!r}")
+    return labels
+
+
+def _connected_components_propagation(
+    edges: DataFrame, src: str, dst: str, max_iter: int
+) -> DataFrame | None:
+    """Min-label propagation (see :func:`connected_components`); None
+    when it has not converged after ``max_iter`` rounds."""
     # Symmetrize by EXPLODE, not union-with-swap: Catalyst expands a
     # self-union into two copies of the edges subtree, so the pair
     # generator (shingle index / window over the corpus) would execute
@@ -170,10 +163,7 @@ def connected_components(
         )
         if changed.get["n"] == 0:
             return labels
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds "
-        "(pathologically deep component? try algorithm='star')"
-    )
+    return None
 
 
 def _connected_components_star(

@@ -745,7 +745,6 @@ def substr_gram_index_write(
     k: int = 8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    store_details: bool = False,
 ) -> None:
     """Build (or bulk-extend) the persistent k-gram OCCURRENCE index
     that :func:`exactsubstr_incremental` excises against. Same layout
@@ -753,25 +752,13 @@ def substr_gram_index_write(
     ``grams/`` (gh, cnt) partials — cnt counts occurrences, not
     documents, matching ExactSubstr's duplication semantics — plus the
     append-only ``ids/`` re-crawl guard. Readers fold partials with
-    one sum per gram hash; compact on schedule.
-
-    ``store_details=True`` additionally writes per-document
-    (id, gh, cnt, seq) rows to ``details/`` — what ``refresh=True``
-    subtracts when a re-crawled document's content changed. OPT-IN
-    because per-doc gram detail is O(tokens) per document (≈ the size
-    of the gram table itself — unlike the line index, whose per-doc
-    line-hash arrays are near-free); enable it only on corpora that
-    actually re-crawl with mutation."""
+    one sum per gram hash; compact on schedule."""
     _base, pos = _gram_tables(df, k, text_col, id_col)
     partial = pos.groupBy("gh").agg(F.count("*").alias("cnt"))
     partial.write.mode("append").parquet(os.path.join(index_path, "grams"))
     df.select(F.col(id_col).alias("id")).distinct().write.mode(
         "append"
     ).parquet(os.path.join(index_path, "ids"))
-    if store_details:
-        pos.groupBy("id", "gh").agg(F.count("*").alias("cnt")).select(
-            "id", "gh", "cnt", F.lit(0).cast("long").alias("seq")
-        ).write.mode("append").parquet(os.path.join(index_path, "details"))
 
 
 def exactsubstr_incremental(
@@ -780,84 +767,34 @@ def exactsubstr_incremental(
     k: int = 8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    update_index: bool = False,
-    refresh: bool = False,
     min_match_tokens: int | None = None,
 ) -> DataFrame:
     """ExactSubstr excision for an INCOMING BATCH against the
-    accumulated corpus without re-tokenizing archived text — the last
-    member of the incremental-dedup family (MinHash row 119, line
-    excision row 132, now substring excision row 104's scale
-    companion). A batch position is a hit when its k-gram's archive
-    occurrences + batch occurrences ≥ 2, i.e. the gram also appears
-    ANYWHERE in the accumulated corpus or at least twice within the
-    batch — exactly the full recompute's duplication test restricted
-    to batch rows.
+    accumulated corpus without re-tokenizing archived text — the
+    incremental companion of substring excision (row 104). A batch
+    position is a hit when its k-gram's archive occurrences + batch
+    occurrences ≥ 2, i.e. the gram also appears ANYWHERE in the
+    accumulated corpus or at least twice within the batch — exactly
+    the full recompute's duplication test restricted to batch rows.
 
     Only the batch explodes to positional grams; the archive
     contributes one stored occurrence count per gram hash,
     semi-join-pruned to hashes the batch actually contains. Re-crawled
-    ids are anti-joined out by default (immutable-content contract);
-    ``refresh=True`` is the mutable-content mode and requires an
-    index written with ``store_details=True`` — the re-crawled ids'
-    latest per-doc (gh, cnt) detail rows subtract from the archive
-    view and append as negative partials, exactly the line-index
-    refresh protocol (net grams/ sum per gh == current corpus
-    occurrences). ``update_index=True`` appends the batch's (gh,
-    cnt) partials and ids AFTER forcing the excision result (plus
-    versioned detail rows when the index stores details).
+    ids (already in ``ids/``) are anti-joined out: their output was
+    produced when first seen (immutable-content contract). The index
+    is read, never written; extend it with
+    :func:`substr_gram_index_write`.
 
-    Equivalence contract (pytest-asserted): identical to
-    :func:`exactsubstr_dedup` over archive ∪ batch restricted to the
-    batch's documents — for refresh, over the corpus with the
-    re-crawled ids' stale content replaced.
+    Equivalence contract (pytest-asserted, and the qx42/qx111 oracles
+    replay it): identical to :func:`exactsubstr_dedup` over archive ∪
+    batch restricted to the batch's documents.
     """
     spark = new_docs.sparkSession
     ids_idx = spark.read.parquet(os.path.join(index_path, "ids"))
     gram_partials = spark.read.parquet(os.path.join(index_path, "grams"))
-    details_path = os.path.join(index_path, "details")
-    has_details = os.path.isdir(details_path)
-    stale_cnt = None
-    details = None
-    if refresh:
-        if not has_details:
-            raise ValueError(
-                "refresh requires an index written with "
-                "store_details=True (no details/ directory found)"
-            )
-        fresh = new_docs
-        details = spark.read.option("mergeSchema", "true").parquet(
-            details_path
-        )
-        batch_ids = new_docs.select(F.col(id_col).alias("id")).distinct()
-        # every INDEXED batch id must have detail rows — an id written
-        # before store_details=True was enabled has a stale
-        # contribution nobody can subtract, and skipping it silently
-        # would double-count (the boilerplate sibling's raise, applied
-        # to the mixed-history case)
-        undetailed = (
-            batch_ids.join(ids_idx.select("id"), "id", "left_semi")
-            .join(details.select("id"), "id", "left_anti")
-            .limit(1)
-            .count()
-        )
-        if undetailed:
-            raise ValueError(
-                "refresh hit indexed ids without detail rows (written "
-                "before store_details=True); delete-and-reinsert those "
-                "ids or rebuild the index with details"
-            )
-        touched = details.join(batch_ids, "id", "left_semi")
-        latest_seq = touched.groupBy("id").agg(F.max("seq").alias("seq"))
-        stale_cnt = (
-            touched.join(latest_seq, ["id", "seq"])
-            .groupBy("gh")
-            .agg(F.sum("cnt").alias("__stale"))
-        )
-    else:
-        fresh = new_docs.join(
-            ids_idx.select(F.col("id").alias(id_col)), id_col, "left_anti"
-        )
+    fresh = new_docs.join(
+        ids_idx.select(F.col("id").alias(id_col)), id_col, "left_anti"
+    )
     base, pos = _gram_tables(fresh, k, text_col, id_col)
     pos = pos.localCheckpoint()
     batch_cnt = pos.groupBy("gh").agg(F.count("*").alias("__cnt_new"))
@@ -866,17 +803,6 @@ def exactsubstr_incremental(
         .groupBy("gh")
         .agg(F.sum("cnt").alias("__cnt_old"))
     )
-    if stale_cnt is not None:
-        archive_cnt = (
-            archive_cnt.join(stale_cnt, "gh", "left")
-            .select(
-                "gh",
-                (
-                    F.col("__cnt_old")
-                    - F.coalesce(F.col("__stale"), F.lit(0))
-                ).alias("__cnt_old"),
-            )
-        )
     dup = (
         batch_cnt.join(archive_cnt, "gh", "left")
         .filter(
@@ -884,35 +810,7 @@ def exactsubstr_incremental(
         )
         .select("gh")
     )
-    out = _excise_hit_spans(base, pos, dup, k, id_col, min_match_tokens)
-    if update_index:
-        # force before append: the plan reads the same grams/ dir
-        out = out.localCheckpoint()
-        if stale_cnt is not None:
-            stale_cnt.select(
-                "gh", (-F.col("__stale")).alias("cnt")
-            ).write.mode("append").parquet(
-                os.path.join(index_path, "grams")
-            )
-        batch_cnt.select("gh", F.col("__cnt_new").alias("cnt")).write.mode(
-            "append"
-        ).parquet(os.path.join(index_path, "grams"))
-        new_only = fresh.select(F.col(id_col).alias("id")).distinct().join(
-            ids_idx.select("id"), "id", "left_anti"
-        )
-        new_only.write.mode("append").parquet(
-            os.path.join(index_path, "ids")
-        )
-        if has_details:
-            if refresh:
-                top = details.agg(F.max("seq")).first()[0]
-                nxt = int(top or 0) + 1
-            else:
-                nxt = 0
-            pos.groupBy("id", "gh").agg(F.count("*").alias("cnt")).select(
-                "id", "gh", "cnt", F.lit(nxt).cast("long").alias("seq")
-            ).write.mode("append").parquet(details_path)
-    return out
+    return _excise_hit_spans(base, pos, dup, k, id_col, min_match_tokens)
 
 
 def boilerplate_line_excision(
@@ -1018,32 +916,19 @@ def line_df_index_write(
       Append-only is what makes updates safe on an object store (no
       read-modify-write of a live table); compact on schedule by
       rewriting the folded aggregate, like any merge-on-read table.
-    - ``ids/`` — append-only (id, lhs, seq) rows: the re-crawl guard
-      PLUS each document's distinct line hashes (``lhs``, sorted) —
-      the per-id contribution that makes ``refresh=True`` possible
-      (subtracting a mutated document's old lines needs to know what
-      they were; storing the hash set costs one array per doc, a few
-      hundred bytes, nothing like storing text). ``seq`` versions
-      refreshed ids, latest wins (the MinHash index convention).
-      Indexes written before this layout carry bare (id) rows; they
-      anti-join fine but are not refresh-capable (refresh raises).
+    - ``ids/`` — append-only (id) rows: the re-crawl guard.
     """
     _base, pos = _line_tables(df, text_col, id_col)
-    distinct_lh = pos.select("id", "lh").distinct()
-    partial = distinct_lh.groupBy("lh").agg(F.count("*").alias("cnt"))
-    partial.write.mode("append").parquet(os.path.join(index_path, "lines"))
-    details = distinct_lh.groupBy("id").agg(
-        F.sort_array(F.collect_set("lh")).alias("lhs")
+    partial = (
+        pos.select("id", "lh").distinct().groupBy("lh")
+        .agg(F.count("*").alias("cnt"))
     )
-    # every id is recorded, even line-less docs (empty lhs), so the
-    # re-crawl guard stays complete
-    df.select(F.col(id_col).alias("id")).distinct().join(
-        details, "id", "left"
-    ).select(
-        "id",
-        F.coalesce("lhs", F.array().cast("array<long>")).alias("lhs"),
-        F.lit(0).cast("long").alias("seq"),
-    ).write.mode("append").parquet(os.path.join(index_path, "ids"))
+    partial.write.mode("append").parquet(os.path.join(index_path, "lines"))
+    # every id is recorded, even line-less docs, so the re-crawl guard
+    # stays complete
+    df.select(F.col(id_col).alias("id")).distinct().write.mode(
+        "append"
+    ).parquet(os.path.join(index_path, "ids"))
 
 
 def boilerplate_excision_incremental(
@@ -1052,14 +937,11 @@ def boilerplate_excision_incremental(
     min_df: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    update_index: bool = False,
-    refresh: bool = False,
 ) -> DataFrame:
     """Cross-document boilerplate excision for an INCOMING BATCH
-    against the accumulated corpus, without re-reading archived text —
-    the incremental-MinHash economics (capability row 119) applied to
-    line excision: a daily crawl increment at 100 TB cannot recompute
-    corpus-wide line document-frequency from scratch.
+    against the accumulated corpus, without re-reading archived text:
+    a daily crawl increment at 100 TB cannot recompute corpus-wide
+    line document-frequency from scratch.
 
     Only the batch is split to lines; the archive contributes ONE
     number per line hash (its stored df), semi-join-pruned to hashes
@@ -1067,94 +949,33 @@ def boilerplate_excision_incremental(
     the batch plus the touched slice of the index. A line in a new
     document is excised when archive df + batch df ≥ ``min_df``.
 
-    By default re-crawled ids (already in ``ids/``) are dropped up
-    front: their cleaned output was produced when first seen, and
-    counting their lines again would inflate df by one per re-crawl
-    (immutable-content contract). ``refresh=True`` is the
-    mutable-content mode: a re-crawled id's NEW content replaces its
-    old contribution — the stored per-id line-hash set (``ids/``
-    detail rows, latest version per id) yields NEGATIVE (lh, −1)
-    corrections, so the archive df consulted for this batch excludes
-    the stale lines exactly, and ``update_index`` appends the
-    negative partials + the batch's positive partials + versioned id
-    detail rows. The count invariant this preserves: the net
-    lines/ sum per lh always equals the number of CURRENT document
-    versions containing that line. Refresh requires detail-bearing
-    id rows (indexes written before the detail layout raise).
-    ``update_index=True`` appends AFTER forcing the excision result,
-    so the output can never observe its own update.
+    Re-crawled ids (already in ``ids/``) are dropped up front: their
+    cleaned output was produced when first seen, and counting their
+    lines again would inflate df by one per re-crawl (immutable-content
+    contract). The index is read, never written; extend it with
+    :func:`line_df_index_write`.
 
-    Equivalence contract (pytest-asserted, the row-119 pattern):
-    identical to running :func:`boilerplate_line_excision` over
-    archive ∪ batch and keeping the batch's rows — where for refresh
-    the "archive" is the corpus WITHOUT the re-crawled ids' stale
-    content.
+    Equivalence contract (pytest-asserted, and the qx41 oracle replays
+    it): identical to running :func:`boilerplate_line_excision` over
+    archive ∪ batch and keeping the batch's rows.
     """
     spark = new_docs.sparkSession
-    ids_idx = spark.read.option("mergeSchema", "true").parquet(
-        os.path.join(index_path, "ids")
-    )
+    ids_idx = spark.read.parquet(os.path.join(index_path, "ids"))
     lines_partials = spark.read.parquet(os.path.join(index_path, "lines"))
-    stale_cnt = None
-    if refresh:
-        fresh = new_docs
-        if "lhs" not in ids_idx.columns:
-            raise ValueError(
-                "index has no per-id line details (pre-detail layout); "
-                "refresh requires an index written by line_df_index_write "
-                "of this version"
-            )
-        seq = (
-            F.coalesce(F.col("seq"), F.lit(0)).cast("long")
-            if "seq" in ids_idx.columns
-            else F.lit(0).cast("long")
-        )
-        touched = ids_idx.select("id", "lhs", seq.alias("__seq")).join(
-            new_docs.select(F.col(id_col).alias("id")).distinct(),
-            "id",
-            "left_semi",
-        )
-        latest = touched.groupBy("id").agg(
-            F.max_by("lhs", F.col("__seq")).alias("lhs")
-        )
-        if latest.filter(F.col("lhs").isNull()).limit(1).count() > 0:
-            raise ValueError(
-                "refresh hit id rows without line details (written "
-                "before the detail layout); delete-and-reinsert those ids"
-            )
-        stale_cnt = (
-            latest.select(F.explode("lhs").alias("lh"))
-            .groupBy("lh")
-            .agg(F.count("*").alias("__stale"))
-        )
-    else:
-        fresh = new_docs.join(
-            ids_idx.select(F.col("id").alias(id_col)), id_col, "left_anti"
-        )
+    fresh = new_docs.join(
+        ids_idx.select(F.col("id").alias(id_col)), id_col, "left_anti"
+    )
     base, pos = _line_tables(fresh, text_col, id_col)
     pos = pos.localCheckpoint()
-    distinct_lh = pos.select("id", "lh").distinct()
-    batch_cnt = distinct_lh.groupBy("lh").agg(
-        F.count("*").alias("__cnt_new")
+    batch_cnt = (
+        pos.select("id", "lh").distinct().groupBy("lh")
+        .agg(F.count("*").alias("__cnt_new"))
     )
     archive_df = (
         lines_partials.join(batch_cnt.select("lh"), "lh", "left_semi")
         .groupBy("lh")
         .agg(F.sum("cnt").alias("__dfc_old"))
     )
-    if stale_cnt is not None:
-        # stale lines of re-crawled ids leave the archive view: the
-        # stored net count minus the latest per-id contribution
-        archive_df = (
-            archive_df.join(stale_cnt, "lh", "left")
-            .select(
-                "lh",
-                (
-                    F.col("__dfc_old")
-                    - F.coalesce(F.col("__stale"), F.lit(0))
-                ).alias("__dfc_old"),
-            )
-        )
     boiler = (
         batch_cnt.join(archive_df, "lh", "left")
         .filter(
@@ -1163,44 +984,7 @@ def boilerplate_excision_incremental(
         )
         .select("lh")
     )
-    out = _excise_hit_lines(base, pos, boiler, id_col)
-    if update_index:
-        # force the excision BEFORE appending: the plan reads the same
-        # lines/ dir the append extends, and a late scan must not see
-        # the batch's own partials
-        out = out.localCheckpoint()
-        if stale_cnt is not None:
-            # negative corrections first conceptually; physically both
-            # are appends and readers only ever see the SUM
-            stale_cnt.select(
-                "lh", (-F.col("__stale")).alias("cnt")
-            ).write.mode("append").parquet(
-                os.path.join(index_path, "lines")
-            )
-        batch_cnt.select("lh", F.col("__cnt_new").alias("cnt")).write.mode(
-            "append"
-        ).parquet(os.path.join(index_path, "lines"))
-        if refresh:
-            raw_seq = (
-                F.coalesce(F.col("seq"), F.lit(0))
-                if "seq" in ids_idx.columns
-                else F.lit(0)
-            )
-            top = ids_idx.agg(F.max(raw_seq)).first()[0]
-            nxt = int(top or 0) + 1
-        else:
-            nxt = 0
-        details = distinct_lh.groupBy("id").agg(
-            F.sort_array(F.collect_set("lh")).alias("lhs")
-        )
-        fresh.select(F.col(id_col).alias("id")).distinct().join(
-            details, "id", "left"
-        ).select(
-            "id",
-            F.coalesce("lhs", F.array().cast("array<long>")).alias("lhs"),
-            F.lit(nxt).cast("long").alias("seq"),
-        ).write.mode("append").parquet(os.path.join(index_path, "ids"))
-    return out
+    return _excise_hit_lines(base, pos, boiler, id_col)
 
 
 def lsh_band_plan(
@@ -1296,7 +1080,6 @@ def winnow_fingerprints(
     id_col: str = "doc_id",
     k: int = 5,
     window: int = 4,
-    exploded: bool = False,
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken
     2003 — the MOSS algorithm): per document, the distinct minima of
@@ -1309,8 +1092,7 @@ def winnow_fingerprints(
     Output per doc: ``n_grams``, ``n_fingerprints``, ``fp_checksum``
     (order-free exact sum of the distinct fingerprints — the value
     the oracle verifies), ``fp_density`` (≈ 2/(window+1) on random
-    text, the paper's bound).  ``exploded=True`` instead returns the
-    (id, fp) rows — the inverted-index input for pair generation.
+    text, the paper's bound).
 
     Shape: a PURE PROJECTION — zero Exchange (the q43 contract; the
     plan-shape test pins it).  Gram hashes are the repo's polynomial
@@ -1357,10 +1139,6 @@ def winnow_fingerprints(
         return flet(harr, wins)
 
     base = df.select(F.col(id_col), flet(char_codes(norm), body).alias("__p"))
-    if exploded:
-        return base.select(
-            id_col, F.explode(F.col("__p.fps")).alias("fp")
-        )
     prof = base.select(
         id_col,
         F.col("__p.n_grams").alias("n_grams"),

@@ -3,8 +3,8 @@
 The first gate of every real crawl pipeline (the reference's own
 domain is SEO crawl data — etl_merge.py:474-514 normalizes hosts for
 exactly this kind of slicing): drop or keep documents by the host of
-their URL, where a list entry matches the exact host and, by default,
-every subdomain of it (standard blocklist semantics: ``example.com``
+their URL, where a list entry matches the exact host and every
+subdomain of it (standard blocklist semantics: ``example.com``
 matches ``a.b.example.com``).
 
 Scale shape: the list is a model-sized broadcast dim. Each document's
@@ -41,17 +41,13 @@ def _list_df(spark, domains: Iterable[str] | DataFrame, col: str) -> DataFrame:
     return literal_frame(spark, [(d,) for d in rows], "__dom string")
 
 
-def _matched_hosts(
-    hosted: DataFrame, dim: DataFrame, include_subdomains: bool
-) -> DataFrame:
-    """Hosts of ``hosted`` that hit the list — may contain duplicates
-    (one per matching row); anti/semi join semantics don't care."""
-    if include_subdomains:
-        keyed = hosted.select(
-            F.col(_HOST), F.explode(host_suffixes(F.col(_HOST))).alias("__dom")
-        )
-    else:
-        keyed = hosted.select(F.col(_HOST), F.col(_HOST).alias("__dom"))
+def _matched_hosts(hosted: DataFrame, dim: DataFrame) -> DataFrame:
+    """Hosts of ``hosted`` that hit the list, directly or through a
+    parent domain — may contain duplicates (one per matching row);
+    anti/semi join semantics don't care."""
+    keyed = hosted.select(
+        F.col(_HOST), F.explode(host_suffixes(F.col(_HOST))).alias("__dom")
+    )
     return keyed.join(F.broadcast(dim), "__dom").select(_HOST)
 
 
@@ -61,7 +57,6 @@ def domain_filter(
     allowlist: Iterable[str] | DataFrame | None = None,
     url_col: str = "url",
     domain_col: str | None = None,
-    include_subdomains: bool = True,
     list_col: str = "domain",
 ) -> DataFrame:
     """Filter ``df`` by domain block/allow lists.
@@ -87,11 +82,11 @@ def domain_filter(
     out = df.withColumn(_HOST, host)
     if allowlist is not None:
         dim = _list_df(spark, allowlist, list_col)
-        allowed = _matched_hosts(out, dim, include_subdomains)
+        allowed = _matched_hosts(out, dim)
         out = out.join(allowed, _HOST, "left_semi")
     if blocklist is not None:
         dim = _list_df(spark, blocklist, list_col)
-        blocked = _matched_hosts(out, dim, include_subdomains)
+        blocked = _matched_hosts(out, dim)
         out = out.join(blocked, _HOST, "left_anti")
     return out.drop(_HOST)
 

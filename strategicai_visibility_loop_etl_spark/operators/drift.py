@@ -162,7 +162,6 @@ def ks_test(
     group_a: str,
     group_b: str,
     alpha_coeff: float = 1.358,
-    bins: int | None = None,
 ) -> DataFrame:
     """Two-sample Kolmogorov–Smirnov test between two groups' value
     distributions: one row of (n_a, n_b, ks_stat, critical, reject)
@@ -181,18 +180,10 @@ def ks_test(
 
     Shape: one (value) hash aggregate with per-side conditional
     counts, one cumulative window over distinct values (a global sort
-    of the DISTINCT value set), two broadcast totals.  ``bins=N`` is
-    the 100 TB form — EXERCISED with asserted bounds in
-    ``tests/test_approx_percentiles.py``: values bin to N equi-width
-    buckets (min/max from one broadcast aggregate) and the SAME
-    statistic runs over the binned CDF; coarsening can only shrink
-    the supremum, so D_binned ∈ [D_exact − within-bin mass, D_exact].
+    of the DISTINCT value set), two broadcast totals.
 
-    NULL metrics are excluded up front in BOTH legs — a NULL carries
-    no distribution information, and without the filter the two legs
-    would disagree (the exact leg would keep NULL as its own CDF
-    point while ``least(floor(NULL), bins-1)`` would silently bin it
-    into the top bucket, inflating the upper tail).
+    NULL metrics are excluded up front — a NULL carries no
+    distribution information, and kept it would be its own CDF point.
     """
     tagged = df.filter(
         F.col(group_col).isin([group_a, group_b])
@@ -201,26 +192,6 @@ def ks_test(
         F.col(value_col).alias("v"),
         F.when(F.col(group_col) == group_a, 1).otherwise(0).alias("ia"),
     )
-    if bins is not None:
-        if bins < 1:
-            raise ValueError("bins must be >= 1")
-        rng = tagged.agg(
-            F.min("v").alias("__lo"), F.max("v").alias("__hi")
-        )
-        width = (F.col("__hi") - F.col("__lo")) / F.lit(float(bins))
-        tagged = tagged.crossJoin(F.broadcast(rng)).select(
-            F.when(
-                F.col("__hi") == F.col("__lo"), F.lit(0)
-            )
-            .otherwise(
-                F.least(
-                    F.floor((F.col("v") - F.col("__lo")) / width).cast("int"),
-                    F.lit(bins - 1),
-                )
-            )
-            .alias("v"),
-            "ia",
-        )
     per_v = tagged.groupBy("v").agg(
         F.sum("ia").alias("ca"),
         F.sum(F.lit(1) - F.col("ia")).alias("cb"),

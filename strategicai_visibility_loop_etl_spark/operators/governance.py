@@ -117,8 +117,6 @@ def corpus_datasheet(
     text_col: str = "text",
     id_col: str = "doc_id",
     lang_col: str | None = "lang",
-    approx: bool = False,
-    accuracy: int = 10_000,
 ):
     """Dataset datasheet: the one-page stats report a training-data
     release ships with (Gebru et al. 2021, "Datasheets for Datasets"
@@ -126,12 +124,8 @@ def corpus_datasheet(
     corpus size, token-length distribution, emptiness,
     exact-duplicate fraction, language concentration and mean quality.
 
-    ``approx=False`` computes exact sort-based percentiles (the
-    accuracy oracle). ``approx=True`` is the 100 TB form — the
-    token-length p50/p90/p99 come from ``percentile_approx``'s
-    mergeable sketch (rank error ≤ n/``accuracy``, tolerance-tested
-    in ``tests/test_approx_percentiles.py``); everything else in the
-    datasheet is a plain mergeable aggregate either way.
+    Token-length p50/p90/p99 are exact sort-based percentiles;
+    everything else in the datasheet is a plain mergeable aggregate.
 
     Two aggregates total: one global (counts, sums, percentiles,
     distinct-normalized-text), one over the language distribution;
@@ -154,24 +148,12 @@ def corpus_datasheet(
     # means via exact sum / count, not avg(): a floating avg's
     # accumulation order varies with partitioning; long/decimal sums
     # are exact, so one final division is deterministic
-    if approx:
-        pctl = [
-            F.percentile_approx("__nt", F.lit(p), F.lit(accuracy)).cast(
-                "double"
-            ).alias(a)
-            for p, a in ((0.5, "tokens_p50"), (0.9, "tokens_p90"),
-                         (0.99, "tokens_p99"))
-        ]
-    else:
-        pctl = [
-            F.median("__nt").alias("tokens_p50"),
-            F.percentile("__nt", 0.9).alias("tokens_p90"),
-            F.percentile("__nt", 0.99).alias("tokens_p99"),
-        ]
     g = base.agg(
         F.count("*").alias("n_docs"),
         F.sum("__nt").alias("tokens_total"),
-        *pctl,
+        F.median("__nt").alias("tokens_p50"),
+        F.percentile("__nt", 0.9).alias("tokens_p90"),
+        F.percentile("__nt", 0.99).alias("tokens_p99"),
         F.sum("__nc").alias("chars_total"),
         F.sum(F.col("__q").cast("decimal(18,6)")).alias("__q_sum"),
         F.sum((F.col("__nt") == 0).cast("int")).alias("__n_empty"),

@@ -558,7 +558,6 @@ def bfs_distances(
     src_col: str = "src",
     dst_col: str = "dst",
     seed_col: str = "id",
-    directed: bool = False,
 ) -> DataFrame:
     """Multi-source BFS hop distances: the shortest hop count from
     ANY seed to each reachable node, out to ``iters`` hops — the
@@ -581,7 +580,7 @@ def bfs_distances(
     distances already found are final BFS property, so extra rounds
     past the horizon are no-ops).
 
-    Undirected graphs (default) symmetrize via explode (the CC
+    Edges are undirected: they symmetrize via explode (the CC
     lesson: a union of two projections re-executes the upstream
     subtree; one explode does not). Self-loops are dropped; parallel
     edges are harmless under MIN. Output: ``(id, dist)`` for reached
@@ -597,17 +596,14 @@ def bfs_distances(
         & F.col("d").isNotNull()
         & (F.col("s") != F.col("d"))
     )
-    if not directed:
-        e = e.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("s"), F.col("d")),
-                    F.struct(
-                        F.col("d").alias("s"), F.col("s").alias("d")
-                    ),
-                )
-            ).alias("__e")
-        ).select(F.col("__e.s").alias("s"), F.col("__e.d").alias("d"))
+    e = e.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("s"), F.col("d")),
+                F.struct(F.col("d").alias("s"), F.col("s").alias("d")),
+            )
+        ).alias("__e")
+    ).select(F.col("__e.s").alias("s"), F.col("__e.d").alias("d"))
     e = e.distinct().localCheckpoint()
     dist = (
         seeds.select(F.col(seed_col).alias("id"))

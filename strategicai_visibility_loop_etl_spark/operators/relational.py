@@ -74,19 +74,17 @@ def top_n_per_group(
     group_cols: Sequence[str],
     order_col: str,
     n: int,
-    ascending: bool = False,
     rank_col: str = "rank",
     tiebreak_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Top-``n`` rows per group by ``order_col``.
+    """Top-``n`` rows per group by ``order_col``, largest first.
 
     ``row_number`` (not rank/dense_rank) so output size is bounded at
     exactly n per group; ``tiebreak_cols`` make the cut deterministic —
     pass the group's natural key for reproducible (and oracle-matching)
     results.
     """
-    ordering = [F.col(order_col).asc() if ascending else F.col(order_col).desc()]
-    ordering += [F.col(c).asc() for c in tiebreak_cols]
+    ordering = [F.col(order_col).desc()] + [F.col(c).asc() for c in tiebreak_cols]
     w = Window.partitionBy(*[F.col(c) for c in group_cols]).orderBy(*ordering)
     return (
         df.withColumn(rank_col, F.row_number().over(w))
@@ -137,7 +135,6 @@ def salted_join(
     right: DataFrame,
     key: str,
     salt: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
     """Equi-join with salt-split hot keys (the skew-join pattern).
 
@@ -149,25 +146,14 @@ def salted_join(
     equi-join on ``key`` — use when AQE's skew-join split isn't enough
     (e.g. skewed *aggregation* feeding the join, or joins under
     ``spark.sql.adaptive.enabled=false``). Right side grows ×salt, so
-    keep it the smaller input.
-
-    Only inner/left joins are supported: the right side is replicated
-    into every salt sub-key, so an unmatched right row under
-    ``how="right"``/``"full"`` would surface ``salt`` times — a silent
-    wrong answer. Salt the other input (or pre-aggregate) instead.
+    keep it the smaller input. The join is inner.
     """
-    if how not in {"inner", "left", "left_outer"}:
-        raise ValueError(
-            f"salted_join supports how in {{'inner','left','left_outer'}}, got {how!r}: "
-            "replicated right-side rows would duplicate unmatched rows "
-            "under right/full outer joins"
-        )
     salt_col = F.pmod(F.xxhash64(*[F.col(c) for c in left.columns]), F.lit(salt))
     l_s = left.withColumn("__salt", salt_col.cast("int"))
     r_s = right.withColumn(
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
     )
-    return l_s.join(r_s, [key, "__salt"], how).drop("__salt")
+    return l_s.join(r_s, [key, "__salt"]).drop("__salt")
 
 
 def shapley_attribution(

@@ -6,12 +6,12 @@ re-expressed as three hash aggregates and one broadcast join — the
 shape every search engine's batch scoring job takes on Spark.
 
 Scale story: the posting table (doc, term, tf, dl) is ONE explode +
-hash aggregate over the corpus and can be staged/reused across query
-batches; document frequency and the average document length fold from
-it map-side (model-sized); the query side is tiny and broadcast, so
-scoring never shuffles the corpus — the only post-postings exchange
-carries (query, doc, partial score) aggregates. Top-k per query is a
-rank window over queries (thousands of rows), not documents.
+hash aggregate over the corpus; document frequency and the average
+document length fold from it map-side (model-sized); the query side is
+tiny and broadcast, so scoring never shuffles the corpus — the only
+post-postings exchange carries (query, doc, partial score) aggregates.
+Top-k per query is a rank window over queries (thousands of rows), not
+documents.
 
 Determinism contract (the repo's engine-exactness discipline): each
 per-(query, doc, term) BM25 contribution rounds to DECIMAL(18,6)
@@ -33,7 +33,7 @@ def document_postings(
 ) -> DataFrame:
     """(id, term, tf, dl): term frequencies plus the document length
     (token count) every BM25 variant needs. One explode + one hash
-    aggregate; stage the result to score many query batches."""
+    aggregate."""
     toks = df.select(
         F.col(id_col).alias("id"),
         F.explode(tokens(F.coalesce(F.col(text_col), F.lit("")))).alias(
@@ -55,7 +55,6 @@ def bm25_topk(
     id_col: str = "doc_id",
     query_col: str = "query",
     query_id_col: str = "query_id",
-    postings: DataFrame | None = None,
 ) -> DataFrame:
     """Top-``k`` documents per query under Okapi BM25.
 
@@ -64,15 +63,12 @@ def bm25_topk(
     (query_id_col, rank, id_col, score) — rank 1 is the best match;
     ties on the rounded score break by ascending document id.
 
-    Pass ``postings`` (from ``document_postings``, possibly read back
-    from parquet) to reuse an existing index; otherwise one is built
-    and checkpointed so corpus stats and the scoring join all read one
-    materialization.
+    The postings are built once and checkpointed, so corpus stats and
+    the scoring join all read one materialization.
     """
     from ..functions.numeric import round_c  # noqa: PLC0415
 
-    if postings is None:
-        postings = document_postings(docs, text_col, id_col).localCheckpoint()
+    postings = document_postings(docs, text_col, id_col).localCheckpoint()
 
     # corpus stats fold from the postings: N, avgdl, df(term)
     nstats = (

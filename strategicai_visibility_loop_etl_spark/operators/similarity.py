@@ -220,13 +220,12 @@ def ivf_topk(
 
         from ..sources.sinks import write_partitioned  # noqa: PLC0415
 
-        # STATIC overwrite (full truncate): the staged lists are a
+        # write_partitioned truncates the root: the staged lists are a
         # complete snapshot of THIS corpus/centroid assignment, so a
         # reused stage_path must not keep partitions for clusters the
-        # new assignment left empty — dynamic overwrite would, and the
-        # pruned re-read would silently feed stale rows into top-k.
-        # Three legs run as CONCURRENT jobs (guide §2.6: actions are
-        # sequential only because the driver calls them sequentially):
+        # new assignment left empty. Three legs run as CONCURRENT jobs
+        # (guide §2.6: actions are sequential only because the driver
+        # calls them sequentially):
         # the centroid staging write (oracle audit surface only —
         # consumers keep the driver-local frame, whose doubles the
         # parquet roundtrip reproduces exactly), the corpus-side list
@@ -242,7 +241,6 @@ def ivf_topk(
             lists_write = pool.submit(
                 inheritable_thread_target(spark)(write_partitioned),
                 assigned, f"{stage_path}/lists", ["cluster"],
-                dynamic_overwrite=False, distribute=True,
             )
             # computed ONCE (lineage cut): the pruning set and the
             # search join share the same probe table instead of
@@ -1171,16 +1169,15 @@ def ivfpq_topk(
             # n_probe/n_centroids of the bytes.
             from ..sources.sinks import write_partitioned  # noqa: PLC0415
 
-            # STATIC overwrite (full truncate), as with the IVF lists: a
-            # reused stage_path with a re-trained codebook/corpus must not
-            # keep stale partitions for now-empty clusters. The code-table
+            # Full truncate, as with the IVF lists: a reused stage_path
+            # with a re-trained codebook/corpus must not keep stale
+            # partitions for now-empty clusters. The code-table
             # write (corpus side) and the probe build (query side) are
             # independent legs — run them as concurrent jobs (guide §2.6).
             stage_writes.append(
                 stage_pool.submit(
                     inheritable_thread_target(spark)(write_partitioned),
                     codes, f"{stage_path}/codes", ["cluster"],
-                    dynamic_overwrite=False, distribute=True,
                 )
             )
             # lineage cut so the pruning set and the downstream LUT
@@ -1420,7 +1417,6 @@ def negative_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
     k: int = 3,
-    buckets: int | str = "auto",
     exclude_pairs: DataFrame | None = None,
 ) -> DataFrame:
     """Deterministic negative sampling for contrastive training data:
@@ -1429,20 +1425,17 @@ def negative_pairs(
     the sample is reproducible across engines, runs and
     partitionings, and a SQL twin replays it exactly.
 
-    Mechanism: candidates hash into ``buckets`` by a Knuth
+    Mechanism: candidates hash into B buckets by a Knuth
     multiplicative hash of their id; each (anchor, j) draw targets
-    bucket ``h(anchor, j) mod buckets`` and takes the candidate
-    minimizing a (anchor, j, candidate)-keyed hash — an argmin inside
-    one bucket, so no global rank, no order dependence, and the
-    per-draw join fans out to ONE bucket's candidates (size ~N/B).
-    ``buckets="auto"`` (the default, and the only form that scales)
-    derives B = max(16, floor(N/1000)) from a corpus count computed
-    as a broadcast one-row scalar subquery — bucket size stays ~1000
+    bucket ``h(anchor, j) mod B`` and takes the candidate minimizing
+    a (anchor, j, candidate)-keyed hash — an argmin inside one
+    bucket, so no global rank, no order dependence, and the per-draw
+    join fans out to ONE bucket's candidates (size ~N/B). B =
+    max(16, floor(N/1000)) comes from a corpus count computed as a
+    broadcast one-row scalar subquery — bucket size stays ~1000
     regardless of corpus size, so total work is O(N·k·1000), LINEAR
-    in N. A fixed integer ``buckets`` pins B and makes total work
-    O(N²·k/B) — quadratic; acceptable only for small fixtures and
-    exact-replay tests (the r13 sf1 sweep measured 133× time for 10×
-    data at fixed B). Self-pairs are
+    in N (a fixed B would make it quadratic: the r13 sf1 sweep
+    measured 133× time for 10× data at fixed B). Self-pairs are
     excluded; ``exclude_pairs`` (id_a, id_b — e.g. near-dup pairs
     from any dedup-family operator) removes known positives in both
     orientations via an anti-join, so a near-duplicate can never be
@@ -1461,11 +1454,6 @@ def negative_pairs(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    if isinstance(buckets, str):
-        if buckets != "auto":
-            raise ValueError("buckets must be an int >= 1 or 'auto'")
-    elif buckets < 1:
-        raise ValueError("buckets must be >= 1")
     id_type = dict(docs.dtypes).get(id_col, "")
     if id_type not in ("tinyint", "smallint", "int", "bigint", "long"):
         raise ValueError(
@@ -1480,28 +1468,21 @@ def negative_pairs(
         # multiply stays below 2^63 for ANY non-negative int64 input
         return F.pmod(col, m31)
 
-    if buckets == "auto":
-        # B = max(16, floor(N/1000)) as a broadcast one-row scalar
-        # subquery: the count scan is column-pruned, the join adds no
-        # shuffle, and the plan stays fully declarative (no driver
-        # count action). Mirrored literally in the SQL twin.
-        nb_df = F.broadcast(
-            docs.agg(
-                F.greatest(
-                    F.lit(16).cast("long"),
-                    F.floor(F.count(F.lit(1)) / F.lit(1000.0)),
-                ).alias("__nb")
-            )
+    # B = max(16, floor(N/1000)) as a broadcast one-row scalar
+    # subquery: the count scan is column-pruned, the join adds no
+    # shuffle, and the plan stays fully declarative (no driver count
+    # action). Mirrored literally in the SQL twin.
+    nb_df = F.broadcast(
+        docs.agg(
+            F.greatest(
+                F.lit(16).cast("long"),
+                F.floor(F.count(F.lit(1)) / F.lit(1000.0)),
+            ).alias("__nb")
         )
-        cand_src = docs.crossJoin(nb_df)
-        draws_nb = nb_df
-        nb = F.col("__nb")
-    else:
-        cand_src = docs
-        draws_nb = None
-        nb = F.lit(buckets)
+    )
+    nb = F.col("__nb")
 
-    cand = cand_src.select(
+    cand = docs.crossJoin(nb_df).select(
         F.col(id_col).alias("cand"),
         F.pmod(
             F.pmod(_n31(F.col(id_col)) * F.lit(2654435761), m32),
@@ -1514,9 +1495,7 @@ def negative_pairs(
                 F.col("id").alias("draw")
             )
         )
-    )
-    if draws_nb is not None:
-        draws = draws.crossJoin(draws_nb)
+    ).crossJoin(nb_df)
     draws = draws.select(
         "anchor",
         "draw",

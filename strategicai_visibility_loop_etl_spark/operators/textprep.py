@@ -1312,8 +1312,6 @@ def quality_blend(
     id_col: str = "doc_id",
     n_buckets: int = 10,
     out_decimals: int = 6,
-    approx: bool = False,
-    accuracy: int = 10_000,
 ) -> DataFrame:
     """Percentile-rank fusion of quality signals: each signal maps to
     its corpus quantile bucket (0..n_buckets−1) and the blend is the
@@ -1328,13 +1326,8 @@ def quality_blend(
     array expression. One scan + one model-sized aggregate total,
     any number of signals.
 
-    ``approx=False`` computes exact interpolated percentiles (the
-    ``quantile_cont`` parity q38 established). ``approx=True`` is the
-    100 TB form: ``percentile_approx``'s mergeable sketch, identical
-    plan shape, cut points within rank error n/``accuracy`` — so a
-    row's bucket can differ from exact by at most 1 when
-    ``accuracy >= n_buckets`` (tolerance-tested in
-    ``tests/test_approx_percentiles.py``).
+    Cut points are exact interpolated percentiles (the
+    ``quantile_cont`` parity q38 established).
 
     Rows with a NULL signal get NULL for that bucket and are excluded
     from the blend mean (blend NULL only if ALL signals are NULL).
@@ -1362,12 +1355,9 @@ def quality_blend(
     cut_epsilon = 5e-8 if nb == 1 else 0.0
     fracs = [i / n_buckets for i in range(1, n_buckets)]
 
-    def _cut(c: str):
-        if approx:
-            return F.percentile_approx(F.col(c), F.lit(fracs), F.lit(accuracy))
-        return F.percentile(F.col(c), F.lit(fracs))
-
-    cuts = df.agg(*[_cut(c).alias(f"__cut_{c}") for c in signal_cols])
+    cuts = df.agg(
+        *[F.percentile(F.col(c), F.lit(fracs)).alias(f"__cut_{c}") for c in signal_cols]
+    )
     out = df.join(F.broadcast(cuts))
     bexprs = {
         c: F.when(
@@ -1405,9 +1395,6 @@ def quantile_normalize(
     source_col: str,
     score_col: str,
     out_col: str = "normalized_score",
-    approx: bool = False,
-    n_cuts: int = 201,
-    accuracy: int = 10_000,
 ) -> DataFrame:
     """Cross-source quantile normalization: map each score to the
     POOLED distribution's value at its within-source quantile —
@@ -1426,14 +1413,7 @@ def quantile_normalize(
     in the DuckDB twin.
 
     Shape: one per-source window (shuffle on source), ONE global sort
-    for the pooled order statistics, two index-keyed join-backs.  The
-    global sort is the exact form's cost — ``approx=True`` is the
-    100 TB form and is EXERCISED with asserted tolerance in
-    ``tests/test_approx_percentiles.py``: the pooled quantile
-    function becomes ``n_cuts`` ``percentile_approx`` cut points (a
-    mergeable sketch, no global sort; the row-129 pattern) and each
-    within-source quantile interpolates between neighboring cuts —
-    the exact form is its accuracy oracle.
+    for the pooled order statistics, two index-keyed join-backs.
     """
     src_w = Window.partitionBy(source_col).orderBy(score_col)
     n_w = Window.partitionBy(source_col)
@@ -1446,27 +1426,6 @@ def quantile_normalize(
     r = F.when(F.col("__n") == 1, F.lit(0.0)).otherwise(
         (F.col("__rk") - 1).cast("double") / (F.col("__n") - 1).cast("double")
     )
-
-    if approx:
-        ps = [i / (n_cuts - 1) for i in range(n_cuts)]
-        cuts = df.agg(
-            F.percentile_approx(
-                score_col, F.array(*[F.lit(p_) for p_ in ps]), accuracy
-            ).alias("__cuts")
-        )
-        posx = r * (n_cuts - 1)
-        lox = F.floor(posx).cast("int")
-        fracx = posx - F.floor(posx)
-        vlo_x = F.element_at(F.col("__cuts"), lox + 1).cast("double")
-        vhi_x = F.element_at(
-            F.col("__cuts"), F.least(lox + F.lit(2), F.lit(n_cuts))
-        ).cast("double")
-        from ..functions.numeric import round_c as _rc
-
-        return ranked.crossJoin(F.broadcast(cuts)).select(
-            *df.columns,
-            _rc(vlo_x + (vhi_x - vlo_x) * fracx, 6).alias(out_col),
-        )
 
     pool_w = Window.orderBy(score_col, source_col)
     pooled = df.select(source_col, score_col).select(

@@ -3,26 +3,32 @@
 The training-data analog of ``plans.pipeline``: one config-driven
 composition of the operators this engine already oracle-gates —
 language ID, quality scoring, PII redaction, exact dedup, near-dup
-cluster collapse, decontamination, chunking, packing, and shard
-assignment — in the order a FineWeb/RefinedWeb-style corpus pass runs
-them. The whole pipeline is a handful of narrow shuffles:
+cluster collapse, decontamination, chunking and shard assignment — in
+the order a FineWeb/RefinedWeb-style corpus pass runs them. The
+config holds only what the corpus CLI sets; every other choice is a
+constant of this module. The whole pipeline is a handful of narrow
+shuffles:
 
-0. domain gate   — blocklist/allowlist by URL host (broadcast dim,
-                   map-side suffix match; the cheapest filter first)
-0b. structural   — C4 line/page rules + within-page duplicate-line
-                   removal (opt-in; pure codegen on the same scan)
+0. domain gate   — blocklist/allowlist by URL host and its parent
+                   domains (broadcast dim, map-side suffix match; the
+                   cheapest filter first)
+0a. repair       — utf-8-as-cp1252 mojibake fix (literal replaces)
+0b. structural   — C4 line/page rules (default thresholds) + within-
+                   page duplicate-line removal (opt-in; pure codegen
+                   on the same scan)
 1. annotate      — lang_id / quality / token counts (zero shuffles)
 2. filter        — lang allowlist + quality floor + length bounds
                    (predicate on the annotated scan)
 3. redact        — PII placeholders (pure regexp projection)
 4. exact dedup   — keep min-id per normalized-text sha256 (one narrow
                    shuffle on a 32-byte digest)
-5. near-dup      — shingle/Jaccard candidate pairs → connected
+5. near-dup      — word-3-gram Jaccard candidate pairs → connected
                    components → keep cluster representative
 6. decontaminate — drop documents sharing ≥k-gram with a benchmark
                    frame (optional; (gram, id)-only shuffle)
-7. emit          — cleaned docs, plus optional chunked and packed
-                   views and a deterministic shard assignment
+7. emit          — cleaned docs, plus optional domain cap, weighted
+                   sample, chunked view and deterministic shard
+                   assignment
 
 With near-dup off, the returned frames are lazy (only an opted-in
 ``lm_filter`` checkpoints its LM table up front). With near-dup on
@@ -47,6 +53,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import (
     bpe_ish_token_count,
+    fix_mojibake,
     lang_id_expr,
     normalized_text,
     quality_score,
@@ -61,54 +68,37 @@ from ..operators.dedup import benchmark_overlap, ngram_jaccard_pairs
 from ..operators.sketch import bloom_prefilter_overlap
 from ..operators.textprep import (
     chunk_documents,
-    pack_sequences,
     redact_pii,
     shard_assignment,
     topk_per_stratum,
     weighted_sample_k,
 )
 
+# Fixed choices, not config: no entry point ever set another value.
+_SHINGLE_K = 3              # near-dup word-shingle width
+_MAX_TOKENS = 1_000_000     # upper length bound of the filter stage
+
 
 def default_corpus_config() -> dict:
     return {
-        "fix_encoding": True,       # repair utf-8-as-cp1252 mojibake first
         "langs": None,              # e.g. ["en", "de"]; None = keep all
         "min_quality": 0.0,         # quality_score floor, 0 disables
         "min_tokens": 8,
-        "max_tokens": 1_000_000,
-        "redact_pii": True,
-        "neardup": {
-            "enable": True,
-            # "jaccard" = exact n-gram Jaccard verify (small corpora /
-            # audits — candidate work grows with true-pair volume);
-            # "minhash" = banded MinHash-LSH (the production path: the
-            # r13 decade ran the same pair volume 21.9 s vs 503 s)
-            "method": "jaccard",
-            "k": 3,                 # shingle width
-            "threshold": 0.8,       # jaccard (estimated, in minhash mode)
-            "max_bucket": "auto",   # hot-shingle skew guard
-            "cc_algorithm": "auto",  # propagation w/ star fallback
-            "num_hashes": 64,       # minhash mode only
-            "bands": 16,            # minhash mode only
-        },
+        # exact n-gram Jaccard verify over word 3-gram shingles; pairs
+        # feed connected components (propagation w/ star fallback)
+        "neardup": {"enable": True, "threshold": 0.8},
         "domain_filter": {"enable": False, "url_col": "url",
                           "domain_col": None, "blocklist": None,
-                          "allowlist": None, "include_subdomains": True},
+                          "allowlist": None},
         # C4 structural page rules + within-page duplicate-line removal
         # (multi-line corpora only — a single-line corpus has no page
         # structure for the line rules to keep, so this is opt-in)
-        "structural": {"enable": False, "min_words_per_line": 5,
-                       "min_sentences": 3, "bad_words": (),
-                       "dedup_lines": True},
+        "structural": {"enable": False, "bad_words": ()},
         "lm_filter": {"enable": False, "min_ppl": 0.0, "max_ppl": None},
         "decontaminate": {"enable": False, "k": 8, "use_bloom": False},
         "domain_cap": {"enable": False, "domain_col": "source", "cap": 1000},
         "sample": {"enable": False, "k": 1000, "weight_col": "n_tokens"},
-        "mixture": {"enable": False, "targets": {}, "k": 1000,
-                    "domain_col": "source"},
         "chunk": {"enable": False, "chunk_tokens": 512, "overlap": 64},
-        "pack": {"enable": False, "budget_tokens": 4096, "stratum_col": None},
-        "tokenize": {"enable": False, "vocab_size": 32768},
         "shards": 0,                # >0 = emit shard assignment
     }
 
@@ -149,16 +139,12 @@ def run_corpus_pipeline(
             allowlist=dfc["allowlist"],
             url_col=dfc["url_col"],
             domain_col=dfc["domain_col"],
-            include_subdomains=dfc["include_subdomains"],
         )
 
-    # 0. encoding repair (ftfy-lite): fix utf-8-as-cp1252 mojibake
+    # 0a. encoding repair (ftfy-lite): fix utf-8-as-cp1252 mojibake
     # before anything tokenizes or hashes the text — a no-op literal
     # replace chain on clean text, still inside the scan's codegen.
-    if cfg["fix_encoding"]:
-        from ..functions.text import fix_mojibake  # noqa: PLC0415
-
-        docs = docs.withColumn(text_col, fix_mojibake(txt))
+    docs = docs.withColumn(text_col, fix_mojibake(txt))
 
     # 0b. structural clean (C4 + intra-page line dedup): both are pure
     # codegen projections/filters on the same scan — junk pages and
@@ -168,17 +154,12 @@ def run_corpus_pipeline(
           **(cfg.get("structural") or {})}
     if st["enable"]:
         from ..operators.c4 import c4_clean  # noqa: PLC0415
+        from ..operators.textprep import dedup_lines_text  # noqa: PLC0415
 
         docs = c4_clean(
-            docs, text_col=text_col,
-            min_words_per_line=st["min_words_per_line"],
-            min_sentences=st["min_sentences"],
-            bad_words=tuple(st["bad_words"] or ()),
+            docs, text_col=text_col, bad_words=tuple(st["bad_words"] or ()),
         )
-        if st["dedup_lines"]:
-            from ..operators.textprep import dedup_lines_text  # noqa: PLC0415
-
-            docs = docs.withColumn(text_col, dedup_lines_text(txt))
+        docs = docs.withColumn(text_col, dedup_lines_text(txt))
 
     # 1. annotate (pure projection: stays in the scan's codegen stage)
     annotated = docs.withColumns(
@@ -193,7 +174,7 @@ def run_corpus_pipeline(
     # 2. filter (predicates push down past the annotations they use)
     kept = annotated.filter(
         (F.col("n_tokens") >= cfg["min_tokens"])
-        & (F.col("n_tokens") <= cfg["max_tokens"])
+        & (F.col("n_tokens") <= _MAX_TOKENS)
     )
     if cfg["langs"]:
         kept = kept.filter(F.col("lang").isin(list(cfg["langs"])))
@@ -223,8 +204,7 @@ def run_corpus_pipeline(
             kept = kept.filter(F.col("ppl") <= lf["max_ppl"])
 
     # 3. redact
-    if cfg["redact_pii"]:
-        kept = kept.withColumn(text_col, redact_pii(txt))
+    kept = kept.withColumn(text_col, redact_pii(txt))
 
     # 4-5. exact dedup + near-dup collapse. collapse_exact already
     # returns unique-normalized-text representatives, so the exact pass
@@ -239,24 +219,13 @@ def run_corpus_pipeline(
         kept = kept.localCheckpoint()
         reps, stars = collapse_exact(
             kept.select(id_col, text_col), text_col=text_col, id_col=id_col,
-            min_tokens=nd["k"],
+            min_tokens=_SHINGLE_K,
         )
-        if nd.get("method", "jaccard") == "minhash":
-            from ..operators.dedup import dedup_minhash_lsh  # noqa: PLC0415
-
-            pairs = dedup_minhash_lsh(
-                reps, text_col=text_col, id_col=id_col, k=nd["k"],
-                num_hashes=nd["num_hashes"], bands=nd["bands"],
-                threshold=nd["threshold"], max_bucket=nd["max_bucket"],
-            ).select("id_a", "id_b")
-        else:
-            pairs = ngram_jaccard_pairs(
-                reps, text_col=text_col, id_col=id_col, k=nd["k"],
-                threshold=nd["threshold"], max_bucket=nd["max_bucket"],
-            ).select("id_a", "id_b")
-        comp = connected_components(
-            stars.unionByName(pairs), algorithm=nd["cc_algorithm"]
-        )
+        pairs = ngram_jaccard_pairs(
+            reps, text_col=text_col, id_col=id_col, k=_SHINGLE_K,
+            threshold=nd["threshold"], max_bucket="auto",
+        ).select("id_a", "id_b")
+        comp = connected_components(stars.unionByName(pairs))
         clean = cluster_representatives(kept, comp, id_col=id_col)
     else:
         norm = normalized_text(F.coalesce(txt, F.lit("")))
@@ -312,40 +281,11 @@ def run_corpus_pipeline(
             clean, k=sm["k"], key_col=id_col, weight_col=sm["weight_col"]
         )
 
-    # 8b. domain mixture re-weighting (DoReMi static step): re-sample
-    # the clean corpus so each target domain contributes in proportion
-    # toward the document budget.
-    mx = {**default_corpus_config()["mixture"], **(cfg.get("mixture") or {})}
-    if mx["enable"]:
-        from ..operators.textprep import mixture_sample  # noqa: PLC0415
-
-        out["mixture"] = mixture_sample(
-            clean, targets=mx["targets"], k=mx["k"],
-            key_col=id_col, domain_col=mx["domain_col"],
-        )
-
     ch = {**default_corpus_config()["chunk"], **(cfg.get("chunk") or {})}
     if ch["enable"]:
         out["chunks"] = chunk_documents(
             clean, chunk_tokens=ch["chunk_tokens"], overlap=ch["overlap"],
             text_col=text_col, id_col=id_col,
-        )
-    pk = {**default_corpus_config()["pack"], **(cfg.get("pack") or {})}
-    if pk["enable"]:
-        out["packed"] = pack_sequences(
-            clean.select(id_col, "n_tokens", *([pk["stratum_col"]] if pk["stratum_col"] else [])),
-            budget_tokens=pk["budget_tokens"],
-            id_col=id_col,
-            stratum_col=pk["stratum_col"],
-        )
-    tk = {**default_corpus_config()["tokenize"], **(cfg.get("tokenize") or {})}
-    if tk["enable"]:
-        from ..operators.textprep import build_vocab, encode_tokens  # noqa: PLC0415
-
-        vocab = build_vocab(clean, vocab_size=tk["vocab_size"], text_col=text_col)
-        out["vocab"] = vocab
-        out["tokens"] = encode_tokens(
-            clean, vocab, text_col=text_col, id_col=id_col
         )
     if cfg["shards"]:
         out["shards"] = shard_assignment(

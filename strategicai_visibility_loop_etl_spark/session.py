@@ -20,7 +20,10 @@ and is keyed by the ``java`` binary and the jars in ``$SPARK_HOME/jars``
 first session on a box asks its JVM to write the archive at exit; an
 ``atexit`` hook ends that JVM, waits for it and publishes the archive
 only if it exited cleanly, so no session maps a partly written file.
-Every later session maps it.
+Every later session maps it. If a driver JVM that maps a published
+archive fails to start (the file was truncated or damaged after it was
+published), that archive is deleted and the launch is retried once as
+a first session would, dumping a fresh one.
 The archive is skipped, and the launch is exactly as without it, when
 the Spark conf dir holds anything but ``*.template`` files, when
 ``HADOOP_CONF_DIR``/``YARN_CONF_DIR``/``SPARK_DIST_CLASSPATH`` add to
@@ -40,6 +43,7 @@ import subprocess
 from typing import NamedTuple
 
 from pyspark import SparkContext
+from pyspark.errors import PySparkRuntimeError
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
@@ -174,6 +178,20 @@ def _publish_archive(proc: subprocess.Popen, archive: _Archive) -> None:
                 pass
 
 
+def _launch_with_archive(builder: SparkSession.Builder, archive: _Archive) -> SparkSession:
+    # Appended to any --driver-java-options, not in place of them.
+    builder = builder.config("spark.driver.defaultJavaOptions", archive.java_options)
+    saved = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = archive.conf_dir
+    try:
+        return builder.getOrCreate()
+    finally:
+        if saved is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = saved
+
+
 def get_spark(app_name: str = "strategicai_visibility_loop_etl_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = default_cpus()
@@ -198,17 +216,21 @@ def get_spark(app_name: str = "strategicai_visibility_loop_etl_spark", cpus: int
     if archive is None:
         spark = builder.getOrCreate()
     else:
-        # Appended to any --driver-java-options, not in place of them.
-        builder = builder.config("spark.driver.defaultJavaOptions", archive.java_options)
-        saved = os.environ.get("SPARK_CONF_DIR")
-        os.environ["SPARK_CONF_DIR"] = archive.conf_dir
         try:
-            spark = builder.getOrCreate()
-        finally:
-            if saved is None:
-                del os.environ["SPARK_CONF_DIR"]
-            else:
-                os.environ["SPARK_CONF_DIR"] = saved
+            spark = _launch_with_archive(builder, archive)
+        except PySparkRuntimeError as e:
+            if archive.dump_to is not None or e.getCondition() != "JAVA_GATEWAY_EXITED":
+                raise
+            # A published archive the JVM cannot map crashes it at
+            # start; drop it and launch as a first session would.
+            try:
+                os.remove(archive.path)
+            except FileNotFoundError:
+                pass
+            archive = _class_data_archive()
+            if archive is None:
+                raise
+            spark = _launch_with_archive(builder, archive)
         if archive.dump_to is not None:
             atexit.register(_publish_archive, SparkContext._gateway.proc, archive)
     spark.sparkContext.setLogLevel("ERROR")

@@ -58,21 +58,6 @@ def test_salted_join_equals_plain_join(spark, sf_dir):
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
 
 
-def test_salted_join_rejects_outer(spark, sf_dir):
-    import pytest
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        F.col("l_partkey").alias("p_partkey"), "l_quantity"
-    )
-    part = spark.read.parquet(f"{sf_dir}/part.parquet").select("p_partkey", "p_brand")
-    for how in ("right", "right_outer", "full", "full_outer", "outer"):
-        with pytest.raises(ValueError, match="salted_join"):
-            salted_join(li, part, "p_partkey", salt=4, how=how)
-    # left joins stay supported (unmatched LEFT rows carry one salt value)
-    n_left = li.count()
-    assert salted_join(li, part, "p_partkey", salt=4, how="left").count() == n_left
-
-
 def _session_events(spark):
     t0 = datetime(2024, 1, 1, 0, 0, 0)
     rows = []

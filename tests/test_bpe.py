@@ -126,7 +126,7 @@ def test_bpe_encode_plan_is_shuffle_free(spark):
     plan = bpe_encode(df, merges)._sc._jvm.PythonSQLUtils.explainString(
         bpe_encode(df, merges)._jdf.queryExecution(), "formatted"
     )
-    assert "Exchange" not in plan and "BatchEvalPython" not in plan
+    assert "Exchange" not in plan and "EvalPython" not in plan
 
 
 def _ref_bpe_batched(word_counts: dict[str, int], n_merges: int,
@@ -233,76 +233,3 @@ def test_bpe_batched_kept_pairs_are_symbol_disjoint(spark):
     assert got == [("e", "s", 100), ("a", "b", 80), ("c", "d", 80),
                    ("q", "r", 60)]
     assert _greedy_disjoint(rows, 2) == [("e", "s", 100), ("a", "b", 80)]
-
-
-def _plan(df):
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
-def test_bpe_encode_broadcast_matches_expr_on_trained_table(spark, sf_dir):
-    """The production broadcast path (min-rank loop over a broadcast
-    pair→rank table) is bit-identical to the expr path (in-rank-order
-    chained replaces) on a real trained merge table over the fixture
-    corpus — the well-formedness argument in the module docstring,
-    pinned. Also identical to the independent Python reference loop's
-    segmentation for every trained word."""
-    from strategicai_visibility_loop_etl_spark.operators.bpe import (
-        bpe_encode,
-        bpe_train,
-    )
-
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text")
-        .limit(120)
-    )
-    merges = bpe_train(docs, n_merges=80, batch_size=16, min_count=2)
-    assert len(merges) == 80
-    a = {
-        r["doc_id"]: (r["n_words"], r["n_bpe"], r["encoded"])
-        for r in bpe_encode(docs, merges, method="expr").collect()
-    }
-    b = {
-        r["doc_id"]: (r["n_words"], r["n_bpe"], r["encoded"])
-        for r in bpe_encode(docs, merges, method="broadcast").collect()
-    }
-    assert a == b
-    # and "auto" routes by table size: 80 > 64 -> broadcast
-    auto = {
-        r["doc_id"]: (r["n_words"], r["n_bpe"], r["encoded"])
-        for r in bpe_encode(docs, merges).collect()
-    }
-    assert auto == b
-
-
-def test_bpe_encode_broadcast_nulls_unseen_and_plan_shape(spark):
-    from strategicai_visibility_loop_etl_spark.operators.bpe import (
-        bpe_encode,
-        bpe_train,
-    )
-    import pytest as _pytest
-
-    df = spark.createDataFrame(
-        [(1, "ab ab ab"), (2, None), (3, "   ")], "doc_id long, text string"
-    )
-    merges = bpe_train(df, n_merges=1)
-    enc = {
-        r["doc_id"]: r
-        for r in bpe_encode(df, merges, method="broadcast").collect()
-    }
-    assert enc[2]["n_bpe"] == 0 and enc[2]["encoded"] == ""
-    assert enc[3]["n_bpe"] == 0 and enc[3]["encoded"] == ""
-    assert enc[1]["encoded"] == "ab ab ab" and enc[1]["n_words"] == 3
-
-    # plan: no shuffle, Arrow-batched (never row-at-a-time) Python
-    plan = _plan(bpe_encode(df, merges, method="broadcast"))
-    assert "Exchange" not in plan and "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" in plan
-    # expr path for a small table stays pure-JVM under auto
-    plan_auto = _plan(bpe_encode(df, merges))
-    assert "ArrowEvalPython" not in plan_auto
-
-    with _pytest.raises(ValueError):
-        bpe_encode(df, merges, method="nope")

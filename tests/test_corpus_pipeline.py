@@ -44,9 +44,8 @@ def corpus(spark):
 def test_corpus_pipeline_stages(corpus):
     cfg = default_corpus_config()
     cfg["min_tokens"] = 6
-    cfg["neardup"] = {"enable": True, "k": 3, "threshold": 0.5, "max_bucket": 10**6}
+    cfg["neardup"] = {"enable": True, "threshold": 0.5}
     cfg["chunk"] = {"enable": True, "chunk_tokens": 8, "overlap": 2}
-    cfg["pack"] = {"enable": True, "budget_tokens": 16, "stratum_col": None}
     cfg["shards"] = 2
     out = run_corpus_pipeline(corpus, cfg)
 
@@ -67,9 +66,6 @@ def test_corpus_pipeline_stages(corpus):
     assert all(r["doc_id"] in {1, 4} for r in chunks)
     assert any(r["chunk_idx"] > 0 for r in chunks)  # BASE splits into >1 chunk
 
-    packs = {r["doc_id"]: r["pack_id"] for r in out["packed"].collect()}
-    assert set(packs) == {1, 4}
-
     shards = {r["doc_id"]: r["shard"] for r in out["shards"].collect()}
     assert set(shards) == {1, 4}
     assert all(0 <= s < 2 for s in shards.values())
@@ -88,17 +84,16 @@ def test_corpus_pipeline_neardup_reads_kept_checkpoint(corpus):
     plan = out["clean"]._jdf.queryExecution().optimizedPlan().toString()
     assert "regexp_replace" not in plan, plan
 
-    nd = default_corpus_config()["neardup"]
     kept = (
         out["annotated"]
-        .filter(F.col("n_tokens").between(cfg["min_tokens"], cfg["max_tokens"]))
+        .filter(F.col("n_tokens").between(cfg["min_tokens"], 1_000_000))
         .withColumn("text", redact_pii(F.col("text")))
     )
-    reps, stars = collapse_exact(kept.select("doc_id", "text"), min_tokens=nd["k"])
+    reps, stars = collapse_exact(kept.select("doc_id", "text"), min_tokens=3)
     pairs = ngram_jaccard_pairs(
-        reps, k=nd["k"], threshold=0.5, max_bucket=nd["max_bucket"]
+        reps, k=3, threshold=0.5, max_bucket="auto"
     ).select("id_a", "id_b")
-    comp = connected_components(stars.unionByName(pairs), algorithm=nd["cc_algorithm"])
+    comp = connected_components(stars.unionByName(pairs))
     want = cluster_representatives(kept, comp)
 
     assert out["clean"].columns == want.columns
@@ -138,30 +133,6 @@ def test_ngram_jaccard_pairs_reads_shingle_checkpoint(corpus):
     assert all(abs(got[p] - want[p]) < 1e-6 for p in want)
 
 
-def test_corpus_pipeline_minhash_method(corpus):
-    """neardup.method='minhash' — the production-scale near-dup leg
-    (banded MinHash-LSH instead of exact n-gram Jaccard; the r13
-    decade measured 503 s vs 21.9 s for the same pair volume). On this
-    fixture the near-dup cluster {1,2,3,6} collapses identically to
-    the jaccard leg: signatures of ~13-shingle docs sharing >90% of
-    shingles agree on most of the 64 minhashes, and threshold 0.5
-    verifies on the estimate."""
-    cfg = default_corpus_config()
-    cfg["min_tokens"] = 6
-    cfg["neardup"] = {
-        "enable": True,
-        "method": "minhash",
-        "k": 3,
-        "threshold": 0.5,
-        "num_hashes": 64,
-        "bands": 16,
-        "max_bucket": 10**6,
-    }
-    out = run_corpus_pipeline(corpus, cfg)
-    clean = {r["doc_id"] for r in out["clean"].collect()}
-    assert clean == {1, 4}
-
-
 def test_corpus_pipeline_exact_only_and_filters(corpus):
     cfg = default_corpus_config()
     cfg["min_tokens"] = 6
@@ -193,7 +164,7 @@ def test_corpus_pipeline_decontaminate(corpus, spark):
 def test_corpus_pipeline_on_real_documents(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     cfg = default_corpus_config()
-    cfg["neardup"] = {"enable": True, "k": 3, "threshold": 0.8, "max_bucket": 10**6}
+    cfg["neardup"] = {"enable": True, "threshold": 0.8}
     out = run_corpus_pipeline(docs, cfg)
     n_in = docs.count()
     n_clean = out["clean"].count()
@@ -275,22 +246,6 @@ def test_corpus_cli_new_stage_flags(spark, sf_dir, tmp_path):
     assert clean.filter(F.col("ppl") > 1000).count() == 0
 
 
-def test_corpus_pipeline_tokenize_outputs(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    cfg = default_corpus_config()
-    cfg["neardup"] = {"enable": False}
-    cfg["tokenize"] = {"enable": True, "vocab_size": 16}
-    out = run_corpus_pipeline(docs, cfg)
-    vocab = out["vocab"].collect()
-    assert len(vocab) == 16
-    ids = {r["token_id"] for r in vocab}
-    assert ids == set(range(16))
-    toks = out["tokens"]
-    assert set(toks.columns) == {"id", "pos", "token_id"}
-    sample = toks.limit(200).collect()
-    assert sample and all(r["token_id"] >= -1 for r in sample)
-
-
 def test_corpus_pipeline_lm_filter_band(corpus):
     """The perplexity-band stage trims the tails: the repeated-text
     family (1/2/3/6) shares most tokens, so its docs score low ppl;
@@ -337,7 +292,6 @@ def test_corpus_pipeline_lm_filter_no_bounds_keeps_tokenless(spark):
     )
     cfg = default_corpus_config()
     cfg["min_tokens"] = 0
-    cfg["redact_pii"] = False
     cfg["neardup"] = {"enable": False}
     cfg["lm_filter"] = {"enable": True, "min_ppl": 0.0, "max_ppl": None}
     clean = run_corpus_pipeline(docs, cfg)["clean"]
@@ -366,24 +320,6 @@ def test_corpus_pipeline_fix_encoding(spark):
     kept = {r["doc_id"] for r in run_corpus_pipeline(corpus, cfg)["clean"].collect()}
     assert kept == {1, 3}  # 2 is an exact dup of 1 after repair
 
-    cfg["fix_encoding"] = False
-    kept_raw = {r["doc_id"] for r in run_corpus_pipeline(corpus, cfg)["clean"].collect()}
-    assert kept_raw == {1, 2, 3}  # without repair the ghost survives
-
-
-def test_corpus_pipeline_mixture_output(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text", "source"
-    )
-    cfg = default_corpus_config()
-    cfg["neardup"] = {"enable": False}
-    cfg["mixture"] = {"enable": True, "k": 60,
-                      "targets": {"src0": 3.0, "src1": 1.0}}
-    out = run_corpus_pipeline(docs, cfg)
-    mix = out["mixture"].collect()
-    assert len(mix) > 0
-    assert {r["source"] for r in mix} <= {"src0", "src1"}
-
 
 def test_corpus_pipeline_structural_stage(spark):
     """Stage 0b: C4 page rules + within-page line dedup run BEFORE
@@ -407,11 +343,9 @@ def test_corpus_pipeline_structural_stage(spark):
     )
     cfg = {
         **default_corpus_config(),
-        "structural": {"enable": True, "dedup_lines": True},
+        "structural": {"enable": True},
         "min_tokens": 1,
         "neardup": {"enable": False},
-        "redact_pii": False,
-        "fix_encoding": False,
     }
     clean = run_corpus_pipeline(docs, cfg)["clean"]
     rows = {r["doc_id"]: r["text"] for r in clean.collect()}

@@ -763,9 +763,10 @@ def test_boilerplate_incremental_equivalence_to_full(spark, tmp_path):
 
 @pytest.mark.sweep
 def test_boilerplate_incremental_index_update_and_recrawl(spark, tmp_path):
-    """update_index accumulates batch partials; a re-crawled id is
-    dropped from output and cannot inflate any line's df; two
-    sequential batches equal one combined batch."""
+    """Extending the index with each processed batch accumulates its
+    partials; a re-crawled id is dropped from output and cannot
+    inflate any line's df; two sequential batches equal one combined
+    batch."""
     from strategicai_visibility_loop_etl_spark.operators.dedup import (
         boilerplate_excision_incremental,
         boilerplate_line_excision,
@@ -779,11 +780,10 @@ def test_boilerplate_incremental_index_update_and_recrawl(spark, tmp_path):
     line_df_index_write(arch, idx)
 
     b1 = spark.createDataFrame([(2, f"{promo}\nbatch one body")], schema)
-    out1 = boilerplate_excision_incremental(
-        b1, idx, min_df=2, update_index=True
-    ).collect()
+    out1 = boilerplate_excision_incremental(b1, idx, min_df=2).collect()
     assert {r["doc_id"] for r in out1} == {2}
     assert promo not in out1[0]["clean_text"]  # archive df 1 + batch 1
+    line_df_index_write(b1, idx)
 
     # batch 2 re-crawls id 2 (dropped) and adds id 3
     b2 = spark.createDataFrame(
@@ -791,10 +791,11 @@ def test_boilerplate_incremental_index_update_and_recrawl(spark, tmp_path):
         schema,
     )
     out2 = {r["doc_id"]: r for r in boilerplate_excision_incremental(
-        b2, idx, min_df=2, update_index=True
+        b2, idx, min_df=2
     ).collect()}
     assert set(out2) == {3}, "re-crawled id must not re-emit"
     assert promo not in out2[3]["clean_text"]
+    line_df_index_write(b2.filter("doc_id = 3"), idx)
 
     # index df for the promo line == 3 distinct docs, not 4
     lines = spark.read.parquet(f"{idx}/lines")
@@ -807,6 +808,7 @@ def test_boilerplate_incremental_index_update_and_recrawl(spark, tmp_path):
         _F.xxhash64("l").alias("lh")
     ).first()["lh"]
     assert got_df[promo_lh] == 3, got_df[promo_lh]
+    assert spark.read.parquet(f"{idx}/ids").columns == ["id"]
 
     # accumulated results == full recompute over everything (fresh ids)
     all_docs = arch.unionByName(b1).unionByName(
@@ -876,9 +878,10 @@ def test_exactsubstr_incremental_equivalence_to_full(spark, tmp_path):
 
 
 def test_exactsubstr_incremental_index_update_and_recrawl(spark, tmp_path):
-    """update_index accumulates occurrence partials; a re-crawled id
-    is dropped and cannot double its grams' counts; a later batch sees
-    earlier batches' grams as archive."""
+    """Extending the index with each processed batch accumulates its
+    occurrence partials; a re-crawled id is dropped and cannot double
+    its grams' counts; a later batch sees earlier batches' grams as
+    archive."""
     from strategicai_visibility_loop_etl_spark.operators.dedup import (
         exactsubstr_incremental,
         substr_gram_index_write,
@@ -891,10 +894,9 @@ def test_exactsubstr_incremental_index_update_and_recrawl(spark, tmp_path):
     substr_gram_index_write(arch, idx, k=5)
 
     b1 = spark.createDataFrame([(2, f"first batch {span} first end")], schema)
-    out1 = exactsubstr_incremental(
-        b1, idx, k=5, update_index=True
-    ).collect()
+    out1 = exactsubstr_incremental(b1, idx, k=5).collect()
     assert out1[0]["n_removed"] > 0  # span present in archive
+    substr_gram_index_write(b1, idx, k=5)
 
     # batch 2 re-crawls id 2 and adds id 3; id 2 must not re-emit and
     # id 3 must still hit the span via index accumulated through b1
@@ -904,10 +906,11 @@ def test_exactsubstr_incremental_index_update_and_recrawl(spark, tmp_path):
         schema,
     )
     out2 = {r["doc_id"]: r for r in exactsubstr_incremental(
-        b2, idx, k=5, update_index=True
+        b2, idx, k=5
     ).collect()}
     assert set(out2) == {3}
     assert out2[3]["n_removed"] > 0
+    substr_gram_index_write(b2.filter("doc_id = 3"), idx, k=5)
 
     # occurrence count for a span gram: one per distinct doc (1, 2, 3)
     import pyspark.sql.functions as _F
@@ -1093,24 +1096,21 @@ def test_winnowing_guarantee_and_reference_values(spark):
         ],
         "doc_id long, text string",
     )
-    fps = winnow_fingerprints(docs, k=5, window=4, exploded=True)
-    by_doc = {}
-    for r in fps.collect():
-        by_doc.setdefault(r["doc_id"], set()).add(r["fp"])
-    assert by_doc[1] & by_doc[2], "guaranteed shared fingerprint missing"
-
     # Python reference implementation on the normalized string (the
     # inputs are already lowercase single-spaced -> normalize is
     # identity here): exact n_grams / n_fingerprints / checksum.
-    def ref(s, k=5, w=4):
+    def ref_fps(s, k=5, w=4):
         hs = []
         for i in range(len(s) - k + 1):
             a = 0
             for ch in s[i:i + k]:
                 a = (a * 31 + ord(ch)) % 1_000_000_007
             hs.append(a)
-        fps = {min(hs[p - w + 1:p + 1]) for p in range(w - 1, len(hs))}
-        return len(hs), len(fps), sum(fps)
+        return len(hs), {min(hs[p - w + 1:p + 1]) for p in range(w - 1, len(hs))}
+
+    def ref(s):
+        n, fps = ref_fps(s)
+        return n, len(fps), sum(fps)
 
     prof = {r["doc_id"]: (r["n_grams"], r["n_fingerprints"], r["fp_checksum"])
             for r in winnow_fingerprints(docs, k=5, window=4).collect()}
@@ -1121,6 +1121,9 @@ def test_winnowing_guarantee_and_reference_values(spark):
     }
     for d, t in texts.items():
         assert prof[d] == ref(t), f"doc {d}"
+    assert ref_fps(texts[1])[1] & ref_fps(texts[2])[1], (
+        "guaranteed shared fingerprint missing"
+    )
 
     # Degenerate: text shorter than k -> zero grams, zero density.
     tiny = spark.createDataFrame([(9, "ab")], "doc_id long, text string")
@@ -1317,233 +1320,6 @@ def test_ivf_lists_stage_partitioned_and_pruned(spark, sf_dir, tmp_path):
     assert len({int(x) for x in m_in.group(1).split(",")}) <= 3 * 2
 
 
-@pytest.mark.sweep
-def test_line_excision_refresh_replaces_stale_content(spark, tmp_path):
-    """Line-index content refresh (the count-index half of the
-    round-9 verdict's item 3): a re-crawled id's OLD lines leave the
-    document-frequency view via stored per-id details + negative
-    partials, so excision equals a fresh corpus that never held the
-    stale text — and the immutable-mode control shows the stale count
-    would have flipped the outcome."""
-    from strategicai_visibility_loop_etl_spark.operators.dedup import (
-        boilerplate_excision_incremental,
-        boilerplate_line_excision,
-        line_df_index_write,
-    )
-
-    schema = "doc_id long, text string"
-    archive_rows = [
-        (1, "body one\nunique line a"),
-        (2, "stale promo\nbody two"),
-        (3, "body three\nunique line b"),
-    ]
-    batch_rows = [
-        (2, "fresh promo\nnew body two"),   # re-crawl, content changed
-        (7, "stale promo\nbody seven"),     # new doc carrying the OLD promo
-        (8, "fresh promo\nbody eight"),     # new doc carrying the NEW promo
-    ]
-    archive = spark.createDataFrame(archive_rows, schema)
-    batch = spark.createDataFrame(batch_rows, schema)
-
-    idx = str(tmp_path / "ref_idx")
-    line_df_index_write(archive, idx)
-    got = {
-        r["doc_id"]: r["clean_text"]
-        for r in boilerplate_excision_incremental(
-            batch, idx, min_df=2, update_index=True, refresh=True
-        ).collect()
-    }
-    # oracle: full recompute over the corpus AS IF doc 2 always had
-    # the new text, restricted to batch ids
-    corrected = spark.createDataFrame(
-        [archive_rows[0], archive_rows[2]] + batch_rows, schema
-    )
-    want = {
-        r["doc_id"]: r["clean_text"]
-        for r in boilerplate_line_excision(corrected, min_df=2).collect()
-        if r["doc_id"] in (2, 7, 8)
-    }
-    assert got == want
-    # the stale promo now has df 1 (only doc 7) -> KEPT; the fresh
-    # promo has df 2 (docs 2, 8) -> excised
-    assert "stale promo" in got[7]
-    assert "fresh promo" not in got[2] and "fresh promo" not in got[8]
-
-    # net-count invariant: lines/ sums equal the corrected corpus df
-    import collections
-
-    from strategicai_visibility_loop_etl_spark.operators.dedup import (
-        _line_tables,
-    )
-
-    net = {
-        r["lh"]: r["s"]
-        for r in spark.read.parquet(f"{idx}/lines")
-        .groupBy("lh").agg(F.sum("cnt").alias("s")).collect()
-        if r["s"] != 0
-    }
-    _, pos = _line_tables(corrected, "text", "doc_id")
-    want_net = collections.Counter(
-        (r["lh"])
-        for r in pos.select("id", "lh").distinct().collect()
-    )
-    assert net == dict(want_net)
-
-    # CONTROL: the immutable-mode run on an identical index counts the
-    # stale copy, so 'stale promo' reaches df 2 and is (wrongly, had
-    # the content really changed) excised from doc 7
-    idx2 = str(tmp_path / "imm_idx")
-    line_df_index_write(archive, idx2)
-    ctl = {
-        r["doc_id"]: r["clean_text"]
-        for r in boilerplate_excision_incremental(
-            batch, idx2, min_df=2
-        ).collect()
-    }
-    assert 2 not in ctl  # re-crawl dropped entirely in immutable mode
-    assert "stale promo" not in ctl[7]
-
-
-def test_line_excision_refresh_requires_detail_layout(spark, tmp_path):
-    """A pre-detail index (bare id rows) anti-joins fine but cannot
-    refresh — the operator raises instead of silently double-counting."""
-    import pytest as _pytest
-
-    from strategicai_visibility_loop_etl_spark.operators.dedup import (
-        boilerplate_excision_incremental,
-        _line_tables,
-    )
-
-    schema = "doc_id long, text string"
-    archive = spark.createDataFrame([(1, "promo\nbody one")], schema)
-    idx = str(tmp_path / "legacy_idx")
-    _, pos = _line_tables(archive, "text", "doc_id")
-    pos.select("id", "lh").distinct().groupBy("lh").agg(
-        F.count("*").alias("cnt")
-    ).write.parquet(f"{idx}/lines")
-    archive.select(F.col("doc_id").alias("id")).write.parquet(f"{idx}/ids")
-
-    batch = spark.createDataFrame([(1, "promo\nnew body")], schema)
-    # immutable mode still works on the legacy layout
-    assert boilerplate_excision_incremental(batch, idx, min_df=2).count() == 0
-    with _pytest.raises(ValueError, match="detail"):
-        boilerplate_excision_incremental(batch, idx, min_df=2, refresh=True)
-
-
-@pytest.mark.sweep
-def test_exactsubstr_refresh_replaces_stale_content(spark, tmp_path):
-    """Gram-index content refresh (opt-in details): a re-crawled id's
-    old gram occurrences subtract via the stored per-doc detail, so
-    excision equals the corpus with the stale content replaced; a
-    detail-less index refuses to refresh."""
-    import pytest as _pytest
-
-    from strategicai_visibility_loop_etl_spark.operators.dedup import (
-        exactsubstr_dedup,
-        exactsubstr_incremental,
-        substr_gram_index_write,
-    )
-
-    stale_run = "alpha beta gamma delta epsilon zeta eta theta"
-    fresh_run = "one two three four five six seven eight"
-    schema = "doc_id long, text string"
-    archive_rows = [
-        (1, "unique opener " + " ".join(f"w{i}" for i in range(10))),
-        (2, stale_run + " tail words here for doc two"),
-    ]
-    batch_rows = [
-        (2, fresh_run + " rewritten content entirely"),
-        (7, stale_run + " appearing again in doc seven"),
-        (8, fresh_run + " appearing again in doc eight"),
-    ]
-    archive = spark.createDataFrame(archive_rows, schema)
-    batch = spark.createDataFrame(batch_rows, schema)
-
-    idx = str(tmp_path / "gr_idx")
-    substr_gram_index_write(archive, idx, k=8, store_details=True)
-    got = {
-        r["doc_id"]: r["clean_text"]
-        for r in exactsubstr_incremental(
-            batch, idx, k=8, update_index=True, refresh=True
-        ).collect()
-    }
-    corrected = spark.createDataFrame(
-        [archive_rows[0]] + batch_rows, schema
-    )
-    want = {
-        r["doc_id"]: r["clean_text"]
-        for r in exactsubstr_dedup(corrected, k=8).collect()
-        if r["doc_id"] in (2, 7, 8)
-    }
-    assert got == want
-    # doc 7's stale_run is now UNIQUE (old doc-2 copy subtracted) ...
-    assert "alpha beta gamma" in got[7]
-    # ... while fresh_run duplicates across docs 2 and 8
-    assert "one two three" not in got[8]
-
-    # net-count invariant against the corrected corpus
-    from strategicai_visibility_loop_etl_spark.operators.dedup import (
-        _gram_tables,
-    )
-
-    net = {
-        r["gh"]: r["s"]
-        for r in spark.read.parquet(f"{idx}/grams")
-        .groupBy("gh").agg(F.sum("cnt").alias("s")).collect()
-        if r["s"] != 0
-    }
-    _, pos = _gram_tables(corrected, 8, "text", "doc_id")
-    want_net = {
-        r["gh"]: r["c"]
-        for r in pos.groupBy("gh").agg(F.count("*").alias("c")).collect()
-    }
-    assert net == want_net
-
-    # detail-less index refuses refresh
-    idx2 = str(tmp_path / "nodet_idx")
-    substr_gram_index_write(archive, idx2, k=8)
-    with _pytest.raises(ValueError, match="store_details"):
-        exactsubstr_incremental(batch, idx2, k=8, refresh=True)
-    # and immutable mode still works there
-    assert exactsubstr_incremental(batch, idx2, k=8).count() == 2
-
-
-def test_exactsubstr_refresh_mixed_history_raises(spark, tmp_path):
-    """An id indexed BEFORE store_details=True has no subtractable
-    contribution: refresh must raise on it rather than silently
-    double-count (detail rows exist for other ids, so the dir-level
-    check alone is not enough)."""
-    import pytest as _pytest
-
-    from strategicai_visibility_loop_etl_spark.operators.dedup import (
-        exactsubstr_incremental,
-        substr_gram_index_write,
-    )
-
-    schema = "doc_id long, text string"
-    early = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta")], schema
-    )
-    later = spark.createDataFrame(
-        [(2, "one two three four five six seven eight nine")], schema
-    )
-    idx = str(tmp_path / "mix_idx")
-    substr_gram_index_write(early, idx, k=8)                      # no details
-    substr_gram_index_write(later, idx, k=8, store_details=True)  # details
-    # refreshing the detailed id works
-    out = exactsubstr_incremental(
-        spark.createDataFrame([(2, "fresh text entirely new words here ok")], schema),
-        idx, k=8, refresh=True,
-    )
-    assert out.count() == 1
-    # refreshing the pre-detail id raises
-    with _pytest.raises(ValueError, match="detail"):
-        exactsubstr_incremental(
-            spark.createDataFrame([(1, "changed content")], schema),
-            idx, k=8, refresh=True,
-        )
-
-
 def test_simhash_pairs_null_fingerprints_quarantined(spark):
     """NULL fingerprints (undecodable media quarantined upstream) are
     excluded from banding — they can neither pair nor poison a
@@ -1658,9 +1434,9 @@ def test_negative_pairs_deterministic_and_excluding(spark):
     docs = spark.createDataFrame(
         [(i,) for i in range(40)], "doc_id long"
     )
-    a = sorted(map(tuple, negative_pairs(docs, k=2, buckets=4).collect()))
+    a = sorted(map(tuple, negative_pairs(docs, k=2).collect()))
     b = sorted(
-        map(tuple, negative_pairs(docs.repartition(7), k=2, buckets=4).collect())
+        map(tuple, negative_pairs(docs.repartition(7), k=2).collect())
     )
     assert a == b and len(a) > 0
     assert all(anchor != neg for anchor, _, neg in a)
@@ -1675,39 +1451,39 @@ def test_negative_pairs_deterministic_and_excluding(spark):
     banned = {(x, z) for x, z in ex.collect()} | {
         (z, x) for x, z in ex.collect()
     }
-    c = negative_pairs(docs, k=2, buckets=4, exclude_pairs=ex).collect()
+    c = negative_pairs(docs, k=2, exclude_pairs=ex).collect()
     assert all((r["anchor_id"], r["negative_id"]) not in banned for r in c)
 
 
 def test_negative_pairs_auto_buckets(spark):
-    """buckets='auto' derives B = max(16, floor(N/1000)) from a
-    broadcast scalar subquery — identical output to the explicit B it
-    resolves to (here the N<16000 floor, B=16), partition-invariant,
-    and rejecting non-'auto' strings. The linearity contract: at
-    fixed B total work is O(N^2/B) (the r13 decade measured 133x time
-    for 10x data); auto pins bucket SIZE ~1000 instead, making work
-    O(N*k*1000)."""
-    import pytest as _pytest
-
+    """The bucket count is B = max(16, floor(N/1000)) from a broadcast
+    scalar subquery (here the N<16000 floor, B=16): output equals a
+    pure-Python replay of the hashes at that B. The linearity
+    contract: at fixed B total work is O(N^2/B) (the r13 decade
+    measured 133x time for 10x data); deriving B pins bucket SIZE
+    ~1000 instead, making work O(N*k*1000)."""
     from strategicai_visibility_loop_etl_spark.operators.similarity import (
         negative_pairs,
     )
 
-    docs = spark.createDataFrame(
-        [(i,) for i in range(40)], "doc_id long"
-    )
-    auto = sorted(map(tuple, negative_pairs(docs, k=2).collect()))
-    explicit = sorted(
-        map(tuple, negative_pairs(docs, k=2, buckets=16).collect())
-    )
-    assert auto == explicit and len(auto) > 0
-    repart = sorted(
-        map(tuple, negative_pairs(docs.repartition(7), k=2).collect())
-    )
-    assert auto == repart
+    ids = range(40)
+    docs = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+    got = sorted(map(tuple, negative_pairs(docs, k=2).collect()))
 
-    with _pytest.raises(ValueError, match="auto"):
-        negative_pairs(docs, buckets="adaptive")
+    m31, m32, nb = 1 << 31, 1 << 32, 16
+    cand_bucket = {c: (c % m31) * 2654435761 % m32 % nb for c in ids}
+    want = []
+    for a in ids:
+        for d in (1, 2):
+            b = ((a % m31) * 2654435761 + d * 40503) % m32 % nb
+            cands = [
+                ((((a % m31) * 31 + c % m31) % m31 * 2654435761 + d) % m32, c)
+                for c in ids
+                if cand_bucket[c] == b and c != a
+            ]
+            if cands:
+                want.append((a, d, min(cands)[1]))
+    assert got == sorted(want) and len(got) > 0
 
 
 def test_negative_pairs_id_domain_contract(spark):
@@ -1727,9 +1503,9 @@ def test_negative_pairs_id_domain_contract(spark):
     big = spark.createDataFrame(
         [((1 << 61) + i,) for i in range(30)], "doc_id long"
     )
-    a = sorted(map(tuple, negative_pairs(big, k=2, buckets=4).collect()))
+    a = sorted(map(tuple, negative_pairs(big, k=2).collect()))
     b = sorted(
-        map(tuple, negative_pairs(big.repartition(5), k=2, buckets=4).collect())
+        map(tuple, negative_pairs(big.repartition(5), k=2).collect())
     )
     assert a == b and len(a) > 0
     assert all(x != z for x, _, z in a)

@@ -29,16 +29,6 @@ def test_blocklist_subdomains_and_boundaries(spark):
     assert kept == [2, 3, 4, 5]
 
 
-def test_blocklist_exact_host_only(spark):
-    out = domain_filter(
-        _docs(spark), blocklist=["example.com"], include_subdomains=False
-    )
-    kept = sorted(r["doc_id"] for r in out.collect())
-    # only doc 6 (host exactly example.com) is blocked; www./deep.sub.
-    # subdomains survive in exact mode
-    assert kept == [0, 1, 2, 3, 4, 5]
-
-
 def test_allowlist_strict_drops_hostless(spark):
     out = domain_filter(_docs(spark), allowlist=["example.com"])
     kept = sorted(r["doc_id"] for r in out.collect())
@@ -88,7 +78,6 @@ def test_corpus_pipeline_domain_gate(spark):
         "domain_filter": {"enable": True, "domain_col": "source",
                           "blocklist": ["src1", "src3"]},
         "neardup": {"enable": False},
-        "redact_pii": False,
         "min_tokens": 1,
     }
     clean = run_corpus_pipeline(docs, cfg)["clean"]

@@ -245,11 +245,11 @@ def test_load_table_any_orc_roundtrip(spark, tmp_path):
     assert sorted(df.collect()) == sorted(src.collect())
 
 
-def test_write_partitioned_dynamic_overwrite(spark, tmp_path):
-    """Dynamic partition overwrite (capability row 141): re-writing
-    one day's partition replaces only that partition; static mode
-    truncates the root; the session flag is restored afterward;
-    partition filters prune at the file listing."""
+def test_write_partitioned_replaces_snapshot(spark, tmp_path):
+    """A partitioned write is a complete snapshot: re-writing the root
+    drops partitions the new data left empty, even when the session
+    asks for dynamic overwrite, and the session flag is left as it
+    was; partition filters prune at the file listing."""
     from strategicai_visibility_loop_etl_spark.sources.sinks import write_partitioned
 
     path = str(tmp_path / "days")
@@ -260,17 +260,6 @@ def test_write_partitioned_dynamic_overwrite(spark, tmp_path):
     write_partitioned(full, path, ["day"])
     assert spark.read.parquet(path).count() == 4
 
-    # Re-load ONLY d2 with corrected data: d1/d3 must survive.
-    fixed_d2 = spark.createDataFrame([(3, "d2", 99.0)], "id long, day string, v double")
-    write_partitioned(fixed_d2, path, ["day"])
-    got = {(r["id"], r["day"], r["v"]) for r in spark.read.parquet(path).collect()}
-    assert got == {(1, "d1", 10.0), (2, "d1", 20.0), (3, "d2", 99.0), (4, "d3", 40.0)}
-
-    # Session flag restored (not left 'dynamic' for other writers).
-    assert spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "STATIC"
-    ).lower() == "static"
-
     # Partition pruning reaches the listing, not just the row filter.
     plan = (
         spark.read.parquet(path).filter(F.col("day") == "d1")
@@ -278,16 +267,25 @@ def test_write_partitioned_dynamic_overwrite(spark, tmp_path):
     )
     assert "PartitionFilters: [isnotnull(day" in plan
 
-    # Static mode is the explicit truncate-everything opt-in.
-    write_partitioned(fixed_d2, path, ["day"], dynamic_overwrite=False)
-    assert spark.read.parquet(path).count() == 1
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "dynamic")
+    try:
+        fixed_d2 = spark.createDataFrame(
+            [(3, "d2", 99.0)], "id long, day string, v double"
+        )
+        write_partitioned(fixed_d2, path, ["day"])
+        assert spark.conf.get(key) == "dynamic"
+    finally:
+        spark.conf.unset(key)
+    got = {(r["id"], r["day"], r["v"]) for r in spark.read.parquet(path).collect()}
+    assert got == {(3, "d2", 99.0)}
 
 
 def test_partitioned_write_prunes_partitions(spark, tmp_path, sf_dir):
     """A filter on the partition column must prune at planning time —
     the scan's PartitionFilters carry the predicate and only matching
-    directories are read. ``distribute=True`` routes each partition
-    value to one write task: one file per partition directory."""
+    directories are read, and each partition value is written by one
+    task: one file per partition directory."""
     import glob
 
     from strategicai_visibility_loop_etl_spark.sources.sinks import write_partitioned
@@ -296,7 +294,7 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path, sf_dir):
         "o_orderkey", "o_totalprice", "o_orderpriority"
     )
     path = str(tmp_path / "ord_part")
-    write_partitioned(orders, path, ["o_orderpriority"], distribute=True)
+    write_partitioned(orders, path, ["o_orderpriority"])
     df = spark.read.parquet(path).filter(F.col("o_orderpriority") == "1-URGENT")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "o_orderpriority" in plan.split("PartitionFilters")[1][:200], plan[:1500]

@@ -531,8 +531,13 @@ with open(sys.argv[1], "w") as fh:
 def test_cli_same_with_and_without_class_data_archive(fixture_paths, tmp_path):
     """With a fresh cache the first CLI run dumps the driver JVM's
     class-data archive and publishes it before its process exits; the
-    second run's JVM maps it. Both runs print the same stdout (no JVM
-    CDS log line) and write the same outputs."""
+    second run's JVM maps it. A third run finds that archive truncated:
+    its JVM dies mapping it, and the run drops the archive, launches a
+    dumping JVM and publishes a whole one. All runs print the same
+    stdout (no JVM CDS log line; the third also carries the crashed
+    JVM's fatal-error banner, which the JVM prints on stdout) and write
+    the same outputs. Each run's cwd is under ``tmp_path``, where the
+    crashed JVM leaves its ``hs_err_pid*.log``."""
     import json
     import subprocess
     import sys
@@ -547,9 +552,14 @@ def test_cli_same_with_and_without_class_data_archive(fixture_paths, tmp_path):
     for var in ("SPARK_CONF_DIR", "HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH"):
         env.pop(var, None)
     runs = []
-    for i in (1, 2):
+    truncated = 5 * 2**20
+    for i in (1, 2, 3):
         cwd = tmp_path / f"run{i}"
         cwd.mkdir()
+        if i == 3:
+            (jsa,) = cds.glob("*.jsa")
+            jsa.chmod(0o600)
+            os.truncate(jsa, truncated)
         res = subprocess.run(
             [sys.executable, "-c", _CLI_RECORDING_MAPS, str(cwd / "report.json"),
              "--frog", fixture_paths["frog"], "--gsc", fixture_paths["gsc"],
@@ -564,25 +574,34 @@ def test_cli_same_with_and_without_class_data_archive(fixture_paths, tmp_path):
         (name,) = names - {"conf"}
         assert name.endswith(".jsa"), name
         archive = str(cds / name)
-        if i == 1:
+        if i == 2:
+            assert archive in report["jsa_maps"]
+        else:
             assert archive not in report["jsa_maps"]  # this run dumped it
             assert not os.path.exists(f"/proc/{report['jvm_pid']}")  # and its JVM is gone
-        else:
-            assert archive in report["jsa_maps"]
-        runs.append((res.stdout, cwd / "out"))
+        stdout = res.stdout
+        if i == 3:
+            assert os.path.getsize(archive) > truncated  # the truncated file is gone
+            assert list(cwd.glob("hs_err_pid*.log"))
+            # drop the crashed JVM's fatal-error banner
+            stdout = "".join(ln for ln in stdout.splitlines(True) if not ln.startswith("#"))
+        runs.append((stdout, cwd / "out"))
 
-    (out1, dir1), (out2, dir2) = runs
-    assert out1 == out2 and "Merged rows: 3" in out1
+    (out1, dir1), *later = runs
+    assert "Merged rows: 3" in out1
     assert "[cds" not in out1 and "[warning]" not in out1
     outputs = sorted(os.listdir(dir1))
-    assert outputs == sorted(os.listdir(dir2)) and "merged_csv" in outputs
-    for name in outputs:
-        if name.endswith("_csv"):
-            parts = [sorted(p.read_bytes() for p in (d / name).glob("part-*"))
-                     for d in (dir1, dir2)]
-            assert parts[0] == parts[1], name
-        else:
-            a, b = (pd.read_parquet(d / name) for d in (dir1, dir2))
-            key = list(a.columns)
-            assert a.sort_values(key).reset_index(drop=True).equals(
-                b.sort_values(key).reset_index(drop=True)), name
+    assert "merged_csv" in outputs
+    for out, d2 in later:
+        assert out == out1
+        assert sorted(os.listdir(d2)) == outputs
+        for name in outputs:
+            if name.endswith("_csv"):
+                parts = [sorted(p.read_bytes() for p in (d / name).glob("part-*"))
+                         for d in (dir1, d2)]
+                assert parts[0] == parts[1], name
+            else:
+                a, b = (pd.read_parquet(d / name) for d in (dir1, d2))
+                key = list(a.columns)
+                assert a.sort_values(key).reset_index(drop=True).equals(
+                    b.sort_values(key).reset_index(drop=True)), name

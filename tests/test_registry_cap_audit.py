@@ -76,7 +76,6 @@ CANARY_OPS = {
     "simhash_pairs",
     "token_cosine_pairs",
     "embedding_neardup_pairs",
-    "negative_pairs",
     "fuzzy_match_pairs",
     "blocking_quality",
     "anomaly_ctr_underperf",
@@ -91,11 +90,6 @@ MIRRORED = {
         1000,
         "qx85_token_cosine",
         "dfc.n <= 1000",
-    ),
-    ("qx100_negative_pairs", "negative_pairs", "buckets"): (
-        "auto",
-        "qx100_negative_pairs",
-        "GREATEST(16, CAST(floor(COUNT(*) / 1000.0)",
     ),
 }
 

@@ -76,22 +76,3 @@ def test_bm25_matches_python_reference(spark):
             assert abs(gs - ws) < 1e-9
     # doc 3's spark tf=3 must outrank single-mention docs for q101
     assert got[101][0][1] == 3
-
-
-def test_bm25_reuses_prebuilt_postings(spark, tmp_path):
-    from strategicai_visibility_loop_etl_spark.operators.retrieval import (
-        bm25_topk,
-        document_postings,
-    )
-
-    docs = spark.createDataFrame(list(DOCS.items()), "doc_id long, text string")
-    qs = spark.createDataFrame(
-        list(QUERIES.items()), "query_id long, query string"
-    )
-    idx = str(tmp_path / "postings")
-    document_postings(docs).write.parquet(idx)
-    via_index = bm25_topk(
-        docs, qs, k=3, postings=spark.read.parquet(idx)
-    ).collect()
-    direct = bm25_topk(docs, qs, k=3).collect()
-    assert sorted(map(tuple, via_index)) == sorted(map(tuple, direct))

@@ -123,13 +123,17 @@ def fake_box(tmp_path, monkeypatch):
     return SimpleNamespace(home=home, jdk=jdk, cds=tmp_path / "cache" / _PKG / "cds")
 
 
-def _launch(monkeypatch):
+def _launch(monkeypatch, crash_on=None, error="JAVA_GATEWAY_EXITED"):
     """Run ``get_spark`` against a builder that records, instead of
     launching a JVM, its conf and the environment it would launch
-    under. Returns (conf, launch env, atexit registrations)."""
+    under. A launch whose java options contain ``crash_on`` fails with
+    ``error`` (the condition of a JVM that dies at start by default).
+    Returns (conf, launch env, atexit registrations, launch count)."""
+    from pyspark.errors import PySparkRuntimeError
+
     from strategicai_visibility_loop_etl_spark import session
 
-    seen = SimpleNamespace(conf={}, env=None, atexit=[])
+    seen = SimpleNamespace(conf={}, env=None, atexit=[], launches=0)
 
     class Builder:
         def master(self, _):
@@ -142,6 +146,9 @@ def _launch(monkeypatch):
             return self
 
         def getOrCreate(self):
+            seen.launches += 1
+            if crash_on and crash_on in seen.conf.get("spark.driver.defaultJavaOptions", ""):
+                raise PySparkRuntimeError(errorClass=error, messageParameters={})
             seen.env = dict(os.environ)
             session.SparkContext._gateway = SimpleNamespace(proc="gateway proc")
             return SimpleNamespace(sparkContext=SimpleNamespace(setLogLevel=lambda _: None))
@@ -200,6 +207,43 @@ def test_archive_published_is_mapped(fake_box, monkeypatch):
     assert seen.conf["spark.driver.defaultJavaOptions"] == archive.java_options
     assert seen.env["SPARK_CONF_DIR"] == archive.conf_dir
     assert seen.atexit == []  # nothing to publish
+
+
+def test_archive_that_crashes_the_jvm_is_dropped_and_dumped_again(fake_box, monkeypatch):
+    """A published archive whose JVM dies at start (damaged after it was
+    published) is deleted, and the one retry launches as a first
+    session: it dumps to a temp that the exit hook publishes."""
+    from strategicai_visibility_loop_etl_spark import session
+
+    path = session._class_data_archive().path
+    with open(path, "wb") as fh:
+        fh.write(b"damaged")
+    seen = _launch(monkeypatch, crash_on="SharedArchiveFile")
+    assert seen.launches == 2
+    assert not os.path.exists(path)
+    archive = session._class_data_archive()
+    assert archive.dump_to is not None
+    assert seen.conf["spark.driver.defaultJavaOptions"] == archive.java_options
+    assert seen.env["SPARK_CONF_DIR"] == archive.conf_dir
+    assert seen.atexit == [(session._publish_archive, "gateway proc", archive)]
+
+
+def test_archive_retry_only_for_a_mapped_archive_that_kills_the_jvm(fake_box, monkeypatch):
+    """Any other launch failure raises as before and keeps the archive,
+    and a dumping launch that fails is not retried."""
+    from pyspark.errors import PySparkRuntimeError
+
+    from strategicai_visibility_loop_etl_spark import session
+
+    path = session._class_data_archive().path
+    with open(path, "wb") as fh:
+        fh.write(b"archive")
+    with pytest.raises(PySparkRuntimeError):
+        _launch(monkeypatch, crash_on="SharedArchiveFile", error="SESSION_NOT_SAME")
+    assert os.path.exists(path)
+    os.remove(path)
+    with pytest.raises(PySparkRuntimeError):
+        _launch(monkeypatch, crash_on="ArchiveClassesAtExit")
 
 
 @pytest.mark.parametrize("touched", ["jars/b.jar", "jdk/bin/java", "cache"])

@@ -8,6 +8,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from strategicai_visibility_loop_etl_spark.operators.clusters import (
+    _connected_components_propagation,
+    _connected_components_star,
     cluster_representatives,
     connected_components,
 )
@@ -279,7 +281,7 @@ def test_connected_components_star_matches_propagation_random(spark):
         }
         star = {
             r["id"]: r["component"]
-            for r in connected_components(edges, algorithm="star").collect()
+            for r in _connected_components_star(edges, "id_a", "id_b", 50).collect()
         }
         assert prop == star, (seed, {k: (prop[k], star.get(k)) for k in prop if prop[k] != star.get(k)})
         assert prop == _union_find_min_labels(pairs), seed
@@ -287,37 +289,36 @@ def test_connected_components_star_matches_propagation_random(spark):
 
 @pytest.mark.sweep
 def test_connected_components_star_deep_chain_converges_fast(spark):
-    """A 300-node path needs ~300 propagation rounds (propagation's
-    declared failure mode, raising at max_iter) but only O(log n) star
-    rounds — the star variant must finish well under 15."""
+    """A 300-node path needs ~300 propagation rounds (propagation gives
+    up at max_iter) but only O(log n) star rounds — the star variant
+    must finish well under 15."""
     n = 300
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iter=20)
+    assert _connected_components_propagation(edges, "id_a", "id_b", 20) is None
     comp = {
         r["id"]: r["component"]
-        for r in connected_components(edges, algorithm="star", max_iter=15).collect()
+        for r in _connected_components_star(edges, "id_a", "id_b", 15).collect()
     }
     assert comp == {i: 0 for i in range(n)}
 
 
 @pytest.mark.sweep
 def test_connected_components_auto_falls_back_to_star(spark):
-    """algorithm='auto': propagation handles shallow graphs; a deep
-    chain that would raise at max_iter silently falls back to star."""
+    """Propagation handles shallow graphs; a deep chain that propagation
+    cannot finish in max_iter rounds falls back to star."""
     shallow = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
     assert {
         r["id"]: r["component"]
-        for r in connected_components(shallow, algorithm="auto").collect()
+        for r in connected_components(shallow).collect()
     } == {1: 1, 2: 1, 3: 1}
     deep = spark.createDataFrame(
         [(i, i + 1) for i in range(99)], "id_a long, id_b long"
     )
     comp = {
         r["id"]: r["component"]
-        for r in connected_components(deep, max_iter=10, algorithm="auto").collect()
+        for r in connected_components(deep, max_iter=10).collect()
     }
     assert comp == {i: 0 for i in range(100)}
 

@@ -22,9 +22,8 @@ semantics meaningful at the new scale):
   rank/tie-break determinism, and sums grow MULT-fold, probing
   accumulator widths.
 - documents.text gets a per-replica tail token (rep>0), so replica
-  groups form near-dup (not byte-dup) clusters -- same recipe as
-  tools/scale_smoke.py -- and n_chars is recomputed to stay
-  consistent with the mutated text.
+  groups form near-dup (not byte-dup) clusters, and n_chars is
+  recomputed to stay consistent with the mutated text.
 - embeddings get a tiny per-replica additive shift (rep * 1e-3) so
   ANN/near-dup queries see MULT-sized near-clusters instead of
   degenerate exact-duplicate vectors.
