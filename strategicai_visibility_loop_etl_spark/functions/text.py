@@ -177,7 +177,8 @@ _MOJIBAKE_CHARS = (
     "çíìîïßÉÈÁÓ"
     "ÜÖÄÑÇ«»°·½"
     "¡¿ýœŒšžŠŽ"
-    "ÃÂâÅ"  # the ghost lead bytes themselves (their own ghosts: Ãƒ Ã‚ Ã¢ Ã…)
+    "ÃÂÅ"  # the ghost lead bytes themselves (their own ghosts: Ãƒ Ã‚ Ã…;
+    # 'â' and its ghost Ã¢ are in the second row)
 )
 
 
@@ -205,6 +206,15 @@ MOJIBAKE_TABLE: list[tuple[str, str]] = sorted(
 # would still be rewritten — an accepted (documented) residual.
 MOJIBAKE_SENTINEL_BASE = 0xE0200
 
+# Every ghost starts with one of these ('Â', 'Ã', 'Å', 'â'), and the
+# chain rewrites only ghosts and its own sentinels: text that holds none
+# of this class comes out of the chain unchanged.
+_MOJIBAKE_GATE = "[{}\\x{{{:X}}}-\\x{{{:X}}}]".format(
+    "".join(sorted({ghost[0] for ghost, _ in MOJIBAKE_TABLE})),
+    MOJIBAKE_SENTINEL_BASE,
+    MOJIBAKE_SENTINEL_BASE + len(MOJIBAKE_TABLE) - 1,
+)
+
 
 def fix_mojibake(col: Column) -> Column:
     """Repair UTF-8-decoded-as-windows-1252 mojibake (ftfy-lite):
@@ -219,13 +229,22 @@ def fix_mojibake(col: Column) -> Column:
     became ``Ã“`` after the 3-char rule, which the later ``Ã“``→``Ó``
     rule then rewrote — corrupting text that was only partially
     mojibake. Sentinels match no ghost, so phase 1 output is inert and
-    phase 2 merely decodes it."""
+    phase 2 merely decodes it.
+
+    The chain runs only on text that holds a ghost lead character or a
+    sentinel (one character-class scan); any other text is returned as
+    is, which is what the chain would return. Clean text is the common
+    case, and the gate matters more than one chain's cost suggests:
+    predicate pushdown copies the repaired column into every filter on
+    a column derived from it (the corpus plan's ``n_tokens`` bounds put
+    four copies of the chain in its ``kept`` Filter), so ungated the
+    chain ran five times per row."""
     out = col
     for i, (ghost, _fixed) in enumerate(MOJIBAKE_TABLE):
         out = F.replace(out, F.lit(ghost), F.lit(chr(MOJIBAKE_SENTINEL_BASE + i)))
     for i, (_ghost, fixed) in enumerate(MOJIBAKE_TABLE):
         out = F.replace(out, F.lit(chr(MOJIBAKE_SENTINEL_BASE + i)), F.lit(fixed))
-    return out
+    return F.when(col.rlike(_MOJIBAKE_GATE), out).otherwise(col)
 
 
 def mojibake_count(col: Column) -> Column:

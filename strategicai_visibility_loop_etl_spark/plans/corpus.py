@@ -142,8 +142,9 @@ def run_corpus_pipeline(
         )
 
     # 0a. encoding repair (ftfy-lite): fix utf-8-as-cp1252 mojibake
-    # before anything tokenizes or hashes the text — a no-op literal
-    # replace chain on clean text, still inside the scan's codegen.
+    # before anything tokenizes or hashes the text — a literal replace
+    # chain, still inside the scan's codegen, run only on text that can
+    # hold a ghost; other text costs one character-class scan.
     docs = docs.withColumn(text_col, fix_mojibake(txt))
 
     # 0b. structural clean (C4 + intra-page line dedup): both are pure

@@ -9,7 +9,10 @@ for the few pandas-UDF boundaries, UTC session timezone so results are
 comparable against UTC-naive oracles.
 
 Cores and driver memory are sized from the machine unless
-``SPARK_GRAFT_CPUS`` / ``SPARK_GRAFT_DRIVER_MEM`` override them.
+``SPARK_GRAFT_CPUS`` / ``SPARK_GRAFT_DRIVER_MEM`` override them. The
+generated-class cache holds 1,000 classes instead of Spark's 100, and
+whole-stage class names carry no stage id, so a repeated operation
+reuses the classes it compiled.
 
 When ``get_spark`` launches the driver JVM itself, it starts it from a
 JDK dynamic class-data (AppCDS) archive, which cuts JVM start and
@@ -20,10 +23,12 @@ and is keyed by the ``java`` binary and the jars in ``$SPARK_HOME/jars``
 first session on a box asks its JVM to write the archive at exit; an
 ``atexit`` hook ends that JVM, waits for it and publishes the archive
 only if it exited cleanly, so no session maps a partly written file.
-Every later session maps it. If a driver JVM that maps a published
-archive fails to start (the file was truncated or damaged after it was
-published), that archive is deleted and the launch is retried once as
-a first session would, dumping a fresh one.
+The published name records the file's size, and a file whose size no
+longer matches (truncated since) counts as absent: that session dumps
+a fresh one instead of crashing its JVM on it. Every later session
+maps it. If a driver JVM that maps a published archive still fails to
+start (the file was damaged in place), that archive is deleted and the
+launch is retried once as a first session would, dumping a fresh one.
 The archive is skipped, and the launch is exactly as without it, when
 the Spark conf dir holds anything but ``*.template`` files, when
 ``HADOOP_CONF_DIR``/``YARN_CONF_DIR``/``SPARK_DIST_CLASSPATH`` add to
@@ -52,7 +57,17 @@ from pyspark.sql import SparkSession
 _CDS_QUIET = ("-Xlog:cds=off", "-Xlog:cds+dynamic=off")
 # Spark's launcher puts each of these on the driver classpath.
 _CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
-_TEMP_NAME = re.compile(r"[0-9a-f]{16}\.(\d+)\.tmp")
+# A published archive is ``<key>.<size>.jsa``, its size in bytes at
+# publish; a dumping JVM writes ``<key>.<pid>.tmp``.
+_ARCHIVE_NAME = re.compile(r"([0-9a-f]{16})\.(\d+)\.jsa")
+_TEMP_NAME = re.compile(r"([0-9a-f]{16})\.(\d+)\.tmp")
+# Generated classes are cached by source text. Spark keeps 100 by
+# default, fewer than one corpus operation uses (about 103), so every
+# warm operation recompiled about half of them; a visibility run's cold
+# operation compiles 82. Whole-stage class names drop the stage id,
+# which follows the order adaptive execution plans a query's stages in,
+# so the same code no longer compiles again under another name.
+_CODEGEN_CACHE_ENTRIES = 1000
 
 
 def default_cpus() -> int:
@@ -75,8 +90,8 @@ class _Archive(NamedTuple):
     """Where a launched driver JVM maps or dumps its class-data archive."""
 
     conf_dir: str  # empty dir that stands in for SPARK_CONF_DIR at launch
-    path: str  # the published archive, ``<key>.jsa``
-    dump_to: str | None  # ``<key>.<pid>.tmp`` while ``path`` does not exist
+    path: str | None  # the published archive to map, ``<key>.<size>.jsa``
+    dump_to: str | None  # ``<key>.<pid>.tmp`` when there is none to map
 
     @property
     def java_options(self) -> str:
@@ -129,9 +144,18 @@ def _class_data_archive() -> _Archive | None:
     except OSError:
         return None
     key = hashlib.sha256(repr(stats).encode()).hexdigest()[:16]
-    path = os.path.join(cache, f"{key}.jsa")
-    dump_to = None if os.path.isfile(path) else os.path.join(cache, f"{key}.{os.getpid()}.tmp")
-    return _Archive(conf_dir, path, dump_to)
+    try:
+        for name in os.listdir(cache):
+            m = _ARCHIVE_NAME.fullmatch(name)
+            # A file cut short since its publish (the JVM would crash
+            # mapping it) counts as absent.
+            if m and m.group(1) == key:
+                path = os.path.join(cache, name)
+                if os.path.getsize(path) == int(m.group(2)):
+                    return _Archive(conf_dir, path, None)
+    except OSError:
+        pass
+    return _Archive(conf_dir, None, os.path.join(cache, f"{key}.{os.getpid()}.tmp"))
 
 
 def _pid_gone(pid: int) -> bool:
@@ -148,9 +172,11 @@ def _pid_gone(pid: int) -> bool:
 
 def _publish_archive(proc: subprocess.Popen, archive: _Archive) -> None:
     """At exit: end the gateway JVM (it exits on EOF from its parent)
-    and wait while it writes its archive, publish the archive only if
-    the JVM exited cleanly, then delete archives of other keys and
-    temps whose owner process is gone."""
+    and wait while it writes its archive, publish the archive under its
+    size only if the JVM exited cleanly, then delete other keys'
+    archives, this key's other ones once one is published, and temps
+    whose owner process is gone. Files not named as this module names
+    them are left alone."""
     if proc.poll() is None:
         proc.stdin.close()
         try:
@@ -158,18 +184,22 @@ def _publish_archive(proc: subprocess.Popen, archive: _Archive) -> None:
         except subprocess.TimeoutExpired:
             proc.kill()
             proc.wait()
-    cache = os.path.dirname(archive.path)
+    cache, temp = os.path.split(archive.dump_to)
+    key = _TEMP_NAME.fullmatch(temp).group(1)
+    published = None
     try:
         if proc.returncode == 0 and os.path.isfile(archive.dump_to):
-            os.replace(archive.dump_to, archive.path)
+            published = f"{key}.{os.path.getsize(archive.dump_to)}.jsa"
+            os.replace(archive.dump_to, os.path.join(cache, published))
         names = os.listdir(cache)
     except OSError:  # the cache dir was deleted meanwhile
         return
     for name in names:
-        tmp = _TEMP_NAME.fullmatch(name)
+        jsa, tmp = _ARCHIVE_NAME.fullmatch(name), _TEMP_NAME.fullmatch(name)
+        superseded = published is not None and name != published
         stale = (
-            name.endswith(".jsa") and name != os.path.basename(archive.path)
-            or tmp is not None and _pid_gone(int(tmp.group(1)))
+            jsa is not None and (jsa.group(1) != key or superseded)
+            or tmp is not None and _pid_gone(int(tmp.group(2)))
         )
         if stale:
             try:
@@ -210,6 +240,8 @@ def get_spark(app_name: str = "strategicai_visibility_loop_etl_spark", cpus: int
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", default_driver_mem())
+        .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     launches = SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
     archive = _class_data_archive() if launches else None

@@ -102,6 +102,33 @@ def test_corpus_pipeline_neardup_reads_kept_checkpoint(corpus):
     assert [r[0] for r in got_rows] == [1, 4]
 
 
+def test_warm_corpus_run_compiles_nothing(spark, corpus, tmp_path):
+    """The session's generated-class cache holds a whole corpus run: a
+    second run of the pipeline plus its ``clean`` write compiles no
+    class. Spark's default of 100 classes is smaller than this run's
+    working set, so each warm run recompiled about half of it. Runtime
+    broadcast conversion is off for the test: which side of a join
+    ends up broadcast depends on which shuffle finishes first, and each
+    side compiles its own class, so a warm run could meet a variant
+    that no earlier run has compiled."""
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    key = "spark.sql.adaptive.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "-1")
+    try:
+        compiles = []
+        for i in range(2):
+            before = metric.getCount()
+            run_corpus_pipeline(corpus)["clean"].write.parquet(str(tmp_path / f"clean{i}"))
+            compiles.append(metric.getCount() - before)
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    assert compiles[1] == 0, compiles
+
+
 def test_ngram_jaccard_pairs_reads_shingle_checkpoint(corpus):
     """The exploded shingles are materialized once: every leaf of the
     pair frame is that checkpoint, no NGram or explode of tokens is left

@@ -250,6 +250,20 @@ def test_fix_mojibake_real_cp1252_roundtrip(spark):
     assert df2.select(fix_mojibake(F.col("text")).alias("f")).first()["f"] == originals[0]
 
 
+def test_mojibake_count_counts_each_ghost_once(spark):
+    """``mojibake_count`` counts DISTINCT ghosts: one table rule per
+    ghost, so text holding only the ghost of 'â' counts 1."""
+    from strategicai_visibility_loop_etl_spark.functions.text import (
+        MOJIBAKE_TABLE,
+        mojibake_count,
+    )
+
+    df = spark.createDataFrame([("Ã¢",), ("Ã¢ Ã¢ Ã©",), ("â",)], "text string")
+    got = [r[0] for r in df.select(mojibake_count(F.col("text"))).collect()]
+    assert got == [1, 2, 0]
+    assert len({g for g, _ in MOJIBAKE_TABLE}) == len(MOJIBAKE_TABLE)
+
+
 def test_fix_mojibake_no_cascade_across_replacement_boundary(spark):
     """Mixed content: a LITERAL ghost lead byte adjacent to real
     mojibake must survive repair. Single-phase chains cascaded here —

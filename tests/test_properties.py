@@ -6,10 +6,14 @@ from __future__ import annotations
 
 import pytest
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from strategicai_visibility_loop_etl_spark.functions.numeric import to_double_nocomma
+from strategicai_visibility_loop_etl_spark.functions.text import (
+    MOJIBAKE_SENTINEL_BASE,
+    MOJIBAKE_TABLE,
+)
 from strategicai_visibility_loop_etl_spark.functions.urls import url_normalize_df
 
 # URL-ish fragments that exercise every branch: schemes (mixed case),
@@ -181,34 +185,51 @@ def test_weighted_sample_k_is_prefix_stable(spark):
     assert small < big and len(small) == 20 and len(big) == 50
 
 
+# printable ascii + the repairable characters themselves, including the
+# bare ghost lead bytes (Ã/Â/â/Å) that used to cascade through the
+# single-phase replace chain
+_ROUNDTRIP_CHARS = [chr(c) for c in range(0x20, 0x7F)] + list("’“”–—…éèüñçöä«»°œ€ÃÂâÅ")
+# pieces that probe the repair's gate: ghost fragments and whole
+# ghosts, near-lead characters outside the gate's class, and plane-14
+# code points at, inside and just outside the sentinel range
+_GATE_PIECES = [
+    "â€", "Ã©", "Ã", "Ã¢", "Â\xa0", "Å“", "Ã¢â‚¬", "Ä", "ã", "Æ", "€™",
+    *(chr(MOJIBAKE_SENTINEL_BASE + i)
+      for i in (-1, 0, 1, len(MOJIBAKE_TABLE) - 1, len(MOJIBAKE_TABLE))),
+]
+
+
 @given(
     texts=st.lists(
-        st.text(
-            # printable ascii + the repairable characters themselves,
-            # including the bare ghost lead bytes (Ã/Â/â/Å) that used
-            # to cascade through the single-phase replace chain
-            alphabet=st.sampled_from(
-                [chr(c) for c in range(0x20, 0x7F)]
-                + list("’“”–—…éèüñçöä«»°œ€ÃÂâÅ")
-            ),
-            max_size=80,
-        ),
+        st.lists(st.sampled_from(_ROUNDTRIP_CHARS + _GATE_PIECES), max_size=60).map("".join),
         min_size=1,
         max_size=6,
     )
 )
+# each gate piece alone, so both ends of the sentinel range and every
+# lead character meet the gate without another lead beside them
+@example(texts=_GATE_PIECES + list("ÃÂâÅ"))
 @settings(max_examples=20, deadline=None)
 def test_mojibake_ascii_invariant_and_ghost_roundtrip(spark, texts):
-    """Two properties of the repair chain: (a) text with no ghost
-    sequences is byte-identical after repair; (b) sloppy-cp1252
-    ghosting of any repairable text is undone exactly."""
+    """Three properties of the repair: (a) text with no ghost sequence
+    and no sentinel is byte-identical after repair; (b) sloppy-cp1252
+    ghosting of any repairable text is undone exactly; (c) on any text,
+    clean or ghosted, the gated repair equals the ungated two-phase
+    chain, replayed here in Python."""
     from strategicai_visibility_loop_etl_spark.functions.text import (
-        MOJIBAKE_TABLE,
         fix_mojibake,
         mojibake_count,
     )
 
     ghosts = [g for g, _ in MOJIBAKE_TABLE]
+    sentinels = [chr(MOJIBAKE_SENTINEL_BASE + i) for i in range(len(MOJIBAKE_TABLE))]
+
+    def chain(t: str) -> str:
+        for g, s in zip(ghosts, sentinels):
+            t = t.replace(g, s)
+        for s, (_, fixed) in zip(sentinels, MOJIBAKE_TABLE):
+            t = t.replace(s, fixed)
+        return t
 
     def sloppy_cp1252(b: bytes) -> str:
         out = []
@@ -230,14 +251,17 @@ def test_mojibake_ascii_invariant_and_ghost_roundtrip(spark, texts):
             mojibake_count(F.col("clean")).alias("n_clean"),
         ).collect()
     }
-    for i, t, _ in rows:
-        if not any(g in t for g in ghosts):
+    for i, t, c in rows:
+        assert got[i]["fixed_clean"] == chain(t), (got[i]["fixed_clean"], t)  # (c)
+        assert got[i]["fixed_corrupt"] == chain(c), (got[i]["fixed_corrupt"], c)
+        assert got[i]["n_clean"] == sum(g in t for g in ghosts)
+        if not any(g in t for g in ghosts + sentinels):
             # (a) repair never touches ghost-free text
             assert got[i]["fixed_clean"] == t, (got[i]["fixed_clean"], t)
-            assert got[i]["n_clean"] == 0
-        # (b) the ghosting of t contains only table sequences for the
-        # non-ascii chars, so repair inverts it exactly
-        assert got[i]["fixed_corrupt"] == t, (got[i]["fixed_corrupt"], t)
+        if set(t) <= set(_ROUNDTRIP_CHARS):
+            # (b) the ghosting of t contains only table sequences for
+            # the non-ascii chars, so repair inverts it exactly
+            assert got[i]["fixed_corrupt"] == t, (got[i]["fixed_corrupt"], t)
 
 
 _page_line = st.sampled_from(

@@ -177,12 +177,22 @@ def test_archive_skipped_when_something_joins_the_classpath(fake_box, monkeypatc
     assert not fake_box.cds.exists()
 
 
+def _publish(archive, body: bytes) -> str:
+    """Write ``body`` where a clean dumping run would publish it."""
+    key = os.path.basename(archive.dump_to).split(".")[0]
+    path = os.path.join(os.path.dirname(archive.dump_to), f"{key}.{len(body)}.jsa")
+    with open(path, "wb") as fh:
+        fh.write(body)
+    return path
+
+
 def test_archive_fresh_cache_dumps_to_a_per_pid_temp(fake_box, monkeypatch):
     from strategicai_visibility_loop_etl_spark.session import _class_data_archive, _publish_archive
 
     archive = _class_data_archive()
-    assert archive.dump_to == f"{archive.path[:-len('.jsa')]}.{os.getpid()}.tmp"
-    assert os.path.dirname(archive.path) == str(fake_box.cds)
+    assert archive.path is None
+    assert re.fullmatch(rf"[0-9a-f]{{16}}\.{os.getpid()}\.tmp", os.path.basename(archive.dump_to))
+    assert os.path.dirname(archive.dump_to) == str(fake_box.cds)
     assert os.stat(fake_box.cds).st_mode & 0o777 == 0o700
     assert os.listdir(archive.conf_dir) == []
     assert archive.java_options == (
@@ -197,9 +207,7 @@ def test_archive_fresh_cache_dumps_to_a_per_pid_temp(fake_box, monkeypatch):
 def test_archive_published_is_mapped(fake_box, monkeypatch):
     from strategicai_visibility_loop_etl_spark.session import _class_data_archive
 
-    path = _class_data_archive().path
-    with open(path, "wb") as fh:
-        fh.write(b"archive")
+    path = _publish(_class_data_archive(), b"archive")
     archive = _class_data_archive()
     assert archive.path == path and archive.dump_to is None
     assert archive.java_options == f"-XX:SharedArchiveFile={path} -Xlog:cds=off -Xlog:cds+dynamic=off"
@@ -209,15 +217,31 @@ def test_archive_published_is_mapped(fake_box, monkeypatch):
     assert seen.atexit == []  # nothing to publish
 
 
-def test_archive_that_crashes_the_jvm_is_dropped_and_dumped_again(fake_box, monkeypatch):
-    """A published archive whose JVM dies at start (damaged after it was
-    published) is deleted, and the one retry launches as a first
-    session: it dumps to a temp that the exit hook publishes."""
+def test_archive_truncated_since_publish_is_dumped_again(fake_box, monkeypatch):
+    """A published archive shorter than its name records is never
+    handed to the JVM, which would crash mapping it: the launch dumps a
+    fresh archive instead, and publishing that one replaces the file."""
     from strategicai_visibility_loop_etl_spark import session
 
-    path = session._class_data_archive().path
-    with open(path, "wb") as fh:
-        fh.write(b"damaged")
+    path = _publish(session._class_data_archive(), b"archive")
+    os.truncate(path, 3)
+    archive = session._class_data_archive()
+    assert archive.path is None and archive.dump_to is not None
+    seen = _launch(monkeypatch, crash_on="SharedArchiveFile")
+    assert seen.launches == 1
+    assert seen.conf["spark.driver.defaultJavaOptions"] == archive.java_options
+    assert "-XX:SharedArchiveFile" not in archive.java_options
+    assert seen.atexit == [(session._publish_archive, "gateway proc", archive)]
+
+
+def test_archive_that_crashes_the_jvm_is_dropped_and_dumped_again(fake_box, monkeypatch):
+    """A published archive whose JVM dies at start (damaged in place
+    after it was published, its size unchanged) is deleted, and the one
+    retry launches as a first session: it dumps to a temp that the exit
+    hook publishes."""
+    from strategicai_visibility_loop_etl_spark import session
+
+    path = _publish(session._class_data_archive(), b"damaged")
     seen = _launch(monkeypatch, crash_on="SharedArchiveFile")
     assert seen.launches == 2
     assert not os.path.exists(path)
@@ -235,9 +259,7 @@ def test_archive_retry_only_for_a_mapped_archive_that_kills_the_jvm(fake_box, mo
 
     from strategicai_visibility_loop_etl_spark import session
 
-    path = session._class_data_archive().path
-    with open(path, "wb") as fh:
-        fh.write(b"archive")
+    path = _publish(session._class_data_archive(), b"archive")
     with pytest.raises(PySparkRuntimeError):
         _launch(monkeypatch, crash_on="SharedArchiveFile", error="SESSION_NOT_SAME")
     assert os.path.exists(path)
@@ -250,14 +272,17 @@ def test_archive_retry_only_for_a_mapped_archive_that_kills_the_jvm(fake_box, mo
 def test_archive_key_follows_jdk_jars_and_cache_path(fake_box, tmp_path, monkeypatch, touched):
     from strategicai_visibility_loop_etl_spark.session import _class_data_archive
 
-    before = os.path.basename(_class_data_archive().path)
+    def key():
+        return os.path.basename(_class_data_archive().dump_to).split(".")[0]
+
+    before = key()
     if touched == "cache":
         monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "moved"))
     else:
         path = (fake_box.home if touched.startswith("jars") else fake_box.jdk.parent) / touched
         st = os.stat(path)
         os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
-    assert os.path.basename(_class_data_archive().path) != before
+    assert key() != before
 
 
 def test_archive_skipped_when_cache_is_blocked(fake_box, tmp_path, monkeypatch):
@@ -275,8 +300,10 @@ def test_archive_skipped_when_cache_is_blocked(fake_box, tmp_path, monkeypatch):
 @pytest.mark.parametrize("exit_code", [0, 1])
 def test_archive_published_only_after_a_clean_exit(fake_box, exit_code):
     """The publish hook ends the gateway (EOF on its stdin), waits for
-    it, renames its temp only on exit 0, and removes other keys'
-    archives and temps whose owner is gone; a live owner's temp stays."""
+    it, renames its temp to ``<key>.<size>.jsa`` only on exit 0, and
+    removes other keys' archives, this key's archive of another size
+    once one is published, and temps whose owner is gone; a live
+    owner's temp and files not named like an archive stay."""
     import subprocess
     import sys
 
@@ -286,7 +313,10 @@ def test_archive_published_only_after_a_clean_exit(fake_box, exit_code):
     cds = fake_box.cds
     dead = subprocess.Popen([sys.executable, "-c", ""])
     dead.wait(timeout=60)
-    (cds / "0123456789abcdef.jsa").write_bytes(b"old key")
+    key = os.path.basename(archive.dump_to).split(".")[0]
+    (cds / "0123456789abcdef.7.jsa").write_bytes(b"old key")
+    (cds / f"{key}.5.jsa").write_bytes(b"trunc")  # this key, another size
+    (cds / "0123456789abcdef.jsa").write_bytes(b"not an archive name")
     (cds / f"0123456789abcdef.{dead.pid}.tmp").write_bytes(b"dead owner")
     (cds / f"0123456789abcdef.{os.getppid()}.tmp").write_bytes(b"live owner")
     # stands in for the gateway JVM: it writes its archive once its
@@ -300,5 +330,9 @@ def test_archive_published_only_after_a_clean_exit(fake_box, exit_code):
     _publish_archive(gateway, archive)
     assert gateway.returncode == exit_code
     left = sorted(os.listdir(cds))
-    published = [os.path.basename(archive.path)] if exit_code == 0 else []
-    assert left == sorted(["conf", f"0123456789abcdef.{os.getppid()}.tmp", *published])
+    kept = [f"{key}.3.jsa"] if exit_code == 0 else [f"{key}.5.jsa"]
+    assert left == sorted(["conf", "0123456789abcdef.jsa",
+                           f"0123456789abcdef.{os.getppid()}.tmp", *kept])
+    if exit_code == 0:
+        assert (cds / f"{key}.3.jsa").read_bytes() == b"jsa"
+        assert _class_data_archive().path == str(cds / f"{key}.3.jsa")
