@@ -9,8 +9,9 @@ The call runs in three phases; the jobs of a phase do not depend on
 each other, so it submits them together to a thread pool it owns and
 joins before the next phase:
 
-- A, loads: ``load_frog``, ``load_gsc`` and ``load_ga4`` each fire a
-  CSV-header job and build their plan concurrently.
+- A, loads: ``load_frog``, ``load_gsc`` and ``load_ga4`` each read
+  the head of their file on the driver (separator and header, no
+  Spark job) and build their plan concurrently.
 - B, two barriers, serial: the merge result is an eager
   ``localCheckpoint`` read by derive/score, then ``merged`` is written
   to ``out_dir`` and re-read. The ``merged`` write also observes its
@@ -246,7 +247,7 @@ def _run_pipeline(
     site_base: str | None,
     strip_all: bool,
 ) -> dict[str, DataFrame]:
-    # Phase A: each loader fires its own CSV-header job.
+    # Phase A: each loader reads its CSV head and builds its plan.
     frog, gsc, ga4 = _run_concurrently(spark, [
         (load, spark, path, site_base, strip_all)
         for load, path in ((load_frog, frog_path), (load_gsc, gsc_path), (load_ga4, ga4_path))

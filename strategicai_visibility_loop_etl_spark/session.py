@@ -34,6 +34,12 @@ the Spark conf dir holds anything but ``*.template`` files, when
 ``HADOOP_CONF_DIR``/``YARN_CONF_DIR``/``SPARK_DIST_CLASSPATH`` add to
 the classpath, or when the cache dir cannot be created. Delete the
 cache dir to reset it.
+
+The same launch gives the driver JVM two JIT compiler threads (one C1,
+one C2) instead of HotSpot's three on a 4-core box: the compilers
+otherwise take CPU from the task threads on every fresh JVM, which a
+one-shot CLI pays on every call. A launch left to Spark keeps Spark's
+own options, this one included.
 """
 
 from __future__ import annotations
@@ -55,6 +61,16 @@ from pyspark.sql import SparkSession
 # A rejected archive would otherwise print a [warning][cds,dynamic]
 # line to the JVM's stdout, which is the CLI's stdout.
 _CDS_QUIET = ("-Xlog:cds=off", "-Xlog:cds+dynamic=off")
+# One C1 and one C2 compiler thread, the fewest tiered compilation
+# allows. On 4 cores HotSpot starts 3 (1 C1 + 2 C2), which compete with
+# the local[4] task threads: the two C2 threads burned 5-7 s of CPU in
+# each warm visibility operation of 10-14 s process CPU. With one, 2.5-4
+# s; `vis_pages` cpu_s fell 27% and peak RSS 24% (compiler arenas), and
+# run_s 9%. A long session warms up more slowly (tests/test_oracle.py
+# +8%). C1 alone (TieredStopAtLevel=1) cut CPU ~30% but made warm
+# operations ~15% slower. A caller's --driver-java-options comes after
+# these and can override it.
+_JIT_THREADS = "-XX:CICompilerCount=2"
 # Spark's launcher puts each of these on the driver classpath.
 _CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
 # A published archive is ``<key>.<size>.jsa``, its size in bytes at
@@ -97,7 +113,7 @@ class _Archive(NamedTuple):
     def java_options(self) -> str:
         use = (f"-XX:ArchiveClassesAtExit={self.dump_to}" if self.dump_to
                else f"-XX:SharedArchiveFile={self.path}")
-        return " ".join(shlex.quote(o) for o in (use, *_CDS_QUIET))
+        return " ".join(shlex.quote(o) for o in (use, *_CDS_QUIET, _JIT_THREADS))
 
 
 def _class_data_archive() -> _Archive | None:

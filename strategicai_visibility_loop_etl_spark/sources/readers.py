@@ -9,7 +9,10 @@ CSV strategy: Spark's CSV datasource in PERMISSIVE mode with header,
 comment='#' (GA4 exports carry '# ---' preamble lines), quoting and
 escaping on. Delimiter sniffing — pandas' ``sep=None`` trick — has no
 distributed equivalent, so we sniff on a driver-side sample of the
-first file block (bounded read, not a collect of the dataset).
+first file block (bounded read, not a collect of the dataset). The
+header is parsed from that same sample, as Spark would parse it, and
+passed as an all-string schema, so building the frame runs no
+header-inference job.
 
 Path handling goes through the Hadoop FileSystem API, not ``os.path``:
 existence checks, directory listing, and the sniff head-read resolve
@@ -26,12 +29,19 @@ config-ish files in practice; the 100 TB path is CSV/parquet.
 
 from __future__ import annotations
 
+import csv
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 _CANDIDATE_SEPS = [",", "\t", ";", "|"]
+_HEAD_BYTES = 65536
+# Every char up to ' ', which Spark (Scala ``trim``) and its CSV parser
+# treat as whitespace.
+_BLANK = "".join(map(chr, range(33)))
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -47,7 +57,7 @@ def _fs_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(hpath))
 
 
-def _fs_read_head(spark: SparkSession, path: str, nbytes: int = 65536) -> bytes | None:
+def _fs_read_head(spark: SparkSession, path: str, nbytes: int = _HEAD_BYTES) -> bytes | None:
     """First ``nbytes`` of ``path`` (first non-hidden member if a
     directory) via the Hadoop FS API — works for any scheme the cluster
     has a filesystem for. Returns None when the path does not exist
@@ -72,36 +82,61 @@ def _fs_read_head(spark: SparkSession, path: str, nbytes: int = 65536) -> bytes 
         stream.close()
 
 
-def _sniff_sep(spark: SparkSession, path: str, default: str = ",") -> str:
-    """Pick the delimiter that yields the most fields on the header line.
+def _safe_header(fields: list[str]) -> list[str]:
+    """Column names as Spark's ``CSVUtils.makeSafeHeader`` makes them
+    from a header record (case-insensitive analysis): an empty name
+    becomes ``_c<i>``, a name that repeats ignoring case ``<name><i>``."""
+    lower = [f.lower() for f in fields]
+    dups = {f for f in lower if lower.count(f) > 1}
+    return [
+        f"_c{i}" if not f else f"{f}{i}" if f.lower() in dups else f
+        for i, f in enumerate(fields)
+    ]
 
-    Driver-side read of the first ~64 KiB of one file — O(1) regardless
-    of dataset size, and scheme-agnostic (Hadoop FS, not ``open()``).
+
+def _sniff_header(head: bytes | None, multiline: bool) -> tuple[str, list[str] | None]:
+    """(separator, column names) from the first bytes of a CSV file.
+
+    The header is the first line that is neither blank nor a ``#``
+    comment (Spark's ``filterCommentAndEmpty``), parsed with the reader's
+    quote, escape and trim rules; the separator is the candidate that
+    parses it into the most fields. The names are None when the head
+    holds no header, or when the head fills its whole read and the
+    header could run past its end: Spark then reads the header itself.
     """
-    head_bytes = _fs_read_head(spark, path)
-    if head_bytes is None:
-        return default
-    head = head_bytes.decode("utf-8", errors="replace")
-    lines = [ln for ln in head.splitlines() if ln.strip() and not ln.startswith("#")]
-    if not lines:
-        return default
-    header = lines[0]
-    best, best_n = default, 0
+    if head is None:
+        return ",", None
+    # Spark drops a UTF-8 byte-order mark and splits lines at \n, \r
+    # and \r\n; it trims every char up to ' ' when testing for blanks.
+    lines = re.split(r"\r\n?|\n", head.decode("utf-8-sig", errors="replace"))
+    start = next((i for i, ln in enumerate(lines) if ln.strip(_BLANK) and not ln.startswith("#")), None)
+    if start is None:
+        return ",", None
+    # A multiLine read lets a quoted header run on past its line.
+    rest = [ln + "\n" for ln in lines[start:]] if multiline else lines[start:start + 1]
+    best, best_fields, best_lines = ",", [], 0
     for sep in _CANDIDATE_SEPS:
-        n = header.count(sep)
-        if n > best_n:
-            best, best_n = sep, n
-    return best
+        reader = csv.reader(rest, delimiter=sep, quotechar='"', doublequote=True,
+                            skipinitialspace=True, strict=False)
+        fields = next(reader, [])
+        if len(fields) > len(best_fields):
+            best, best_fields, best_lines = sep, fields, reader.line_num
+    if len(head) == _HEAD_BYTES and start + best_lines >= len(lines):
+        return best, None
+    return best, _safe_header([f.strip(_BLANK) for f in best_fields])
 
 
-def _read_csv(spark: SparkSession, path: str, sep: str | None = None) -> DataFrame:
+def _read_csv(spark: SparkSession, path: str) -> DataFrame:
+    """The CSV at ``path`` with every column a string, its header
+    parsed on the driver from the head it already reads to pick the
+    separator, so building the frame runs no Spark job."""
     # multiLine (quoted embedded newlines) makes each file a single split —
     # no read parallelism. Default OFF (4× faster on a single node, and
     # the difference between parallel and serial scans on a cluster);
     # exports with embedded newlines can opt in via ETL_CSV_MULTILINE=1.
     multiline = os.getenv("ETL_CSV_MULTILINE", "").strip().lower() in {"1", "true", "yes"}
-    sep = sep or _sniff_sep(spark, path)
-    return (
+    sep, names = _sniff_header(_fs_read_head(spark, path), multiline)
+    reader = (
         spark.read.option("header", True)
         .option("sep", sep)
         .option("comment", "#")
@@ -111,8 +146,10 @@ def _read_csv(spark: SparkSession, path: str, sep: str | None = None) -> DataFra
         .option("mode", "PERMISSIVE")
         .option("ignoreLeadingWhiteSpace", True)
         .option("ignoreTrailingWhiteSpace", True)
-        .csv(path)
     )
+    if names is not None:
+        reader = reader.schema(StructType([StructField(n, StringType()) for n in names]))
+    return reader.csv(path)
 
 
 def _read_excel(spark: SparkSession, path: str) -> DataFrame:
@@ -129,8 +166,6 @@ def _read_excel(spark: SparkSession, path: str) -> DataFrame:
         buf = io.BytesIO(bytes(stream.readAllBytes()))
     finally:
         stream.close()
-    from pyspark.sql.types import StringType, StructField, StructType  # noqa: PLC0415
-
     from .xlsx import read_xlsx_rows  # noqa: PLC0415
 
     rows = read_xlsx_rows(buf)
@@ -178,15 +213,10 @@ def load_table_any(spark: SparkSession, path: str) -> DataFrame:
     elif ext in {".json", ".jsonl", ".ndjson"}:
         df = spark.read.json(path)
     else:
+        # The separator that parses the header into the most fields,
+        # which subsumes the reference's single-garbage-column retry
+        # (etl_merge.py:589-594).
         df = _read_csv(spark, path)
-        # Single-garbage-column fallback (reference etl_merge.py:589-594):
-        # retry with sniffed separators when the header collapsed.
-        if len(df.columns) == 1:
-            for sep in _CANDIDATE_SEPS:
-                retry = _read_csv(spark, path, sep=sep)
-                if len(retry.columns) > 1:
-                    df = retry
-                    break
     renames = {c: c.strip() for c in df.columns if c != c.strip()}
     for old, new in renames.items():
         df = df.withColumnRenamed(old, new)

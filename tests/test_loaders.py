@@ -1,15 +1,17 @@
 """Loader tests on reference-shaped CSV fixtures (SURVEY §5b): synonym
 headers, percent CTR, GA4 junk/preamble rows, path-only URLs,
-delimiter sniffing, single-column fallback."""
+delimiter sniffing, and a CSV header parsed on the driver exactly as
+Spark's header inference would parse it."""
 
 from __future__ import annotations
 
 import textwrap
 
+import pytest
 from pyspark.sql import functions as F
 
 from strategicai_visibility_loop_etl_spark.sources.loaders import load_frog, load_ga4, load_gsc
-from strategicai_visibility_loop_etl_spark.sources.readers import load_table_any
+from strategicai_visibility_loop_etl_spark.sources.readers import _HEAD_BYTES, _read_csv, load_table_any
 from strategicai_visibility_loop_etl_spark.sources.resolve import (
     autodetect_url_column,
     resolve_columns,
@@ -87,6 +89,58 @@ def test_delimiter_sniffing_tsv(spark, tmp_path):
     df = load_table_any(spark, path)
     assert df.columns == ["url", "clicks"]
     assert df.first()["clicks"] == "5"
+
+
+_HEADER_FIXTURES = {
+    "duplicates": "a,b,a,c\n1,2,3,4\n",
+    "case_duplicates": "Url,url,URL,x\n1,2,3,4\n",
+    "empty_name": "a,,c,\n1,2,3,4\n",
+    "quoted_separator": '"a,b";c;"d;e"\n1;2;3\n',
+    "doubled_quote": '"say ""hi""",b\n1,2\n',
+    "whitespace": '  a , b ,"c"  ,\t d\t\n1, 2 ,3,4\n',
+    "preamble": "# GA4 export\n\n   \n# range\nPage,Users\n/a,1\n",
+    "tab": "url\tclicks\tx,y\n/u\t5\t1\n",
+    "crlf": "a;b;c\r\n1;2;3\r\n",
+    "bom": "\ufeffAddress,Status\nx,1\n",
+    "header_only": "a,b,c\n",
+    "long_header": ",".join(f"col{i:06d}" for i in range(_HEAD_BYTES // 8)) + "\nv\n",
+    "directory": "url|clicks\n/a|1\n",
+}
+
+
+@pytest.mark.parametrize("name", sorted(_HEADER_FIXTURES))
+def test_csv_header_matches_spark_inference(spark, tmp_path, name):
+    """The loader's CSV frame has the schema and rows that Spark's own
+    header inference gives with the same options, and building it runs
+    no job unless the header runs past the head the driver reads."""
+    body = _HEADER_FIXTURES[name]
+    path = tmp_path / "in.csv"
+    if name == "directory":
+        path.mkdir()
+        for part in ("part-0", "part-1"):
+            (path / f"{part}.csv").write_text(body + "/b|2\n" * (part == "part-1"))
+        (path / "_SUCCESS").write_text("")
+    else:
+        path.write_bytes(body.encode())
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    sc.setJobGroup(f"csv_header_{name}", "load")
+    try:
+        ours = _read_csv(spark, str(path))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(f"csv_header_{name}"))
+    assert jobs == (1 if name == "long_header" else 0)
+    sep = {"quoted_separator": ";", "crlf": ";", "tab": "\t", "directory": "|"}.get(name, ",")
+    theirs = (
+        spark.read.option("sep", sep).option("comment", "#").option("escape", '"')
+        .option("ignoreLeadingWhiteSpace", True).option("ignoreTrailingWhiteSpace", True)
+        .csv(str(path), header=True)
+    )
+    assert ours.schema == theirs.schema
+    assert sorted(ours.collect()) == sorted(theirs.collect())
 
 
 def test_resolve_columns_slug_match(spark):

@@ -2,8 +2,9 @@
 and its defaults are sized from the machine it runs on. Every
 ``localCheckpoint`` uses Spark's default, eager form. When the factory
 launches the driver JVM, it maps or dumps a class-data archive only
-where that cannot change what the JVM loads; those decisions are
-checked here without a JVM."""
+where that cannot change what the JVM loads, and gives it two JIT
+compiler threads; those decisions are checked here without a JVM, and
+the compiler thread count also on the live test session."""
 
 from __future__ import annotations
 
@@ -197,6 +198,7 @@ def test_archive_fresh_cache_dumps_to_a_per_pid_temp(fake_box, monkeypatch):
     assert os.listdir(archive.conf_dir) == []
     assert archive.java_options == (
         f"-XX:ArchiveClassesAtExit={archive.dump_to} -Xlog:cds=off -Xlog:cds+dynamic=off"
+        " -XX:CICompilerCount=2"
     )
     seen = _launch(monkeypatch)
     assert seen.conf["spark.driver.defaultJavaOptions"] == archive.java_options
@@ -210,7 +212,9 @@ def test_archive_published_is_mapped(fake_box, monkeypatch):
     path = _publish(_class_data_archive(), b"archive")
     archive = _class_data_archive()
     assert archive.path == path and archive.dump_to is None
-    assert archive.java_options == f"-XX:SharedArchiveFile={path} -Xlog:cds=off -Xlog:cds+dynamic=off"
+    assert archive.java_options == (
+        f"-XX:SharedArchiveFile={path} -Xlog:cds=off -Xlog:cds+dynamic=off -XX:CICompilerCount=2"
+    )
     seen = _launch(monkeypatch)
     assert seen.conf["spark.driver.defaultJavaOptions"] == archive.java_options
     assert seen.env["SPARK_CONF_DIR"] == archive.conf_dir
@@ -295,6 +299,21 @@ def test_archive_skipped_when_cache_is_blocked(fake_box, tmp_path, monkeypatch):
     seen = _launch(monkeypatch)
     assert "spark.driver.defaultJavaOptions" not in seen.conf
     assert seen.env == dict(os.environ) and seen.atexit == []
+
+
+def test_launched_jvm_has_two_compiler_threads(spark):
+    """A driver JVM that ``get_spark`` launched runs one C1 and one C2
+    compiler thread; HotSpot would start three on 4 cores."""
+    from strategicai_visibility_loop_etl_spark.session import _JIT_THREADS
+
+    options = spark.sparkContext.getConf().get("spark.driver.defaultJavaOptions", "")
+    if _JIT_THREADS not in options:
+        pytest.skip("this session's JVM was launched as Spark would, without the archive")
+    jvm = spark._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    assert bean.getVMOption("CICompilerCount").getValue() == "2"
 
 
 @pytest.mark.parametrize("exit_code", [0, 1])
